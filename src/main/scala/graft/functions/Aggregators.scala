@@ -154,7 +154,8 @@ object Aggregators {
     * dominate a 100 TB corpus) without q95's full term-keyed shuffle.
     */
   final case class MG(k: Int, counts: Map[String, Long]) {
-    def add(item: String, w: Long): MG =
+    def add(item: String, w: Long): MG = {
+      require(w > 0, s"MG.add weight must be positive, got $w")
       counts.get(item) match {
         case Some(c) => copy(counts = counts.updated(item, c + w))
         case None if counts.size < k =>
@@ -168,6 +169,7 @@ object Aggregators {
           if (rest > 0) MG(k, dec).add(item, rest)
           else copy(counts = dec)
       }
+    }
     def ++(o: MG): MG = {
       val sum = o.counts.foldLeft(counts) { case (m, (i, c)) =>
         m.updated(i, m.getOrElse(i, 0L) + c)
@@ -211,6 +213,7 @@ object Aggregators {
       keys(n) = null
     }
     def add(item: String, w0: Long): Unit = {
+      require(w0 > 0, s"MGState.add weight must be positive, got $w0")
       var w = w0
       while (w > 0) {
         val s = idx.get(item)

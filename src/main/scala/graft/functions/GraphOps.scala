@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Distributed connected components — the step that turns near-duplicate
@@ -70,15 +70,11 @@ object GraphOps {
     // whole edge set landed in one partition — common after AQE coalesces
     // a small pipeline), the contraction IS the answer and the loop is
     // skipped outright.
-    val obsNm = Observation()
-    val nm = nodeRoots.groupBy("id")
-      .agg(min("root").as("m"), collect_set("root").as("roots"))
-      .observe(obsNm,
-        org.apache.spark.sql.functions.sum(
-          when(size(col("roots")) > 1, 1L).otherwise(0L)).as("multi"))
-      .localCheckpoint(true)
-    val anyCross =
-      Option(obsNm.get("multi")).map(_.asInstanceOf[Long]).getOrElse(0L) > 0L
+    val (nm, nmMetrics) = Scale.checkpointObserved(
+      nodeRoots.groupBy("id")
+        .agg(min("root").as("m"), collect_set("root").as("roots")),
+      sum(when(size(col("roots")) > 1, 1L).otherwise(0L)).as("multi"))
+    val anyCross = nmMetrics("multi") > 0L
     e.unpersist()
     if (!anyCross) return nm.select(col("id"), col("m").as("lbl"))
     // contracted star edges (min root -> each other root), symmetrized
@@ -93,30 +89,18 @@ object GraphOps {
     // are reclaimed by the ContextCleaner when the DataFrame is GC'd.
     // Init folds the FIRST neighbor-propagation step into the node-set
     // aggregation (min over self + direct neighbors), saving one round.
-    // The convergence sum rides the eager-checkpoint job itself via
-    // observe(): CollectMetrics accumulates while the checkpoint
-    // materializes, so each round is ONE blocking driver action, not two
-    // (the separate .agg(sum).head job was ~half of q92's wall-clock —
-    // pure fixed job overhead on a loaded box).
+    // The convergence sum rides the eager-checkpoint job itself, so each
+    // round is ONE blocking driver action (Scale.checkpointObserved).
     def checkpointWithSum(df: DataFrame): (DataFrame, Long) = {
-      val obs = Observation()
-      val out = df
-        .observe(obs, org.apache.spark.sql.functions.sum("lbl").as("s"))
-        .localCheckpoint(true)
-      (out, obs.get("s").asInstanceOf[Long])
+      val (out, m) = Scale.checkpointObserved(df, sum("lbl").as("s"))
+      (out, m("s"))
     }
-    var (labels, sum) = checkpointWithSum(
+    var (labels, lblSum) = checkpointWithSum(
       und.groupBy(col("src").as("id"))
         .agg(least(min(col("src")), min(col("dst"))).as("lbl")))
     var i = 0
     var converged = false
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
-    var tPrev = System.nanoTime()
     while (!converged && i < maxIter) {
-      if (debug) {
-        println(f"[cc] round $i start at ${(System.nanoTime()-tPrev)/1e9}%.2f s")
-        tPrev = System.nanoTime()
-      }
       // ONE join per round: union the label table in as pointer edges
       // (id -> lbl), then a single equi-join against labels-keyed-by-dst
       // computes BOTH the neighbor step (via real edges: lbl(nbr)) and the
@@ -136,8 +120,8 @@ object GraphOps {
             col("lbl").as("nlbl")), "dst")
           .groupBy(col("src").as("id")).agg(min("nlbl").as("lbl")))
       labels = updated
-      converged = newSum == sum
-      sum = newSum
+      converged = newSum == lblSum
+      lblSum = newSum
       i += 1
     }
     // compose: every node's final label is the global label of its min
@@ -175,16 +159,12 @@ object GraphOps {
         .distinct()
     // bit_xor: order-independent and overflow-free (an ANSI sum of
     // xxhash64 values overflows long). The fingerprint rides the eager
-    // checkpoint job via observe() — one driver action per checkpoint,
-    // same fusion as the propagation loop.
+    // checkpoint job — one driver action per checkpoint, same fusion as
+    // the propagation loop.
     def checkpointWithFp(df: DataFrame): (DataFrame, (Long, Long)) = {
-      val obs = Observation()
-      val out = df.observe(obs, count(lit(1)).as("c"),
-          expr("bit_xor(xxhash64(a, b))").as("x"))
-        .localCheckpoint(true)
-      val m = obs.get
-      (out, (m("c").asInstanceOf[Long],
-        Option(m("x")).map(_.asInstanceOf[Long]).getOrElse(0L)))
+      val (out, m) = Scale.checkpointObserved(df, count(lit(1)).as("c"),
+        expr("bit_xor(xxhash64(a, b))").as("x"))
+      (out, (m("c"), m("x")))
     }
     val raw = edges.select(col(srcCol).cast("long").as("a"),
       col(dstCol).cast("long").as("b"))

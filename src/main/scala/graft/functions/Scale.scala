@@ -1,0 +1,81 @@
+package graft.functions
+
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+
+/** The scale idioms the LSH / dedup pair factories and the iterative graph
+  * loops share, one home each: the per-bucket membership cap, the
+  * data-derived bit width, and the one-action checkpoint that carries an
+  * observe(). The oracle SQL mirrors stay hand-written per query: they
+  * are the reference the gate compares against, and code shared by both
+  * sides could carry one bug past both. */
+object Scale {
+
+  private val Cap = 256
+
+  /** Keep the lowest-`order` 256 rows of each `by` bucket.
+    *
+    * Without the cap, a pathological mega-cluster (one boilerplate
+    * shingle, one near-duplicate family) turns its bucket into an O(m²)
+    * pair factory for the self-join or the collect_list gather that
+    * follows. The keep is deterministic (row_number by `order`), so the
+    * oracle models the same cut. The dropped-row count surfaces as the
+    * `metric` observed metric (`dropped_rows`), counted before the filter
+    * so it reads 0 exactly when the cap did not engage.
+    *
+    * A self-join must alias THIS frame twice: identical sides let Spark
+    * reuse the scan→bucket→window exchange across build and probe, while
+    * a per-side observe() makes the sides differ and doubles the upstream
+    * work (measured 2x on q88). With reuse, the metric may count each
+    * dropped row once per side; it is diagnostic, not exact. */
+  def capPerBucket(df: DataFrame, metric: String, by: Seq[String],
+      order: Seq[String]): DataFrame =
+    ranked(df, by, order)
+      .observe(metric,
+        sum(when(col("__rk") > Cap, 1L).otherwise(0L)).as("dropped_rows"))
+      .filter(col("__rk") <= Cap).drop("__rk")
+
+  /** The same keep as [[capPerBucket]], with the observe AFTER the rank
+    * filter. A CollectMetrics between Window and Filter blocks Spark's
+    * WindowGroupLimit rewrite; this form keeps it, so beyond-cap rows are
+    * pruned map-side BEFORE the exchange (the pair-factory defense at
+    * skew). Pruned rows never reach an observe, so the `metric` is the
+    * largest kept rank (`max_rank`): 256 means the cap engaged. Whether
+    * the exact-count form's sites should move here is an open A/B. */
+  def capPerBucketPruned(df: DataFrame, metric: String, by: Seq[String],
+      order: Seq[String]): DataFrame =
+    ranked(df, by, order).filter(col("__rk") <= Cap)
+      .observe(metric, max(col("__rk")).as("max_rank"))
+      .drop("__rk")
+
+  private def ranked(df: DataFrame, by: Seq[String],
+      order: Seq[String]): DataFrame =
+    df.withColumn("__rk", row_number().over(
+      Window.partitionBy(by.map(col): _*).orderBy(order.map(col): _*)))
+
+  /** bitlen(max(1, n - 1)): the bit width of the largest 0-based index
+    * into n items, at least 1. The adaptive LSH/shingle widths derive
+    * from it so bucket occupancy tracks corpus size instead of filling a
+    * fixed 2^w bucket space (the `% 256` trap). The oracle mirrors it as
+    * `length(bin(count(*) - 1))`, integer-exact in both engines. The
+    * clamp matters at n <= 1: `bin(0)` is "0" (width 1), while
+    * `64 - numberOfLeadingZeros(0)` is 0. */
+  def bitLen(n: Long): Int =
+    64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n - 1))
+
+  /** One eager localCheckpoint of `df` that also yields the `metrics`
+    * aggregates: CollectMetrics accumulates while the checkpoint
+    * materializes, so a loop's convergence or emptiness test costs no
+    * second driver action (the separate `.agg(...).head` job was about
+    * half of q92's wall-clock). Every metric must be a named long
+    * aggregate; a null result (sum or bit_xor over no rows) reads 0. */
+  def checkpointObserved(df: DataFrame,
+      metrics: Column*): (DataFrame, Map[String, Long]) = {
+    val obs = Observation()
+    val out = df.observe(obs, metrics.head, metrics.tail: _*)
+      .localCheckpoint(true)
+    (out, obs.get.map { case (k, v) =>
+      k -> (if (v == null) 0L else v.asInstanceOf[Long]) })
+  }
+}

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Q, Tables}
-import graft.functions.TextOps
+import graft.functions.{Scale, TextOps}
 
 /** Deduplication + similarity search — the scale-path operators a training
   * data pipeline needs (north-star mandate; absent from the reference).
@@ -75,22 +75,15 @@ object DedupQueries {
     * exactly 8, leaving gate outputs byte-identical to the fixed form.
     * Near-identical vectors (the dedup signal) agree on almost every
     * hyperplane, so their recall survives the extra planes. */
-  private def adaptivePlanes(n: Long): Int =
-    math.max(8,
-      java.lang.Long.toBinaryString(math.max(1L, n - 1)).length - 3)
-
-  /** Per-bucket membership cap (mirrors q52's doctrine): a pathological
-    * mega-cluster otherwise turns one bucket into an O(m²) pair factory.
-    * Deterministic (lowest vec_ids kept); the dropped-row count surfaces
-    * as the `rp_cap` observed metric. Cannot engage at gate SF (max bucket
-    * occupancy at sf0.1 is 75) but DOES at the 10x replica (3933
-    * rows/side dropped), so the oracle models it too — the round-6
-    * replica gate caught q111/q134 diverging when it didn't. */
-  private val RpBucketCap = 256
+  private def adaptivePlanes(n: Long): Int = math.max(8, Scale.bitLen(n) - 3)
 
   /** q88/q92/q111 shared candidate-pair builder: adaptive random-projection
     * buckets, capped bucket-equi self-join, cosine threshold (see q88
-    * notes). */
+    * notes). The 256-per-bucket cap (lowest vec_ids, `rp_cap` metric)
+    * cannot engage at gate SF (max bucket occupancy at sf0.1 is 75) but
+    * DOES at the 10x replica (3933 rows/side dropped), so the oracle
+    * models it too — the round-6 replica gate caught q111/q134 diverging
+    * when it didn't. */
   private def rpPairs(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
     // Bucket self-join, NOT the q52-style bucket-collect: collect+
@@ -105,18 +98,9 @@ object DedupQueries {
     val planes = adaptivePlanes(embCount(s, d))
     val withB = emb(s, d).select(col("vec_id"), col("embedding"),
       TextOps.rpBucket(col("embedding"), planes, 64).as("bucket"))
-    val rk = row_number().over(
-      Window.partitionBy("bucket").orderBy("vec_id"))
-    // ONE capped subtree self-joined (not one per side): identical sides
-    // let Spark reuse the scan→bucket→window exchange across build and
-    // probe — a per-side observe() made the sides differ and doubled the
-    // upstream work (measured 2x on q88). The metric may therefore report
-    // each dropped row once per reused side; it is diagnostic, not exact.
-    val capped = withB.withColumn("__rk", rk)
-      .observe("rp_cap",
-        sum(when(col("__rk") > RpBucketCap, 1L).otherwise(0L))
-          .as("dropped_rows"))
-      .filter(col("__rk") <= RpBucketCap).drop("__rk")
+    // ONE capped subtree self-joined (exchange reuse, see Scale)
+    val capped = Scale.capPerBucket(withB, "rp_cap", Seq("bucket"),
+      Seq("vec_id"))
     val a = capped.as("a")
     val b = capped.as("b").hint("shuffle_hash")
     val rdot = round(TextOps.dot(col("a.embedding"), col("b.embedding")), 4) +
@@ -431,13 +415,8 @@ object DedupQueries {
       // one final-agg task, the exact state blowup the cap exists to
       // prevent (r6 review finding; siblings rpPairs/q59/q116 already
       // capped pre-gather)
-      val rk52 = row_number().over(
-        Window.partitionBy("band", "key").orderBy("rec"))
-      val capped = bands
-        .withColumn("__rk", rk52)
-        .observe("q52_cap",
-          sum(when(col("__rk") > 256, 1L).otherwise(0L)).as("dropped_docs"))
-        .filter(col("__rk") <= 256)
+      val capped = Scale.capPerBucket(bands, "q52_cap", Seq("band", "key"),
+          Seq("rec"))
         .groupBy("band", "key")
         .agg(sort_array(collect_list(col("rec"))).as("recs"))
       val agree = (col("a.k0") === col("b.k0")).cast("int") +
@@ -760,18 +739,12 @@ object DedupQueries {
     ) { (s, d) =>
       // No persist: signBucket is a handful of element_at's per row —
       // recomputing per join side beats cache traffic (see q54 note).
-      val bits = math.max(6, java.lang.Long.toBinaryString(
-        math.max(1L, embCount(s, d) - 1)).length - 5)
+      val bits = math.max(6, Scale.bitLen(embCount(s, d)) - 5)
       val withB = emb(s, d).select(col("vec_id"), col("embedding"),
         TextOps.signBucket(col("embedding"), bits).as("bucket"))
-      val rk = row_number().over(
-        Window.partitionBy("bucket").orderBy("vec_id"))
-      // one capped subtree self-joined — see rpPairs for why (exchange
-      // reuse across build/probe; the observed metric is diagnostic)
-      val capped = withB.withColumn("__rk", rk)
-        .observe("q59_cap",
-          sum(when(col("__rk") > 256, 1L).otherwise(0L)).as("dropped_rows"))
-        .filter(col("__rk") <= 256).drop("__rk")
+      // one capped subtree self-joined (exchange reuse, see Scale)
+      val capped = Scale.capPerBucket(withB, "q59_cap", Seq("bucket"),
+        Seq("vec_id"))
       val a = capped.as("a")
       val b = capped.as("b").hint("shuffle_hash")
       val rdot = round(TextOps.dot(col("a.embedding"), col("b.embedding")), 4) +
@@ -1137,12 +1110,9 @@ object DedupQueries {
           .as(Seq("band", "mh")))
       val newB = bands.filter(col("source") =!= "src0")
         .select(col("doc_id").as("new_id"), col("band"), col("mh"))
-      val oldCapped = bands.filter(col("source") === "src0")
-        .withColumn("__rk", row_number().over(
-          Window.partitionBy("band", "mh").orderBy("doc_id")))
-        .observe("q116_cap",
-          sum(when(col("__rk") > 256, 1L).otherwise(0L)).as("dropped_rows"))
-        .filter(col("__rk") <= 256)
+      val oldCapped = Scale.capPerBucket(
+          bands.filter(col("source") === "src0"), "q116_cap",
+          Seq("band", "mh"), Seq("doc_id"))
         .select(col("doc_id").as("old_id"), col("band"), col("mh"))
       newB.join(oldCapped.hint("shuffle_hash"), Seq("band", "mh"))
         .groupBy("new_id", "old_id")
@@ -1249,8 +1219,7 @@ object DedupQueries {
         |ORDER BY cluster, id_a, id_b""".stripMargin
     ) { (s, d) =>
       val n = embCount(s, d)
-      val k = 1L << math.max(3, math.min(10,
-        (64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n - 1))) - 6))
+      val k = 1L << math.max(3, math.min(10, Scale.bitLen(n) - 6))
       // vd = exact integer values as doubles; vs = vd/1e4 (the assignment
       // space); both are plain projected columns so the HOFs run once
       val ei = emb(s, d).select(col("vec_id"),
@@ -1333,12 +1302,8 @@ object DedupQueries {
       // wherever it evaluates, so the oracle's per-pair sqrt(aa)*sqrt(bb)
       // still matches bit-for-bit — measured 2.3x on the pair stage at the
       // 100x replica, where the within-cluster join emits ~39M candidates
-      val capped = assigned.join(ei, "vec_id")
-        .withColumn("__mrk", row_number().over(
-          Window.partitionBy("cluster").orderBy("vec_id")))
-        .observe("semdedup_cap",
-          sum(when(col("__mrk") > 256, 1L).otherwise(0L)).as("dropped_rows"))
-        .filter(col("__mrk") <= 256)
+      val capped = Scale.capPerBucket(assigned.join(ei, "vec_id"),
+          "semdedup_cap", Seq("cluster"), Seq("vec_id"))
         .select(col("cluster"), col("vec_id"), col("vd"),
           sqrt(TextOps.dot(col("vd"), col("vd"))).as("norm"))
       val a = capped.as("a")
@@ -1667,9 +1632,7 @@ object DedupQueries {
         |FROM verify WHERE 3 * inter >= msum
         |ORDER BY id_lo, id_hi""".stripMargin
     ) { (s, d) =>
-      val wdt = 3 + math.max(0,
-        java.lang.Long.toBinaryString(
-          math.max(1L, docCount(s, d) - 1)).length - 13) / 3
+      val wdt = 3 + math.max(0, Scale.bitLen(docCount(s, d)) - 13) / 3
       // hashed shingle set, computed in its OWN projection so the size()
       // reference below cannot re-trigger the chain (q46 CollapseProject
       // pattern)
@@ -1701,13 +1664,9 @@ object DedupQueries {
       val prefix = ranked
         .filter(col("rn") <= col("m") - expr("(m + 1) div 2") + 1)
         .select(col("doc_id"), col("m"), col("h"), col("rn"))
-      // per-bucket cap (one observe on the SHARED subtree, before the
-      // aliases — a per-side observe would kill exchange reuse, q88 note)
-      val byBucket = Window.partitionBy("h").orderBy("doc_id")
-      val capped = prefix.withColumn("__rk", row_number().over(byBucket))
-        .observe("q141_cap",
-          sum(when(col("__rk") > 256, 1L).otherwise(0L)).as("dropped_rows"))
-        .filter(col("__rk") <= 256).drop("__rk")
+      // one capped subtree self-joined (exchange reuse, see Scale)
+      val capped = Scale.capPerBucket(prefix, "q141_cap", Seq("h"),
+        Seq("doc_id"))
       val cand = capped.as("a")
         .join(capped.as("b").hint(bigJoin(s, d)),
           col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id")
@@ -1919,10 +1878,8 @@ object DedupQueries {
       val bands = sig.select(rec.as("rec"),
         posexplode(array(col("k0"), col("k1"), col("k2"), col("k3")))
           .as(Seq("band", "key")))
-      val rk = row_number().over(
-        Window.partitionBy("band", "key").orderBy("rec"))
-      val buckets = bands.withColumn("__rk", rk)
-        .filter(col("__rk") <= 256)
+      val buckets = Scale.capPerBucketPruned(bands, "q146_cap",
+          Seq("band", "key"), Seq("rec"))
         .groupBy("band", "key")
         .agg(sort_array(collect_list(col("rec"))).as("recs"))
       val agree = (col("a.k0") === col("b.k0")).cast("int") +
@@ -2083,13 +2040,8 @@ object DedupQueries {
         col("k0"), col("k1"), col("k2"), col("k3"),
         posexplode(array(col("k0"), col("k1"), col("k2"), col("k3")))
           .as(Seq("band", "key")))
-      val rkw = row_number().over(
-        Window.partitionBy("band", "key").orderBy("doc_id"))
-      val corpus = bands.filter(!col("incoming"))
-        .withColumn("__rk", rkw)
-        .observe("q159_cap",
-          sum(when(col("__rk") > 256, 1L).otherwise(0L)).as("dropped_docs"))
-        .filter(col("__rk") <= 256)
+      val corpus = Scale.capPerBucket(bands.filter(!col("incoming")),
+          "q159_cap", Seq("band", "key"), Seq("doc_id"))
         .select(col("doc_id").as("c_doc"), col("band"), col("key"),
           col("k0").as("c0"), col("k1").as("c1"),
           col("k2").as("c2"), col("k3").as("c3"))
@@ -2412,12 +2364,8 @@ object DedupQueries {
             .as("win"))
         .select(col("doc_id"), col("idx"), col("win"),
           call_function("md5_prefix60", col("win")).as("h"))
-      val rk = row_number().over(
-        Window.partitionBy("h").orderBy("doc_id", "idx"))
-      val buckets = anch.withColumn("__rk", rk)
-        .observe("q181_cap",
-          sum(when(col("__rk") > 256, 1L).otherwise(0L)).as("dropped_anchors"))
-        .filter(col("__rk") <= 256)
+      val buckets = Scale.capPerBucket(anch, "q181_cap", Seq("h"),
+          Seq("doc_id", "idx"))
         .groupBy("h")
         .agg(sort_array(collect_list(struct(col("doc_id"), col("idx"),
           col("win")))).as("recs"))
@@ -4199,14 +4147,13 @@ object DedupQueries {
       // round frontiers (≤9 LogicalRDD legs, no lineage growth) instead
       // of re-materializing the whole visited set every round (which
       // re-wrote O(|nodes|) rows per round as a third job).
-      val obs = org.apache.spark.sql.Observation()
-      val nxt = frontier.join(und, frontier("id") === und("src"))
-        .select(col("dst").as("id")).distinct()
-        .join(visited, Seq("id"), "left_anti")
-        .withColumn("d", lit(round))
-        .observe(obs, count(lit(1)).as("c"))
-        .localCheckpoint(true)
-      if (obs.get("c").asInstanceOf[Long] == 0L) done = true
+      val (nxt, m) = Scale.checkpointObserved(
+        frontier.join(und, frontier("id") === und("src"))
+          .select(col("dst").as("id")).distinct()
+          .join(visited, Seq("id"), "left_anti")
+          .withColumn("d", lit(round)),
+        count(lit(1)).as("c"))
+      if (m("c") == 0L) done = true
       else {
         visited = visited.union(nxt)
         frontier = nxt
@@ -5349,12 +5296,8 @@ object DedupQueries {
           hashFn(col("tail3")).as("th"))
         .localCheckpoint(true,
           org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      // Cap plan, two hard-won rules: (a) the observe sits AFTER the
-      // rank filter — a CollectMetrics between Window and Filter blocks
-      // the WindowGroupLimit rewrite (the metric would have to see the
-      // dropped rows), losing the map-side partial cap that prunes
-      // beyond-256 rows BEFORE the exchange (the pair-factory defense
-      // at skew); max(r) hitting 256 is the cap-engaged signal instead.
+      // Cap plan, two hard-won rules: (a) the pruned cap form keeps the
+      // map-side WindowGroupLimit (see Scale.capPerBucketPruned).
       // (b) the window partitions on (hash, content) — the content-
       // verify equality is extracted into the join keys, and with
       // requireAllClusterKeysForCoPartition a hash-only window forces a
@@ -5363,16 +5306,12 @@ object DedupQueries {
       // semantically identical and one exchange serves window AND join
       // (verified: WindowGroupLimit partial/final + direct join, no
       // re-exchange).
-      val heads = base.select(col("doc_id"), col("head3"), col("hh"))
-        .withColumn("r", row_number().over(
-          Window.partitionBy("hh", "head3").orderBy("doc_id")))
-        .filter(col("r") <= 256)
-        .observe("q197_cap_h", max(col("r")).as("max_head_rank"))
-      val tails = base.select(col("doc_id"), col("tail3"), col("th"))
-        .withColumn("r", row_number().over(
-          Window.partitionBy("th", "tail3").orderBy("doc_id")))
-        .filter(col("r") <= 256)
-        .observe("q197_cap_t", max(col("r")).as("max_tail_rank"))
+      val heads = Scale.capPerBucketPruned(
+        base.select(col("doc_id"), col("head3"), col("hh")), "q197_cap_h",
+        Seq("hh", "head3"), Seq("doc_id"))
+      val tails = Scale.capPerBucketPruned(
+        base.select(col("doc_id"), col("tail3"), col("th")), "q197_cap_t",
+        Seq("th", "tail3"), Seq("doc_id"))
       tails.as("a")
         .join(heads.as("b").hint("shuffle_hash"),
           col("a.th") === col("b.hh") &&

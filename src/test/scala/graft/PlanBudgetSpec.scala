@@ -31,10 +31,10 @@ class PlanBudgetSpec extends SparkSpec {
   test("representative queries stay within their committed plan budgets " +
     "(full 243-query gate: runMain graft.PlanStats + tools/plan_guard.py)") {
     // mixed bag: flagship agg, LSH fan-out, hinted self-join, IVF argmin,
-    // digest dedup — enough surface that a rule/strategy change in the
+    // digest dedup, the benchmarked capped self-joins — enough surface that a rule/strategy change in the
     // optimizer extensions trips the in-suite gate, not just the tool
     val names = Seq("q01_agg_pricing", "q50_dedup_exact", "q52_lsh_pairs",
-      "q88_rp_neardup", "q121_semdedup")
+      "q59_cosine_dups", "q88_rp_neardup", "q121_semdedup", "q141_ppjoin")
     names.foreach { n =>
       val df = SparkEntry.queries(n)(spark, sfDir)
       val exc = PlanStats.exceedances(PlanStats.shape(df), budget(n))

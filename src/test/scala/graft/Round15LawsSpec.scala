@@ -52,6 +52,10 @@ class Round15LawsSpec extends AnyFunSuite {
       }
       assert(stateMap(got) == ref.counts, s"trial $trial k=$k diverged")
     }
+    // w = 0 is rejected by both: the reference would insert a zero
+    // counter where the buffer would do nothing
+    intercept[IllegalArgumentException](MG(2, Map.empty).add("t", 0L))
+    intercept[IllegalArgumentException](fresh(2).add("t", 0L))
   }
 
   test("differential: MGState.mergeIn ≡ MG.++ under random merge trees") {
@@ -108,24 +112,21 @@ class Round15LawsSpec extends AnyFunSuite {
   test("buffer round-trips through its product encoder mid-stream") {
     // Spark serializes partial buffers at the shuffle boundary; the
     // @transient slot index must rebuild and accept further adds.
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").getOrCreate()
-    try {
-      val ser = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(
-        org.apache.spark.sql.Encoders.product[MGState].asInstanceOf[
-          org.apache.spark.sql.catalyst.encoders.AgnosticEncoder[MGState]])
-      val toRow = ser.createSerializer()
-      val fromRow = ser.resolveAndBind().createDeserializer()
-      val s = fresh(4)
-      Seq("a", "b", "a", "c", "d", "e", "a").foreach(s.add(_, 1L))
-      val back = fromRow(toRow(s).copy())
-      assert(stateMap(back) == stateMap(s))
-      // post-deserialization adds (index rebuilt lazily) stay consistent
-      var ref = MG(4, stateMap(s))
-      Seq("f", "a", "g", "b").foreach { it =>
-        back.add(it, 1L); ref = ref.add(it, 1L)
-      }
-      assert(stateMap(back) == ref.counts)
-    } finally ()
+    // Encoder serialization needs no SparkSession.
+    val ser = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(
+      org.apache.spark.sql.Encoders.product[MGState].asInstanceOf[
+        org.apache.spark.sql.catalyst.encoders.AgnosticEncoder[MGState]])
+    val toRow = ser.createSerializer()
+    val fromRow = ser.resolveAndBind().createDeserializer()
+    val s = fresh(4)
+    Seq("a", "b", "a", "c", "d", "e", "a").foreach(s.add(_, 1L))
+    val back = fromRow(toRow(s).copy())
+    assert(stateMap(back) == stateMap(s))
+    // post-deserialization adds (index rebuilt lazily) stay consistent
+    var ref = MG(4, stateMap(s))
+    Seq("f", "a", "g", "b").foreach { it =>
+      back.add(it, 1L); ref = ref.add(it, 1L)
+    }
+    assert(stateMap(back) == ref.counts)
   }
 }

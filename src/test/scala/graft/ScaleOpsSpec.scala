@@ -1,9 +1,10 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{Align, Skew}
+import graft.functions.{Align, Scale, Skew}
 
-/** Skew salting + cross-collection alignment (SURVEY §7.4). */
+/** Skew salting + cross-collection alignment (SURVEY §7.4), and the
+  * `Scale` idioms the dedup pair factories share. */
 class ScaleOpsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -70,5 +71,64 @@ class ScaleOpsSpec extends SparkSpec {
     val df = Seq("p", "q", "r").toDF("s").coalesce(1)
     val idx = Align.withRowIndex(df).collect().map(r => (r.getString(0), r.getLong(1)))
     assert(idx.toSeq == Seq(("p", 0L), ("q", 1L), ("r", 2L)))
+  }
+
+  /** 300 rows in bucket "a" (ids 0..299, shuffled) and 10 in "b": only
+    * "a" overflows the 256 cap, by 44 rows. */
+  private def plantedBuckets =
+    (scala.util.Random.shuffle((0 until 300).toList).map(i => ("a", i.toLong))
+      ++ (1000 until 1010).map(i => ("b", i.toLong)))
+      .toDF("bucket", "id").repartition(3)
+
+  test("capPerBucket keeps the lowest 256 per bucket, observes the " +
+    "dropped count, and a self-join of the capped frame reuses its exchange") {
+    val capped = Scale.capPerBucket(plantedBuckets, "t_cap", Seq("bucket"),
+      Seq("id"))
+    val kept = capped.collect().map(r => (r.getString(0), r.getLong(1)))
+    assert(kept.length == 266)
+    assert(kept.filter(_._1 == "a").map(_._2).sorted.toSeq == (0L until 256L))
+    assert(kept.count(_._1 == "b") == 10)
+    assert(capped.columns.toSeq == Seq("bucket", "id"))
+    assert(capped.queryExecution.observedMetrics("t_cap").getLong(0) == 44L)
+    val joined = capped.as("x")
+      .join(capped.as("y").hint("shuffle_hash"),
+        col("x.bucket") === col("y.bucket") && col("x.id") < col("y.id"))
+    // collect, not count(): the final adaptive plan is this Dataset's own
+    assert(joined.collect().length == 256 * 255 / 2 + 10 * 9 / 2)
+    val plan = joined.queryExecution.executedPlan.toString
+    assert(plan.contains("ReusedExchange"), plan)
+  }
+
+  test("capPerBucketPruned keeps the same rows, keeps WindowGroupLimit, " +
+    "and observes the largest kept rank") {
+    val pruned = Scale.capPerBucketPruned(plantedBuckets, "t_cap_pruned",
+      Seq("bucket"), Seq("id"))
+    val kept = pruned.collect().map(r => (r.getString(0), r.getLong(1)))
+    assert(kept.sorted.toSeq == (0L until 256L).map(("a", _)) ++
+      (1000L until 1010L).map(("b", _)))
+    assert(pruned.queryExecution.observedMetrics("t_cap_pruned")
+      .getInt(0) == 256)
+    val plan = pruned.queryExecution.executedPlan.toString
+    assert(plan.contains("WindowGroupLimit"), plan)
+  }
+
+  test("bitLen matches the toBinaryString width it replaced") {
+    def old(n: Long) = java.lang.Long.toBinaryString(math.max(1L, n - 1)).length
+    val ns = Seq(0L, 1L, 2L, Long.MaxValue, Long.MinValue, -5L) ++
+      (1 to 62).flatMap { k => val p = 1L << k; Seq(p - 1, p, p + 1) }
+    ns.foreach(n => assert(Scale.bitLen(n) == old(n), s"n=$n"))
+    assert(Scale.bitLen(0L) == 1)
+  }
+
+  test("checkpointObserved: one checkpoint, metrics by name, null reads 0") {
+    val (out, m) = Scale.checkpointObserved(spark.range(10).toDF(),
+      count(lit(1)).as("c"), sum("id").as("s"))
+    assert(m == Map("c" -> 10L, "s" -> 45L))
+    assert(out.queryExecution.analyzed.collectLeaves()
+      .forall(_.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]))
+    assert(out.count() == 10L)
+    val (_, e) = Scale.checkpointObserved(spark.range(10).filter("id < 0").toDF(),
+      count(lit(1)).as("c"), sum("id").as("s"))
+    assert(e == Map("c" -> 0L, "s" -> 0L))
   }
 }
