@@ -46,6 +46,18 @@ object Tables {
   }
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
+
+  /** `compute` memoized per data dir: the first call for a dir runs it
+    * (one bounded driver-side job: a count, a max, a seed collect), later
+    * calls reuse the value. Queries size structures or take seeds from it
+    * instead of a broadcast-scalar subquery, which would serialize its
+    * consumers' stages. Dirs are immutable fixtures; a long-lived service
+    * would key on snapshot version. */
+  def perDir[V](compute: (SparkSession, String) => V)
+      : (SparkSession, String) => V = {
+    val memo = new java.util.concurrent.ConcurrentHashMap[String, V]
+    (s, d) => memo.computeIfAbsent(d, dir => compute(s, dir))
+  }
 }
 
 /** One registered query: the Spark-native implementation plus (optionally)

@@ -18,6 +18,9 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
+      // a query that throws before its write must leave NO output: a
+      // previous run's parquet left in place would read as a pass
+      deleteTree(new java.io.File(s"$outDir/$name"))
       try {
         val df = fn(spark, sfDir)
         // The driver's checker pandas-sorts result rows over ALL columns;
@@ -68,5 +71,10 @@ object Verify {
         System.err.println(s"[verify] NON-SCALAR OUTPUT (driver-uncheckable): $c"))
       sys.exit(2)
     }
+  }
+
+  private def deleteTree(f: java.io.File): Unit = {
+    Option(f.listFiles).foreach(_.foreach(deleteTree))
+    f.delete()
   }
 }

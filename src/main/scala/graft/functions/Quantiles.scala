@@ -49,14 +49,28 @@ object Quantiles {
       specs: Seq[(String, Seq[(String, Double)])]): DataFrame = {
     require(specs.nonEmpty && specs.forall(_._2.nonEmpty) &&
       specs.forall(_._2.forall { case (_, q) => q >= 0.0 && q <= 1.0 }))
+    val named = specs.zipWithIndex.flatMap { case ((_, qs), wi) =>
+      qs.map { case (name, q) => (wi, name, q) }
+    }
+    histogramQuantiles(df, groupCol,
+      specs.map { case (v, _) => col(v).cast("double") }, named, Nil)
+  }
+
+  /** The shared core: posexplode the `lanes` to (group, lane, value)
+    * rows, count them in one partial+final histogram aggregate, then
+    * locate each quantile's two bracketing ranks with two windows over
+    * the histogram and interpolate. `named` lists (lane, output name, q);
+    * `extra` adds (output name, aggregate) pairs evaluated over the same
+    * histogram rows in the final per-group aggregate. */
+  private def histogramQuantiles(df: DataFrame, groupCol: String,
+      lanes: Seq[Column], named: Seq[(Int, String, Double)],
+      extra: Seq[(String, Column)]): DataFrame = {
     val hist = df
-      .select(col(groupCol),
-        posexplode(array(specs.map { case (v, _) =>
-          col(v).cast("double") }: _*)).as(Seq("__w", "__v")))
+      .select(col(groupCol), posexplode(array(lanes: _*)).as(Seq("__w", "__v")))
       .filter(col("__v").isNotNull)
       .groupBy(col(groupCol), col("__w"), col("__v"))
       .agg(count(lit(1)).as("__c"))
-    // running count up to and including __v, and the per-(group, column)
+    // running count up to and including __v, and the per-(group, lane)
     // total — two frames over ONE partitioning, so a single exchange +
     // sort of the histogram feeds both
     val wCum = Window.partitionBy(groupCol, "__w").orderBy("__v")
@@ -67,9 +81,6 @@ object Quantiles {
       .withColumn("__n", sum(col("__c")).over(wAll))
     // 0-based rank k lives at value __v iff __cum - __c <= k < __cum;
     // exactly one histogram row matches, so min(when(...)) is "pick it"
-    val named = specs.zipWithIndex.flatMap { case ((_, qs), wi) =>
-      qs.map { case (name, q) => (wi, name, q) }
-    }
     val aggs = named.flatMap { case (wi, name, q) =>
       val isW = col("__w") === wi
       val hh = (col("__n") - 1).cast("double") * lit(q)
@@ -80,7 +91,7 @@ object Quantiles {
         pick(floor(hh)).as(s"__lo_$name"),
         pick(ceil(hh)).as(s"__hi_$name"),
         min(when(isW, col("__n"))).as(s"__n_$name"))
-    }
+    } ++ extra.map { case (out, agg) => agg.as(out) }
     val picked = cum.groupBy(groupCol).agg(aggs.head, aggs.tail: _*)
     val outs = named.map { case (_, name, q) =>
       val n = col(s"__n_$name")
@@ -88,7 +99,7 @@ object Quantiles {
       val frac = hh - floor(hh)
       (col(s"__lo_$name") + frac * (col(s"__hi_$name") - col(s"__lo_$name")))
         .as(name)
-    }
+    } ++ extra.map { case (out, _) => col(out) }
     picked.select(col(groupCol) +: outs: _*)
   }
 
@@ -116,40 +127,9 @@ object Quantiles {
     require(qs.nonEmpty && qs.forall { case (_, q) => q >= 0.0 && q <= 1.0 })
     val lanes = (valueCol +: distinctCols.map(_._1))
       .map(c => col(c).cast("double"))
-    val hist = df
-      .select(col(groupCol), posexplode(array(lanes: _*)).as(Seq("__w", "__v")))
-      .filter(col("__v").isNotNull)
-      .groupBy(col(groupCol), col("__w"), col("__v"))
-      .agg(count(lit(1)).as("__c"))
-    val wCum = Window.partitionBy(groupCol, "__w").orderBy("__v")
-    val wAll = Window.partitionBy(groupCol, "__w")
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val cum = hist
-      .withColumn("__cum", sum(col("__c")).over(wCum))
-      .withColumn("__n", sum(col("__c")).over(wAll))
-    val isV = col("__w") === 0
-    val qAggs = qs.flatMap { case (name, q) =>
-      val hh = (col("__n") - 1).cast("double") * lit(q)
-      def pick(k: Column) = min(when(isV &&
-        (col("__cum") - col("__c")).cast("double") <= k &&
-        k < col("__cum").cast("double"), col("__v")))
-      Seq(
-        pick(floor(hh)).as(s"__lo_$name"),
-        pick(ceil(hh)).as(s"__hi_$name"),
-        min(when(isV, col("__n"))).as(s"__n_$name"))
-    }
-    val dAggs = distinctCols.zipWithIndex.map { case ((_, out), i) =>
-      count(when(col("__w") === i + 1, 1)).as(out)
-    }
-    val aggs = qAggs ++ dAggs
-    val picked = cum.groupBy(groupCol).agg(aggs.head, aggs.tail: _*)
-    val outs = qs.map { case (name, q) =>
-      val n = col(s"__n_$name")
-      val hh = (n - 1).cast("double") * lit(q)
-      val frac = hh - floor(hh)
-      (col(s"__lo_$name") + frac * (col(s"__hi_$name") - col(s"__lo_$name")))
-        .as(name)
-    } ++ distinctCols.map { case (_, out) => col(out) }
-    picked.select(col(groupCol) +: outs: _*)
+    histogramQuantiles(df, groupCol, lanes,
+      qs.map { case (name, q) => (0, name, q) },
+      distinctCols.zipWithIndex.map { case ((_, out), i) =>
+        out -> count(when(col("__w") === i + 1, 1)) })
   }
 }

@@ -114,16 +114,59 @@ object TextOps {
           i => concat_ws(" ", slice(ws, i, lit(n)))))
     }
 
-  /** One MinHash value: the lexicographic minimum of salted md5 digests over
-    * the shingle set. Different salts simulate independent permutations.
-    *
-    * DIDACTIC REFERENCE FORM, not the production path: the gate queries
-    * (q51/q52/q81) use ONE codegen'd `md5_prefix64` digest per shingle with
-    * arithmetic permutations — no per-salt re-hash, no hex strings (see
-    * DedupQueries). Kept because the set-invariance law specs
-    * (TextOpsSpec/PropertySpec) exercise the definition directly. */
-  def minhash(shingles: Column, salt: String): Column =
-    array_min(transform(shingles, sh => md5(concat(lit(salt), sh))))
+  /** The MinHash permutation family: k = 4 multiply-add permutations
+    * `(h·a + b) mod P` over ONE codegen'd `md5_prefix64` digest per
+    * shingle (no per-permutation re-hash, no hex strings). P is the
+    * largest prime below 2^32, so with the 32-bit digest every product
+    * stays far inside a Long. The oracle SQL mirrors these literals by
+    * hand; q236's estimator mirrors its own `(a·(x mod P) + b) mod P`
+    * form and takes only the constants. */
+  private[graft] val MinhashP = 4294967291L
+  private[graft] val MinhashPerms: Seq[(Long, Long)] = Seq(
+    (1000003L, 12345L), (2000029L, 54321L),
+    (3000073L, 98765L), (4000037L, 13579L))
+
+  /** Permutation `i` of the digest `h` (a column or a lambda variable). */
+  def minhashPerm(h: Column, i: Int): Column = {
+    val (a, b) = MinhashPerms(i)
+    (h * a + b) % MinhashP
+  }
+
+  /** The 4 signature aggregates over a per-shingle digest column `h`,
+    * aliased `prefix0..3` — the exploded form, whose min gets map-side
+    * combine. */
+  def minhashAggs(h: Column, prefix: String): Seq[Column] =
+    MinhashPerms.indices.map(i => min(minhashPerm(h, i)).as(s"$prefix$i"))
+
+  /** Per-`keys` MinHash signatures (`prefix0..3`) of `df`'s `text`:
+    * [[hashedShingleRows]] min-aggregated by [[minhashAggs]]. A text
+    * with fewer than 3 words yields no row. */
+  def minhashSignatures(df: org.apache.spark.sql.DataFrame,
+      keys: Seq[String], prefix: String): org.apache.spark.sql.DataFrame = {
+    val mh = minhashAggs(col("h"), prefix)
+    hashedShingleRows(df, keys.map(col): _*)
+      .groupBy(keys.map(col): _*).agg(mh.head, mh.tail: _*)
+  }
+
+  /** The exploded form of [[hashedShingles]], duplicates kept: one
+    * (keys..., h) row per word 3-shingle of `df`'s `text`, h its
+    * md5_prefix64 (a native kernel: direct byte->long, no hex-string
+    * round trip). The digest runs in its own Project above the
+    * Generate, codegen'd, where the HOF form would interpret it. */
+  def hashedShingleRows(df: org.apache.spark.sql.DataFrame,
+      keys: Column*): org.apache.spark.sql.DataFrame = {
+    val rows = df.select(
+      keys :+ explode(shingles(tokens(col("text")), 3)).as("sh"): _*)
+    rows.select(rows.columns.init.map(col).toSeq :+
+      call_function("md5_prefix64", col("sh")).as("h"): _*)
+  }
+
+  /** The distinct `md5_prefix64` digests of a text's word 3-shingles —
+    * the set the MinHash signature and the Jaccard scorers read. Empty
+    * when the text has fewer than 3 words. */
+  def hashedShingles(text: Column): Column =
+    array_distinct(transform(shingles(tokens(text), 3),
+      sg => call_function("md5_prefix64", sg)))
 
   /** Value (0-15) of the hex digit of `h` at 1-based position `pos`. */
   private def hexDigitAt(h: Column, pos: Column): Column =

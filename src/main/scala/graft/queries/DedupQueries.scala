@@ -35,14 +35,32 @@ object DedupQueries {
        |      j -> (strpos('0123456789abcdef', substr(md5($e), j, 1)) - 1)
        |           * 16.0 ** (15 - j))) AS BIGINT)""".stripMargin
 
-  /** Shared PQ layout for q138 (flat PQ) and q167 (IVF-PQ): M=4
-    * subspaces × K=8 centroids, LUT slot index m*8 + cid (so the
-    * 32-slot per-query array is laid out subspace-major), ADC adds the
-    * 4 slots in FIXED left-to-right order (a bare sum would be
+  /** Shared PQ layout for q138 (flat PQ), q167 (IVF-PQ) and q217 (PQ
+    * distortion): M=4 subspaces of 16 dims × K=8 centroids (the vec_id
+    * < 8 seeds), LUT slot index m*8 + cid (so the 32-slot per-query
+    * array is laid out subspace-major), ADC adds the 4 slots in FIXED
+    * left-to-right order (a bare sum would be
     * summation-order-nondeterministic cross-engine). Any change to M/K
-    * or the slot layout lands here once and both ANN queries follow. */
+    * or the slot layout lands here once and every PQ query follows. */
   private object Pq {
     import org.apache.spark.sql.{Column, DataFrame}
+    /** (vec_id, cid, d0..d3): every vector's per-subspace dot with each
+      * centroid — the 8-row codebook broadcast, codegen'd dot_product
+      * on the 16-dim slices. */
+    def subspaceDots(e: DataFrame): DataFrame = {
+      val cent = e.filter(col("vec_id") < 8)
+        .select(col("vec_id").as("cid"), col("embedding").as("cv"))
+      val dcols = (0 until 4).map(m => TextOps.dot(
+        slice(col("embedding"), m * 16 + 1, 16),
+        slice(col("cv"), m * 16 + 1, 16)).as(s"d$m"))
+      e.crossJoin(broadcast(cent))
+        .select(Seq(col("vec_id"), col("cid")) ++ dcols: _*)
+    }
+    /** The 4 PQ codes c0..c3 over [[subspaceDots]] rows grouped by
+      * vec_id: each subspace's argmax-dot centroid, ties to the smaller
+      * cid. */
+    def codeAggs: Seq[Column] = (0 until 4).map(m =>
+      max_by(col("cid"), struct(col(s"d$m"), -col("cid"))).as(s"c$m"))
     /** Per-query 32-slot LUT array from the (vec_id, cid, d0..d3)
       * subspace-dot table, bounded collect_list of 32 structs. */
     def lutArr(withD: DataFrame, qids: Seq[Long]): DataFrame =
@@ -62,6 +80,27 @@ object DedupQueries {
         element_at(lut, c1.cast("int") + 9) +
         element_at(lut, c2.cast("int") + 17) +
         element_at(lut, c3.cast("int") + 25)
+    /** The ANN tail over (qid, vec_id, adc) scores: top-5 per query
+      * (WindowGroupLimit), then an exact dot re-score of just those
+      * survivors, broadcast. */
+    def rescoreTop5(e: DataFrame, scored: DataFrame,
+        qids: Seq[Long]): DataFrame = {
+      val topw = Window.partitionBy("qid")
+        .orderBy(col("adc").desc, col("vec_id"))
+      val top5 = scored.withColumn("rn", row_number().over(topw))
+        .filter(col("rn") <= 5)
+        .select(col("qid"), col("vec_id").as("cand_id"), col("adc"))
+      e.select(col("vec_id").as("cand_id"), col("embedding").as("ev"))
+        .join(broadcast(top5), "cand_id")
+        .join(broadcast(e.filter(col("vec_id").isin(qids: _*))
+          .select(col("vec_id").as("qid"), col("embedding").as("qv"))),
+          "qid")
+        .select(col("qid"), col("cand_id").as("vec_id"),
+          (round(col("adc"), 4) + lit(0.0)).as("adc_dot"),
+          (round(TextOps.dot(col("ev"), col("qv")), 4) + lit(0.0))
+            .as("exact_dot"))
+        .orderBy(col("qid"), col("adc_dot").desc, col("vec_id"))
+    }
   }
   /** Adaptive RP plane count: max(8, bitlen(n-1) - 3), i.e. 8 planes up to
     * 2048 vectors, then one more plane per corpus doubling — bucket count
@@ -98,9 +137,17 @@ object DedupQueries {
     val planes = adaptivePlanes(embCount(s, d))
     val withB = emb(s, d).select(col("vec_id"), col("embedding"),
       TextOps.rpBucket(col("embedding"), planes, 64).as("bucket"))
-    // ONE capped subtree self-joined (exchange reuse, see Scale)
-    val capped = Scale.capPerBucket(withB, "rp_cap", Seq("bucket"),
-      Seq("vec_id"))
+    bucketCosinePairs(Scale.capPerBucket(withB, "rp_cap", Seq("bucket"),
+      Seq("vec_id")))
+  }
+
+  /** The bucket-equi cosine self-join of q59 and [[rpPairs]]: pairs
+    * (id_a < id_b) sharing a bucket whose rounded dot clears 0.15, over
+    * an already-bucketed, capped (vec_id, embedding, bucket) frame. The
+    * frame is aliased twice, unchanged, so the bucket exchange is reused
+    * across build and probe (see Scale.capPerBucket). */
+  private def bucketCosinePairs(
+      capped: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val a = capped.as("a")
     val b = capped.as("b").hint("shuffle_hash")
     val rdot = round(TextOps.dot(col("a.embedding"), col("b.embedding")), 4) +
@@ -110,6 +157,36 @@ object DedupQueries {
       .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
         rdot.as("rdot"))
       .filter(col("rdot") > 0.15)
+  }
+
+  /** MinHash band rows of a (doc_id, k0..k3) signature frame: one
+    * (rec, band, key) row per permutation, band key = the FULL minhash
+    * value (never a fixed-cardinality fold). rec = (doc_id, k0..k3)
+    * rides along so the verify stage needs no join back to the
+    * signatures: 5 longs per doc, inside the narrow-payload rule. */
+  private def minhashBands(
+      sig: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val ks = TextOps.MinhashPerms.indices.map(i => col(s"k$i"))
+    sig.select(struct(col("doc_id") +: ks: _*).as("rec"),
+      posexplode(array(ks: _*)).as(Seq("band", "key")))
+  }
+
+  /** Verified candidate pairs (id_a < id_b, not distinct) of capped
+    * [[minhashBands]] rows: gather each (band, key) bucket, pair its
+    * members (bucket-collect, not a self-join: one shuffle of the narrow
+    * rows), keep pairs agreeing on >= 2 of the 4 minhashes (estimated
+    * Jaccard >= 0.5; the oracles apply the same threshold). */
+  private def agreeingPairs(
+      bands: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val agree = TextOps.MinhashPerms.indices
+      .map(i => (col(s"a.k$i") === col(s"b.k$i")).cast("int")).reduce(_ + _)
+    bands.groupBy("band", "key")
+      .agg(sort_array(collect_list(col("rec"))).as("recs"))
+      .select(explode(graft.functions.ArrayOps.combinations2(col("recs"),
+        fields = Seq("a", "b"))).as("p"))
+      .select(col("p.a").as("a"), col("p.b").as("b"))
+      .filter(agree >= 2)
+      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
   }
 
   /** One bucketed side of [[rpPairsSql]] with the adaptive plane count
@@ -226,21 +303,11 @@ object DedupQueries {
   private def emb(s: org.apache.spark.sql.SparkSession, d: String) =
     Tables.embeddings(s, d)
 
-  /** Memoized row count per data dir — q59/q88/q92/q111 each size their
-    * LSH structure from it; one parquet-metadata count job per dir instead
-    * of one per query. (Dirs are immutable test fixtures; a long-lived
-    * service would key this on snapshot version.) */
-  private val embCounts =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
-  private def embCount(s: org.apache.spark.sql.SparkSession,
-      d: String): Long =
-    embCounts.computeIfAbsent(d, dir => emb(s, dir).count())
-
-  private val docCounts =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
-  private def docCount(s: org.apache.spark.sql.SparkSession,
-      d: String): Long =
-    docCounts.computeIfAbsent(d, dir => docs(s, dir).count())
+  /** Row counts per data dir — q59/q88/q92/q111 each size their LSH
+    * structure from one, with one parquet-metadata count job per dir
+    * instead of one per query. */
+  private val embCount = Tables.perDir((s, d) => emb(s, d).count())
+  private val docCount = Tables.perDir((s, d) => docs(s, d).count())
 
   private val dbl = (c: org.apache.spark.sql.Column) => c.cast("double")
 
@@ -298,18 +365,7 @@ object DedupQueries {
         |  min((4000037 * h + 13579) % 4294967291) AS mh3
         |FROM hv GROUP BY doc_id ORDER BY doc_id""".stripMargin
     ) { (s, d) =>
-      val shingleRows = docs(s, d).select(col("doc_id"),
-        explode(TextOps.shingles(TextOps.tokens(col("text")), 3)).as("sh"))
-      // native codegen'd expression (graft.plans.Md5Prefix64): one md5 +
-      // direct byte->long, no hex-string round trip
-      val h = call_function("md5_prefix64", col("sh"))
-      shingleRows.select(col("doc_id"), h.as("h"))
-        .groupBy("doc_id")
-        .agg(
-          min((col("h") * 1000003L + 12345L) % 4294967291L).as("mh0"),
-          min((col("h") * 2000029L + 54321L) % 4294967291L).as("mh1"),
-          min((col("h") * 3000073L + 98765L) % 4294967291L).as("mh2"),
-          min((col("h") * 4000037L + 13579L) % 4294967291L).as("mh3"))
+      TextOps.minhashSignatures(docs(s, d), Seq("doc_id"), "mh")
         .orderBy("doc_id")
     },
 
@@ -385,29 +441,7 @@ object DedupQueries {
         |       CASE WHEN sa.k3 = sb.k3 THEN 1 ELSE 0 END) >= 2
         |ORDER BY id_a, id_b""".stripMargin
     ) { (s, d) =>
-      val shingleRows = docs(s, d).select(col("doc_id"),
-        explode(TextOps.shingles(TextOps.tokens(col("text")), 3)).as("sh"))
-      val h = call_function("md5_prefix64", col("sh"))
-      val perms = Seq((1000003L, 12345L), (2000029L, 54321L),
-        (3000073L, 98765L), (4000037L, 13579L))
-      val sig = shingleRows.select(col("doc_id"), h.as("h"))
-        .groupBy("doc_id")
-        .agg(min((col("h") * perms(0)._1 + perms(0)._2) % 4294967291L).as("k0"),
-          min((col("h") * perms(1)._1 + perms(1)._2) % 4294967291L).as("k1"),
-          min((col("h") * perms(2)._1 + perms(2)._2) % 4294967291L).as("k2"),
-          min((col("h") * perms(3)._1 + perms(3)._2) % 4294967291L).as("k3"))
-      // Candidate pairs via bucket-collect + per-bucket combinations
-      // instead of a self-join: one linear pipeline (agg -> explode) with
-      // no persist, no extra materialization job, and one shuffle of the
-      // narrow (band, key, rec) rows instead of two join-side exchanges.
-      // The rec struct carries the doc's full 4-long signature so the
-      // verify stage needs NO join back to sig (per-bucket payload is
-      // 5 longs per doc — inside the narrow-payload rule).
-      val rec = struct(col("doc_id"), col("k0"), col("k1"), col("k2"),
-        col("k3"))
-      val bands = sig.select(rec.as("rec"),
-        posexplode(array(col("k0"), col("k1"), col("k2"), col("k3")))
-          .as(Seq("band", "key")))
+      val sig = TextOps.minhashSignatures(docs(s, d), Seq("doc_id"), "k")
       // cap BEFORE the gather (row_number window, deterministic by the
       // rec struct whose first field is doc_id): collect_list's per-group
       // buffer is then bounded at 256 structs — the earlier
@@ -415,20 +449,8 @@ object DedupQueries {
       // one final-agg task, the exact state blowup the cap exists to
       // prevent (r6 review finding; siblings rpPairs/q59/q116 already
       // capped pre-gather)
-      val capped = Scale.capPerBucket(bands, "q52_cap", Seq("band", "key"),
-          Seq("rec"))
-        .groupBy("band", "key")
-        .agg(sort_array(collect_list(col("rec"))).as("recs"))
-      val agree = (col("a.k0") === col("b.k0")).cast("int") +
-        (col("a.k1") === col("b.k1")).cast("int") +
-        (col("a.k2") === col("b.k2")).cast("int") +
-        (col("a.k3") === col("b.k3")).cast("int")
-      capped
-        .select(explode(graft.functions.ArrayOps.combinations2(col("recs"),
-          fields = Seq("a", "b"))).as("p"))
-        .select(col("p.a").as("a"), col("p.b").as("b"))
-        .filter(agree >= 2)
-        .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
+      agreeingPairs(Scale.capPerBucket(minhashBands(sig), "q52_cap",
+          Seq("band", "key"), Seq("rec")))
         .distinct()
         .orderBy("id_a", "id_b")
     },
@@ -520,9 +542,7 @@ object DedupQueries {
       // expected collisions are ~m²/2^33 — harmless for per-pair Jaccard
       // at realistic m (thousands), though a corpus-wide distinct over
       // these hashes would need the full 64-bit width.
-      val sh = array_distinct(transform(
-        TextOps.shingles(TextOps.tokens(col("text")), 3),
-        sg => call_function("md5_prefix64", sg)))
+      val sh = TextOps.hashedShingles(col("text"))
       // Pair-reduce instead of a self-join: each doc emits its shingle set
       // into both pairs it belongs to ((doc-1, doc) as role b, (doc, doc+1)
       // as role a), then one groupBy(pair) recombines the two sides. One
@@ -742,18 +762,8 @@ object DedupQueries {
       val bits = math.max(6, Scale.bitLen(embCount(s, d)) - 5)
       val withB = emb(s, d).select(col("vec_id"), col("embedding"),
         TextOps.signBucket(col("embedding"), bits).as("bucket"))
-      // one capped subtree self-joined (exchange reuse, see Scale)
-      val capped = Scale.capPerBucket(withB, "q59_cap", Seq("bucket"),
-        Seq("vec_id"))
-      val a = capped.as("a")
-      val b = capped.as("b").hint("shuffle_hash")
-      val rdot = round(TextOps.dot(col("a.embedding"), col("b.embedding")), 4) +
-        lit(0.0)
-      a.join(b, col("a.bucket") === col("b.bucket")
-        && col("a.vec_id") < col("b.vec_id"))
-        .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
-          rdot.as("rdot"))
-        .filter(col("rdot") > 0.15)
+      bucketCosinePairs(Scale.capPerBucket(withB, "q59_cap", Seq("bucket"),
+          Seq("vec_id")))
         .orderBy("id_a", "id_b")
     },
 
@@ -951,8 +961,7 @@ object DedupQueries {
         // full-width minhash as the dedup key (same rationale as q52:
         // folding to a fixed bucket count over-collapses as the corpus
         // grows — at 10x docs a % 1024 key kept at most 1024 documents)
-        .agg(min((col("h") * 1000003L + 12345L) % 4294967291L)
-          .as("bucket"))
+        .agg(min(TextOps.minhashPerm(col("h"), 0)).as("bucket"))
       val kept = sig.groupBy("bucket").agg(min("doc_id").as("doc_id"))
       val enriched = kept
         .join(quality, "doc_id")
@@ -1016,9 +1025,7 @@ object DedupQueries {
         |WHERE len(a.sh) > 0 AND len(b.sh) > 0
         |ORDER BY id_a""".stripMargin
     ) { (s, d) =>
-      val sh = array_distinct(transform(
-        TextOps.shingles(TextOps.tokens(col("text")), 3),
-        sg => call_function("md5_prefix64", sg)))
+      val sh = TextOps.hashedShingles(col("text"))
       val withSh = docs(s, d).select(col("doc_id"), sh.as("sh"))
       val sides = withSh.select(explode(array(
         struct(col("doc_id").as("pair"), lit(0).as("role"), col("sh")),
@@ -1096,15 +1103,8 @@ object DedupQueries {
         |FROM cand WHERE agree >= 2 GROUP BY new_id
         |ORDER BY new_id""".stripMargin
     ) { (s, d) =>
-      val shingleRows = docs(s, d).select(col("doc_id"), col("source"),
-        explode(TextOps.shingles(TextOps.tokens(col("text")), 3)).as("sh"))
-      val h = call_function("md5_prefix64", col("sh"))
-      val sig = shingleRows.select(col("doc_id"), col("source"), h.as("h"))
-        .groupBy("doc_id", "source")
-        .agg(min((col("h") * 1000003L + 12345L) % 4294967291L).as("k0"),
-          min((col("h") * 2000029L + 54321L) % 4294967291L).as("k1"),
-          min((col("h") * 3000073L + 98765L) % 4294967291L).as("k2"),
-          min((col("h") * 4000037L + 13579L) % 4294967291L).as("k3"))
+      val sig = TextOps.minhashSignatures(docs(s, d),
+        Seq("doc_id", "source"), "k")
       val bands = sig.select(col("doc_id"), col("source"),
         posexplode(array(col("k0"), col("k1"), col("k2"), col("k3")))
           .as(Seq("band", "mh")))
@@ -1530,18 +1530,9 @@ object DedupQueries {
     ) { (s, d) =>
       val e = emb(s, d)
       val qids = Seq(20L, 21L, 22L)
-      val cent = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cv"))
-      val dcols = (0 until 4).map(m => TextOps.dot(
-        slice(col("embedding"), m * 16 + 1, 16),
-        slice(col("cv"), m * 16 + 1, 16)).as(s"d$m"))
-      val withD = e.crossJoin(broadcast(cent))
-        .select(Seq(col("vec_id"), col("cid")) ++ dcols: _*)
-      val codes = withD.groupBy("vec_id").agg(
-        max_by(col("cid"), struct(col("d0"), -col("cid"))).as("c0"),
-        max_by(col("cid"), struct(col("d1"), -col("cid"))).as("c1"),
-        max_by(col("cid"), struct(col("d2"), -col("cid"))).as("c2"),
-        max_by(col("cid"), struct(col("d3"), -col("cid"))).as("c3"))
+      val withD = Pq.subspaceDots(e)
+      val codes = withD.groupBy("vec_id")
+        .agg(Pq.codeAggs.head, Pq.codeAggs.tail: _*)
       // 3 queries x 4 subspaces x 8 centroids -> one 32-slot array per
       // query (Pq.lutArr: bounded collect_list, 32 elements)
       val lutArr = Pq.lutArr(withD, qids)
@@ -1550,19 +1541,7 @@ object DedupQueries {
         .select(col("qid"), col("vec_id"),
           Pq.adc(col("lut"), col("c0"), col("c1"), col("c2"), col("c3"))
             .as("adc"))
-      val topw = Window.partitionBy("qid").orderBy(col("adc").desc, col("vec_id"))
-      val top5 = scored.withColumn("rn", row_number().over(topw))
-        .filter(col("rn") <= 5)
-        .select(col("qid"), col("vec_id").as("cand_id"), col("adc"))
-      e.select(col("vec_id").as("cand_id"), col("embedding").as("ev"))
-        .join(broadcast(top5), "cand_id")
-        .join(broadcast(e.filter(col("vec_id").isin(qids: _*))
-          .select(col("vec_id").as("qid"), col("embedding").as("qv"))), "qid")
-        .select(col("qid"), col("cand_id").as("vec_id"),
-          (round(col("adc"), 4) + lit(0.0)).as("adc_dot"),
-          (round(TextOps.dot(col("ev"), col("qv")), 4) + lit(0.0))
-            .as("exact_dot"))
-        .orderBy(col("qid"), col("adc_dot").desc, col("vec_id"))
+      Pq.rescoreTop5(e, scored, qids)
     },
 
     // EXACT set-similarity join via prefix filtering (AllPairs/PPJoin
@@ -1837,9 +1816,7 @@ object DedupQueries {
       // Shared 3-consumer shingle-set table: eager localCheckpoint (the
       // q141 precedent — AQE does not dedup the consumers otherwise).
       val sets = docs(s, d).select(col("doc_id"),
-          array_distinct(transform(
-            TextOps.shingles(TextOps.tokens(col("text")), 3),
-            sg => call_function("md5_prefix64", sg))).as("sh"))
+          TextOps.hashedShingles(col("text")).as("sh"))
         .localCheckpoint(true)
       // Exact truth via the inverted index, not a probes x corpus
       // nested-loop of array_intersects: |A∩B| = count of shared shingle
@@ -1865,33 +1842,12 @@ object DedupQueries {
         .filter(lit(3) * col("inter") >= col("ma") + col("mb"))
         .select(col("id_a"), col("id_b"))
       // Production LSH retriever (q52's plan: bucket-collect, capped).
-      val perms = Seq((1000003L, 12345L), (2000029L, 54321L),
-        (3000073L, 98765L), (4000037L, 13579L))
+      val k = TextOps.minhashAggs(col("h"), "k")
       val sig = sets.select(col("doc_id"), explode(col("sh")).as("h"))
         .groupBy("doc_id")
-        .agg(min((col("h") * perms(0)._1 + perms(0)._2) % 4294967291L).as("k0"),
-          min((col("h") * perms(1)._1 + perms(1)._2) % 4294967291L).as("k1"),
-          min((col("h") * perms(2)._1 + perms(2)._2) % 4294967291L).as("k2"),
-          min((col("h") * perms(3)._1 + perms(3)._2) % 4294967291L).as("k3"))
-      val rec = struct(col("doc_id"), col("k0"), col("k1"), col("k2"),
-        col("k3"))
-      val bands = sig.select(rec.as("rec"),
-        posexplode(array(col("k0"), col("k1"), col("k2"), col("k3")))
-          .as(Seq("band", "key")))
-      val buckets = Scale.capPerBucketPruned(bands, "q146_cap",
-          Seq("band", "key"), Seq("rec"))
-        .groupBy("band", "key")
-        .agg(sort_array(collect_list(col("rec"))).as("recs"))
-      val agree = (col("a.k0") === col("b.k0")).cast("int") +
-        (col("a.k1") === col("b.k1")).cast("int") +
-        (col("a.k2") === col("b.k2")).cast("int") +
-        (col("a.k3") === col("b.k3")).cast("int")
-      val retr = buckets
-        .select(explode(graft.functions.ArrayOps.combinations2(col("recs"),
-          fields = Seq("a", "b"))).as("p"))
-        .select(col("p.a").as("a"), col("p.b").as("b"))
-        .filter(agree >= 2)
-        .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
+        .agg(k.head, k.tail: _*)
+      val retr = agreeingPairs(Scale.capPerBucketPruned(minhashBands(sig),
+          "q146_cap", Seq("band", "key"), Seq("rec")))
         .filter(col("id_a") < 100)
         .distinct()
       // One-pass fused counting over the tagged union (q109 pattern).
@@ -2016,9 +1972,6 @@ object DedupQueries {
         |FROM sig s LEFT JOIN agg a USING (doc_id)
         |WHERE s.incoming ORDER BY s.doc_id""".stripMargin
     ) { (s, d) =>
-      val shingleRows = docs(s, d).select(col("doc_id"),
-        explode(TextOps.shingles(TextOps.tokens(col("text")), 3)).as("sh"))
-      val h = call_function("md5_prefix64", col("sh"))
       // eager localCheckpoint (q144 doctrine): three consumers (incoming
       // bands, corpus bands, final left join) would otherwise each
       // re-run the scan+shingle+md5 pipeline — Catalyst pushes the
@@ -2026,12 +1979,7 @@ object DedupQueries {
       // differ per branch and exchange reuse can't fire. sig is
       // doc-count x 5 longs: cheap to materialize, and every consumer
       // then reads the checkpointed table.
-      val sig = shingleRows.select(col("doc_id"), h.as("h"))
-        .groupBy("doc_id")
-        .agg(min((col("h") * 1000003L + 12345L) % 4294967291L).as("k0"),
-          min((col("h") * 2000029L + 54321L) % 4294967291L).as("k1"),
-          min((col("h") * 3000073L + 98765L) % 4294967291L).as("k2"),
-          min((col("h") * 4000037L + 13579L) % 4294967291L).as("k3"))
+      val sig = TextOps.minhashSignatures(docs(s, d), Seq("doc_id"), "k")
         .withColumn("incoming",
           call_function("md5_prefix64", col("doc_id").cast("string"))
             % 8L === 0L)
@@ -2112,10 +2060,7 @@ object DedupQueries {
       // q160_mass) costs MORE on local[32] than the exchange it saves, so
       // the codegen explode+distinct form stays (on a multi-node cluster,
       // where the exchange is network-priced, the trade may flip).
-      val dh = docs(s, d).select(col("doc_id"),
-        explode(TextOps.shingles(TextOps.tokens(col("text")), 3)).as("sh"))
-        .select(col("doc_id"),
-          call_function("md5_prefix64", col("sh")).as("h"))
+      val dh = TextOps.hashedShingleRows(docs(s, d), col("doc_id"))
         .distinct()
         .observe("q160_mass", count(lit(1)).as("doc_h_rows"))
       dh.withColumn("nd",
@@ -2212,22 +2157,13 @@ object DedupQueries {
     ) { (s, d) =>
       val e = emb(s, d)
       val qids = Seq(30L, 31L, 32L)
-      val cent = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cv"))
-      val dcols = (0 until 4).map(m => TextOps.dot(
-        slice(col("embedding"), m * 16 + 1, 16),
-        slice(col("cv"), m * 16 + 1, 16)).as(s"d$m"))
-      val withD = e.crossJoin(broadcast(cent))
-        .select(Seq(col("vec_id"), col("cid")) ++ dcols: _*)
+      val withD = Pq.subspaceDots(e)
         .withColumn("dot",
           col("d0") + col("d1") + col("d2") + col("d3"))
       // ONE aggregate yields the coarse cell AND the 4 PQ codes
       val assigned = withD.groupBy("vec_id").agg(
         max_by(col("cid"), struct(col("dot"), -col("cid"))).as("cell"),
-        max_by(col("cid"), struct(col("d0"), -col("cid"))).as("c0"),
-        max_by(col("cid"), struct(col("d1"), -col("cid"))).as("c1"),
-        max_by(col("cid"), struct(col("d2"), -col("cid"))).as("c2"),
-        max_by(col("cid"), struct(col("d3"), -col("cid"))).as("c3"))
+        Pq.codeAggs: _*)
       val byDot = Window.partitionBy("vec_id")
         .orderBy(col("dot").desc, col("cid"))
       val probes = withD.filter(col("vec_id").isin(qids: _*))
@@ -2242,21 +2178,7 @@ object DedupQueries {
         .select(col("qid"), col("vec_id"),
           Pq.adc(col("lut"), col("c0"), col("c1"), col("c2"), col("c3"))
             .as("adc"))
-      val topw = Window.partitionBy("qid")
-        .orderBy(col("adc").desc, col("vec_id"))
-      val top5 = scored.withColumn("rn", row_number().over(topw))
-        .filter(col("rn") <= 5)
-        .select(col("qid"), col("vec_id").as("cand_id"), col("adc"))
-      e.select(col("vec_id").as("cand_id"), col("embedding").as("ev"))
-        .join(broadcast(top5), "cand_id")
-        .join(broadcast(e.filter(col("vec_id").isin(qids: _*))
-          .select(col("vec_id").as("qid"), col("embedding").as("qv"))),
-          "qid")
-        .select(col("qid"), col("cand_id").as("vec_id"),
-          (round(col("adc"), 4) + lit(0.0)).as("adc_dot"),
-          (round(TextOps.dot(col("ev"), col("qv")), 4) + lit(0.0))
-            .as("exact_dot"))
-        .orderBy(col("qid"), col("adc_dot").desc, col("vec_id"))
+      Pq.rescoreTop5(e, scored, qids)
     },
 
     // EXACT substring-level dedup, bounded Lee-et-al variant ("Deduplicating
@@ -4237,12 +4159,7 @@ object DedupQueries {
       val nS = srcs.length
       val bitOf = element_at(
         typedlit(srcs.zipWithIndex.toMap), col("source"))
-      val hm = d
-        .select(bitOf.as("b"),
-          explode(TextOps.shingles(TextOps.tokens(col("text")), 3))
-            .as("sh"))
-        .select(col("b"),
-          call_function("md5_prefix64", col("sh")).as("h"))
+      val hm = TextOps.hashedShingleRows(d, bitOf.as("b"))
         .groupBy("h")
         .agg(expr("bit_or(shiftleft(cast(1 as bigint), b))").as("m"))
       val a = hm
@@ -4267,13 +4184,7 @@ object DedupQueries {
         .agg(sum("c").as("i"))
       (a, i0)
     } else {
-      val hv = d
-        .select(col("source"),
-          explode(TextOps.shingles(TextOps.tokens(col("text")), 3))
-            .as("sh"))
-        .select(col("source"),
-          call_function("md5_prefix64", col("sh")).as("h"))
-        .distinct()
+      val hv = TextOps.hashedShingleRows(d, col("source")).distinct()
       val a = hv.groupBy("source")
         .agg(count(lit(1)).as("n"), minK(col("h")).as("bk"))
       val i0 = hv.groupBy("h")
@@ -4441,38 +4352,43 @@ object DedupQueries {
       .orderBy("source")
   }
 
-  /** Memoized multi-probe seeds: the 8 coarse centroids plus each
-    * probe's 4 nearest cells under the quantized ordering (q215 seed
-    * rule — bounded collects, not broadcast-scalar subqueries). */
-  private val mpSeeds = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[(Long, Seq[Float])], Seq[(Long, Seq[Float], Seq[Long])])]
-  private def multiProbeSeeds(s: org.apache.spark.sql.SparkSession,
-      d: String)
-      : (Seq[(Long, Seq[Float])], Seq[(Long, Seq[Float], Seq[Long])]) =
-    mpSeeds.computeIfAbsent(d, { dir =>
-      def dotD(a: Seq[Float], b: Seq[Float]): Double = {
-        var acc = 0.0; var i = 0
-        while (i < a.length) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
-        acc
+  /** The 8 coarse centroids (vec_id < 8) and the probes
+    * (10 <= vec_id < 18), each probe with its `nCells` nearest cells,
+    * computed driver-side with the same left-to-right IEEE double fold
+    * DuckDB's list_sum uses — two bounded collects, not broadcast-scalar
+    * subqueries (round-8 rule). The cell pick is quantized to
+    * round(dot*1e4) like every rank key in these queries: a
+    * full-precision compare would let a near-tie between cells flip the
+    * probe set on any engine whose summation order differs. */
+  private def centroidProbeSeeds(s: org.apache.spark.sql.SparkSession,
+      d: String, nCells: Int)
+      : (Seq[(Long, Seq[Float])], Seq[(Long, Seq[Float], Seq[Long])]) = {
+    def dotD(a: Seq[Float], b: Seq[Float]): Double = {
+      var acc = 0.0; var i = 0
+      while (i < a.length) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
+      acc
+    }
+    val cents = emb(s, d).filter(col("vec_id") < 8)
+      .select("vec_id", "embedding").collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
+      .sortBy(_._1)
+    val probes = emb(s, d)
+      .filter(col("vec_id") >= 10 && col("vec_id") < 18)
+      .select("vec_id", "embedding").collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
+      .sortBy(_._1)
+      .map { case (qid, qv) =>
+        val cells = cents
+          .map { case (cid, cv) => (cid, math.round(dotD(qv, cv) * 10000)) }
+          .sortBy { case (cid, dt) => (-dt, cid) }.take(nCells).map(_._1)
+        (qid, qv, cells)
       }
-      val cents = emb(s, dir).filter(col("vec_id") < 8)
-        .select("vec_id", "embedding").collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
-        .sortBy(_._1)
-      val probes = emb(s, dir)
-        .filter(col("vec_id") >= 10 && col("vec_id") < 18)
-        .select("vec_id", "embedding").collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
-        .sortBy(_._1)
-        .map { case (qid, qv) =>
-          val cells = cents
-            .map { case (cid, cv) =>
-              (cid, math.round(dotD(qv, cv) * 10000)) }
-            .sortBy { case (cid, dt) => (-dt, cid) }.take(4).map(_._1)
-          (qid, qv, cells)
-        }
-      (cents, probes)
-    })
+    (cents, probes)
+  }
+
+  /** q238's seeds: each probe's 4 nearest cells. */
+  private val multiProbeSeeds =
+    Tables.perDir(centroidProbeSeeds(_, _, 4))
 
   /** q238 core over any (vec_id, embedding) frame plus explicit
     * centroid/probe seeds. Factored for crafted laws (an all-one-cell
@@ -4572,16 +4488,13 @@ object DedupQueries {
     * disjoint docs → est = exact = 0). */
   private[graft] def minhashCalibrationCore(
       d: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val P = 4294967291L
-    val hashes = Seq((1000003L, 12345L), (2000029L, 54321L),
-      (3000073L, 98765L), (4000037L, 13579L))
-    val sh = array_distinct(transform(
-      TextOps.shingles(TextOps.tokens(col("text")), 3),
-      sg => call_function("md5_prefix64", sg)))
-    val base = d.select(col("doc_id"), sh.as("sh"))
+    // the shared permutation constants, in this query's own
+    // (a·(x mod P) + b) mod P form: its oracle mirrors exactly that
+    val P = TextOps.MinhashP
+    val base = d.select(col("doc_id"), TextOps.hashedShingles(col("text")).as("sh"))
       .filter(size(col("sh")) >= 1)
       .select(col("doc_id"), col("sh"),
-        array(hashes.map { case (a, b) =>
+        array(TextOps.MinhashPerms.map { case (a, b) =>
           array_min(transform(col("sh"),
             x => (lit(a) * (x % P) + lit(b)) % P))
         }: _*).as("sig"))
@@ -4630,21 +4543,17 @@ object DedupQueries {
       .orderBy("err_decile")
   }
 
-  /** Memoized per-dim (min, max) corpus ranges for SQ8 — one bounded
-    * 64-row aggregate per data dir. */
-  private val sqRangeMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[Double], Seq[Double])]
-  private def sqRanges(s: org.apache.spark.sql.SparkSession,
-      d: String): (Seq[Double], Seq[Double]) =
-    sqRangeMemo.computeIfAbsent(d, { dir =>
-      val rows = emb(s, dir)
-        .select(posexplode(col("embedding")).as(Seq("i", "v")))
-        .groupBy("i")
-        .agg(min(col("v").cast("double")).as("mn"),
-          max(col("v").cast("double")).as("mx"))
-        .orderBy("i").collect()
-      (rows.map(_.getDouble(1)).toSeq, rows.map(_.getDouble(2)).toSeq)
-    })
+  /** Per-dim (min, max) corpus ranges for SQ8 — one bounded 64-row
+    * aggregate per data dir. */
+  private val sqRanges = Tables.perDir { (s, d) =>
+    val rows = emb(s, d)
+      .select(posexplode(col("embedding")).as(Seq("i", "v")))
+      .groupBy("i")
+      .agg(min(col("v").cast("double")).as("mn"),
+        max(col("v").cast("double")).as("mx"))
+      .orderBy("i").collect()
+    (rows.map(_.getDouble(1)).toSeq, rows.map(_.getDouble(2)).toSeq)
+  }
 
   /** q233 core over any (vec_id, embedding) frame, probe seeds and
     * per-dim ranges. Factored for crafted laws (an identity
@@ -4878,18 +4787,17 @@ object DedupQueries {
     430676L, 386852L, 356207L, 333333L, 315464L, 301029L, 289064L)
   private val ndcgPref: Seq[Long] = ndcgDisc.scanLeft(0L)(_ + _).tail
 
-  /** Memoized nDCG probe seeds (vec_id, label) ∈ [10, 26) — one bounded
-    * collect per data dir (16 rows). */
-  private val ndcgProbeMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(Long, Seq[Float], Int)]]
-  private def ndcgProbes(s: org.apache.spark.sql.SparkSession,
-      d: String): Seq[(Long, Seq[Float], Int)] =
-    ndcgProbeMemo.computeIfAbsent(d, { dir =>
-      emb(s, dir).filter(col("vec_id") >= 10 && col("vec_id") < 26)
-        .select("vec_id", "embedding", "label").collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1), r.getInt(2))).toSeq
-        .sortBy(_._1)
-    })
+  /** Probe seeds (vec_id, embedding, label) with lo <= vec_id < hi, by
+    * vec_id — one bounded collect. */
+  private def labeledProbes(s: org.apache.spark.sql.SparkSession,
+      d: String, lo: Int, hi: Int): Seq[(Long, Seq[Float], Int)] =
+    emb(s, d).filter(col("vec_id") >= lo && col("vec_id") < hi)
+      .select("vec_id", "embedding", "label").collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1), r.getInt(2))).toSeq
+      .sortBy(_._1)
+
+  /** nDCG probe seeds, vec_id in [10, 26) (16 rows). */
+  private val ndcgProbes = Tables.perDir(labeledProbes(_, _, 10, 26))
 
   /** q224 core over any (vec_id, embedding, label) frame plus explicit
     * probe seeds. Factored for crafted-ranking laws (known ideal /
@@ -5007,16 +4915,12 @@ object DedupQueries {
       .orderBy("lang")
   }
 
-  /** Memoized MaxSim query seeds (vec_id 30..33). */
-  private val msProbes = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(Long, Seq[Float])]]
-  private def maxSimProbes(s: org.apache.spark.sql.SparkSession,
-      d: String): Seq[(Long, Seq[Float])] =
-    msProbes.computeIfAbsent(d, { dir =>
-      emb(s, dir).filter(col("vec_id") >= 30 && col("vec_id") < 34)
-        .select("vec_id", "embedding").collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq.sortBy(_._1)
-    })
+  /** MaxSim query seeds (vec_id 30..33). */
+  private val maxSimProbes = Tables.perDir { (s, d) =>
+    emb(s, d).filter(col("vec_id") >= 30 && col("vec_id") < 34)
+      .select("vec_id", "embedding").collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq.sortBy(_._1)
+  }
 
   /** q218 core over any (vec_id, embedding) frame plus explicit query
     * seeds. Factored for the crafted one-hot law (a document holding
@@ -5059,18 +4963,9 @@ object DedupQueries {
       e: org.apache.spark.sql.DataFrame, qids: Seq[Long])
       : org.apache.spark.sql.DataFrame = {
       import graft.functions.Aggregators
-      val cent = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cv"))
-      val dcols = (0 until 4).map(m => TextOps.dot(
-        slice(col("embedding"), m * 16 + 1, 16),
-        slice(col("cv"), m * 16 + 1, 16)).as(s"d$m"))
-      val withD = e.crossJoin(broadcast(cent))
-        .select(Seq(col("vec_id"), col("cid")) ++ dcols: _*)
-      val codes = withD.groupBy("vec_id").agg(
-        max_by(col("cid"), struct(col("d0"), -col("cid"))).as("c0"),
-        max_by(col("cid"), struct(col("d1"), -col("cid"))).as("c1"),
-        max_by(col("cid"), struct(col("d2"), -col("cid"))).as("c2"),
-        max_by(col("cid"), struct(col("d3"), -col("cid"))).as("c3"))
+      val withD = Pq.subspaceDots(e)
+      val codes = withD.groupBy("vec_id")
+        .agg(Pq.codeAggs.head, Pq.codeAggs.tail: _*)
       val lutArr = Pq.lutArr(withD, qids)
       val M = 1099511627776L // 2^40 (id-exact to 1.1e12 ids — r11 audit)
       val minK16 = udaf(new Aggregators.MinKAgg(16),
@@ -5078,12 +4973,9 @@ object DedupQueries {
       val top = codes.crossJoin(broadcast(lutArr))
         .filter(col("vec_id") =!= col("qid"))
         .select(col("qid"),
-          (expr("cast(round((" +
-            "element_at(lut, cast(c0 AS int) + 1) + " +
-            "element_at(lut, cast(c1 AS int) + 9) + " +
-            "element_at(lut, cast(c2 AS int) + 17) + " +
-            "element_at(lut, cast(c3 AS int) + 25)) * 10000) AS bigint)")
-            * lit(-M) + col("vec_id")).as("key"))
+          (round(Pq.adc(col("lut"), col("c0"), col("c1"), col("c2"),
+            col("c3")) * 10000).cast("long") * lit(-M) + col("vec_id"))
+            .as("key"))
         .groupBy("qid")
         .agg(minK16(col("key")).as("ks"))
         .select(col("qid"), explode(col("ks")).as("key"))
@@ -5115,18 +5007,8 @@ object DedupQueries {
         .orderBy("qid")
   }
 
-  /** Memoized hard-negative probe seeds (vec_id, embedding, label) for
-    * q216 — one bounded collect per data dir. */
-  private val hnProbes = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(Long, Seq[Float], Int)]]
-  private def hardNegProbes(s: org.apache.spark.sql.SparkSession,
-      d: String): Seq[(Long, Seq[Float], Int)] =
-    hnProbes.computeIfAbsent(d, { dir =>
-      emb(s, dir).filter(col("vec_id") >= 10 && col("vec_id") < 18)
-        .select("vec_id", "embedding", "label").collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1), r.getInt(2))).toSeq
-        .sortBy(_._1)
-    })
+  /** q216's hard-negative anchor seeds, vec_id in [10, 18). */
+  private val hardNegProbes = Tables.perDir(labeledProbes(_, _, 10, 18))
 
   /** q216 core over any (vec_id, embedding, label) frame plus explicit
     * anchor seeds. Factored for crafted-label laws (the nearest
@@ -5241,42 +5123,12 @@ object DedupQueries {
       .select("doc_id", "fp").distinct()
   }
 
-  /** Memoized IVF-eval seeds per data dir: the 8 centroids (vec_id < 8)
-    * and the 8 probes (10 <= vec_id < 18) with their nprobe=2 coarse
-    * cells, computed driver-side with the same left-to-right IEEE double
-    * fold DuckDB's list_sum uses — two bounded collects, not
-    * broadcast-scalar subqueries (round-8 rule). */
-  private val ivfSeeds = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[(Long, Seq[Float])], Seq[(Long, Seq[Float], Long, Long)])]
-  private def ivfEvalSeeds(s: org.apache.spark.sql.SparkSession, d: String)
-      : (Seq[(Long, Seq[Float])], Seq[(Long, Seq[Float], Long, Long)]) =
-    ivfSeeds.computeIfAbsent(d, { dir =>
-      def dotD(a: Seq[Float], b: Seq[Float]): Double = {
-        var acc = 0.0; var i = 0
-        while (i < a.length) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
-        acc
-      }
-      val cents = emb(s, dir).filter(col("vec_id") < 8)
-        .select("vec_id", "embedding").collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
-        .sortBy(_._1)
-      val probes = emb(s, dir)
-        .filter(col("vec_id") >= 10 && col("vec_id") < 18)
-        .select("vec_id", "embedding").collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
-        .sortBy(_._1)
-        .map { case (qid, qv) =>
-          // cell pick is quantized to round(dot*1e4) like every rank key
-          // in these queries — a full-precision compare would let a
-          // near-tie between the 2nd and 3rd cell flip the probe set on
-          // any engine whose summation order differs
-          val cells = cents
-            .map { case (cid, cv) => (cid, math.round(dotD(qv, cv) * 10000)) }
-            .sortBy { case (cid, dt) => (-dt, cid) }.take(2).map(_._1)
-          (qid, qv, cells(0), cells(1))
-        }
-      (cents, probes)
-    })
+  /** q215's IVF-eval seeds: each probe's nprobe=2 coarse cells. */
+  private val ivfEvalSeeds = Tables.perDir { (s, d) =>
+    val (cents, probes) = centroidProbeSeeds(s, d, 2)
+    (cents, probes.map { case (qid, qv, cells) =>
+      (qid, qv, cells(0), cells(1)) })
+  }
 
   /** q197 core, parameterized over the boundary hash so the law spec can
     * force cross-content collisions (unreachable with real 60-bit keys at

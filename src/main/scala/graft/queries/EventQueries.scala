@@ -16,16 +16,9 @@ object EventQueries {
   private def ev(s: org.apache.spark.sql.SparkSession, d: String) =
     Tables.events(s, d)
 
-  /** Memoized max(unix_micros(ts)) per data dir (q213's decay anchor):
-    * one 1-column aggregate job instead of a broadcast-scalar subquery,
-    * which would serialize its consumers' stages (round-8 rule, same as
-    * TextQueries.maxDocId). */
-  private val maxTsUs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
-  private def maxTsMicros(s: org.apache.spark.sql.SparkSession,
-      d: String): Long =
-    maxTsUs.computeIfAbsent(d,
-      dir => ev(s, dir).agg(max(expr("unix_micros(ts)"))).head().getLong(0))
+  /** max(unix_micros(ts)) per data dir (q213's decay anchor). */
+  private val maxTsMicros = Tables.perDir((s, d) =>
+    ev(s, d).agg(max(expr("unix_micros(ts)"))).head().getLong(0))
 
   /** Non-SQL-expressible entries (rows-only driver check): multimodal
     * decode plumbing — the featurize step runs per-partition via

@@ -2337,17 +2337,7 @@ object PipelineQueries {
     * and coll_ppm 0 at every batch size). */
   private[graft] def batchCollisionCore(
       d: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val sig = d
-      .select(col("doc_id"),
-        explode(TextOps.shingles(TextOps.tokens(col("text")), 3))
-          .as("sh"))
-      .select(col("doc_id"),
-        call_function("md5_prefix64", col("sh")).as("h"))
-      .groupBy("doc_id")
-      .agg(min((col("h") * 1000003L + 12345L) % 4294967291L).as("k0"),
-        min((col("h") * 2000029L + 54321L) % 4294967291L).as("k1"),
-        min((col("h") * 3000073L + 98765L) % 4294967291L).as("k2"),
-        min((col("h") * 4000037L + 13579L) % 4294967291L).as("k3"))
+    val sig = TextOps.minhashSignatures(d, Seq("doc_id"), "k")
       .localCheckpoint(true,
         org.apache.spark.storage.StorageLevel.DISK_ONLY)
     val n = sig.count()

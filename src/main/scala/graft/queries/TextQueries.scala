@@ -27,15 +27,9 @@ object TextQueries {
   private def docs(s: org.apache.spark.sql.SparkSession, d: String) =
     Tables.documents(s, d)
 
-  /** Memoized max(doc_id) per data dir (q204's decile bound): one
-    * 1-column aggregate job instead of a broadcast-scalar subquery,
-    * which would serialize the consumers' stages (round-8 rule). */
-  private val maxDocIds =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
-  private def maxDocId(s: org.apache.spark.sql.SparkSession,
-      d: String): Long =
-    maxDocIds.computeIfAbsent(d,
-      dir => docs(s, dir).agg(max("doc_id")).head().getLong(0))
+  /** max(doc_id) per data dir (q204's decile bound). */
+  private val maxDocId = Tables.perDir((s, d) =>
+    docs(s, d).agg(max("doc_id")).head().getLong(0))
 
   val queries: Seq[Q] = Seq(
     // Token/word statistics — str.py length/split kernels + counts.
@@ -1633,11 +1627,7 @@ object TextQueries {
     * source has unseen_ppm = ttr_ppm = 1e6). */
   private[graft] def goodTuringCore(
       d: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    d.select(col("source"),
-        explode(TextOps.shingles(TextOps.tokens(col("text")), 3))
-          .as("sh"))
-      .select(col("source"),
-        call_function("md5_prefix64", col("sh")).as("h"))
+    TextOps.hashedShingleRows(d, col("source"))
       .groupBy("source", "h")
       .agg(count(lit(1)).as("c"))
       .groupBy("source")

@@ -265,14 +265,9 @@ object EventStreams {
   def minhashBands(text: org.apache.spark.sql.Column)
       : org.apache.spark.sql.Column = {
     import graft.functions.{ArrayOps, TextOps}
-    val perms = Seq((1000003L, 12345L), (2000029L, 54321L),
-      (3000073L, 98765L), (4000037L, 13579L))
-    ArrayOps.bindOnce(array_distinct(transform(
-      TextOps.shingles(TextOps.tokens(text), 3),
-      sg => call_function("md5_prefix64", sg)))) { hs =>
-      when(size(hs) > 0, array(perms.map { case (a, b) =>
-        array_min(transform(hs, h => (h * a + b) % 4294967291L))
-      }: _*))
+    ArrayOps.bindOnce(TextOps.hashedShingles(text)) { hs =>
+      when(size(hs) > 0, array(TextOps.MinhashPerms.indices.map(i =>
+        array_min(transform(hs, h => TextOps.minhashPerm(h, i)))): _*))
     }
   }
 

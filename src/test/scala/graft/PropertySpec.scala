@@ -91,18 +91,27 @@ class PropertySpec extends SparkSpec {
   }
 
   test("law: minhash is invariant under shingle permutation and duplication") {
-    import graft.functions.TextOps
-    val words = Gen.listOfN(12,
-      Gen.oneOf("spark", "join", "scan", "merge", "sort", "hash", "row"))
-    forAll(words, n = 8) { ws =>
-      val doc = ws.mkString(" ")
-      val shuffled = scala.util.Random.javaRandomToRandom(
-        new java.util.Random(7)).shuffle(ws)
-      val dupes = (shuffled ++ shuffled.take(3)).mkString(" ")
-      val df = List((0L, doc), (1L, dupes)).toDF("row_id", "t")
-      val sh = array_distinct(TextOps.shingles(TextOps.tokens(col("t")), 1))
-      val mh = eval1(df, TextOps.minhash(sh, "s0"))
-      assert(mh(0) == mh(1), s"minhash not set-invariant for $ws")
+    import graft.streaming.EventStreams
+    // A token sequence of period p has the same 3-shingle SET for every
+    // rotation and every length >= p + 2. So rotating the tokens (which
+    // reorders the shingles) and repeating them (which duplicates
+    // shingles) must leave the production signature unchanged.
+    val cases = for {
+      p <- Gen.choose(1, 6)
+      cyc <- Gen.listOfN(p,
+        Gen.oneOf("spark", "join", "scan", "merge", "sort", "hash", "row"))
+      r <- Gen.choose(0, p - 1)
+      reps <- Gen.choose(1, 4)
+    } yield (cyc, r, reps)
+    forAll(cases, n = 8) { case (cyc, r, reps) =>
+      val p = cyc.length
+      def doc(start: Int, len: Int): String =
+        (0 until len).map(i => cyc((start + i) % p)).mkString(" ")
+      val df = List((0L, doc(0, p + 2)), (1L, doc(r, reps * p + 2)))
+        .toDF("row_id", "t")
+      val mh = eval1(df, EventStreams.minhashBands(col("t")))
+      assert(mh(0) != null && mh(0) == mh(1),
+        s"minhash not set-invariant for $cyc rotated by $r x$reps")
     }
   }
 

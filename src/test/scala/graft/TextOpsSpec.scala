@@ -22,13 +22,43 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("minhash matches independent md5 min") {
-    val text = "the quick brown fox jumps"
-    val df = Seq((0L, text)).toDF("row_id", "t")
-    val shingles = Seq("the quick brown", "quick brown fox", "brown fox jumps")
-    val expected = shingles.map(s => md5hex("s0" + s)).min
-    val got = eval1(df,
-      TextOps.minhash(TextOps.shingles(TextOps.tokens(col("t")), 3), "s0"))
-    assert(got == Seq(expected))
+    // plain-Scala model of the production signature: each distinct word
+    // 3-shingle hashes to the first 4 md5 bytes as an unsigned int, and
+    // permutation i keeps min((h·a_i + b_i) mod P)
+    val p = 4294967291L
+    val perms = Seq((1000003L, 12345L), (2000029L, 54321L),
+      (3000073L, 98765L), (4000037L, 13579L))
+    def h32(s: String): Long =
+      MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
+        .take(4).foldLeft(0L)((acc, b) => (acc << 8) | (b & 0xffL))
+    def hashes(text: String): Set[Long] =
+      text.split(" ").sliding(3).filter(_.length == 3)
+        .map(w => h32(w.mkString(" "))).toSet
+    def model(text: String): Seq[Long] =
+      perms.map { case (a, b) => hashes(text).map(h => (h * a + b) % p).min }
+    val t0 = "the quick brown fox jumps"
+    val t1 = "the quick brown fox the quick brown fox over the lazy dog"
+    val df = Seq((0L, t0), (1L, t1), (2L, "too short"))
+      .toDF("doc_id", "text")
+    // exploded form (q51/q52/q116/q159): a short doc yields no row
+    val k = TextOps.minhashAggs(col("h"), "k")
+    val exploded = df.select(col("doc_id"),
+        explode(TextOps.shingles(TextOps.tokens(col("text")), 3)).as("sh"))
+      .select(col("doc_id"), call_function("md5_prefix64", col("sh")).as("h"))
+      .groupBy("doc_id").agg(k.head, k.tail: _*)
+      .collect().map(r => r.getLong(0) -> (1 to 4).map(r.getLong)).toMap
+    assert(exploded == Map(0L -> model(t0), 1L -> model(t1)))
+    // per-row fold over the hashed shingle set (the stream form): a
+    // short doc yields null
+    val rows = df.orderBy("doc_id").select(
+        TextOps.hashedShingles(col("text")).as("hs"),
+        graft.streaming.EventStreams.minhashBands(col("text")).as("mh"))
+      .collect()
+    assert(rows.take(2).map(_.getSeq[Long](0).toSet).toSeq ==
+      Seq(hashes(t0), hashes(t1)))
+    assert(rows.take(2).map(_.getSeq[Long](1)).toSeq ==
+      Seq(model(t0), model(t1)))
+    assert(rows(2).getSeq[Long](0).isEmpty && rows(2).isNullAt(1))
   }
 
   test("simhash16 matches independent bit-vote computation") {
