@@ -36,7 +36,11 @@ object awk {
 
   // ---- structure (§2.6) --------------------------------------------------
   def num(arr: Column): Column = ArrayOps.num(arr)
-  def flatten(arr: Column): Column = org.apache.spark.sql.functions.flatten(arr)
+  /** Concatenate each row's inner lists — reference `flatten(axis=1)`:
+    * None inner lists are removed, None elements kept. Spark's bare
+    * flatten would null the whole row on one null inner list. */
+  def flatten(arr: Column): Column =
+    org.apache.spark.sql.functions.flatten(filter(arr, _.isNotNull))
   def firsts(arr: Column): Column = ArrayOps.firsts(arr)
   def singletons(c: Column): Column = ArrayOps.singletons(c)
   def pad_none(arr: Column, target: Int, clip: Boolean = false): Column =

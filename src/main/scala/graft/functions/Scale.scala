@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions._
 /** The scale idioms the LSH / dedup pair factories and the iterative graph
   * loops share, one home each: the per-bucket membership cap, the
   * data-derived bit width, and the one-action checkpoint that carries an
-  * observe(). The oracle SQL mirrors stay hand-written per query: they
-  * are the reference the gate compares against, and code shared by both
-  * sides could carry one bug past both. */
+  * observe(). The oracle SQL never calls into this object: it is the
+  * reference the gate compares against, and code shared by both sides
+  * could carry one bug past both (its kernel mirrors live in
+  * graft.queries.OracleSql). */
 object Scale {
 
   private val Cap = 256

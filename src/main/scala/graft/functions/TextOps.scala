@@ -118,9 +118,9 @@ object TextOps {
     * `(h·a + b) mod P` over ONE codegen'd `md5_prefix64` digest per
     * shingle (no per-permutation re-hash, no hex strings). P is the
     * largest prime below 2^32, so with the 32-bit digest every product
-    * stays far inside a Long. The oracle SQL mirrors these literals by
-    * hand; q236's estimator mirrors its own `(a·(x mod P) + b) mod P`
-    * form and takes only the constants. */
+    * stays far inside a Long. The oracle retypes these literals in
+    * graft.queries.OracleSql.minhashPerm; q236's estimator mirrors its
+    * own `(a·(x mod P) + b) mod P` form and takes only the constants. */
   private[graft] val MinhashP = 4294967291L
   private[graft] val MinhashPerms: Seq[(Long, Long)] = Seq(
     (1000003L, 12345L), (2000029L, 54321L),

@@ -24,17 +24,6 @@ object DedupQueries {
   private def docs(s: org.apache.spark.sql.SparkSession, d: String) =
     Tables.documents(s, d)
 
-  /** DuckDB mirror of the md5_prefix60 kernel (see TextQueries.md560):
-    * 7 + 8 nibbles, each half integer-exact in doubles, recombined in
-    * BIGINT (< 2^60). */
-  private def md560(e: String): String =
-    s"""CAST(list_sum(list_transform(range(1, 8),
-       |      j -> (strpos('0123456789abcdef', substr(md5($e), j, 1)) - 1)
-       |           * 16.0 ** (7 - j))) AS BIGINT) * 4294967296
-       |    + CAST(list_sum(list_transform(range(8, 16),
-       |      j -> (strpos('0123456789abcdef', substr(md5($e), j, 1)) - 1)
-       |           * 16.0 ** (15 - j))) AS BIGINT)""".stripMargin
-
   /** Shared PQ layout for q138 (flat PQ), q167 (IVF-PQ) and q217 (PQ
     * distortion): M=4 subspaces of 16 dims × K=8 centroids (the vec_id
     * < 8 seeds), LUT slot index m*8 + cid (so the 32-slot per-query
@@ -221,9 +210,9 @@ object DedupQueries {
       |WHERE round(list_sum(list_transform(range(1, len(a.embedding) + 1),
       |    i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))), 4) + 0 > 0.15""".stripMargin
 
-  /** Degree-bounded near-dup edges for the connected-components consumers
-    * (q92/q111): each id_a keeps its 32 strongest edges (rdot desc, id_b
-    * tie-break — both engine-exact, rdot is rounded to 4). CC needs
+  /** Degree bound for connected-components edge input: each id_a of
+    * `pairs(id_a, id_b, rdot)` keeps its 32 strongest edges (rdot desc,
+    * id_b tie-break — both engine-exact, rdot is rounded to 4). CC needs
     * CONNECTIVITY, not the full thresholded pair graph; a replica family
     * of m near-identical docs otherwise feeds O(m²) edges into every CC
     * round (the round-6 100x rehearsal measured 25x runtime at 10x data).
@@ -235,8 +224,8 @@ object DedupQueries {
     * 32 — sparser graphs are cheaper per round but pay more rounds.
     * Mirrored EXACTLY in the oracles, so the gate checks these
     * semantics. */
-  private def rpEdges(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
+  private def degreeBounded(pairs: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
     val w = Window.partitionBy("id_a")
       .orderBy(col("rdot").desc, col("id_b").asc)
     // eager localCheckpoint: CC persists its edge input and re-reads it
@@ -245,10 +234,16 @@ object DedupQueries {
     // same row count, same graph). Cutting lineage to a materialized
     // RDD restores the pre-window CC cost; same lesson as the per-round
     // checkpoints inside GraphOps.
-    rpPairs(s, d).withColumn("__rn", row_number().over(w))
+    pairs.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <= 32).drop("__rn")
       .localCheckpoint(true)
   }
+
+  /** The degree-bounded near-dup edges the CC consumers (q92/q111/...)
+    * read: [[degreeBounded]] over [[rpPairs]]. */
+  private def rpEdges(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame =
+    degreeBounded(rpPairs(s, d))
 
   /** The oracle-SQL twin of [[rpEdges]]. */
   private val rpEdgesSql: String =
@@ -262,7 +257,7 @@ object DedupQueries {
   /** The oracle-SQL twin of [[boundaryOverlap]] with the real 60-bit
     * hash (q197's pair set, composable — no ORDER BY). */
   private val boundaryPairsSql: String =
-    """(WITH t AS (
+    s"""(WITH t AS (
       |  SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
       |hk AS (
       |  SELECT doc_id,
@@ -271,21 +266,11 @@ object DedupQueries {
       |  FROM t WHERE len(ws) >= 6),
       |hh AS (
       |  SELECT doc_id, head3,
-      |    CAST(list_sum(list_transform(range(1, 8),
-      |      j -> (strpos('0123456789abcdef', substr(md5(head3), j, 1))
-      |            - 1) * 16.0 ** (7 - j))) AS BIGINT) * 4294967296
-      |    + CAST(list_sum(list_transform(range(8, 16),
-      |      j -> (strpos('0123456789abcdef', substr(md5(head3), j, 1))
-      |            - 1) * 16.0 ** (15 - j))) AS BIGINT) AS hh
+      |    ${OracleSql.md560("head3")} AS hh
       |  FROM hk),
       |th AS (
       |  SELECT doc_id, tail3,
-      |    CAST(list_sum(list_transform(range(1, 8),
-      |      j -> (strpos('0123456789abcdef', substr(md5(tail3), j, 1))
-      |            - 1) * 16.0 ** (7 - j))) AS BIGINT) * 4294967296
-      |    + CAST(list_sum(list_transform(range(8, 16),
-      |      j -> (strpos('0123456789abcdef', substr(md5(tail3), j, 1))
-      |            - 1) * 16.0 ** (15 - j))) AS BIGINT) AS th
+      |    ${OracleSql.md560("tail3")} AS th
       |  FROM hk),
       |hc AS (SELECT doc_id, head3, hh,
       |         row_number() OVER (PARTITION BY hh, head3
@@ -348,21 +333,9 @@ object DedupQueries {
     // cheaper than the naive salted form.
     Q(
       "q51_minhash_sig",
-      """WITH shr AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(ws) - 1),
-        |           i -> array_to_string(ws[i:i+2], ' '))) AS s
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents) t),
-        |hv AS (
-        |  SELECT doc_id,
-        |    CAST(list_sum(list_transform(range(1, 9),
-        |      j -> (strpos('0123456789abcdef', substr(md5(s), j, 1)) - 1)
-        |           * 16.0 ** (8 - j))) AS BIGINT) AS h
-        |  FROM shr)
+      s"""WITH ${OracleSql.hashedShingleRows("doc_id")}
         |SELECT doc_id,
-        |  min((1000003 * h + 12345) % 4294967291) AS mh0,
-        |  min((2000029 * h + 54321) % 4294967291) AS mh1,
-        |  min((3000073 * h + 98765) % 4294967291) AS mh2,
-        |  min((4000037 * h + 13579) % 4294967291) AS mh3
+        |  ${OracleSql.minhashAggs("h", "mh")}
         |FROM hv GROUP BY doc_id ORDER BY doc_id""".stripMargin
     ) { (s, d) =>
       TextOps.minhashSignatures(docs(s, d), Seq("doc_id"), "mh")
@@ -401,22 +374,10 @@ object DedupQueries {
     //     the worst bucket while the metric makes the truncation visible.
     Q(
       "q52_lsh_pairs",
-      """WITH shr AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(ws) - 1),
-        |           i -> array_to_string(ws[i:i+2], ' '))) AS s
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents) t),
-        |hv AS (
-        |  SELECT doc_id,
-        |    CAST(list_sum(list_transform(range(1, 9),
-        |      j -> (strpos('0123456789abcdef', substr(md5(s), j, 1)) - 1)
-        |           * 16.0 ** (8 - j))) AS BIGINT) AS h
-        |  FROM shr),
+      s"""WITH ${OracleSql.hashedShingleRows("doc_id")},
         |sig AS (
         |  SELECT doc_id,
-        |    min((1000003 * h + 12345) % 4294967291) AS k0,
-        |    min((2000029 * h + 54321) % 4294967291) AS k1,
-        |    min((3000073 * h + 98765) % 4294967291) AS k2,
-        |    min((4000037 * h + 13579) % 4294967291) AS k3
+        |    ${OracleSql.minhashAggs("h", "k")}
         |  FROM hv GROUP BY doc_id),
         |braw AS (
         |  SELECT doc_id, unnest([0, 1, 2, 3]) AS band,
@@ -466,9 +427,7 @@ object DedupQueries {
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
         |hw AS (
         |  SELECT doc_id,
-        |    CAST(list_sum(list_transform(range(1, 5),
-        |      j -> (strpos('0123456789abcdef', substr(md5(w), j, 1)) - 1)
-        |           * 16.0 ** (4 - j))) AS BIGINT) AS h
+        |    ${OracleSql.md5Int("w", 4)} AS h
         |  FROM wr),
         |votes AS (
         |  SELECT doc_id,
@@ -518,13 +477,8 @@ object DedupQueries {
     // (consecutive doc pairs — in production the LSH candidates feed this).
     Q(
       "q54_jaccard",
-      """WITH hs AS (
-        |  SELECT doc_id, list_distinct(list_transform(
-        |    list_transform(range(1, len(ws) - 1),
-        |      i -> array_to_string(ws[i:i+2], ' ')),
-        |    s -> CAST(list_sum(list_transform(range(1, 9),
-        |      j -> (strpos('0123456789abcdef', substr(md5(s), j, 1)) - 1)
-        |           * 16.0 ** (8 - j))) AS BIGINT))) AS sh
+      s"""WITH hs AS (
+        |  SELECT doc_id, ${OracleSql.hashedShingles("ws")} AS sh
         |  FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents) i)
         |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
         |  round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
@@ -794,12 +748,8 @@ object DedupQueries {
     Q(
       "q92_dedup_groups",
       s"""WITH RECURSIVE pairs AS ($rpEdgesSql),
-        |und AS (SELECT id_a AS src, id_b AS dst FROM pairs
-        |        UNION ALL SELECT id_b, id_a FROM pairs),
-        |reach(id, r) AS (
-        |  SELECT src, src FROM (SELECT DISTINCT src FROM und) t
-        |  UNION
-        |  SELECT u.src, rc.r FROM und u JOIN reach rc ON rc.id = u.dst)
+        |${OracleSql.und("pairs")},
+        |${OracleSql.reach}
         |SELECT id AS vec_id, min(r) AS group_id FROM reach
         |GROUP BY id ORDER BY vec_id""".stripMargin
     ) { (s, d) =>
@@ -822,12 +772,8 @@ object DedupQueries {
     Q(
       "q111_canonical_docs",
       s"""WITH RECURSIVE pairs AS ($rpEdgesSql),
-        |und AS (SELECT id_a AS src, id_b AS dst FROM pairs
-        |        UNION ALL SELECT id_b, id_a FROM pairs),
-        |reach(id, r) AS (
-        |  SELECT src, src FROM (SELECT DISTINCT src FROM und) t
-        |  UNION
-        |  SELECT u.src, rc.r FROM und u JOIN reach rc ON rc.id = u.dst),
+        |${OracleSql.und("pairs")},
+        |${OracleSql.reach},
         |grp AS (SELECT id AS vec_id, min(r) AS group_id FROM reach GROUP BY id),
         |qual AS (SELECT doc_id AS vec_id, n_chars FROM documents),
         |best AS (SELECT g.group_id, max(q.n_chars) AS best_len,
@@ -873,19 +819,15 @@ object DedupQueries {
     Q(
       "q134_group_split",
       s"""WITH RECURSIVE pairs AS ($rpEdgesSql),
-        |und AS (SELECT id_a AS src, id_b AS dst FROM pairs
-        |        UNION ALL SELECT id_b, id_a FROM pairs),
-        |reach(id, r) AS (
-        |  SELECT src, src FROM (SELECT DISTINCT src FROM und) t
-        |  UNION
-        |  SELECT u.src, rc.r FROM und u JOIN reach rc ON rc.id = u.dst),
+        |${OracleSql.und("pairs")},
+        |${OracleSql.reach},
         |grp AS (SELECT id AS vec_id, min(r) AS group_id FROM reach
         |        GROUP BY id),
         |base AS (
         |  SELECT e.vec_id, coalesce(g.group_id, e.vec_id) AS group_id
         |  FROM embeddings e LEFT JOIN grp g USING (vec_id)),
         |h AS (SELECT vec_id, group_id,
-        |        (group_id % 1000000007) * 2654435761 % 1000000007 % 10
+        |        ${OracleSql.mix("group_id")} % 10
         |        AS b FROM base)
         |SELECT vec_id, group_id,
         |  CASE WHEN b < 8 THEN 'train' WHEN b = 8 THEN 'val'
@@ -916,7 +858,7 @@ object DedupQueries {
     // per-row step is scan-local.
     Q(
       "q81_pipeline",
-      """WITH toks AS (
+      s"""WITH toks AS (
         |  SELECT doc_id, lang, string_split(text, ' ') AS ws FROM documents),
         |quality AS (
         |  SELECT doc_id, lang, len(ws) AS nw FROM toks WHERE len(ws) >= 30),
@@ -926,12 +868,10 @@ object DedupQueries {
         |  FROM toks t JOIN quality q ON q.doc_id = t.doc_id),
         |hv AS (
         |  SELECT doc_id,
-        |    CAST(list_sum(list_transform(range(1, 9),
-        |      j -> (strpos('0123456789abcdef', substr(md5(s), j, 1)) - 1)
-        |           * 16.0 ** (8 - j))) AS BIGINT) AS h
+        |    ${OracleSql.md5Int("s")} AS h
         |  FROM shr),
         |sig AS (
-        |  SELECT doc_id, min((1000003 * h + 12345) % 4294967291) AS bucket
+        |  SELECT doc_id, min(${OracleSql.minhashPerm("h", 0)}) AS bucket
         |  FROM hv GROUP BY doc_id),
         |kept AS (
         |  SELECT bucket, min(doc_id) AS doc_id FROM sig GROUP BY bucket),
@@ -1006,13 +946,8 @@ object DedupQueries {
     // array_intersect, a bounded constant, not the q104 struct trap.
     Q(
       "q119_containment",
-      """WITH hs AS (
-        |  SELECT doc_id, list_distinct(list_transform(
-        |    list_transform(range(1, len(ws) - 1),
-        |      i -> array_to_string(ws[i:i+2], ' ')),
-        |    s -> CAST(list_sum(list_transform(range(1, 9),
-        |      j -> (strpos('0123456789abcdef', substr(md5(s), j, 1)) - 1)
-        |           * 16.0 ** (8 - j))) AS BIGINT))) AS sh
+      s"""WITH hs AS (
+        |  SELECT doc_id, ${OracleSql.hashedShingles("ws")} AS sh
         |  FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents) i)
         |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
         |  CAST(len(a.sh) AS BIGINT) AS n_a, CAST(len(b.sh) AS BIGINT) AS n_b,
@@ -1064,23 +999,10 @@ object DedupQueries {
     // counts are bounded by 4; output is linear in the flagged mass.
     Q(
       "q116_incremental_dedup",
-      """WITH shr AS (
-        |  SELECT doc_id, source, unnest(list_transform(range(1, len(ws) - 1),
-        |           i -> array_to_string(ws[i:i+2], ' '))) AS s
-        |  FROM (SELECT doc_id, source, string_split(text, ' ') AS ws
-        |        FROM documents) t),
-        |hv AS (
-        |  SELECT doc_id, source,
-        |    CAST(list_sum(list_transform(range(1, 9),
-        |      j -> (strpos('0123456789abcdef', substr(md5(s), j, 1)) - 1)
-        |           * 16.0 ** (8 - j))) AS BIGINT) AS h
-        |  FROM shr),
+      s"""WITH ${OracleSql.hashedShingleRows("doc_id, source")},
         |sig AS (
         |  SELECT doc_id, source,
-        |    min((1000003 * h + 12345) % 4294967291) AS k0,
-        |    min((2000029 * h + 54321) % 4294967291) AS k1,
-        |    min((3000073 * h + 98765) % 4294967291) AS k2,
-        |    min((4000037 * h + 13579) % 4294967291) AS k3
+        |    ${OracleSql.minhashAggs("h", "k")}
         |  FROM hv GROUP BY doc_id, source),
         |bands AS (
         |  SELECT doc_id, source, b.band,
@@ -1339,17 +1261,14 @@ object DedupQueries {
     // three times.
     Q(
       "q126_dup_span_removal",
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws
+      s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws
         |           FROM documents),
         |tok AS (
         |  SELECT doc_id, i AS idx, ws[i] AS w
         |  FROM t, unnest(range(1, len(ws) + 1)) AS u(i)),
         |sh AS (
         |  SELECT doc_id, i AS start,
-        |    CAST(list_sum(list_transform(range(1, 9),
-        |      j -> (strpos('0123456789abcdef',
-        |              substr(md5(array_to_string(ws[i:i+4], ' ')), j, 1))
-        |            - 1) * 16.0 ** (8 - j))) AS BIGINT) AS g
+        |    ${OracleSql.md5Int("array_to_string(ws[i:i+4], ' ')")} AS g
         |  FROM t, unnest(range(1, len(ws) - 3)) AS u(i)
         |  WHERE len(ws) >= 5),
         |dfd AS (SELECT g FROM (SELECT DISTINCT doc_id, g FROM sh)
@@ -1487,29 +1406,14 @@ object DedupQueries {
     // mandate operator).
     Q(
       "q138_pq_ann",
-      """WITH cent AS (SELECT vec_id AS cid, embedding AS cv
-        |             FROM embeddings WHERE vec_id < 8),
-        |subdots AS (
-        |  SELECT e.vec_id, c.cid, m.m,
-        |    list_sum(list_transform(range(1, 17),
-        |      i -> CAST(e.embedding[m.m * 16 + i] AS DOUBLE) *
-        |           CAST(c.cv[m.m * 16 + i] AS DOUBLE))) AS d
-        |  FROM embeddings e, cent c, (SELECT unnest(range(0, 4)) AS m) m),
-        |codes AS (
-        |  SELECT vec_id, m, cid FROM (
-        |    SELECT vec_id, m, cid,
-        |      row_number() OVER (PARTITION BY vec_id, m
-        |                         ORDER BY d DESC, cid) AS rn
-        |    FROM subdots) t WHERE rn = 1),
+      s"""WITH ${OracleSql.pqSubdots},
+        |${OracleSql.pqCodes},
         |lut AS (
         |  SELECT s.vec_id AS qid, s.m, s.cid, s.d FROM subdots s
         |  WHERE s.vec_id IN (20, 21, 22)),
         |adc AS (
         |  SELECT l.qid, k.vec_id,
-        |    max(CASE WHEN l.m = 0 THEN l.d END) +
-        |    max(CASE WHEN l.m = 1 THEN l.d END) +
-        |    max(CASE WHEN l.m = 2 THEN l.d END) +
-        |    max(CASE WHEN l.m = 3 THEN l.d END) AS adc
+        |    ${OracleSql.pqSlotSum("l.")} AS adc
         |  FROM codes k JOIN lut l ON l.m = k.m AND l.cid = k.cid
         |  WHERE k.vec_id != l.qid
         |  GROUP BY l.qid, k.vec_id),
@@ -1573,16 +1477,14 @@ object DedupQueries {
     // metric, mirrored in the oracle) bounds any residual mega-cluster.
     Q(
       "q141_ppjoin",
-      """WITH wdt AS (SELECT 3 + GREATEST(0,
+      s"""WITH wdt AS (SELECT 3 + GREATEST(0,
         |    length(bin(count(*) - 1)) - 13) // 3 AS wd FROM documents),
         |ws AS (SELECT doc_id, string_split(text, ' ') AS w, wd
         |       FROM documents, wdt),
         |sh AS (SELECT doc_id, list_distinct(list_transform(
         |    list_transform(range(1, len(w) - wd + 2),
         |      i -> array_to_string(w[i:i + wd - 1], ' ')),
-        |    s -> CAST(list_sum(list_transform(range(1, 9),
-        |      j -> (strpos('0123456789abcdef', substr(md5(s), j, 1)) - 1)
-        |           * 16.0 ** (8 - j))) AS BIGINT))) AS s
+        |    s -> ${OracleSql.md5Int("s")})) AS s
         |  FROM ws),
         |toks AS (SELECT doc_id, len(s) AS m, unnest(s) AS h FROM sh),
         |df AS (SELECT h, count(*) AS df FROM toks GROUP BY h),
@@ -1750,15 +1652,10 @@ object DedupQueries {
     // pair union (max-marker groupBy — the q109 twin-agg pattern).
     Q(
       "q146_lsh_recall",
-      """WITH ws AS (SELECT doc_id, string_split(text, ' ') AS ws
+      s"""WITH ws AS (SELECT doc_id, string_split(text, ' ') AS ws
         |            FROM documents),
         |hs AS (
-        |  SELECT doc_id, list_distinct(list_transform(
-        |    list_transform(range(1, len(ws) - 1),
-        |      i -> array_to_string(ws[i:i+2], ' ')),
-        |    s -> CAST(list_sum(list_transform(range(1, 9),
-        |      j -> (strpos('0123456789abcdef', substr(md5(s), j, 1)) - 1)
-        |           * 16.0 ** (8 - j))) AS BIGINT))) AS sh
+        |  SELECT doc_id, ${OracleSql.hashedShingles("ws")} AS sh
         |  FROM ws),
         |truth AS (
         |  SELECT p.doc_id AS id_a, c.doc_id AS id_b
@@ -1770,10 +1667,7 @@ object DedupQueries {
         |  SELECT doc_id, unnest(sh) AS h FROM hs),
         |sig AS (
         |  SELECT doc_id,
-        |    min((1000003 * h + 12345) % 4294967291) AS k0,
-        |    min((2000029 * h + 54321) % 4294967291) AS k1,
-        |    min((3000073 * h + 98765) % 4294967291) AS k2,
-        |    min((4000037 * h + 13579) % 4294967291) AS k3
+        |    ${OracleSql.minhashAggs("h", "k")}
         |  FROM hv GROUP BY doc_id),
         |braw AS (
         |  SELECT doc_id, unnest([0, 1, 2, 3]) AS band,
@@ -1923,26 +1817,11 @@ object DedupQueries {
     // n_matches, best_match): shard-linear, not pair-quadratic.
     Q(
       "q159_incremental_dedup",
-      """WITH shr AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(ws) - 1),
-        |           i -> array_to_string(ws[i:i+2], ' '))) AS s
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents) t),
-        |hv AS (
-        |  SELECT doc_id,
-        |    CAST(list_sum(list_transform(range(1, 9),
-        |      j -> (strpos('0123456789abcdef', substr(md5(s), j, 1)) - 1)
-        |           * 16.0 ** (8 - j))) AS BIGINT) AS h
-        |  FROM shr),
+      s"""WITH ${OracleSql.hashedShingleRows("doc_id")},
         |sig AS (
         |  SELECT doc_id,
-        |    CAST(list_sum(list_transform(range(1, 9),
-        |      j -> (strpos('0123456789abcdef',
-        |              substr(md5(CAST(doc_id AS VARCHAR)), j, 1)) - 1)
-        |           * 16.0 ** (8 - j))) AS BIGINT) % 8 = 0 AS incoming,
-        |    min((1000003 * h + 12345) % 4294967291) AS k0,
-        |    min((2000029 * h + 54321) % 4294967291) AS k1,
-        |    min((3000073 * h + 98765) % 4294967291) AS k2,
-        |    min((4000037 * h + 13579) % 4294967291) AS k3
+        |    ${OracleSql.md5Int("CAST(doc_id AS VARCHAR)")} % 8 = 0 AS incoming,
+        |    ${OracleSql.minhashAggs("h", "k")}
         |  FROM hv GROUP BY doc_id),
         |braw AS (
         |  SELECT doc_id, incoming, k0, k1, k2, k3,
@@ -2030,15 +1909,12 @@ object DedupQueries {
     // nonneg ints — identical in both engines).
     Q(
       "q160_novelty",
-      """WITH shr AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(ws) - 1),
-        |           i -> array_to_string(ws[i:i+2], ' '))) AS s
+      s"""WITH shr AS (
+        |  SELECT doc_id, unnest(${OracleSql.shingles3("ws")}) AS s
         |  FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents) t),
         |dh AS (
         |  SELECT DISTINCT doc_id,
-        |    CAST(list_sum(list_transform(range(1, 9),
-        |      j -> (strpos('0123456789abcdef', substr(md5(s), j, 1)) - 1)
-        |           * 16.0 ** (8 - j))) AS BIGINT) AS h
+        |    ${OracleSql.md5Int("s")} AS h
         |  FROM shr),
         |occ AS (SELECT h, count(*) AS nd FROM dh GROUP BY h)
         |SELECT d.doc_id, CAST(count(*) AS BIGINT) AS n_shingles,
@@ -2091,20 +1967,10 @@ object DedupQueries {
     // WindowGroupLimit top-5 -> broadcast exact rescore.
     Q(
       "q167_ivfpq_ann",
-      """WITH cent AS (SELECT vec_id AS cid, embedding AS cv
-        |             FROM embeddings WHERE vec_id < 8),
-        |subdots AS (
-        |  SELECT e.vec_id, c.cid, m.m,
-        |    list_sum(list_transform(range(1, 17),
-        |      i -> CAST(e.embedding[m.m * 16 + i] AS DOUBLE) *
-        |           CAST(c.cv[m.m * 16 + i] AS DOUBLE))) AS d
-        |  FROM embeddings e, cent c, (SELECT unnest(range(0, 4)) AS m) m),
+      s"""WITH ${OracleSql.pqSubdots},
         |fulld AS (
         |  SELECT vec_id, cid,
-        |    max(CASE WHEN m = 0 THEN d END) +
-        |    max(CASE WHEN m = 1 THEN d END) +
-        |    max(CASE WHEN m = 2 THEN d END) +
-        |    max(CASE WHEN m = 3 THEN d END) AS dot
+        |    ${OracleSql.pqSlotSum("")} AS dot
         |  FROM subdots GROUP BY vec_id, cid),
         |assign AS (
         |  SELECT vec_id, cid FROM (
@@ -2118,12 +1984,7 @@ object DedupQueries {
         |      row_number() OVER (PARTITION BY vec_id
         |        ORDER BY dot DESC, cid) AS rn
         |    FROM fulld WHERE vec_id IN (30, 31, 32)) t WHERE rn <= 2),
-        |codes AS (
-        |  SELECT vec_id, m, cid FROM (
-        |    SELECT vec_id, m, cid,
-        |      row_number() OVER (PARTITION BY vec_id, m
-        |        ORDER BY d DESC, cid) AS rn
-        |    FROM subdots) t WHERE rn = 1),
+        |${OracleSql.pqCodes},
         |lut AS (
         |  SELECT s.vec_id AS qid, s.m, s.cid, s.d FROM subdots s
         |  WHERE s.vec_id IN (30, 31, 32)),
@@ -2132,10 +1993,7 @@ object DedupQueries {
         |  JOIN assign a ON a.cid = p.cid AND a.vec_id != p.qid),
         |adc AS (
         |  SELECT l.qid, k.vec_id,
-        |    max(CASE WHEN l.m = 0 THEN l.d END) +
-        |    max(CASE WHEN l.m = 1 THEN l.d END) +
-        |    max(CASE WHEN l.m = 2 THEN l.d END) +
-        |    max(CASE WHEN l.m = 3 THEN l.d END) AS adc
+        |    ${OracleSql.pqSlotSum("l.")} AS adc
         |  FROM codes k
         |  JOIN cellcand cc ON cc.vec_id = k.vec_id
         |  JOIN lut l ON l.m = k.m AND l.cid = k.cid AND l.qid = cc.qid
@@ -2216,7 +2074,7 @@ object DedupQueries {
     // pair-mass joins, a doc-id semi-join and a second pair explode.
     Q(
       "q181_substring_dedup",
-      """WITH ch AS (
+      s"""WITH ch AS (
         |  SELECT doc_id, i, unicode(text[i]) AS code, length(text) AS n
         |  FROM documents, unnest(range(1, length(text)+1)) AS t(i)
         |), h AS (
@@ -2231,15 +2089,7 @@ object DedupQueries {
         |  SELECT c.doc_id,
         |    row_number() OVER (PARTITION BY c.doc_id ORDER BY cut) AS idx,
         |    substr(d.text, CAST(cut + 1 AS INT), 64) AS win,
-        |    CAST(list_sum(list_transform(range(1, 8),
-        |      j -> (strpos('0123456789abcdef',
-        |              substr(md5(substr(d.text, CAST(cut + 1 AS INT), 64)),
-        |                j, 1)) - 1) * 16.0 ** (7 - j))) AS BIGINT)
-        |      * 4294967296
-        |    + CAST(list_sum(list_transform(range(8, 16),
-        |      j -> (strpos('0123456789abcdef',
-        |              substr(md5(substr(d.text, CAST(cut + 1 AS INT), 64)),
-        |                j, 1)) - 1) * 16.0 ** (15 - j))) AS BIGINT) AS h
+        |    ${OracleSql.md560("substr(d.text, CAST(cut + 1 AS INT), 64)")} AS h
         |  FROM cuts c JOIN documents d USING (doc_id)
         |  WHERE cut + 64 <= length(d.text)
         |), capped AS (
@@ -2332,12 +2182,8 @@ object DedupQueries {
     Q(
       "q182_leakage_free_split",
       s"""WITH RECURSIVE pairs AS ($rpEdgesSql),
-        |und AS (SELECT id_a AS src, id_b AS dst FROM pairs
-        |        UNION ALL SELECT id_b, id_a FROM pairs),
-        |reach(id, r) AS (
-        |  SELECT src, src FROM (SELECT DISTINCT src FROM und) t
-        |  UNION
-        |  SELECT u.src, rc.r FROM und u JOIN reach rc ON rc.id = u.dst),
+        |${OracleSql.und("pairs")},
+        |${OracleSql.reach},
         |grp AS (SELECT id AS doc_id, min(r) AS lbl FROM reach GROUP BY id),
         |asg AS (
         |  SELECT d.doc_id, d.n_chars, coalesce(g.lbl, d.doc_id) AS group_id
@@ -2347,10 +2193,8 @@ object DedupQueries {
         |    CASE WHEN b <= 7 THEN 'train' WHEN b = 8 THEN 'val'
         |         ELSE 'test' END AS split
         |  FROM (SELECT *,
-        |    CAST(list_sum(list_transform(range(1, 9),
-        |      j -> (strpos('0123456789abcdef',
-        |              substr(md5(CAST(group_id AS VARCHAR)), j, 1)) - 1)
-        |           * 16.0 ** (8 - j))) AS BIGINT) % 10 AS b FROM asg) t),
+        |    ${OracleSql.md5Int("CAST(group_id AS VARCHAR)")} % 10 AS b
+        |  FROM asg) t),
         |leak AS (
         |  SELECT CAST(count(*) AS BIGINT) AS spanning_groups FROM (
         |    SELECT group_id FROM sp GROUP BY group_id
@@ -2417,7 +2261,7 @@ object DedupQueries {
     // identical aggregate and the partial-agg exchange is reused.
     Q(
       "q185_boilerplate_rm",
-      """WITH segs AS (
+      s"""WITH segs AS (
         |  SELECT doc_id, unnest(list_transform(
         |      range(0, CAST(ceil(len(ws) / 8.0) AS INT)),
         |      i -> array_to_string(ws[8*i+1 : 8*i+8], ' '))) AS seg
@@ -2425,12 +2269,7 @@ object DedupQueries {
         |        FROM documents) t),
         |h AS (
         |  SELECT doc_id, seg, length(seg) AS seg_chars,
-        |    CAST(list_sum(list_transform(range(1, 8),
-        |      j -> (strpos('0123456789abcdef', substr(md5(seg), j, 1)) - 1)
-        |           * 16.0 ** (7 - j))) AS BIGINT) * 4294967296
-        |    + CAST(list_sum(list_transform(range(8, 16),
-        |      j -> (strpos('0123456789abcdef', substr(md5(seg), j, 1)) - 1)
-        |           * 16.0 ** (15 - j))) AS BIGINT) AS hv
+        |    ${OracleSql.md560("seg")} AS hv
         |  FROM segs),
         |freq AS (SELECT hv, seg, count(DISTINCT doc_id) AS nd
         |         FROM h GROUP BY 1, 2)
@@ -2494,10 +2333,7 @@ object DedupQueries {
         |    FROM pairs) t WHERE outd = 1 AND ind = 1),
         |und AS (SELECT pred AS src, succ AS dst FROM links
         |        UNION ALL SELECT succ, pred FROM links),
-        |reach(id, r) AS (
-        |  SELECT src, src FROM (SELECT DISTINCT src FROM und) t
-        |  UNION
-        |  SELECT u.src, rc.r FROM und u JOIN reach rc ON rc.id = u.dst),
+        |${OracleSql.reach},
         |grp AS (SELECT id, min(r) AS lbl FROM reach GROUP BY id),
         |lc AS (SELECT g.lbl, count(*) AS n_links
         |       FROM links l JOIN grp g ON g.id = l.pred GROUP BY 1),
@@ -2696,7 +2532,7 @@ object DedupQueries {
         |    unnest(list_transform(range(1, len(ws) - 3),
         |      i -> array_to_string(list_slice(ws, i, i + 4), ' '))) AS g
         |  FROM tok WHERE len(ws) >= 5),
-        |kh AS (SELECT doc_id, nk, p, ${md560("g")} AS h FROM kg),
+        |kh AS (SELECT doc_id, nk, p, ${OracleSql.md560("g")} AS h FROM kg),
         |wm AS (
         |  SELECT doc_id, nk, p,
         |    min(h) OVER (PARTITION BY doc_id ORDER BY p
@@ -2826,27 +2662,11 @@ object DedupQueries {
     // re-plan the corpus subtree (self-join doctrine).
     Q(
       "q217_pq_distortion",
-      """WITH cent AS (SELECT vec_id AS cid, embedding AS cv
-        |  FROM embeddings WHERE vec_id < 8),
-        |subdots AS (
-        |  SELECT e.vec_id, c.cid, m.m,
-        |    list_sum(list_transform(range(1, 17),
-        |      i -> CAST(e.embedding[m.m * 16 + i] AS DOUBLE) *
-        |           CAST(c.cv[m.m * 16 + i] AS DOUBLE))) AS d
-        |  FROM embeddings e, cent c,
-        |       (SELECT unnest(range(0, 4)) AS m) m),
-        |codes AS (
-        |  SELECT vec_id, m, cid FROM (
-        |    SELECT vec_id, m, cid,
-        |      row_number() OVER (PARTITION BY vec_id, m
-        |        ORDER BY d DESC, cid) AS rn
-        |    FROM subdots) t WHERE rn = 1),
+      s"""WITH ${OracleSql.pqSubdots},
+        |${OracleSql.pqCodes},
         |adc AS (
         |  SELECT l.vec_id AS qid, k.vec_id,
-        |    CAST(round((max(CASE WHEN l.m = 0 THEN l.d END) +
-        |                max(CASE WHEN l.m = 1 THEN l.d END) +
-        |                max(CASE WHEN l.m = 2 THEN l.d END) +
-        |                max(CASE WHEN l.m = 3 THEN l.d END)) * 10000)
+        |    CAST(round((${OracleSql.pqSlotSum("l.")}) * 10000)
         |      AS BIGINT) AS adc_q
         |  FROM subdots l JOIN codes k ON l.m = k.m AND l.cid = k.cid
         |  WHERE l.vec_id IN (20, 21, 22) AND k.vec_id != l.vec_id
@@ -2906,7 +2726,7 @@ object DedupQueries {
     Q(
       "q220_dedup_shift",
       s"""WITH k AS (
-        |  SELECT lang, doc_id, ${md560("text")} AS h FROM documents),
+        |  SELECT lang, doc_id, ${OracleSql.md560("text")} AS h FROM documents),
         |post AS (
         |  SELECT kl AS lang, count(*) AS c_post FROM (
         |    SELECT h, min_by(lang, doc_id) AS kl FROM k GROUP BY h) t
@@ -2936,12 +2756,8 @@ object DedupQueries {
     Q(
       "q223_dedup_savings",
       s"""WITH RECURSIVE pairs AS ($rpEdgesSql),
-        |und AS (SELECT id_a AS src, id_b AS dst FROM pairs
-        |        UNION ALL SELECT id_b, id_a FROM pairs),
-        |reach(id, r) AS (
-        |  SELECT src, src FROM (SELECT DISTINCT src FROM und) t
-        |  UNION
-        |  SELECT u.src, rc.r FROM und u JOIN reach rc ON rc.id = u.dst),
+        |${OracleSql.und("pairs")},
+        |${OracleSql.reach},
         |grp AS (SELECT id AS doc_id, min(r) AS group_id FROM reach
         |        GROUP BY id),
         |g AS (SELECT grp.doc_id, grp.group_id, d.source, d.n_chars
@@ -3051,11 +2867,11 @@ object DedupQueries {
     // envelope AND the cost flat at any corpus size.
     Q(
       "q225_emb_covariance",
-      """WITH q AS (SELECT vec_id,
+      s"""WITH q AS (SELECT vec_id,
         |    list_transform(embedding,
         |      x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS qv
         |  FROM embeddings
-        |  WHERE (vec_id % 1000000007) * 2654435761 % 1000000007 *
+        |  WHERE ${OracleSql.mix("vec_id")} *
         |    (SELECT count(*) FROM embeddings) <
         |    CAST(500000 AS BIGINT) * 1000000007),
         |dsum AS (
@@ -3125,12 +2941,8 @@ object DedupQueries {
     Q(
       "q228_cluster_cohesion",
       s"""WITH RECURSIVE pairs AS ($rpEdgesSql),
-        |und AS (SELECT id_a AS src, id_b AS dst FROM pairs
-        |        UNION ALL SELECT id_b, id_a FROM pairs),
-        |reach(id, r) AS (
-        |  SELECT src, src FROM (SELECT DISTINCT src FROM und) t
-        |  UNION
-        |  SELECT u.src, rc.r FROM und u JOIN reach rc ON rc.id = u.dst),
+        |${OracleSql.und("pairs")},
+        |${OracleSql.reach},
         |grp AS (SELECT id, min(r) AS lbl FROM reach GROUP BY id),
         |sizes AS (SELECT lbl, count(*) AS sz FROM grp GROUP BY lbl),
         |er AS (
@@ -3270,12 +3082,7 @@ object DedupQueries {
       s"""WITH ws AS (
         |  SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
         |hs AS (
-        |  SELECT doc_id, list_distinct(list_transform(
-        |    list_transform(range(1, len(ws) - 1),
-        |      i -> array_to_string(ws[i:i+2], ' ')),
-        |    s -> CAST(list_sum(list_transform(range(1, 9),
-        |      j -> (strpos('0123456789abcdef', substr(md5(s), j, 1)) - 1)
-        |           * 16.0 ** (8 - j))) AS BIGINT))) AS sh
+        |  SELECT doc_id, ${OracleSql.hashedShingles("ws")} AS sh
         |  FROM ws),
         |sg AS (
         |  SELECT doc_id, sh,
@@ -3324,7 +3131,7 @@ object DedupQueries {
       "q237_bloom_prefilter",
       s"""WITH kb AS (
         |  SELECT doc_id, source, dg, dg % 65536 AS bucket FROM (
-        |    SELECT doc_id, source, ${md560("'bp|' || text")} AS dg
+        |    SELECT doc_id, source, ${OracleSql.md560("'bp|' || text")} AS dg
         |    FROM documents) k),
         |bench AS (SELECT bucket, dg FROM kb WHERE doc_id % 97 = 0),
         |bb AS (SELECT DISTINCT bucket FROM bench),
@@ -3493,12 +3300,6 @@ object DedupQueries {
       // the bucket self-join must not replan per side), two top-32
       // windows; the oracle ranks the same two subsets of one pair CTE.
       val pr = rpPairs(s, d).localCheckpoint(true)
-      val w = Window.partitionBy("id_a")
-        .orderBy(col("rdot").desc, col("id_b").asc)
-      def bounded(p: org.apache.spark.sql.DataFrame) =
-        p.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") <= 32).drop("__rn")
-          .localCheckpoint(true) // CC re-reads edges every round
       // r14: the two day-pipelines (bound -> CC, eager small jobs) are
       // independent — run them as OVERLAPPED jobs so each CC round's
       // straggler tail backfills with the other side's work instead of
@@ -3515,14 +3316,14 @@ object DedupQueries {
       import scala.concurrent.ExecutionContext.Implicits.global
       val f2 = Future {
         blocking {
-          graft.functions.GraphOps.connectedComponents(bounded(pr),
+          graft.functions.GraphOps.connectedComponents(degreeBounded(pr),
             "id_a", "id_b")
         }
       }
       val f1 = Future {
         blocking {
           graft.functions.GraphOps.connectedComponents(
-            bounded(pr.filter(col("id_a") % 10 =!= 7 &&
+            degreeBounded(pr.filter(col("id_a") % 10 =!= 7 &&
               col("id_b") % 10 =!= 7)), "id_a", "id_b")
         }
       }
@@ -3554,16 +3355,13 @@ object DedupQueries {
     // saturated sets, so the calibration stays exact).
     Q(
       "q240_kmv_overlap",
-      """WITH shr AS (
-        |  SELECT source, unnest(list_transform(range(1, len(ws) - 1),
-        |           i -> array_to_string(ws[i:i+2], ' '))) AS s
+      s"""WITH shr AS (
+        |  SELECT source, unnest(${OracleSql.shingles3("ws")}) AS s
         |  FROM (SELECT source, string_split(text, ' ') AS ws
         |        FROM documents) t),
         |hv AS (
         |  SELECT DISTINCT source,
-        |    CAST(list_sum(list_transform(range(1, 9),
-        |      j -> (strpos('0123456789abcdef', substr(md5(s), j, 1)) - 1)
-        |           * 16.0 ** (8 - j))) AS BIGINT) AS h
+        |    ${OracleSql.md5Int("s")} AS h
         |  FROM shr),
         |sz AS (SELECT source, CAST(count(*) AS BIGINT) AS n
         |       FROM hv GROUP BY 1),
@@ -3714,11 +3512,9 @@ object DedupQueries {
     // |labels|·128 rows.
     Q(
       "q252_centroid_drift",
-      """WITH e AS (SELECT vec_id, label, embedding,
-        |    CAST(list_sum(list_transform(range(1, 9),
-        |      j -> (strpos('0123456789abcdef',
-        |              substr(md5('cd|' || CAST(vec_id AS VARCHAR)), j, 1))
-        |            - 1) * 16.0 ** (8 - j))) AS BIGINT) % 2 = 0 AS half_a
+      s"""WITH e AS (SELECT vec_id, label, embedding,
+        |    ${OracleSql.md5Int("'cd|' || CAST(vec_id AS VARCHAR)")} % 2 = 0
+        |      AS half_a
         |  FROM embeddings),
         |q AS (SELECT label, half_a, i.i AS dim,
         |        CAST(round(CAST(embedding[i.i] AS DOUBLE) * 10000)
@@ -3755,12 +3551,8 @@ object DedupQueries {
     Q(
       "q253_chain_depth",
       s"""WITH RECURSIVE pairs AS ($rpEdgesSql),
-        |und AS (SELECT id_a AS src, id_b AS dst FROM pairs
-        |        UNION ALL SELECT id_b, id_a FROM pairs),
-        |reach(id, r) AS (
-        |  SELECT src, src FROM (SELECT DISTINCT src FROM und) t
-        |  UNION
-        |  SELECT u.src, rc.r FROM und u JOIN reach rc ON rc.id = u.dst),
+        |${OracleSql.und("pairs")},
+        |${OracleSql.reach},
         |grp AS (SELECT id, min(r) AS lbl FROM reach GROUP BY id),
         |dist(v, dd) AS (
         |  SELECT DISTINCT lbl, 0 FROM grp

@@ -1180,19 +1180,12 @@ object EventQueries {
     // final rollup is event-type-bounded.
     Q(
       "q196_pseudonymize",
-      """WITH uu AS (
+      s"""WITH uu AS (
         |  SELECT event_type, user_id, count(*) AS c
         |  FROM events GROUP BY 1, 2),
         |up AS (
         |  SELECT event_type, c,
-        |    CAST(list_sum(list_transform(range(1, 8),
-        |      j -> (strpos('0123456789abcdef',
-        |              substr(md5('u' || CAST(user_id AS VARCHAR)), j, 1))
-        |            - 1) * 16.0 ** (7 - j))) AS BIGINT) * 4294967296
-        |    + CAST(list_sum(list_transform(range(8, 16),
-        |      j -> (strpos('0123456789abcdef',
-        |              substr(md5('u' || CAST(user_id AS VARCHAR)), j, 1))
-        |            - 1) * 16.0 ** (15 - j))) AS BIGINT) AS pseudo
+        |    ${OracleSql.md560("'u' || CAST(user_id AS VARCHAR)")} AS pseudo
         |  FROM uu),
         |pp AS (
         |  SELECT event_type, pseudo, count(*) AS n_users, sum(c) AS c_p,
@@ -1362,7 +1355,7 @@ object EventQueries {
     // table. dow via integer epoch-day % 7 — no timezone/libm paths.
     Q(
       "q227_dp_release",
-      """WITH c AS (
+      s"""WITH c AS (
         |  SELECT event_type,
         |    (epoch_us(ts) // 86400000000) % 7 AS dow, user_id,
         |    count(*) AS c
@@ -1372,16 +1365,8 @@ object EventQueries {
         |  FROM c GROUP BY 1, 2),
         |n AS (
         |  SELECT event_type, dow, n_capped,
-        |    (CAST(list_sum(list_transform(range(1, 8),
-        |      j -> (strpos('0123456789abcdef',
-        |              substr(md5('dp|' || event_type || '|' ||
-        |                CAST(dow AS VARCHAR)), j, 1))
-        |            - 1) * 16.0 ** (7 - j))) AS BIGINT) * 4294967296
-        |    + CAST(list_sum(list_transform(range(8, 16),
-        |      j -> (strpos('0123456789abcdef',
-        |              substr(md5('dp|' || event_type || '|' ||
-        |                CAST(dow AS VARCHAR)), j, 1))
-        |            - 1) * 16.0 ** (15 - j))) AS BIGINT)) % 13 - 6
+        |    (${OracleSql.md560(
+          "'dp|' || event_type || '|' || CAST(dow AS VARCHAR)")}) % 13 - 6
         |      AS noise
         |  FROM cap)
         |SELECT event_type, CAST(dow AS BIGINT) AS dow,
@@ -1566,14 +1551,11 @@ object EventQueries {
     // synthetic corpus reads 0.5–0.97 — correct null behavior).
     Q(
       "q248_ab_permutation",
-      """WITH m AS (
+      s"""WITH m AS (
         |  SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS m
         |  FROM events GROUP BY 1, 2),
         |hu AS (SELECT user_id, event_type, m,
-        |  CAST(list_sum(list_transform(range(1, 9),
-        |    j -> (strpos('0123456789abcdef',
-        |            substr(md5('ab|' || CAST(user_id AS VARCHAR)), j, 1))
-        |          - 1) * 16.0 ** (8 - j))) AS BIGINT) AS h
+        |  ${OracleSql.md5Int("'ab|' || CAST(user_id AS VARCHAR)")} AS h
         |  FROM m),
         |obs AS (
         |  SELECT event_type,
@@ -1655,12 +1637,10 @@ object EventQueries {
     // floor(value·100) cents so every sum is integer-exact.
     Q(
       "q250_deletion_audit",
-      """WITH e AS (SELECT event_type, user_id,
+      s"""WITH e AS (SELECT event_type, user_id,
         |    CAST(floor(value * 100) AS BIGINT) AS cents,
-        |    CAST(list_sum(list_transform(range(1, 9),
-        |      j -> (strpos('0123456789abcdef',
-        |              substr(md5('del|' || CAST(user_id AS VARCHAR)), j, 1))
-        |            - 1) * 16.0 ** (8 - j))) AS BIGINT) % 16 = 0 AS forget
+        |    ${OracleSql.md5Int("'del|' || CAST(user_id AS VARCHAR)")} % 16 = 0
+        |      AS forget
         |  FROM events),
         |per AS (SELECT event_type, user_id, forget,
         |    CAST(count(*) AS BIGINT) AS n, CAST(sum(cents) AS BIGINT) AS c

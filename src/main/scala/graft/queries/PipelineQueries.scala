@@ -27,15 +27,6 @@ object PipelineQueries {
   private def emb(s: org.apache.spark.sql.SparkSession, d: String) =
     Tables.embeddings(s, d)
 
-  /** DuckDB mirror of the md5_prefix60 kernel (see TextQueries.md560). */
-  private def md560(e: String): String =
-    s"""CAST(list_sum(list_transform(range(1, 8),
-       |      j -> (strpos('0123456789abcdef', substr(md5($e), j, 1)) - 1)
-       |           * 16.0 ** (7 - j))) AS BIGINT) * 4294967296
-       |    + CAST(list_sum(list_transform(range(8, 16),
-       |      j -> (strpos('0123456789abcdef', substr(md5($e), j, 1)) - 1)
-       |           * 16.0 ** (15 - j))) AS BIGINT)""".stripMargin
-
   val queries: Seq[Q] = Seq(
     // Per-document top-3 salient terms by TF-IDF (linear idf, see above).
     // Scale shape: explode -> (doc, term) partial agg; df is a reuse of
@@ -398,13 +389,10 @@ object PipelineQueries {
     // the broadcast hash set; no shuffle of the corpus shingles).
     Q(
       "q109_contamination",
-      """WITH sh AS (
+      s"""WITH sh AS (
         |  SELECT DISTINCT doc_id, unnest(list_transform(
-        |    list_transform(range(1, len(ws) - 1),
-        |      i -> array_to_string(ws[i:i+2], ' ')),
-        |    sg -> CAST(list_sum(list_transform(range(1, 9),
-        |      j -> (strpos('0123456789abcdef', substr(md5(sg), j, 1)) - 1)
-        |           * 16.0 ** (8 - j))) AS BIGINT))) AS s
+        |    ${OracleSql.shingles3("ws")},
+        |    sg -> ${OracleSql.md5Int("sg")})) AS s
         |  FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents) t
         |  WHERE len(ws) >= 3),
         |probes AS (SELECT DISTINCT s FROM sh WHERE doc_id < 5),
@@ -533,13 +521,11 @@ object PipelineQueries {
     // linear; no driver state.
     Q(
       "q115_dup_ngram_fraction",
-      """WITH sh AS (
+      s"""WITH sh AS (
         |  SELECT DISTINCT doc_id, unnest(list_transform(
         |    list_transform(range(1, len(ws) - 3),
         |      i -> array_to_string(ws[i:i+4], ' ')),
-        |    sg -> CAST(list_sum(list_transform(range(1, 9),
-        |      j -> (strpos('0123456789abcdef', substr(md5(sg), j, 1)) - 1)
-        |           * 16.0 ** (8 - j))) AS BIGINT))) AS g
+        |    sg -> ${OracleSql.md5Int("sg")})) AS g
         |  FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents) t
         |  WHERE len(ws) >= 5),
         |df AS (SELECT g, count(*) AS df FROM sh GROUP BY g)
@@ -858,7 +844,7 @@ object PipelineQueries {
     // up to ~10^9 docs per language.
     Q(
       "q124_temperature_mix",
-      """WITH c AS (SELECT lang, CAST(count(*) AS BIGINT) AS n
+      s"""WITH c AS (SELECT lang, CAST(count(*) AS BIGINT) AS n
         |  FROM documents GROUP BY lang),
         |w AS (SELECT lang, n,
         |  CAST(floor(sqrt(CAST(n AS DOUBLE))) AS BIGINT) AS wt FROM c),
@@ -870,7 +856,7 @@ object PipelineQueries {
         |  CAST(count(*) AS BIGINT) AS picked,
         |  CAST(sum(d.doc_id) AS BIGINT) AS sum_ids
         |FROM documents d JOIN tgt t ON d.lang = t.lang
-        |WHERE (d.doc_id % 1000000007) * 2654435761 % 1000000007 * t.n <
+        |WHERE ${OracleSql.mix("d.doc_id")} * t.n <
         |  t.target * 1000000007
         |GROUP BY d.lang ORDER BY d.lang""".stripMargin
     ) { (s, d) =>
@@ -899,7 +885,7 @@ object PipelineQueries {
     // the shape a real pipeline run has, not three separate jobs.
     Q(
       "q125_curation_pipeline",
-      """WITH w AS (SELECT doc_id, lang, source, text,
+      s"""WITH w AS (SELECT doc_id, lang, source, text,
         |  string_split(text, ' ') AS ws FROM documents),
         |s AS (SELECT doc_id, lang, source, text,
         |  CAST(len(ws) AS BIGINT) AS n_words,
@@ -926,7 +912,7 @@ object PipelineQueries {
         |SELECT d.lang, d.source, CAST(count(*) AS BIGINT) AS picked,
         |  CAST(sum(d.doc_id) AS BIGINT) AS sum_ids
         |FROM corpus d JOIN tgt t ON d.lang = t.lang
-        |WHERE (d.doc_id % 1000000007) * 2654435761 % 1000000007 * t.n <
+        |WHERE ${OracleSql.mix("d.doc_id")} * t.n <
         |  t.target * 1000000007
         |GROUP BY d.lang, d.source ORDER BY d.lang, d.source""".stripMargin
     ) { (s, d) =>
@@ -984,13 +970,11 @@ object PipelineQueries {
     // (~0.57-0.62); the gate checks the machinery, not separation.
     Q(
       "q127_dsir_weights",
-      """WITH t AS (SELECT doc_id, lang, string_split(text, ' ') AS ws
+      s"""WITH t AS (SELECT doc_id, lang, string_split(text, ' ') AS ws
         |           FROM documents),
         |feat AS (
         |  SELECT doc_id, lang,
-        |    CAST(list_sum(list_transform(range(1, 9),
-        |      j -> (strpos('0123456789abcdef', substr(md5(f), j, 1)) - 1)
-        |           * 16.0 ** (8 - j))) AS BIGINT) % 1024 AS b
+        |    ${OracleSql.md5Int("f")} % 1024 AS b
         |  FROM t, unnest(list_concat(ws,
         |    list_transform(range(1, len(ws)),
         |      i -> ws[i] || ' ' || ws[i+1]))) AS u(f)),
@@ -1004,8 +988,7 @@ object PipelineQueries {
         |  FROM feat f JOIN r USING (b) GROUP BY f.doc_id)
         |SELECT doc_id, nfeat, score,
         |  CAST(least(score // nfeat, 4194304) AS BIGINT) AS w_q20,
-        |  CAST(CASE WHEN (doc_id % 1000000007) * 2654435761
-        |            % 1000000007 * 2097152
+        |  CAST(CASE WHEN ${OracleSql.mix("doc_id")} * 2097152
         |            < least(score // nfeat, 4194304) * 1000000007
         |       THEN 1 ELSE 0 END AS BIGINT) AS kept
         |FROM sc ORDER BY doc_id""".stripMargin
@@ -1482,14 +1465,12 @@ object PipelineQueries {
     // bit-exact cross-engine.
     Q(
       "q158_classifier",
-      """WITH tok AS (
+      s"""WITH tok AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS w
         |  FROM documents),
         |wt AS (
         |  SELECT doc_id,
-        |    (CAST(list_sum(list_transform(range(1, 9),
-        |       j -> (strpos('0123456789abcdef', substr(md5(w), j, 1)) - 1)
-        |            * 16.0 ** (8 - j))) AS BIGINT) % 4096)
+        |    (${OracleSql.md5Int("w")} % 4096)
         |      * 2654435761 % 1997 AS w998
         |  FROM tok)
         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tok,
@@ -1892,12 +1873,10 @@ object PipelineQueries {
     // not a bug.
     Q(
       "q183_perceptron_train",
-      """WITH f0 AS (
+      s"""WITH f0 AS (
         |  SELECT DISTINCT doc_id,
         |    CASE WHEN lang = 'en' THEN 1 ELSE -1 END AS y,
-        |    CAST(list_sum(list_transform(range(1, 9),
-        |      j -> (strpos('0123456789abcdef', substr(md5(t), j, 1)) - 1)
-        |           * 16.0 ** (8 - j))) AS BIGINT) % 32 AS j
+        |    ${OracleSql.md5Int("t")} % 32 AS j
         |  FROM (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS t
         |        FROM documents)),
         |f AS (SELECT * FROM f0
@@ -2138,7 +2117,7 @@ object PipelineQueries {
         |      list_slice(ws, st + 1, least(st + 32, len(ws))), ' ') AS c
         |  FROM tok, LATERAL (SELECT unnest(
         |      range(0, greatest(len(ws) - 8, 1), 24)) AS st) starts),
-        |h AS (SELECT source, ${md560("c")} AS hc FROM ch),
+        |h AS (SELECT source, ${OracleSql.md560("c")} AS hc FROM ch),
         |g AS (SELECT hc, count(*) AS n, count(DISTINCT source) AS ns
         |      FROM h GROUP BY 1)
         |SELECT CAST(count(*) AS BIGINT) AS n_hashes,
@@ -2280,32 +2259,16 @@ object PipelineQueries {
     // 256 holds ≤ 32640 pairs).
     Q(
       "q246_batch_collision",
-      """WITH shr AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(ws) - 1),
-        |           i -> array_to_string(ws[i:i+2], ' '))) AS s
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS ws
-        |        FROM documents) t),
-        |hv AS (
-        |  SELECT doc_id,
-        |    CAST(list_sum(list_transform(range(1, 9),
-        |      j -> (strpos('0123456789abcdef', substr(md5(s), j, 1)) - 1)
-        |           * 16.0 ** (8 - j))) AS BIGINT) AS h
-        |  FROM shr),
+      s"""WITH ${OracleSql.hashedShingleRows("doc_id")},
         |sig AS (
         |  SELECT doc_id,
-        |    min((1000003 * h + 12345) % 4294967291) AS k0,
-        |    min((2000029 * h + 54321) % 4294967291) AS k1,
-        |    min((3000073 * h + 98765) % 4294967291) AS k2,
-        |    min((4000037 * h + 13579) % 4294967291) AS k3
+        |    ${OracleSql.minhashAggs("h", "k")}
         |  FROM hv GROUP BY doc_id),
         |n AS (SELECT CAST(count(*) AS BIGINT) AS c FROM sig),
         |bs AS (SELECT unnest([64, 128, 256]) AS b),
         |asg AS (
         |  SELECT s.doc_id, s.k0, s.k1, s.k2, s.k3, bs.b,
-        |    CAST(list_sum(list_transform(range(1, 9),
-        |      j -> (strpos('0123456789abcdef',
-        |              substr(md5('bt|' || CAST(s.doc_id AS VARCHAR)), j, 1))
-        |            - 1) * 16.0 ** (8 - j))) AS BIGINT)
+        |    ${OracleSql.md5Int("'bt|' || CAST(s.doc_id AS VARCHAR)")}
         |      % ((n.c + bs.b - 1) // bs.b) AS batch
         |  FROM sig s, n, bs),
         |gt AS (SELECT k0, k1, k2, k3, CAST(count(*) AS BIGINT) AS m

@@ -487,11 +487,9 @@ object SurfaceQueries {
     // fold would need mod-at-partial (a custom aggregate).
     Q(
       "q175_shard_checksums",
-      """WITH h AS (
+      s"""WITH h AS (
         |  SELECT doc_id,
-        |    CAST(list_sum(list_transform(range(1, 9),
-        |      j -> (strpos('0123456789abcdef', substr(md5(text), j, 1)) - 1)
-        |           * 16.0 ** (8 - j))) AS BIGINT) AS h
+        |    ${OracleSql.md5Int("text")} AS h
         |  FROM documents)
         |SELECT h % 8 AS shard, CAST(count(*) AS BIGINT) AS n_docs,
         |  CAST(sum(h) % 2305843009213693951 AS BIGINT) AS checksum
@@ -515,7 +513,7 @@ object SurfaceQueries {
     // losslessly. Closes the round-7 "spec-only sources" verdict item.
     Q(
       "q178_source_roundtrip",
-      """WITH base AS (
+      s"""WITH base AS (
         |  SELECT CAST(doc_id AS BIGINT) AS doc_id, lang, source,
         |         CAST(n_chars AS BIGINT) AS n_chars, text
         |  FROM documents WHERE doc_id % 10 = 0 AND len(text) > 0
@@ -524,10 +522,8 @@ object SurfaceQueries {
         |dig AS (
         |  SELECT CAST(count(*) AS BIGINT) AS n_rows,
         |    CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        |    CAST(sum(CAST(list_sum(list_transform(range(1, 9),
-        |      j -> (strpos('0123456789abcdef', substr(md5(
-        |              concat_ws(chr(1), doc_id, lang, source, n_chars, text)),
-        |            j, 1)) - 1) * 16.0 ** (8 - j))) AS BIGINT)) AS BIGINT)
+        |    CAST(sum(${OracleSql.md5Int(
+          "concat_ws(chr(1), doc_id, lang, source, n_chars, text)")}) AS BIGINT)
         |      AS digest
         |  FROM base)
         |SELECT f.format, d.n_rows, d.sum_chars, d.digest

@@ -14,16 +14,6 @@ import graft.functions.TextOps
   */
 object TextQueries {
 
-  /** DuckDB mirror of the md5_prefix60 kernel: 7 + 8 nibbles, each half
-    * integer-exact in doubles, recombined in BIGINT (< 2^60). */
-  private def md560(e: String): String =
-    s"""CAST(list_sum(list_transform(range(1, 8),
-       |      j -> (strpos('0123456789abcdef', substr(md5($e), j, 1)) - 1)
-       |           * 16.0 ** (7 - j))) AS BIGINT) * 4294967296
-       |    + CAST(list_sum(list_transform(range(8, 16),
-       |      j -> (strpos('0123456789abcdef', substr(md5($e), j, 1)) - 1)
-       |           * 16.0 ** (15 - j))) AS BIGINT)""".stripMargin
-
   private def docs(s: org.apache.spark.sql.SparkSession, d: String) =
     Tables.documents(s, d)
 
@@ -429,13 +419,11 @@ object TextQueries {
     // sides.
     Q(
       "q128_classifier_filter",
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws
+      s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws
         |           FROM documents),
         |s AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS n_tokens,
         |  CAST(list_sum(list_transform(ws, w ->
-        |    CAST(list_sum(list_transform(range(1, 9),
-        |      j -> (strpos('0123456789abcdef', substr(md5(w), j, 1)) - 1)
-        |           * 16.0 ** (8 - j))) AS BIGINT) % 2001 - 1000))
+        |    ${OracleSql.md5Int("w")} % 2001 - 1000))
         |    AS BIGINT) AS margin
         |  FROM t)
         |SELECT doc_id, n_tokens, margin, margin > 0 AS kept
@@ -512,12 +500,10 @@ object TextQueries {
     // state anywhere downstream of the count.
     Q(
       "q133_dist_drift",
-      """WITH w AS (SELECT source, unnest(string_split(text, ' ')) AS w
+      s"""WITH w AS (SELECT source, unnest(string_split(text, ' ')) AS w
         |           FROM documents),
         |wf AS (SELECT source,
-        |  CAST(list_sum(list_transform(range(1, 9),
-        |    j -> (strpos('0123456789abcdef', substr(md5(w), j, 1)) - 1)
-        |         * 16.0 ** (8 - j))) AS BIGINT) % 16 AS b
+        |  ${OracleSql.md5Int("w")} % 16 AS b
         |  FROM w WHERE len(w) > 0),
         |sb AS (SELECT source, b, CAST(count(*) AS BIGINT) AS o
         |       FROM wf GROUP BY source, b),
@@ -846,10 +832,11 @@ object TextQueries {
         |      i -> ws[i] || ' ' || ws[i+1])) AS b,
         |    unnest(list_transform(range(1, len(ws)), i -> ws[i])) AS w1
         |  FROM tok WHERE len(ws) >= 2),
-        |bh AS (SELECT doc_id, ${md560("b")} AS hb, ${md560("w1")} AS hw
+        |bh AS (SELECT doc_id, ${OracleSql.md560("b")} AS hb,
+        |         ${OracleSql.md560("w1")} AS hw
         |       FROM bg),
         |cnt AS (SELECT hb, count(*) AS c FROM bh GROUP BY 1),
-        |uni AS (SELECT ${md560("w")} AS hw, count(*) AS cu FROM
+        |uni AS (SELECT ${OracleSql.md560("w")} AS hw, count(*) AS cu FROM
         |        (SELECT unnest(ws) AS w FROM tok) GROUP BY 1),
         |sc AS (SELECT bh.doc_id,
         |         CASE WHEN cnt.c >= 2 THEN cnt.c * 1000 ELSE uni.cu END AS s
@@ -1146,7 +1133,7 @@ object TextQueries {
         |           i -> array_to_string(ws[i:i+4], ' '))) AS s
         |  FROM (SELECT doc_id, string_split(text, ' ') AS ws
         |        FROM documents) t),
-        |dh AS (SELECT DISTINCT doc_id, ${md560("s")} AS h FROM shr),
+        |dh AS (SELECT DISTINCT doc_id, ${OracleSql.md560("s")} AS h FROM shr),
         |fo AS (SELECT h, min(doc_id) AS first_doc FROM dh GROUP BY 1),
         |pd AS (
         |  SELECT dh.doc_id, count(*) AS n_grams,
@@ -1306,12 +1293,13 @@ object TextQueries {
         |    unnest(list_transform(range(1, len(ws)), i -> ws[i])) AS w1,
         |    unnest(list_transform(range(1, len(ws)), i -> ws[i+1])) AS w2
         |  FROM tok WHERE len(ws) >= 2),
-        |bh AS (SELECT ${md560("b")} AS hb, b,
-        |         ${md560("w1")} AS hw1, ${md560("w2")} AS hw2 FROM bg),
+        |bh AS (SELECT ${OracleSql.md560("b")} AS hb, b,
+        |         ${OracleSql.md560("w1")} AS hw1,
+        |         ${OracleSql.md560("w2")} AS hw2 FROM bg),
         |cnt AS (SELECT hb, count(*) AS c12, min(b) AS bigram,
         |          min(hw1) AS hw1, min(hw2) AS hw2
         |        FROM bh GROUP BY 1),
-        |uni AS (SELECT ${md560("w")} AS hw, count(*) AS cu FROM
+        |uni AS (SELECT ${OracleSql.md560("w")} AS hw, count(*) AS cu FROM
         |        (SELECT unnest(ws) AS w FROM tok) GROUP BY 1)
         |SELECT bigram, CAST(c12 AS BIGINT) AS c12,
         |  ((CAST(c12 AS DOUBLE) * c12) / u1.cu) / u2.cu AS score
@@ -1426,10 +1414,10 @@ object TextQueries {
       s"""WITH toks AS (
         |  SELECT lang, unnest(string_split(text, ' ')) AS w
         |  FROM documents),
-        |th AS (SELECT lang, ${md560("w")} AS hw FROM toks),
+        |th AS (SELECT lang, ${OracleSql.md560("w")} AS hw FROM toks),
         |vocab AS (
         |  SELECT hw FROM (
-        |    SELECT ${md560("w")} AS hw, count(*) AS c, min(w) AS word
+        |    SELECT ${OracleSql.md560("w")} AS hw, count(*) AS c, min(w) AS word
         |    FROM toks GROUP BY 1)
         |  ORDER BY c DESC, word LIMIT 16),
         |fl AS (
@@ -1503,7 +1491,8 @@ object TextQueries {
         |  FROM documents),
         |p AS (
         |  SELECT doc_id, n_chars,
-        |    ${md560("list_aggregate(ws[1:8], 'string_agg', ' ')")} AS pk
+        |    ${OracleSql.md560(
+          "list_aggregate(ws[1:8], 'string_agg', ' ')")} AS pk
         |  FROM t WHERE len(ws) >= 8),
         |cl AS (SELECT pk, count(*) AS m, sum(n_chars) AS chars
         |       FROM p GROUP BY pk),
@@ -1597,17 +1586,7 @@ object TextQueries {
     // engines identically (q240 note).
     Q(
       "q254_vocab_coverage",
-      """WITH shr AS (
-        |  SELECT source, unnest(list_transform(range(1, len(ws) - 1),
-        |           i -> array_to_string(ws[i:i+2], ' '))) AS s
-        |  FROM (SELECT source, string_split(text, ' ') AS ws
-        |        FROM documents) t),
-        |hv AS (
-        |  SELECT source,
-        |    CAST(list_sum(list_transform(range(1, 9),
-        |      j -> (strpos('0123456789abcdef', substr(md5(s), j, 1)) - 1)
-        |           * 16.0 ** (8 - j))) AS BIGINT) AS h
-        |  FROM shr),
+      s"""WITH ${OracleSql.hashedShingleRows("source")},
         |f AS (SELECT source, h, CAST(count(*) AS BIGINT) AS c
         |      FROM hv GROUP BY 1, 2),
         |g AS (SELECT source, CAST(sum(c) AS BIGINT) AS n,

@@ -137,6 +137,83 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("law: structure ops on null-bearing array<array<long>> rows match " +
+    "the Awkward model") {
+    // One row is an Option-typed model of array<array<long>>: a null row,
+    // empty and null inner lists, null elements. Every op is checked at
+    // the row's list level and mapped over its inner lists; the model is
+    // each op's documented Awkward semantics, where an op at a list level
+    // leaves a None at any outer level None.
+    type Inner = Option[List[Option[Long]]]
+    type NRow = Option[List[Inner]]
+    def lists[T](g: Gen[T]): Gen[Option[List[T]]] = Gen.frequency(
+      1 -> Gen.const(None), 1 -> Gen.const(Some(Nil)),
+      4 -> Gen.chooseNum(1, 4).flatMap(Gen.listOfN(_, g)).map(Some(_)))
+    val elem: Gen[Option[Long]] = Gen.frequency(
+      4 -> Gen.chooseNum(-9L, 9L).map(Some(_)), 1 -> Gen.const(None))
+    val row: Gen[NRow] = lists(lists(elem))
+    // model value -> the Row-encodable form (null, Seq, boxed long)
+    def enc(v: Any): Any = v match {
+      case None => null
+      case Some(x) => enc(x)
+      case xs: List[_] => xs.map(enc)
+      case x => x
+    }
+    // Spark result -> the same form (ints widened, arrays as List)
+    def dec(v: Any): Any = v match {
+      case null => null
+      case xs: scala.collection.Seq[_] => xs.map(dec).toList
+      case n: java.lang.Number => n.longValue
+      case x => x
+    }
+    // Awkward semantics of one op on one list level (None in -> None out)
+    def numM[T](l: Option[List[T]]) = l.map(_.size.toLong)
+    def firstsM[T](l: Option[List[Option[T]]]) = l.flatMap(_.headOption.flatten)
+    def dropNoneM[T](l: Option[List[Option[T]]]) = l.map(_.flatten)
+    def fillNoneM[T](l: Option[List[Option[T]]], v: T) =
+      l.map(_.map(_.orElse(Some(v))))
+    def padClip[T](l: Option[List[Option[T]]], k: Int) =
+      l.map(_.padTo(k, None).take(k))
+    def localIdx[T](l: Option[List[T]]) = l.map(_.indices.map(_.toLong).toList)
+    def flat(r: NRow) = r.map(_.flatten.flatten)
+    val ops: Seq[(String, org.apache.spark.sql.Column, NRow => Any)] = Seq(
+      ("num", num(col("xs")), numM(_)),
+      ("firsts", firsts(col("xs")), firstsM(_)),
+      ("dropNone", dropNone(col("xs")), dropNoneM(_)),
+      ("fillNone", fillNone(col("xs"), typedLit(Seq(0L))),
+        fillNoneM(_, List(Some(0L)))),
+      ("padNone", padNone(col("xs"), 3, clip = true), padClip(_, 3)),
+      ("localIndex", localIndex(col("xs")), localIdx(_)),
+      ("flatten", graft.api.awk.flatten(col("xs")), flat),
+      ("inner num", transform(col("xs"), l => num(l)),
+        _.map(_.map(numM(_)))),
+      ("inner firsts", transform(col("xs"), l => firsts(l)),
+        _.map(_.map(firstsM(_)))),
+      ("inner dropNone", transform(col("xs"), l => dropNone(l)),
+        _.map(_.map(dropNoneM(_)))),
+      ("inner fillNone", transform(col("xs"), l => fillNone(l, lit(0L))),
+        _.map(_.map(fillNoneM(_, 0L)))),
+      ("inner padNone", transform(col("xs"), l => padNone(l, 2, clip = true)),
+        _.map(_.map(padClip(_, 2)))),
+      ("inner localIndex", transform(col("xs"), l => localIndex(l)),
+        _.map(_.map(localIdx(_)))))
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "row_id BIGINT, xs ARRAY<ARRAY<BIGINT>>")
+    forAll(Gen.listOfN(8, row), n = 6) { rows =>
+      val df = spark.createDataFrame(java.util.Arrays.asList(
+        rows.zipWithIndex.map { case (r, i) =>
+          org.apache.spark.sql.Row(i.toLong, enc(r))
+        }: _*), schema)
+      val got = df.orderBy("row_id")
+        .select(ops.map { case (n, c, _) => c.as(n) }: _*).collect()
+      rows.zip(got).foreach { case (r, g) =>
+        ops.zipWithIndex.foreach { case ((n, _, model), j) =>
+          assert(dec(g.get(j)) == enc(model(r)), s"$n on ${enc(r)}")
+        }
+      }
+    }
+  }
+
   test("law: argcombinations2 indexes what combinations2 pairs") {
     forAll(Gen.listOfN(3, smallList), n = 4) { rows =>
       val strRows = rows.map(_.map(_.toString))

@@ -25,10 +25,24 @@ Reads the full-name 3-decimal metric line each Bench run prints to
 STDERR (the stdout line is centisecond-positional for the driver's
 2000-byte tail). Writes {cpus, note, queries, total} with per-query
 medians and total = sum of medians.
+
+Bench logs `[bench] <name> failed: ...` for a query that threw and still
+records its elapsed time, so a crash would enter the baseline as a fast
+query. Any such line in any input file is an error: the script names the
+query and the file, writes nothing, and exits 1.
 """
 import json
+import re
 import statistics
 import sys
+
+FAILED = re.compile(r"\[bench\] (\S+) failed:")
+
+
+def failures(path):
+    """(query, path) for every `[bench] <name> failed:` line of one
+    stderr file."""
+    return [(m.group(1), path) for m in map(FAILED.search, open(path)) if m]
 
 
 def metric(path):
@@ -42,6 +56,12 @@ def metric(path):
 def main():
     out, note, runs = sys.argv[1], sys.argv[2], sys.argv[3:]
     assert len(runs) >= 3, "median protocol needs >= 3 runs"
+    failed = [f for p in runs for f in failures(p)]
+    for name, path in failed:
+        print(f"error: {name} failed in {path}; its time is not a "
+              f"measurement", file=sys.stderr)
+    if failed:
+        sys.exit(1)
     qs = [metric(p) for p in runs]
     names = set(qs[0])
     for q in qs[1:]:
