@@ -12,13 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", false)
+    // the engine's own configuration; this one forked JVM's session also
+    // sizes the JVM-wide codegen class cache
+    val s = GraftSession.builder("local[4]", 4).appName("graft-test")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
