@@ -36,7 +36,7 @@ object Aggregators {
   }
 
   /** r15 mutable MinK buffer: the immutable `MinK` above (kept as the
-    * executable reference — Round15LawsSpec's differential pins multiset
+    * executable reference — AggregatorsSpec's differential pins multiset
     * equality) allocated and SORTED a (k+1)-element list per input row
     * — ~20 query sites pay that on corpus-scale streams (k up to 128 in
     * q240). This is the classic bounded max-heap over the k smallest:
@@ -182,7 +182,7 @@ object Aggregators {
     }
   }
   /** r15 mutable MG buffer: the immutable-Map `MG` above (kept as the
-    * executable reference — the Round15LawsSpec differential pins
+    * executable reference — the AggregatorsSpec differential pins
     * equivalence) rebuilt a 64-entry map PER MISSING ITEM (two O(k)
     * traversals + a fresh Map), i.e. allocation proportional to the
     * vocabulary on the reduce path. This state runs the identical

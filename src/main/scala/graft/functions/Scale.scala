@@ -4,16 +4,33 @@ import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** The scale idioms the LSH / dedup pair factories and the iterative graph
-  * loops share, one home each: the per-bucket membership cap, the
-  * data-derived bit width, and the one-action checkpoint that carries an
-  * observe(). The oracle SQL never calls into this object: it is the
-  * reference the gate compares against, and code shared by both sides
-  * could carry one bug past both (its kernel mirrors live in
-  * graft.queries.OracleSql). */
+/** The scale idioms the LSH / dedup pair factories, the top-k queries and
+  * the iterative graph loops share, one home each:
+  *  - [[topK]]: the top-k-per-group keep (row_number, `<= k`);
+  *  - [[capPerBucket]] / [[capPerBucketPruned]]: the 256-per-bucket
+  *    membership cap with its observed metric;
+  *  - [[bitLen]]: the data-derived bit width;
+  *  - [[checkpointObserved]]: the one-action checkpoint that carries an
+  *    observe().
+  * The oracle SQL never calls into this object: it is the reference the
+  * gate compares against, and code shared by both sides could carry one
+  * bug past both (its kernel mirrors live in graft.queries.OracleSql). */
 object Scale {
 
   private val Cap = 256
+
+  /** Keep the first `k` rows of each `by` group in `order`: `row_number`
+    * over partitionBy(by).orderBy(order), filtered `__rk <= k`. The rank
+    * column `__rk` stays for callers that read it (drop or select it
+    * away otherwise); `by = Nil` is one global window. The filter sits
+    * directly on the window, so Spark rewrites the pair into a
+    * WindowGroupLimit that prunes each partition to its local top k
+    * BEFORE the exchange (the map-side pruned distributed top-k); a cast
+    * or an observe() in between would block that. Its stream twin is
+    * `EventStreams.topKStep`. */
+  def topK(df: DataFrame, by: Seq[String], order: Seq[Column],
+      k: Int): DataFrame =
+    ranked(df, by, order).filter(col("__rk") <= k)
 
   /** Keep the lowest-`order` 256 rows of each `by` bucket.
     *
@@ -32,7 +49,7 @@ object Scale {
     * dropped row once per side; it is diagnostic, not exact. */
   def capPerBucket(df: DataFrame, metric: String, by: Seq[String],
       order: Seq[String]): DataFrame =
-    ranked(df, by, order)
+    ranked(df, by, order.map(col))
       .observe(metric,
         sum(when(col("__rk") > Cap, 1L).otherwise(0L)).as("dropped_rows"))
       .filter(col("__rk") <= Cap).drop("__rk")
@@ -46,14 +63,14 @@ object Scale {
     * the exact-count form's sites should move here is an open A/B. */
   def capPerBucketPruned(df: DataFrame, metric: String, by: Seq[String],
       order: Seq[String]): DataFrame =
-    ranked(df, by, order).filter(col("__rk") <= Cap)
+    topK(df, by, order.map(col), Cap)
       .observe(metric, max(col("__rk")).as("max_rank"))
       .drop("__rk")
 
   private def ranked(df: DataFrame, by: Seq[String],
-      order: Seq[String]): DataFrame =
+      order: Seq[Column]): DataFrame =
     df.withColumn("__rk", row_number().over(
-      Window.partitionBy(by.map(col): _*).orderBy(order.map(col): _*)))
+      Window.partitionBy(by.map(col): _*).orderBy(order: _*)))
 
   /** bitlen(max(1, n - 1)): the bit width of the largest 0-based index
     * into n items, at least 1. The adaptive LSH/shingle widths derive

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Q, Tables}
+import graft.Tables.{documents => docs, embeddings => emb}
 import graft.functions.{Scale, TextOps}
 
 /** Deduplication + similarity search — the scale-path operators a training
@@ -20,9 +21,6 @@ import graft.functions.{Scale, TextOps}
   *    bucket-join instead of the O(N·Q) brute-force cross join.
   */
 object DedupQueries {
-
-  private def docs(s: org.apache.spark.sql.SparkSession, d: String) =
-    Tables.documents(s, d)
 
   /** Shared PQ layout for q138 (flat PQ), q167 (IVF-PQ) and q217 (PQ
     * distortion): M=4 subspaces of 16 dims × K=8 centroids (the vec_id
@@ -74,10 +72,8 @@ object DedupQueries {
       * survivors, broadcast. */
     def rescoreTop5(e: DataFrame, scored: DataFrame,
         qids: Seq[Long]): DataFrame = {
-      val topw = Window.partitionBy("qid")
-        .orderBy(col("adc").desc, col("vec_id"))
-      val top5 = scored.withColumn("rn", row_number().over(topw))
-        .filter(col("rn") <= 5)
+      val top5 = Scale.topK(scored, Seq("qid"),
+          Seq(col("adc").desc, col("vec_id")), 5)
         .select(col("qid"), col("vec_id").as("cand_id"), col("adc"))
       e.select(col("vec_id").as("cand_id"), col("embedding").as("ev"))
         .join(broadcast(top5), "cand_id")
@@ -226,16 +222,14 @@ object DedupQueries {
     * semantics. */
   private def degreeBounded(pairs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    val w = Window.partitionBy("id_a")
-      .orderBy(col("rdot").desc, col("id_b").asc)
     // eager localCheckpoint: CC persists its edge input and re-reads it
     // every propagation round, and a window-bearing cached plan loses
     // AQE's partition coalescing (measured +1.1 s per CC at sf0.1 —
     // same row count, same graph). Cutting lineage to a materialized
     // RDD restores the pre-window CC cost; same lesson as the per-round
     // checkpoints inside GraphOps.
-    pairs.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= 32).drop("__rn")
+    Scale.topK(pairs, Seq("id_a"), Seq(col("rdot").desc, col("id_b").asc),
+        32).drop("__rk")
       .localCheckpoint(true)
   }
 
@@ -284,9 +278,6 @@ object DedupQueries {
       |FROM (SELECT * FROM tc WHERE r <= 256) a
       |JOIN (SELECT * FROM hc WHERE r <= 256) b ON a.th = b.hh
       |WHERE a.doc_id <> b.doc_id AND a.tail3 = b.head3)""".stripMargin
-
-  private def emb(s: org.apache.spark.sql.SparkSession, d: String) =
-    Tables.embeddings(s, d)
 
   /** Row counts per data dir — q59/q88/q92/q111 each size their LSH
     * structure from one, with one parquet-metadata count job per dir
@@ -554,9 +545,7 @@ object DedupQueries {
         .filter(col("vec_id") =!= col("qid"))
         .select(col("qid"), col("vec_id"),
           (round(TextOps.cosine(col("embedding"), col("qv")), 4) + lit(0.0)).as("rcos"))
-      val w = Window.partitionBy("qid").orderBy(col("rcos").desc, col("vec_id"))
-      scored.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 5)
+      Scale.topK(scored, Seq("qid"), Seq(col("rcos").desc, col("vec_id")), 5)
         .select("qid", "vec_id", "rcos")
         .orderBy(col("qid"), col("rcos").desc, col("vec_id"))
     },
@@ -595,9 +584,7 @@ object DedupQueries {
         col("bucket") === col("qbucket") && col("vec_id") =!= col("qid"))
         .select(col("qid"), col("vec_id"), col("bucket"),
           (round(TextOps.dot(col("embedding"), col("qv")), 4) + lit(0.0)).as("rdot"))
-      val w = Window.partitionBy("qid").orderBy(col("rdot").desc, col("vec_id"))
-      scored.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
+      Scale.topK(scored, Seq("qid"), Seq(col("rdot").desc, col("vec_id")), 3)
         .select("qid", "vec_id", "bucket", "rdot")
         .orderBy(col("qid"), col("rdot").desc, col("vec_id"))
     },
@@ -655,11 +642,8 @@ object DedupQueries {
       // (partition, vector). Ties break to the smaller centroid id.
       val assign = dots.groupBy("vec_id")
         .agg(max_by(col("cid"), struct(col("dot"), -col("cid"))).as("cid"))
-      val byDot = Window.partitionBy("vec_id")
-        .orderBy(col("dot").desc, col("cid"))
-      val probes = dots.filter(col("vec_id").isin(10, 11, 12))
-        .withColumn("rn", row_number().over(byDot))
-        .filter(col("rn") <= 2)
+      val probes = Scale.topK(dots.filter(col("vec_id").isin(10, 11, 12)),
+          Seq("vec_id"), Seq(col("dot").desc, col("cid")), 2)
         .select(col("vec_id").as("qid"), col("cid"))
       val cand = probes.join(assign.withColumnRenamed("vec_id", "cand_id"), "cid")
         .filter(col("cand_id") =!= col("qid"))
@@ -670,9 +654,7 @@ object DedupQueries {
           .select(col("vec_id").as("qid"), col("embedding").as("qv"))), "qid")
         .select(col("qid"), col("cand_id").as("vec_id"),
           (round(TextOps.dot(col("ev"), col("qv")), 4) + lit(0.0)).as("rdot"))
-      val topw = Window.partitionBy("qid").orderBy(col("rdot").desc, col("vec_id"))
-      scored.withColumn("rn", row_number().over(topw))
-        .filter(col("rn") <= 3)
+      Scale.topK(scored, Seq("qid"), Seq(col("rdot").desc, col("vec_id")), 3)
         .select("qid", "vec_id", "rdot")
         .orderBy(col("qid"), col("rdot").desc, col("vec_id"))
     },
@@ -2022,11 +2004,8 @@ object DedupQueries {
       val assigned = withD.groupBy("vec_id").agg(
         max_by(col("cid"), struct(col("dot"), -col("cid"))).as("cell"),
         Pq.codeAggs: _*)
-      val byDot = Window.partitionBy("vec_id")
-        .orderBy(col("dot").desc, col("cid"))
-      val probes = withD.filter(col("vec_id").isin(qids: _*))
-        .withColumn("rn", row_number().over(byDot))
-        .filter(col("rn") <= 2)
+      val probes = Scale.topK(withD.filter(col("vec_id").isin(qids: _*)),
+          Seq("vec_id"), Seq(col("dot").desc, col("cid")), 2)
         .select(col("vec_id").as("qid"), col("cid").as("cell"))
       val lutArr = Pq.lutArr(withD, qids)
       val scored = assigned
@@ -2501,12 +2480,9 @@ object DedupQueries {
             TextOps.dot(vp, vp) - lit(2d) * TextOps.dot(vp, col("cp")) +
               col("cc")
           }.as("dist2"))
-      d2.withColumn("r", row_number().over(
-          Window.partitionBy("label").orderBy(col("dist2").desc,
-            col("vec_id"))))
-        .filter(col("r") <= 5)
+      Scale.topK(d2, Seq("label"), Seq(col("dist2").desc, col("vec_id")), 5)
         .select(col("label").cast("long").as("label"),
-          col("r").cast("long").as("rk"), col("vec_id"),
+          col("__rk").cast("long").as("rk"), col("vec_id"),
           (round(col("dist2"), 4) + lit(0.0)).as("dist2"))
         .orderBy("label", "rk")
     },
@@ -4561,11 +4537,9 @@ object DedupQueries {
       .crossJoin(broadcast(nRow)) // 1 row off the checkpointed agg
       .select(col("i"), col("j"),
         (col("n") * col("sv") - col("si") * col("sj")).as("cov"))
-    cov
-      .withColumn("rk", row_number().over( // 2016-row global window
-        Window.orderBy(abs(col("cov")).desc, col("i"), col("j"))))
-      .filter(col("rk") <= 16)
-      .select(col("rk").cast("long").as("rk"),
+    Scale.topK(cov, Nil, // 2016-row global window
+        Seq(abs(col("cov")).desc, col("i"), col("j")), 16)
+      .select(col("__rk").cast("long").as("rk"),
         col("i").cast("long").as("dim_i"),
         col("j").cast("long").as("dim_j"),
         col("cov").cast("long").as("cov"))
@@ -5019,14 +4993,11 @@ object DedupQueries {
       .select(col("src"), col("ls.lang").as("lang_src"),
         col("ln.lang").as("lang_tgt"), col("nbr"),
         round(col("rdot") * 10000).cast("long").as("m"))
-    cand
-      .withColumn("r", row_number().over(
-        Window.partitionBy("src", "lang_tgt")
-          .orderBy(col("m").desc, col("nbr"))))
-      .filter(col("r") <= 2)
+    Scale.topK(cand, Seq("src", "lang_tgt"), Seq(col("m").desc, col("nbr")),
+        2)
       .groupBy("src", "lang_src", "lang_tgt")
-      .agg(max(when(col("r") === 1, col("m"))).as("m1"),
-        max(when(col("r") === 2, col("m"))).as("m2"))
+      .agg(max(when(col("__rk") === 1, col("m"))).as("m1"),
+        max(when(col("__rk") === 2, col("m"))).as("m2"))
       .groupBy("lang_src", "lang_tgt")
       .agg(count(lit(1)).cast("long").as("n_cands"),
         sum(when(col("m2").isNull ||

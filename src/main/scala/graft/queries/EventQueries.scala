@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Q, Tables}
+import graft.Tables.{events => ev}
+import graft.functions.Scale
 
 /** Time-series / event-log operators over the `events` table: time
   * bucketing, JSON prop extraction, ordered-window gaps, sessionization,
@@ -12,9 +14,6 @@ import graft.{Q, Tables}
   * via epoch seconds so engine timestamp formatting can never diverge.
   */
 object EventQueries {
-
-  private def ev(s: org.apache.spark.sql.SparkSession, d: String) =
-    Tables.events(s, d)
 
   /** max(unix_micros(ts)) per data dir (q213's decay anchor). */
   private val maxTsMicros = Tables.perDir((s, d) =>
@@ -917,9 +916,7 @@ object EventQueries {
       // left-side hint is ignored (HintErrorLogger warning at 1000x)
       val neg = slots.join(hits.hint("shuffle_hash"),
         Seq("user_id", "cand"), "left_anti")
-      val rk = row_number().over(
-        Window.partitionBy("user_id").orderBy("j"))
-      neg.withColumn("rk", rk).filter(col("rk") <= 2)
+      Scale.topK(neg, Seq("user_id"), Seq(col("j")), 2)
         .select(col("user_id"), col("cand").as("neg_item"),
           col("j").as("slot"))
         .orderBy("user_id", "slot")
@@ -956,9 +953,8 @@ object EventQueries {
         .select(col("user_id"),
           get_json_object(col("props"), "$.k").cast("long").as("item"))
         .groupBy("user_id", "item").agg(count(lit(1)).as("n"))
-      val rk = row_number().over(Window.partitionBy("user_id")
-        .orderBy(col("n").desc, col("item")))
-      val capped = ui.withColumn("rk", rk).filter(col("rk") <= 32)
+      val capped = Scale.topK(ui, Seq("user_id"),
+          Seq(col("n").desc, col("item")), 32)
         .groupBy("user_id")
         .agg(sort_array(collect_list(col("item"))).as("items"))
       capped
@@ -1764,8 +1760,7 @@ object EventQueries {
     val wd = Window.partitionBy("p").orderBy("wk")
     val dr = qs.withColumn("d", col("q") - lag("q", 1).over(wd))
       .filter(col("d").isNotNull)
-    val wr = Window.partitionBy("p").orderBy(abs(col("d")).desc, col("wk"))
-    dr.withColumn("r", row_number().over(wr)).filter(col("r") === 1)
+    Scale.topK(dr, Seq("p"), Seq(abs(col("d")).desc, col("wk")), 1)
       .select(col("p").cast("long").as("pct"),
         abs(col("d")).cast("long").as("max_drift"),
         col("wk").cast("long").as("peak_week"))
@@ -1875,9 +1870,8 @@ object EventQueries {
     val tot = c.groupBy("event_type")
       .agg(sum("n").as("t"),
         sum(when(col("dow") >= 5, col("n")).otherwise(0L)).as("wknd"))
-    val wr = Window.partitionBy("event_type")
-      .orderBy(col("n").desc, col("dow"), col("hr"))
-    c.withColumn("r", row_number().over(wr)).filter(col("r") === 1)
+    Scale.topK(c, Seq("event_type"), Seq(col("n").desc, col("dow"), col("hr")),
+        1)
       .join(broadcast(tot), "event_type")
       .select(col("event_type"), col("dow").cast("long").as("peak_dow"),
         col("hr").cast("long").as("peak_hr"),
@@ -1938,14 +1932,12 @@ object EventQueries {
     val tot = dc.groupBy("event_type")
       .agg(sum("c").as("tt"), count(lit(1)).as("dd"))
     val wv = Window.partitionBy("event_type").orderBy("day")
-    val wr = Window.partitionBy("event_type")
-      .orderBy(abs(col("sd")).desc, col("t").asc)
-    dc.withColumn("t", row_number().over(wv).cast("long"))
+    val sd = dc.withColumn("t", row_number().over(wv).cast("long"))
       .withColumn("p", sum("c").over(wv))
       .join(broadcast(tot), "event_type")
       .withColumn("sd", col("dd") * col("p") - col("t") * col("tt"))
-      .withColumn("r", row_number().over(wr))
-      .filter(col("r") === 1)
+    Scale.topK(sd, Seq("event_type"), Seq(abs(col("sd")).desc, col("t").asc),
+        1)
       .select(col("event_type"), col("dd").as("n_days"),
         col("tt").as("total"), col("t").as("t_star"),
         when(col("sd") >= 0, 1L).otherwise(-1L).as("direction"),

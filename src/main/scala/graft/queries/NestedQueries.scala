@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Column
 import graft.{Q, Tables}
+import graft.Tables.{embeddings => emb}
 import graft.functions.{ArrayOps, Reducers}
 
 /** The nested/jagged-array operator surface — the heart of the reference
@@ -15,9 +16,6 @@ import graft.functions.{ArrayOps, Reducers}
   * double + rounded, so the DuckDB oracle compares exactly.
   */
 object NestedQueries {
-
-  private def emb(s: org.apache.spark.sql.SparkSession, d: String) =
-    Tables.embeddings(s, d)
 
   private def dbl(c: Column): Column = c.cast("double")
 

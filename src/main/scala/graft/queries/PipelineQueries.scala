@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
-import graft.functions.{Aggregators, TextOps}
+import graft.Tables.{documents => docs, embeddings => emb}
+import graft.functions.{Aggregators, Scale, TextOps}
 
 /** Corpus-preparation operators beyond the dedup/ANN family: term salience
   * (TF-IDF), stratified corpus mixing, repetition quality signals, inverted
@@ -21,11 +22,6 @@ import graft.functions.{Aggregators, TextOps}
   *    so they are rounded to 4 with the `+ 0` signed-zero guard.
   */
 object PipelineQueries {
-
-  private def docs(s: org.apache.spark.sql.SparkSession, d: String) =
-    Tables.documents(s, d)
-  private def emb(s: org.apache.spark.sql.SparkSession, d: String) =
-    Tables.embeddings(s, d)
 
   val queries: Seq[Q] = Seq(
     // Per-document top-3 salient terms by TF-IDF (linear idf, see above).
@@ -483,10 +479,7 @@ object PipelineQueries {
         |SELECT source, doc_id, keyq
         |FROM r WHERE rk <= 5 ORDER BY source, doc_id""".stripMargin
     ) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("source")
-        .orderBy(col("keyq").desc, col("doc_id"))
-      docs(s, d)
+      val keyed = docs(s, d)
         .select(col("doc_id"), col("source"), col("n_chars"))
         .withColumn("__m",
           ((col("doc_id") % 2147483648L) * 2654435761L + 12345L)
@@ -502,8 +495,7 @@ object PipelineQueries {
             " * 65536L"))
         .select(col("doc_id"), col("source"),
           expr("-(__negk div n_chars)").as("keyq"))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 5)
+      Scale.topK(keyed, Seq("source"), Seq(col("keyq").desc, col("doc_id")), 5)
         .select(col("source"), col("doc_id"), col("keyq"))
         .orderBy("source", "doc_id")
     },
@@ -814,14 +806,12 @@ object PipelineQueries {
         (tfD * 2.2) /
         (tfD + lit(1.2) * (lit(0.25) + lit(0.75) * dlD /
           (col("tot").cast("double") / nD)))
-      val rn = row_number().over(
-        Window.partitionBy("term").orderBy(col("score").desc, col("doc_id")))
-      tf.join(broadcast(dfT), "term")
+      val scored = tf.join(broadcast(dfT), "term")
         .join(dl, "doc_id")
         .crossJoin(broadcast(stats))
         .select(col("term"), col("doc_id"), score.as("score"))
-        .withColumn("__rn", rn)
-        .filter(col("__rn") <= 10)
+      Scale.topK(scored, Seq("term"), Seq(col("score").desc, col("doc_id")),
+          10)
         .select(col("term"), col("doc_id"),
           (round(col("score"), 4) + lit(0.0)).as("score"))
         .orderBy("term", "doc_id")
@@ -1260,24 +1250,24 @@ object PipelineQueries {
       val lex = Tables.documents(s, d).select(col("doc_id"),
         size(filter(TextOps.tokens(col("text")),
           w => w.isin("join", "shuffle", "hash"))).cast("long").as("lscore"))
-      val lrank = lex
-        .withColumn("lr",
-          row_number().over(Window.orderBy(col("lscore").desc, col("doc_id"))))
-        .filter(col("lr") <= 50).select("doc_id", "lr")
+      val lrank = Scale.topK(lex, Nil,
+          Seq(col("lscore").desc, col("doc_id")), 50)
+        .select("doc_id", "__rk")
       val sem = Tables.embeddings(s, d).crossJoin(broadcast(probe))
         .select(col("vec_id").as("doc_id"),
           (round(TextOps.cosine(col("embedding"), col("pv")), 4) + lit(0.0))
             .as("rcos"))
-      val srank = sem
-        .withColumn("sr",
-          row_number().over(Window.orderBy(col("rcos").desc, col("doc_id"))))
-        .filter(col("sr") <= 50).select(col("doc_id").as("s_doc"), col("sr"))
-      lrank.join(srank, col("doc_id") === col("s_doc"), "full_outer")
+      val srank = Scale.topK(sem, Nil, Seq(col("rcos").desc, col("doc_id")), 50)
+        .select(col("doc_id").as("s_doc"), col("__rk"))
+      // both sides carry the rank as __rk: l.__rk and s.__rk by side
+      lrank.as("l").join(srank.as("s"), col("doc_id") === col("s_doc"),
+          "full_outer")
         .select(coalesce(col("doc_id"), col("s_doc")).as("doc_id"),
-          (coalesce(expr("1048576 div (60 + lr)"), lit(0L))
-            + coalesce(expr("1048576 div (60 + sr)"), lit(0L))).as("rrf_q20"),
-          coalesce(col("lr"), lit(0)).cast("long").as("lex_rank"),
-          coalesce(col("sr"), lit(0)).cast("long").as("sem_rank"))
+          (coalesce(expr("1048576 div (60 + l.__rk)"), lit(0L))
+            + coalesce(expr("1048576 div (60 + s.__rk)"), lit(0L)))
+            .as("rrf_q20"),
+          coalesce(col("l.__rk"), lit(0)).cast("long").as("lex_rank"),
+          coalesce(col("s.__rk"), lit(0)).cast("long").as("sem_rank"))
         .orderBy(col("rrf_q20").desc, col("doc_id"))
         .limit(20)
     },
@@ -1376,12 +1366,9 @@ object PipelineQueries {
         .select(col("qid"), col("vec_id"),
           (round(TextOps.cosine(col("embedding"), col("qv")), 4) + lit(0.0))
             .as("rcos"))
-      val w = Window.partitionBy("qid").orderBy(col("rcos").desc,
-        col("vec_id"))
-      scored.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
+      Scale.topK(scored, Seq("qid"), Seq(col("rcos").desc, col("vec_id")), 3)
         .select(col("qid"), col("vec_id").as("neg_id"), col("rcos"),
-          col("rn").cast("long").as("rn"))
+          col("__rk").cast("long").as("rn"))
         .orderBy("qid", "rn")
     },
 
@@ -1618,9 +1605,7 @@ object PipelineQueries {
         .select(col("p"), col("vec_id").as("cid"), col("qv"),
           call_function("dot_product", col("qv"), col("pqv"))
             .cast("long").as("rel"))
-      val rk = row_number().over(Window.partitionBy("p")
-        .orderBy(col("rel").desc, col("cid")))
-      val cand = rel.withColumn("rk", rk).filter(col("rk") <= 12)
+      val cand = Scale.topK(rel, Seq("p"), Seq(col("rel").desc, col("cid")), 12)
         .select("p", "cid", "rel", "qv")
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.functions.Scale
 
 /** Relational operator surface: aggregation, joins (shuffle + broadcast +
   * semi/anti), distinct, windows, sorts/top-k, set ops, rollup, and the
@@ -181,12 +182,8 @@ object Relational {
         |WHERE rn <= 3
         |ORDER BY o_orderpriority, o_orderkey""".stripMargin
     ) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("o_orderpriority")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      Tables.orders(s, d)
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
+      Scale.topK(Tables.orders(s, d), Seq("o_orderpriority"),
+          Seq(col("o_totalprice").desc, col("o_orderkey")), 3)
         .select("o_orderpriority", "o_orderkey", "o_totalprice")
         .orderBy("o_orderpriority", "o_orderkey")
     },

@@ -4,7 +4,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import graft.{Q, Tables}
-import graft.functions.TextOps
+import graft.Tables.{documents => docs}
+import graft.functions.{Scale, TextOps}
 
 /** Text analysis over the `documents` table: string kernels (SURVEY §2.10 —
   * the reference's lib/str.py wraps ~50 Arrow compute kernels; here they are
@@ -13,9 +14,6 @@ import graft.functions.TextOps
   * heuristic, document fingerprinting. All per-row, shuffle-free.
   */
 object TextQueries {
-
-  private def docs(s: org.apache.spark.sql.SparkSession, d: String) =
-    Tables.documents(s, d)
 
   /** max(doc_id) per data dir (q204's decile bound). */
   private val maxDocId = Tables.perDir((s, d) =>
@@ -1010,15 +1008,12 @@ object TextQueries {
       val wc = docs(s, d)
         .select(col("lang"), explode(TextOps.tokens(col("text"))).as("w"))
         .groupBy("lang", "w").agg(count(lit(1)).as("cnt"))
-      val oct = wc
-        .withColumn("r", row_number().over(
-          Window.partitionBy("lang").orderBy(col("cnt").desc, col("w"))))
-        .filter(col("r") <= 256)
-        .filter(col("r").isin(1, 2, 4, 8, 16, 32, 64, 128, 256))
+      val oct = Scale.topK(wc, Seq("lang"), Seq(col("cnt").desc, col("w")), 256)
+        .filter(col("__rk").isin(1, 2, 4, 8, 16, 32, 64, 128, 256))
       oct
         .withColumn("prev",
-          lag("cnt", 1).over(Window.partitionBy("lang").orderBy("r")))
-        .select(col("lang"), col("r").cast("long").as("rank"),
+          lag("cnt", 1).over(Window.partitionBy("lang").orderBy("__rk")))
+        .select(col("lang"), col("__rk").cast("long").as("rank"),
           col("w").as("word"), col("cnt").cast("long").as("cnt"),
           coalesce(
             expr("(cnt div prev) * 1000000" +

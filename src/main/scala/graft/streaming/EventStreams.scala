@@ -459,6 +459,25 @@ object EventStreams {
         org.apache.spark.sql.Encoders.scalaLong,
         org.apache.spark.sql.Encoders.STRING), e2)
 
+  /** One arrival into a running top-k (the stream twin of `Scale.topK`):
+    * below k `cand` is admitted; at k it displaces the worst kept entry
+    * only if it `beats` it (the batch window's order). Returns the new
+    * kept list, whether `cand` was admitted, and the entry it displaced.
+    * Redelivery of a kept entry (`same`) is a no-op: a second admit would
+    * waste a slot and wrongly displace a distinct entry. After any
+    * arrival order the kept set is the batch top-k. */
+  private[graft] def topKStep[T](kept: List[T], cand: T, k: Int)(
+      same: (T, T) => Boolean,
+      beats: (T, T) => Boolean): (List[T], Boolean, Option[T]) =
+    if (kept.exists(same(_, cand))) (kept, false, None)
+    else if (kept.size < k) (cand :: kept, true, None)
+    else {
+      val worst = kept.reduce((a, b) => if (beats(a, b)) b else a)
+      if (beats(cand, worst))
+        (cand :: kept.filterNot(same(_, worst)), true, Some(worst))
+      else (kept, false, None)
+    }
+
   final case class DomDoc(doc_id: Long, domain: String, n_chars: Long)
   final case class CapDecision(domain: String, doc_id: Long,
       n_chars: Long, admitted: Boolean)
@@ -489,22 +508,11 @@ object EventStreams {
             a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)
           val out = List.newBuilder[CapDecision]
           it.toSeq.sortBy(d => (-d.n_chars, d.doc_id)).foreach { d =>
-            val cand = (d.n_chars, d.doc_id)
-            if (top.contains(cand)) {
-              // at-least-once redelivery of an already-admitted doc: a
-              // second admit would duplicate the state entry, wasting a
-              // cap slot and wrongly displacing a distinct doc
-            } else if (top.size < k) {
-              top = cand :: top
-              out += CapDecision(domain, d.doc_id, d.n_chars, true)
-            } else {
-              val worst = top.reduce((a, b) => if (beats(a, b)) b else a)
-              if (beats(cand, worst)) {
-                top = cand :: top.filterNot(_ == worst)
-                out += CapDecision(domain, d.doc_id, d.n_chars, true)
-                out += CapDecision(domain, worst._2, worst._1, false)
-              }
-            }
+            val (next, admitted, evicted) =
+              topKStep(top, (d.n_chars, d.doc_id), k)(_ == _, beats)
+            top = next
+            if (admitted) out += CapDecision(domain, d.doc_id, d.n_chars, true)
+            evicted.foreach(w => out += CapDecision(domain, w._2, w._1, false))
           }
           state.update(top)
           out.result().iterator
@@ -523,9 +531,7 @@ object EventStreams {
     * triples per user, independent of stream length or redelivery count.
     * Emits an admit row per kept event and an evict row per
     * displacement, so a downstream consumer can maintain the capped set
-    * incrementally; at-least-once redelivery of an already-admitted
-    * event is a no-op (the state-membership guard, same as
-    * domainCapStream). */
+    * incrementally; redelivery is a no-op ([[topKStep]]). */
   def contributionCapStream(evs: Dataset[CapEv], k: Int = 8)(
       implicit e1: org.apache.spark.sql.Encoder[List[(Long, Long, String)]],
       e2: org.apache.spark.sql.Encoder[CapEvDecision],
@@ -541,21 +547,14 @@ object EventStreams {
             a._1 > b._1 || (a._1 == b._1 && a._2 > b._2)
           val out = List.newBuilder[CapEvDecision]
           it.toSeq.sortBy(e => (-e.ts_us, -e.event_id)).foreach { ev =>
-            val cand = (ev.ts_us, ev.event_id, ev.event_type)
-            if (top.exists(t => t._1 == cand._1 && t._2 == cand._2)) {
-              // redelivery of an admitted event: state already holds it
-            } else if (top.size < k) {
-              top = cand :: top
+            // one event = one (ts, event_id); the type rides along
+            val (next, admitted, evicted) =
+              topKStep(top, (ev.ts_us, ev.event_id, ev.event_type), k)(
+                (a, b) => a._1 == b._1 && a._2 == b._2, beats)
+            top = next
+            if (admitted)
               out += CapEvDecision(uid, ev.event_id, ev.event_type, true)
-            } else {
-              val worst = top.reduce((a, b) => if (beats(a, b)) b else a)
-              if (beats(cand, worst)) {
-                top = cand :: top.filterNot(t =>
-                  t._1 == worst._1 && t._2 == worst._2)
-                out += CapEvDecision(uid, ev.event_id, ev.event_type, true)
-                out += CapEvDecision(uid, worst._2, worst._3, false)
-              }
-            }
+            evicted.foreach(w => out += CapEvDecision(uid, w._2, w._3, false))
           }
           state.update(top)
           out.result().iterator

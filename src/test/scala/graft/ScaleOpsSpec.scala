@@ -112,6 +112,35 @@ class ScaleOpsSpec extends SparkSpec {
     assert(plan.contains("WindowGroupLimit"), plan)
   }
 
+  test("topK keeps the first k per group in order, ties cut by the " +
+    "second order column; by = Nil is one global window") {
+    // group "a" (7 rows) overflows k = 3 and its top 4 tie on score, so
+    // the cut falls on id; group "b" (2 rows) is smaller than k
+    val rows = Seq(("a", 5L, 3L), ("a", 5L, 1L), ("a", 4L, 0L),
+      ("a", 5L, 9L), ("a", 5L, 2L), ("a", 3L, 7L), ("a", 4L, 8L),
+      ("b", 1L, 20L), ("b", 6L, 21L))
+    val df = scala.util.Random.shuffle(rows).toDF("g", "score", "id")
+      .repartition(3)
+    val order = Seq(col("score").desc, col("id"))
+    // the plain-Scala model: sort each group, take k, rank from 1
+    def model(groups: Map[String, Seq[(String, Long, Long)]], k: Int) =
+      groups.values.flatMap(_.sortBy(r => (-r._2, r._3)).take(k)
+        .zipWithIndex.map { case ((g, sc, id), i) => (g, sc, id, i + 1) })
+        .toSeq.sortBy(r => (r._1, r._4))
+    def got(out: org.apache.spark.sql.DataFrame) = out
+      .select("g", "score", "id", "__rk").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getInt(3)))
+      .toSeq.sortBy(r => (r._1, r._4))
+    val top = Scale.topK(df, Seq("g"), order, 3)
+    assert(got(top) == model(rows.groupBy(_._1), 3))
+    assert(got(top).map(_._3) == Seq(1L, 2L, 3L, 21L, 20L))
+    val global = Scale.topK(df, Nil, order, 4)
+    assert(got(global).map(r => (r._3, r._4)) ==
+      model(Map("" -> rows), 4).map(r => (r._3, r._4)))
+    val plan = top.queryExecution.executedPlan.toString
+    assert(plan.contains("WindowGroupLimit"), plan)
+  }
+
   test("bitLen matches the toBinaryString width it replaced") {
     def old(n: Long) = java.lang.Long.toBinaryString(math.max(1L, n - 1)).length
     val ns = Seq(0L, 1L, 2L, Long.MaxValue, Long.MinValue, -5L) ++

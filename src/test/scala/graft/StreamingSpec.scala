@@ -576,6 +576,51 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("topKStep: admits below k, displaces the worst, rejects a loser, " +
+    "ignores redelivery, k = 1") {
+    // entries (score, id); higher score wins, ties to the smaller id;
+    // one entry = one id
+    type E = (Long, Long)
+    def step(kept: List[E], cand: E, k: Int) =
+      EventStreams.topKStep(kept, cand, k)((a: E, b: E) => a._2 == b._2,
+        (a: E, b: E) => a._1 > b._1 || (a._1 == b._1 && a._2 < b._2))
+    // admit while below k
+    assert(step(Nil, (5L, 1L), 2) == ((List((5L, 1L)), true, None)))
+    assert(step(List((5L, 1L)), (1L, 2L), 2) ==
+      ((List((1L, 2L), (5L, 1L)), true, None)))
+    // displace the worst (a tie on score loses to the smaller id)
+    assert(step(List((5L, 1L), (3L, 4L)), (3L, 2L), 2) ==
+      ((List((3L, 2L), (5L, 1L)), true, Some((3L, 4L)))))
+    // a loser is not admitted
+    assert(step(List((5L, 1L), (3L, 2L)), (3L, 7L), 2) ==
+      ((List((5L, 1L), (3L, 2L)), false, None)))
+    // redelivering a kept entry does nothing, below k and at k
+    assert(step(List((5L, 1L)), (5L, 1L), 2) ==
+      ((List((5L, 1L)), false, None)))
+    assert(step(List((5L, 1L), (3L, 2L)), (5L, 1L), 2) ==
+      ((List((5L, 1L), (3L, 2L)), false, None)))
+    // k = 1: the kept list is the running max
+    val arrivals = Seq((3L, 1L), (7L, 2L), (5L, 3L), (7L, 2L), (7L, 0L))
+    val (last, log) = arrivals.foldLeft((List.empty[E], List.empty[Any])) {
+      case ((kept, out), c) =>
+        val (next, admitted, evicted) = step(kept, c, 1)
+        (next, out :+ ((admitted, evicted)))
+    }
+    assert(last == List((7L, 0L)))
+    assert(log == List((true, None), (true, Some((3L, 1L))), (false, None),
+      (false, None), (true, Some((7L, 2L)))))
+    // any arrival order with redelivery ends at the sort-and-take model
+    val rng = new scala.util.Random(606)
+    for (trial <- 0 until 50) {
+      val k = 1 + rng.nextInt(4)
+      val entries = (0L until 12L).map(id => (rng.nextInt(5).toLong, id))
+      val stream = rng.shuffle(entries ++ entries.take(rng.nextInt(12)))
+      val kept = stream.foldLeft(List.empty[E])((kp, c) => step(kp, c, k)._1)
+      assert(kept.sortBy(e => (-e._1, e._2)) ==
+        entries.sortBy(e => (-e._1, e._2)).take(k), s"trial $trial k=$k")
+    }
+  }
+
   test("domainCapStream: final kept set EQUALS the batch top-3 window") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._

@@ -7,11 +7,16 @@ diverge again (round 1 shipped a 70x q54 regression that local notes
 missed). Fail = any query slower than max(3x baseline, baseline + 1 s) —
 the additive floor absorbs scheduler jitter on sub-second queries.
 
-Usage:
+Usage (Bench's stdout AND stderr, so the guard sees failed queries):
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 SPARK_GRAFT_CPUS=32 \
-      sbt -batch "runMain graft.Bench" 2>/dev/null | grep '"metric"' \
-      | python3 tools/bench_guard.py
-    python3 tools/bench_guard.py bench_output.json   # or from a file
+      sbt -batch "runMain graft.Bench" 2>&1 | python3 tools/bench_guard.py
+    python3 tools/bench_guard.py bench_output.txt   # or from a file
+
+The first metric line read is then Bench's full-name dict (stderr); the
+compact positional stdout line parses too. Bench logs `[bench] <name>
+failed: ...` for a query that threw and still records its elapsed time,
+so a crash would read as a fast query: any such line fails the guard
+and names the query (the derive_baseline.py rule).
 
 Baseline: tools/bench_baseline_sf0.01.json. Re-derive whenever a
 deliberate perf change lands, via the MEDIAN-OF-3 protocol in
@@ -28,6 +33,7 @@ STRICT fail at max(1.5x baseline, baseline + 0.5 s) instead.
 """
 import json
 import os
+import re
 import sys
 
 HERE = os.path.dirname(os.path.abspath(__file__))
@@ -36,6 +42,8 @@ BASELINE = os.path.join(HERE, "bench_baseline_sf0.01.json")
 # iterative queries: per-round driver actions make small fixed regressions
 # compound; hold them to 1.5x instead of 3x
 STRICT = {"q92_dedup_groups", "q253_chain_depth"}
+
+FAILED = re.compile(r"\[bench\] (\S+) failed:")
 
 
 def short(name):
@@ -47,8 +55,13 @@ def short(name):
 
 def main() -> int:
     src = open(sys.argv[1]) if len(sys.argv) > 1 else sys.stdin
+    lines = list(src)
+    crashed = [m.group(1) for m in map(FAILED.search, lines) if m]
+    for q in crashed:
+        print(f"FAIL {q}: Bench reports it failed; its time is not a "
+              f"measurement")
     # tolerate sbt's "[info] " prefix and surrounding log lines
-    line = next((l for l in src if '"metric"' in l), None)
+    line = next((l for l in lines if '"metric"' in l), None)
     if line is None:
         print("== bench guard FAIL: no metric line found in input")
         return 1
@@ -130,10 +143,12 @@ def main() -> int:
     new = sorted(set(bench_q) - {short(q) for q in base["queries"]})
     if new:
         print(f"note: {len(new)} queries lack a baseline: {', '.join(new)}")
-    ok = not failures and not missing
+    ok = not failures and not missing and not crashed
+    bad = ({q for q, *_ in failures} | set(missing)
+           | (set(crashed) & set(base["queries"])))
     print(f"note: box-speed factor {boxf:.2f}x (median ratio vs baseline)")
     print(f"== bench guard {'PASS' if ok else 'FAIL'}: "
-          f"{len(base['queries']) - len(failures) - len(missing)}"
+          f"{len(base['queries']) - len(bad)}"
           f"/{len(base['queries'])} within limits, total {bench['value']:.1f}s"
           f" (baseline {base['total']:.1f}s)")
     return 0 if ok else 1
