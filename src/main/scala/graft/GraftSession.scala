@@ -8,8 +8,10 @@ import org.apache.spark.sql.SparkSession
   * at local scale just manufactures tiny tasks), and a generated-class
   * cache that holds the whole query suite, so a warm re-execution of a
   * query or a stream micro-batch reuses its compiled classes instead of
-  * compiling them again. Every graft main and the test suite build their
-  * session through `builder`.
+  * compiling them again, and `fs.file.impl` and
+  * `fs.AbstractFileSystem.file.impl` set to `graft.io`'s local file
+  * system, which writes checkpoint files without forking a shell. Every
+  * graft main and the test suite build their session through `builder`.
   */
 object GraftSession {
 
@@ -34,6 +36,12 @@ object GraftSession {
       // with room. The JIT code cache still needs
       // -XX:ReservedCodeCacheSize=1g (build.sbt).
       .config("spark.sql.codegen.cache.maxEntries", 4096)
+      // The stock local FS forks a shell per checkpoint file (~130 forks
+      // per stream micro-batch; see graft.io). Hadoop's FS cache is
+      // JVM-wide, keyed by scheme and user: a file: FS first created
+      // without these keys stays stock.
+      .config("spark.hadoop.fs.file.impl", "graft.io.InProcessLocalFileSystem")
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", "graft.io.InProcessLocalFs")
 
   // ExecutionListenerManager does not dedup: guard against stacking the
   // metrics logger when local() is called twice on a reused session

@@ -545,6 +545,64 @@ class StreamingSpec extends SparkSpec {
       s"${carried.count(_.first_seen)} pre-restart chunks re-flagged first_seen")
   }
 
+  /** Appends one parquet file of docs `ids` (bucket = id % 37) to `src`. */
+  private def appendDocs(src: String, ids: Range): Unit =
+    spark.range(ids.start, ids.end).select($"id".as("doc_id"), ($"id" % 37).as("bucket"))
+      .coalesce(1).write.mode("append").parquet(src)
+
+  /** Drains dedupNearStream over `src`, one file per micro-batch, from the
+    * checkpoint `ckpt`; the decisions of the batches this run processed. */
+  private def drainDedup(src: String, ckpt: String): Map[Long, Boolean] = {
+    val got = new java.util.concurrent.ConcurrentHashMap[Long, Boolean]()
+    val q = EventStreams.dedupNearStream(spark.readStream.schema("doc_id LONG, bucket LONG")
+        .option("maxFilesPerTrigger", 1).parquet(src).as[EventStreams.Doc])
+      .writeStream.option("checkpointLocation", ckpt)
+      .foreachBatch { (df: org.apache.spark.sql.Dataset[EventStreams.DedupDecision], _: Long) =>
+        df.collect().foreach(d => got.put(d.doc_id, d.kept))
+      }
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    import scala.jdk.CollectionConverters._
+    got.asScala.toMap
+  }
+
+  test("dedupNearStream: stopped after file 1 and restarted from its checkpoint, " +
+    "decides as one uninterrupted drain") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-dedup-restart").toString
+    appendDocs(s"$dir/src", 0 until 100)
+    val before = drainDedup(s"$dir/src", s"$dir/ckpt")
+    appendDocs(s"$dir/src", 100 until 200)
+    val after = drainDedup(s"$dir/src", s"$dir/ckpt")
+    val whole = drainDedup(s"$dir/src", s"$dir/ckpt-whole")
+    assert(before.keySet == (0L until 100L).toSet && after.keySet == (100L until 200L).toSet)
+    // file 1 holds every bucket: each file-2 doc is a duplicate only
+    // through the keepers restored from the checkpointed state
+    assert(after.values.forall(!_))
+    assert(before ++ after == whole)
+    assert(whole == (0L until 200L).map(i => i -> (i < 37)).toMap)
+  }
+
+  test("dedupNearStream: a flipped byte in a committed state delta fails the " +
+    "restart with a checksum error") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-dedup-corrupt").toString
+    appendDocs(s"$dir/src", 0 until 100)
+    assert(drainDedup(s"$dir/src", s"$dir/ckpt").size == 100)
+    import scala.jdk.CollectionConverters._
+    val deltas = java.nio.file.Files.list(java.nio.file.Paths.get(s"$dir/ckpt/state/0"))
+      .iterator.asScala.map(_.resolve("1.delta")).filter(java.nio.file.Files.exists(_)).toSeq
+    assert(deltas.nonEmpty)
+    val delta = deltas.maxBy(java.nio.file.Files.size)
+    val bytes = java.nio.file.Files.readAllBytes(delta)
+    bytes(bytes.length / 2) = (bytes(bytes.length / 2) ^ 0xff).toByte
+    java.nio.file.Files.write(delta, bytes)
+    appendDocs(s"$dir/src", 100 until 200)
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      drainDedup(s"$dir/src", s"$dir/ckpt"))
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => s"${t.getClass.getName}: ${t.getMessage}").mkString("\n")
+    assert(chain.toLowerCase.contains("checksum"), chain)
+  }
+
   test("heavyHittersStream: MG survival guarantee holds across batches") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
