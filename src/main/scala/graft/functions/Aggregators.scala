@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
+import org.apache.spark.sql.functions.udaf
 
 /** Typed custom aggregations — the reference's `non_trivial_reduction(
   * reducer=, combiner=)` extension point (core.py:2349-2457) as Spark
@@ -89,6 +90,10 @@ object Aggregators {
     override def outputEncoder: Encoder[Seq[Long]] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]()
   }
+  /** [[MinKAgg]] as a column function: the k smallest non-null longs of
+    * a group, ascending. */
+  def minK(k: Int): UserDefinedFunction =
+    udaf(new MinKAgg(k), Encoders.scalaLong)
 
   /** Single-pass argmin: the (value at lexicographic-min (dist, value))
     * aggregation that k-means-assign / IVF probes need. Replaces the
@@ -140,6 +145,9 @@ object Aggregators {
     override def bufferEncoder: Encoder[AM] = Encoders.product[AM]
     override def outputEncoder: Encoder[Long] = Encoders.scalaLong
   }
+  /** [[ArgMinAgg]] as a column function of (dist: double, v: long). */
+  def argMin: UserDefinedFunction = udaf(ArgMinAgg,
+    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Double, Long)]())
 
   /** Misra–Gries heavy-hitters sketch: at most k counters, O(k) state per
     * partial regardless of input size. Deterministic guarantee (no

@@ -87,6 +87,97 @@ object DedupQueries {
         .orderBy(col("qid"), col("adc_dot").desc, col("vec_id"))
     }
   }
+  /** The packed rank key of the vector-search evaluations (q215 q216 q217
+    * q218 q224 q226 q233 q238 q247 q257): key = score·(−M) + low, so
+    * MinKAgg's k smallest keys are the top k by score DESC, then low ASC
+    * — integer and tie-exact in both engines. Scores are quantized rank
+    * values (`rq` = round(dot·1e4)), never raw doubles. low is the id
+    * (M = 2^40) or id·16 + a 4-bit label (M = 2^44). M = 2^40 keeps ids
+    * exact to 1.1e12 while |score|·M < 2^63 for |score| < 2^23; 2^33
+    * let replica-scale ids (~1e10) leak into the score lane and corrupt
+    * the ranking near the cut (the r11 audit). The labelled layout holds
+    * |score| < 2^19 (rq ≤ ~1.6e5). */
+  private[graft] object RankKey {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.expressions.UserDefinedFunction
+    /** 2^40: the id lane. */
+    val M = 1099511627776L
+    /** 2^44: the (id·16 + label) lane. */
+    val ML = 17592186044416L
+    /** A dot product quantized to round(dot·1e4) as BIGINT. */
+    def quant(dot: Column): Column = round(dot * 10000).cast("long")
+    /** [[quant]] of the codegen'd `dot_product(a, b)`. */
+    def rq(a: Column, b: Column): Column =
+      quant(call_function("dot_product", a, b))
+    def pack(score: Column, id: Column): Column = score * lit(-M) + id
+    def packLabeled(score: Column, id: Column, label: Column): Column =
+      score * lit(-ML) + id * 16L + label
+    def id(key: Column): Column = pmod(key, lit(M))
+    /** The score of a key of width `m`: exactly (low − key) div m. Spark's
+      * `div` truncates toward zero and the key is negative whenever the
+      * score is positive, so a bare −(key div m) reads one low whenever
+      * low > 0 (q216 caught it at sf0.001). */
+    def score(key: Column, m: Long = M): Column =
+      call_function("div", pmod(key, lit(m)) - key, lit(m))
+    def labeledId(key: Column): Column =
+      call_function("div", pmod(key, lit(ML)), lit(16))
+    def label(key: Column): Column = pmod(key, lit(ML)) % 16
+    /** `label`, or a per-row error naming `query` when it is outside
+      * [0,16): such a label would silently corrupt both the id and the
+      * label decodes while the oracle stays right. A map-side codegen'd
+      * branch, free next to the dot product. */
+    def checkedLabel(query: String): Column =
+      when(col("label") >= 0 && col("label") < 16, col("label"))
+        .otherwise(raise_error(concat(lit(s"$query: label outside [0,16)" +
+          " corrupts the packed rank key: "), col("label").cast("string"))))
+    /** The bottom-k gather: the k smallest keys of a group, ascending. */
+    def bottomK(k: Int): UserDefinedFunction =
+      graft.functions.Aggregators.minK(k)
+    /** `key` where `keep` holds, else the Long.MaxValue sentinel — a
+      * second, filtered top-k fused into the same groupBy. */
+    def gated(key: Column, keep: Column): Column =
+      when(keep, key).otherwise(lit(Long.MaxValue))
+    private def ids(keys: Column): Column = transform(keys, k => id(k))
+    /** How many ids two gathered key arrays share, as BIGINT. */
+    def overlap(a: Column, b: Column): Column =
+      size(array_intersect(ids(a), ids(b))).cast("long")
+    /** The IVF cell of `v`: the centroid with the largest [[rq]], ties to
+      * the smaller cell id — quantized like the oracle's assign CTE, so a
+      * near-tie between cells cannot flip the assignment cross-engine. */
+    def nearestCell(v: Column, cents: Seq[(Long, Seq[Float])]): Column =
+      -greatest(cents.map { case (cid, cv) =>
+        struct(rq(v, typedLit(cv)).as("dt"), lit(-cid).as("negid"))
+      }: _*).getField("negid")
+  }
+
+  /** Per-dim affine scalar quantization (SQ) to `levels` + 1 integer
+    * steps centred on 0, over per-dim (min, max) `ranges`; a degenerate
+    * dim maps to 0. [[sqQuantize]] is the codegen'd column kernel
+    * (plans/SqQuantize) and [[sqProbe]] its driver-side twin for probe
+    * vectors — the same BigDecimal HALF_UP rounding. */
+  private def sqQuantize(v: org.apache.spark.sql.Column,
+      ranges: (Seq[Double], Seq[Double]),
+      levels: Long): org.apache.spark.sql.Column =
+    org.apache.spark.sql.GraftColumnBridge.column(graft.plans.SqQuantize(
+      org.apache.spark.sql.GraftColumnBridge.expression(v),
+      ranges._1, ranges._2, levels))
+  private def sqProbe(qv: Seq[Float], ranges: (Seq[Double], Seq[Double]),
+      levels: Long): Seq[Double] = {
+    val (mns, mxs) = ranges
+    qv.indices.map { i =>
+      if (mxs(i) > mns(i))
+        (BigDecimal((qv(i).toDouble - mns(i)) * levels / (mxs(i) - mns(i)))
+          .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+          - levels / 2).toDouble
+      else 0d
+    }
+  }
+  /** The rank key of an SQ candidate: the integer dot of its quantized
+    * column `q` with the probe's `p<q>`, packed with vec_id. */
+  private def sqKey(q: String): org.apache.spark.sql.Column =
+    RankKey.pack(call_function("dot_product", col(q), col(s"p$q"))
+      .cast("long"), col("vec_id"))
+
   /** Adaptive RP plane count: max(8, bitlen(n-1) - 3), i.e. 8 planes up to
     * 2048 vectors, then one more plane per corpus doubling — bucket count
     * tracks corpus size so bucket OCCUPANCY (and the self-join's candidate
@@ -197,14 +288,12 @@ object DedupQueries {
     * cap included via [[rpSideSql]]. */
   private val rpPairsSql: String =
     s"""SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-      |  round(list_sum(list_transform(range(1, len(a.embedding) + 1),
-      |    i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))), 4) + 0
+      |  round(${OracleSql.dot("a.embedding", "b.embedding")}, 4) + 0
       |    AS rdot
       |FROM $rpSideSql a
       |JOIN $rpSideSql b
       |  ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-      |WHERE round(list_sum(list_transform(range(1, len(a.embedding) + 1),
-      |    i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))), 4) + 0 > 0.15""".stripMargin
+      |WHERE round(${OracleSql.dot("a.embedding", "b.embedding")}, 4) + 0 > 0.15""".stripMargin
 
   /** Degree bound for connected-components edge input: each id_a of
     * `pairs(id_a, id_b, rdot)` keeps its 32 strongest edges (rdot desc,
@@ -522,12 +611,11 @@ object DedupQueries {
     // for ANN): queries broadcast against the full embedding table.
     Q(
       "q55_cosine_knn",
-      """WITH q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings
+      s"""WITH q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings
         |           WHERE vec_id < 3),
         |scored AS (
         |  SELECT q.qid, e.vec_id,
-        |    round(list_sum(list_transform(range(1, len(e.embedding) + 1),
-        |            i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE)))
+        |    round(${OracleSql.dot("e.embedding", "q.qv")}
         |      / (sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
         |       * sqrt(list_sum(list_transform(q.qv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 4) + 0
         |      AS rcos
@@ -554,7 +642,7 @@ object DedupQueries {
     // components (16 buckets), candidates restricted to the query's bucket.
     Q(
       "q56_ann_lsh",
-      """WITH b AS (
+      s"""WITH b AS (
         |  SELECT vec_id, embedding,
         |    CAST(list_sum(list_transform(range(0, 4), i ->
         |      CASE WHEN embedding[i + 1] > 0 THEN 1 << i ELSE 0 END)) AS BIGINT)
@@ -564,8 +652,7 @@ object DedupQueries {
         |      WHERE vec_id < 5),
         |scored AS (
         |  SELECT q.qid, b.vec_id, b.bucket,
-        |    round(list_sum(list_transform(range(1, len(b.embedding) + 1),
-        |            i -> CAST(b.embedding[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE))), 4) + 0
+        |    round(${OracleSql.dot("b.embedding", "q.qv")}, 4) + 0
         |      AS rdot
         |  FROM b JOIN q ON b.bucket = q.bucket AND b.vec_id != q.qid),
         |ranked AS (
@@ -596,12 +683,11 @@ object DedupQueries {
     // key and each probe touches ~nprobe/nlist of the data.
     Q(
       "q58_ivf_ann",
-      """WITH cent AS (
+      s"""WITH cent AS (
         |  SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < 8),
         |dots AS (
         |  SELECT e.vec_id, c.cid,
-        |    list_sum(list_transform(range(1, len(e.embedding) + 1),
-        |      i -> CAST(e.embedding[i] AS DOUBLE) * CAST(c.cv[i] AS DOUBLE))) AS dot
+        |    ${OracleSql.dot("e.embedding", "c.cv")} AS dot
         |  FROM embeddings e, cent c),
         |assign AS (
         |  SELECT vec_id, cid FROM (
@@ -618,8 +704,7 @@ object DedupQueries {
         |  JOIN assign a ON a.cid = p.cid AND a.vec_id != p.qid),
         |scored AS (
         |  SELECT c.qid, c.vec_id,
-        |    round(list_sum(list_transform(range(1, len(e.embedding) + 1),
-        |      i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE))), 4) + 0
+        |    round(${OracleSql.dot("e.embedding", "q.embedding")}, 4) + 0
         |      AS rdot
         |  FROM cand c
         |  JOIN embeddings e ON e.vec_id = c.vec_id
@@ -671,7 +756,7 @@ object DedupQueries {
     // lesson again.
     Q(
       "q59_cosine_dups",
-      """WITH braw AS (
+      s"""WITH braw AS (
         |  SELECT vec_id, embedding,
         |    CAST(list_sum(list_transform(range(0, p.nb), i ->
         |      CASE WHEN embedding[i + 1] > 0 THEN 1 << i ELSE 0 END)) AS BIGINT)
@@ -685,12 +770,10 @@ object DedupQueries {
         |      row_number() OVER (PARTITION BY bucket ORDER BY vec_id) AS rk
         |    FROM braw) t WHERE rk <= 256)
         |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  round(list_sum(list_transform(range(1, len(a.embedding) + 1),
-        |    i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))), 4) + 0
+        |  round(${OracleSql.dot("a.embedding", "b.embedding")}, 4) + 0
         |    AS rdot
         |FROM b a JOIN b b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-        |WHERE round(list_sum(list_transform(range(1, len(a.embedding) + 1),
-        |    i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))), 4) + 0 > 0.15
+        |WHERE round(${OracleSql.dot("a.embedding", "b.embedding")}, 4) + 0 > 0.15
         |ORDER BY id_a, id_b""".stripMargin
     ) { (s, d) =>
       // No persist: signBucket is a handful of element_at's per row —
@@ -900,10 +983,9 @@ object DedupQueries {
     // consecutive vectors (bounded deterministic candidate set).
     Q(
       "q57_cosine_hist",
-      """SELECT CAST(floor(rcos * 10) AS BIGINT) AS bucket, count(*) AS n
+      s"""SELECT CAST(floor(rcos * 10) AS BIGINT) AS bucket, count(*) AS n
         |FROM (
-        |  SELECT round(list_sum(list_transform(range(1, len(a.embedding) + 1),
-        |           i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))), 4) + 0
+        |  SELECT round(${OracleSql.dot("a.embedding", "b.embedding")}, 4) + 0
         |         AS rcos
         |  FROM embeddings a JOIN embeddings b ON b.vec_id = a.vec_id + 1) t
         |GROUP BY bucket ORDER BY bucket""".stripMargin
@@ -1163,13 +1245,10 @@ object DedupQueries {
       // Tie-break (min value at equal dist) matches the oracle's
       // row_number ORDER BY dist, id exactly — A/B'd at sf0.1 AND the
       // 100x replica per the q240 rule before adopting.
-      val amAgg = udaf(graft.functions.Aggregators.ArgMinAgg,
-        org.apache.spark.sql.catalyst.encoders
-          .ExpressionEncoder[(Double, Long)]())
       def argmin(cands: org.apache.spark.sql.DataFrame, key: String,
           value: String, out: String): org.apache.spark.sql.DataFrame =
-        cands.groupBy(key)
-          .agg(amAgg(col("dist"), col(value).cast("long")).as(out))
+        cands.groupBy(key).agg(graft.functions.Aggregators
+          .argMin(col("dist"), col(value).cast("long")).as(out))
       val ei2 = ei.withColumn("vv", TextOps.dot(col("vs"), col("vs")))
       val assigned = if (k <= cNum) {
         argmin(
@@ -1406,9 +1485,7 @@ object DedupQueries {
         |                         ORDER BY adc DESC, vec_id) AS rn
         |    FROM adc) t WHERE rn <= 5)
         |SELECT t.qid, t.cand_id AS vec_id, round(t.adc, 4) + 0 AS adc_dot,
-        |  round(list_sum(list_transform(range(1, len(e.embedding) + 1),
-        |    i -> CAST(e.embedding[i] AS DOUBLE) *
-        |         CAST(q.embedding[i] AS DOUBLE))), 4) + 0 AS exact_dot
+        |  round(${OracleSql.dot("e.embedding", "q.embedding")}, 4) + 0 AS exact_dot
         |FROM top5 t
         |JOIN embeddings e ON e.vec_id = t.cand_id
         |JOIN embeddings q ON q.vec_id = t.qid
@@ -1987,9 +2064,7 @@ object DedupQueries {
         |        ORDER BY adc DESC, vec_id) AS rn
         |    FROM adc) t WHERE rn <= 5)
         |SELECT t.qid, t.cand_id AS vec_id, round(t.adc, 4) + 0 AS adc_dot,
-        |  round(list_sum(list_transform(range(1, len(e.embedding) + 1),
-        |    i -> CAST(e.embedding[i] AS DOUBLE) *
-        |         CAST(q.embedding[i] AS DOUBLE))), 4) + 0 AS exact_dot
+        |  round(${OracleSql.dot("e.embedding", "q.embedding")}, 4) + 0 AS exact_dot
         |FROM top5 t
         |JOIN embeddings e ON e.vec_id = t.cand_id
         |JOIN embeddings q ON q.vec_id = t.qid
@@ -2543,15 +2618,13 @@ object DedupQueries {
     // cross-engine, and the decode is pmod.
     Q(
       "q215_ivf_recall",
-      """WITH cent AS (SELECT vec_id AS cid, embedding AS cv
+      s"""WITH cent AS (SELECT vec_id AS cid, embedding AS cv
         |  FROM embeddings WHERE vec_id < 8),
         |probes AS (SELECT vec_id AS qid, embedding AS qv
         |  FROM embeddings WHERE vec_id >= 10 AND vec_id < 18),
         |dots AS (
         |  SELECT e.vec_id, c.cid,
-        |    list_sum(list_transform(range(1, len(e.embedding) + 1),
-        |      i -> CAST(e.embedding[i] AS DOUBLE) * CAST(c.cv[i] AS DOUBLE)))
-        |      AS dot
+        |    ${OracleSql.dot("e.embedding", "c.cv")} AS dot
         |  FROM embeddings e, cent c),
         |assign AS (
         |  SELECT vec_id, cid FROM (
@@ -2567,8 +2640,7 @@ object DedupQueries {
         |  SELECT p.qid, e.vec_id FROM probes p
         |  JOIN embeddings e ON e.vec_id != p.qid
         |  QUALIFY row_number() OVER (PARTITION BY p.qid ORDER BY
-        |    CAST(round(list_sum(list_transform(range(1, len(e.embedding) + 1),
-        |      i -> CAST(e.embedding[i] AS DOUBLE) * CAST(p.qv[i] AS DOUBLE)))
+        |    CAST(round(${OracleSql.dot("e.embedding", "p.qv")}
         |      * 10000) AS BIGINT) DESC, e.vec_id) <= 10),
         |cand AS (
         |  SELECT pr.qid, a.vec_id FROM pr
@@ -2578,8 +2650,7 @@ object DedupQueries {
         |  JOIN embeddings e ON e.vec_id = c.vec_id
         |  JOIN embeddings q ON q.vec_id = c.qid
         |  QUALIFY row_number() OVER (PARTITION BY c.qid ORDER BY
-        |    CAST(round(list_sum(list_transform(range(1, len(e.embedding) + 1),
-        |      i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE)))
+        |    CAST(round(${OracleSql.dot("e.embedding", "q.embedding")}
         |      * 10000) AS BIGINT) DESC, c.vec_id) <= 10)
         |SELECT b.qid, CAST(count(i.vec_id) AS BIGINT) AS hits,
         |  CAST(count(i.vec_id) * 100000 AS BIGINT) AS recall_ppm
@@ -2604,13 +2675,12 @@ object DedupQueries {
     // candidate ever crosses the exchange.
     Q(
       "q216_hard_negatives",
-      """WITH probes AS (SELECT vec_id AS qid, embedding AS qv,
+      s"""WITH probes AS (SELECT vec_id AS qid, embedding AS qv,
         |    label AS ql
         |  FROM embeddings WHERE vec_id >= 10 AND vec_id < 18),
         |hn AS (
         |  SELECT p.qid, e.vec_id, e.label,
-        |    CAST(round(list_sum(list_transform(range(1, len(e.embedding) + 1),
-        |      i -> CAST(e.embedding[i] AS DOUBLE) * CAST(p.qv[i] AS DOUBLE)))
+        |    CAST(round(${OracleSql.dot("e.embedding", "p.qv")}
         |      * 10000) AS BIGINT) AS rq
         |  FROM probes p JOIN embeddings e
         |    ON e.vec_id != p.qid AND e.label != p.ql
@@ -2653,9 +2723,7 @@ object DedupQueries {
         |    ORDER BY adc_q DESC, vec_id) <= 16),
         |ex AS (
         |  SELECT t.qid, t.vec_id, t.adc_q,
-        |    CAST(round(list_sum(list_transform(range(1, len(e.embedding) + 1),
-        |      i -> CAST(e.embedding[i] AS DOUBLE) *
-        |           CAST(q.embedding[i] AS DOUBLE))) * 10000) AS BIGINT)
+        |    CAST(round(${OracleSql.dot("e.embedding", "q.embedding")} * 10000) AS BIGINT)
         |      AS ex_q
         |  FROM top t JOIN embeddings e ON e.vec_id = t.vec_id
         |  JOIN embeddings q ON q.vec_id = t.qid),
@@ -2784,7 +2852,7 @@ object DedupQueries {
     // a 16-row table.
     Q(
       "q224_knn_ndcg",
-      """WITH disc(r, dc, pf) AS (VALUES
+      s"""WITH disc(r, dc, pf) AS (VALUES
         |  (1,1000000,1000000),(2,630929,1630929),(3,500000,2130929),
         |  (4,430676,2561605),(5,386852,2948457),(6,356207,3304664),
         |  (7,333333,3637997),(8,315464,3953461),(9,301029,4254490),
@@ -2793,8 +2861,7 @@ object DedupQueries {
         |  FROM embeddings WHERE vec_id >= 10 AND vec_id < 26),
         |cand AS (
         |  SELECT p.qid, p.ql, e.vec_id, e.label,
-        |    CAST(round(list_sum(list_transform(range(1, len(e.embedding) + 1),
-        |      i -> CAST(e.embedding[i] AS DOUBLE) * CAST(p.qv[i] AS DOUBLE)))
+        |    CAST(round(${OracleSql.dot("e.embedding", "p.qv")}
         |      * 10000) AS BIGINT) AS rq
         |  FROM probes p JOIN embeddings e ON e.vec_id != p.qid),
         |nrel AS (SELECT qid, CAST(count(*) FILTER (label = ql) AS BIGINT)
@@ -2994,7 +3061,7 @@ object DedupQueries {
     // 16-row table.
     Q(
       "q233_sq8_recall",
-      """WITH rng AS (
+      s"""WITH rng AS (
         |  SELECT i, min(embedding[i + 1]) AS mn, max(embedding[i + 1])
         |    AS mx
         |  FROM embeddings, range(0, 64) r(i) GROUP BY i),
@@ -3014,12 +3081,8 @@ object DedupQueries {
         |  JOIN probes p ON p.qid = q.vec_id),
         |sc AS (
         |  SELECT p.qid, e.vec_id,
-        |    CAST(round(list_sum(list_transform(range(1, 65),
-        |      i -> CAST(e.embedding[i] AS DOUBLE) *
-        |           CAST(p.qv[i] AS DOUBLE))) * 10000) AS BIGINT) AS rq,
-        |    CAST(list_sum(list_transform(range(1, 65),
-        |      i -> CAST(z.q8[i] AS DOUBLE) * CAST(w.pq8[i] AS DOUBLE)))
-        |      AS BIGINT) AS qd
+        |    CAST(round(${OracleSql.dot("e.embedding", "p.qv", 64)} * 10000) AS BIGINT) AS rq,
+        |    CAST(${OracleSql.dot("z.q8", "w.pq8", 64)} AS BIGINT) AS qd
         |  FROM probes p
         |  JOIN embeddings e ON e.vec_id != p.qid
         |  JOIN qz z ON z.vec_id = e.vec_id
@@ -3144,15 +3207,13 @@ object DedupQueries {
     // unpivoted to 24.
     Q(
       "q238_multiprobe_sweep",
-      """WITH cent AS (SELECT vec_id AS cid, embedding AS cv
+      s"""WITH cent AS (SELECT vec_id AS cid, embedding AS cv
         |  FROM embeddings WHERE vec_id < 8),
         |probes AS (SELECT vec_id AS qid, embedding AS qv
         |  FROM embeddings WHERE vec_id >= 10 AND vec_id < 18),
         |dots AS (
         |  SELECT e.vec_id, c.cid,
-        |    list_sum(list_transform(range(1, len(e.embedding) + 1),
-        |      i -> CAST(e.embedding[i] AS DOUBLE) * CAST(c.cv[i] AS DOUBLE)))
-        |      AS dot
+        |    ${OracleSql.dot("e.embedding", "c.cv")} AS dot
         |  FROM embeddings e, cent c),
         |assign AS (
         |  SELECT vec_id, cid FROM (
@@ -3168,8 +3229,7 @@ object DedupQueries {
         |  QUALIFY cr <= 4),
         |sc AS (
         |  SELECT p.qid, e.vec_id, a.cid,
-        |    CAST(round(list_sum(list_transform(range(1, len(e.embedding) + 1),
-        |      i -> CAST(e.embedding[i] AS DOUBLE) * CAST(p.qv[i] AS DOUBLE)))
+        |    CAST(round(${OracleSql.dot("e.embedding", "p.qv")}
         |      * 10000) AS BIGINT) AS rq
         |  FROM probes p
         |  JOIN embeddings e ON e.vec_id != p.qid
@@ -3438,18 +3498,15 @@ object DedupQueries {
     // id-exact through 1.1e12 vectors (replica ids reach ~1e10).
     Q(
       "q247_matryoshka_recall",
-      """WITH probes AS (SELECT vec_id AS qid, embedding AS qv
+      s"""WITH probes AS (SELECT vec_id AS qid, embedding AS qv
         |  FROM embeddings WHERE vec_id >= 20 AND vec_id < 36),
         |keyed AS (
         |  SELECT p.qid, c.vec_id,
-        |    CAST(round(list_sum(list_transform(range(1, 65),
-        |      i -> CAST(c.embedding[i] AS DOUBLE) * CAST(p.qv[i] AS DOUBLE)))
+        |    CAST(round(${OracleSql.dot("c.embedding", "p.qv", 64)}
         |      * 10000) AS BIGINT) * (-1099511627776) + c.vec_id AS key64,
-        |    CAST(round(list_sum(list_transform(range(1, 33),
-        |      i -> CAST(c.embedding[i] AS DOUBLE) * CAST(p.qv[i] AS DOUBLE)))
+        |    CAST(round(${OracleSql.dot("c.embedding", "p.qv", 32)}
         |      * 10000) AS BIGINT) * (-1099511627776) + c.vec_id AS key32,
-        |    CAST(round(list_sum(list_transform(range(1, 17),
-        |      i -> CAST(c.embedding[i] AS DOUBLE) * CAST(p.qv[i] AS DOUBLE)))
+        |    CAST(round(${OracleSql.dot("c.embedding", "p.qv", 16)}
         |      * 10000) AS BIGINT) * (-1099511627776) + c.vec_id AS key16
         |  FROM embeddings c CROSS JOIN probes p
         |  WHERE c.vec_id <> p.qid),
@@ -3561,7 +3618,7 @@ object DedupQueries {
     // needs before picking a memory budget.
     Q(
       "q257_sq_bits_sweep",
-      """WITH rng AS (
+      s"""WITH rng AS (
         |  SELECT i, min(embedding[i + 1]) AS mn, max(embedding[i + 1])
         |    AS mx
         |  FROM embeddings, range(0, 64) r(i) GROUP BY i),
@@ -3592,18 +3649,10 @@ object DedupQueries {
         |       FROM qz q JOIN probes p ON p.qid = q.vec_id),
         |sc AS (
         |  SELECT p.qid, e.vec_id,
-        |    CAST(round(list_sum(list_transform(range(1, 65),
-        |      i -> CAST(e.embedding[i] AS DOUBLE) *
-        |           CAST(p.qv[i] AS DOUBLE))) * 10000) AS BIGINT) AS rq,
-        |    CAST(list_sum(list_transform(range(1, 65),
-        |      i -> CAST(z.q4[i] AS DOUBLE) * CAST(w.pq4[i] AS DOUBLE)))
-        |      AS BIGINT) AS d4,
-        |    CAST(list_sum(list_transform(range(1, 65),
-        |      i -> CAST(z.q6[i] AS DOUBLE) * CAST(w.pq6[i] AS DOUBLE)))
-        |      AS BIGINT) AS d6,
-        |    CAST(list_sum(list_transform(range(1, 65),
-        |      i -> CAST(z.q8[i] AS DOUBLE) * CAST(w.pq8[i] AS DOUBLE)))
-        |      AS BIGINT) AS d8
+        |    CAST(round(${OracleSql.dot("e.embedding", "p.qv", 64)} * 10000) AS BIGINT) AS rq,
+        |    CAST(${OracleSql.dot("z.q4", "w.pq4", 64)} AS BIGINT) AS d4,
+        |    CAST(${OracleSql.dot("z.q6", "w.pq6", 64)} AS BIGINT) AS d6,
+        |    CAST(${OracleSql.dot("z.q8", "w.pq8", 64)} AS BIGINT) AS d8
         |  FROM probes p
         |  JOIN embeddings e ON e.vec_id != p.qid
         |  JOIN qz z ON z.vec_id = e.vec_id
@@ -3708,64 +3757,31 @@ object DedupQueries {
       ranges: (Seq[Double], Seq[Double]))
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    import graft.functions.Aggregators
-    val (mns, mxs) = ranges
-    val bitWidths = Seq(4, 6, 8)
+    import RankKey.{bottomK, overlap, pack, rq}
     def levels(b: Int): Long = (1L << b) - 2L
     // codegen'd kernel (plans/SqQuantize): the HOF-lambda form runs
     // interpreted per ELEMENT (HOFs never codegen) and at three bit
-    // widths per row dominated the 1000x replica cost; the kernel is
-    // byte-identical (same BigDecimal HALF_UP, same degenerate-dim 0)
-    def quantize(v: org.apache.spark.sql.Column, b: Int) =
-      org.apache.spark.sql.GraftColumnBridge.column(
-        graft.plans.SqQuantize(
-          org.apache.spark.sql.GraftColumnBridge.expression(v),
-          mns, mxs, levels(b)))
-    val quantizedProbes = probes.map { case (qid, qv, _) =>
-      val qs = bitWidths.map { b =>
-        qv.indices.map { i =>
-          if (mxs(i) > mns(i))
-            (BigDecimal(
-              (qv(i).toDouble - mns(i)) * levels(b) / (mxs(i) - mns(i)))
-              .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-              - levels(b) / 2).toDouble
-          else 0d
-        }
-      }
-      (qid, qv, qs(0), qs(1), qs(2))
-    }
-    val probesDf = broadcast(
-      quantizedProbes.toDF("qid", "qv", "pq4", "pq6", "pq8"))
-    val M = 1099511627776L // 2^40 (id-exact to 1.1e12 ids — r11 audit)
-    val minK10 = udaf(new Aggregators.MinKAgg(10),
-      org.apache.spark.sql.Encoders.scalaLong)
-    def ids(c: org.apache.spark.sql.Column) =
-      transform(c, k => pmod(k, lit(M)))
+    // widths per row dominated the 1000x replica cost
+    val probesDf = broadcast(probes.map { case (qid, qv, _) =>
+      (qid, qv, sqProbe(qv, ranges, levels(4)),
+        sqProbe(qv, ranges, levels(6)), sqProbe(qv, ranges, levels(8)))
+    }.toDF("qid", "qv", "pq4", "pq6", "pq8"))
+    val minK10 = bottomK(10)
     e.select(col("vec_id"), col("embedding"),
-        quantize(col("embedding"), 4).as("q4"),
-        quantize(col("embedding"), 6).as("q6"),
-        quantize(col("embedding"), 8).as("q8"))
+        sqQuantize(col("embedding"), ranges, levels(4)).as("q4"),
+        sqQuantize(col("embedding"), ranges, levels(6)).as("q6"),
+        sqQuantize(col("embedding"), ranges, levels(8)).as("q8"))
       .crossJoin(probesDf)
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"),
-        (expr("cast(round(dot_product(embedding, qv) * 10000) AS bigint)")
-          * lit(-M) + col("vec_id")).as("bfk"),
-        (expr("cast(dot_product(q4, pq4) AS bigint)")
-          * lit(-M) + col("vec_id")).as("k4"),
-        (expr("cast(dot_product(q6, pq6) AS bigint)")
-          * lit(-M) + col("vec_id")).as("k6"),
-        (expr("cast(dot_product(q8, pq8) AS bigint)")
-          * lit(-M) + col("vec_id")).as("k8"))
+        pack(rq(col("embedding"), col("qv")), col("vec_id")).as("bfk"),
+        sqKey("q4").as("k4"), sqKey("q6").as("k6"), sqKey("q8").as("k8"))
       .groupBy("qid")
       .agg(minK10(col("bfk")).as("bf"), minK10(col("k4")).as("t4"),
         minK10(col("k6")).as("t6"), minK10(col("k8")).as("t8"))
-      .select(col("qid"),
-        size(array_intersect(ids(col("bf")), ids(col("t4"))))
-          .cast("long").as("h4"),
-        size(array_intersect(ids(col("bf")), ids(col("t6"))))
-          .cast("long").as("h6"),
-        size(array_intersect(ids(col("bf")), ids(col("t8"))))
-          .cast("long").as("h8"))
+      .select(col("qid"), overlap(col("bf"), col("t4")).as("h4"),
+        overlap(col("bf"), col("t6")).as("h6"),
+        overlap(col("bf"), col("t8")).as("h8"))
       .selectExpr("qid",
         "stack(3, 4L, h4, 6L, h6, 8L, h8) as (bits, hits)")
       .select(col("qid"), col("bits"), col("hits"),
@@ -3877,8 +3893,7 @@ object DedupQueries {
     // stronger when both paths see the same input. Filter once, up
     // front, in both paths.
     val d = d0.filter(col("source").isNotNull)
-    val minK = udaf(new Aggregators.MinKAgg(128),
-      org.apache.spark.sql.Encoders.scalaLong)
+    val minK = Aggregators.minK(128)
     // r14 SOURCE-BITMASK shape. The r13 form computed the distinct
     // (source, h) table TWICE (recompute beat a DISK_ONLY barrier of
     // those string-bearing rows at every replica scale) and paid a
@@ -4025,18 +4040,14 @@ object DedupQueries {
     * truncations; vectors orthogonal on the prefix recall ~0). */
   private[graft] def matryoshkaRecallCore(
       e: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    import graft.functions.Aggregators
+    import RankKey.{bottomK, overlap, pack, rq}
     val probes = broadcast(e
       .filter(col("vec_id") >= 20 && col("vec_id") < 36)
       .select(col("vec_id").as("qid"), col("embedding").as("qv")))
-    val mNeg = -1099511627776L // -2^40
-    def key(n: Int): org.apache.spark.sql.Column =
-      expr(s"cast(round(dot_product(slice(embedding, 1, $n)," +
-        s" slice(qv, 1, $n)) * 10000) as bigint)") * mNeg + col("vec_id")
-    val minK10 = udaf(new Aggregators.MinKAgg(10),
-      org.apache.spark.sql.Encoders.scalaLong)
-    def ids(c: org.apache.spark.sql.Column) =
-      transform(c, k => pmod(k, lit(-mNeg)))
+    def key(n: Int): org.apache.spark.sql.Column = pack(
+      rq(slice(col("embedding"), 1, n), slice(col("qv"), 1, n)),
+      col("vec_id"))
+    val minK10 = bottomK(10)
     e.crossJoin(probes)
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), key(64).as("key64"), key(32).as("key32"),
@@ -4044,11 +4055,8 @@ object DedupQueries {
       .groupBy("qid")
       .agg(minK10(col("key64")).as("bf"), minK10(col("key32")).as("t32"),
         minK10(col("key16")).as("t16"))
-      .select(col("qid"),
-        size(array_intersect(ids(col("bf")), ids(col("t32"))))
-          .cast("long").as("h32"),
-        size(array_intersect(ids(col("bf")), ids(col("t16"))))
-          .cast("long").as("h16"))
+      .select(col("qid"), overlap(col("bf"), col("t32")).as("h32"),
+        overlap(col("bf"), col("t16")).as("h16"))
       .selectExpr("qid", "stack(2, 16L, h16, 32L, h32) as (dims, hits)")
       .select(col("qid"), col("dims"), col("hits"),
         (col("hits") * 100000L).as("recall_ppm"))
@@ -4068,13 +4076,10 @@ object DedupQueries {
     * tie-break (min id at equal dist) is exactly the oracle's
     * min(id) WHERE n_chars = max(n_chars). */
   private def canonPick(nChars: org.apache.spark.sql.Column,
-      id: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val amAgg = udaf(graft.functions.Aggregators.ArgMinAgg,
-      org.apache.spark.sql.catalyst.encoders
-        .ExpressionEncoder[(Double, Long)]())
-    amAgg((lit(0L) - (nChars.cast("long") + lit(1L))).cast("double"),
+      id: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    graft.functions.Aggregators.argMin(
+      (lit(0L) - (nChars.cast("long") + lit(1L))).cast("double"),
       id.cast("long"))
-  }
 
   private def canonMap(grp: org.apache.spark.sql.DataFrame,
       dq: org.apache.spark.sql.DataFrame, out: String)
@@ -4167,31 +4172,20 @@ object DedupQueries {
       probes: Seq[(Long, Seq[Float], Seq[Long])])
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    import graft.functions.Aggregators
-    val centStructs = cents.map { case (cid, cv) =>
-      struct(
-        round(call_function("dot_product", col("embedding"), typedLit(cv))
-          * 10000).cast("long").as("dt"),
-        lit(-cid).as("negid"))
-    }
+    import RankKey.{bottomK, gated, overlap, pack, rq}
     val assigned = e.select(col("vec_id"), col("embedding"),
-      (-greatest(centStructs: _*).getField("negid")).as("cid"))
+      RankKey.nearestCell(col("embedding"), cents).as("cid"))
     val probesDf = broadcast(probes.map { case (qid, qv, cs) =>
       (qid, qv, cs(0), cs(1), cs(2), cs(3))
     }.toDF("qid", "qv", "c1", "c2", "c3", "c4"))
-    val M = 1099511627776L // 2^40 (id-exact to 1.1e12 ids — r11 audit)
-    val minK10 = udaf(new Aggregators.MinKAgg(10),
-      org.apache.spark.sql.Encoders.scalaLong)
+    val minK10 = bottomK(10)
     def gate(cond: org.apache.spark.sql.Column) =
-      minK10(when(cond, col("key")).otherwise(lit(Long.MaxValue)))
+      minK10(gated(col("key"), cond))
     val keyed = assigned.crossJoin(probesDf)
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("cid"),
         col("c1"), col("c2"), col("c3"), col("c4"),
-        (expr("cast(round(dot_product(embedding, qv) * 10000) AS bigint)")
-          * lit(-M) + col("vec_id")).as("key"))
-    def ids(c: org.apache.spark.sql.Column) =
-      transform(c, k => pmod(k, lit(M)))
+        pack(rq(col("embedding"), col("qv")), col("vec_id")).as("key"))
     keyed.groupBy("qid")
       .agg(minK10(col("key")).as("bf"),
         gate(col("cid") === col("c1")).as("n1"),
@@ -4199,13 +4193,9 @@ object DedupQueries {
           .as("n2"),
         gate(col("cid") === col("c1") || col("cid") === col("c2") ||
           col("cid") === col("c3") || col("cid") === col("c4")).as("n4"))
-      .select(col("qid"),
-        size(array_intersect(ids(col("bf")), ids(col("n1"))))
-          .cast("long").as("h1"),
-        size(array_intersect(ids(col("bf")), ids(col("n2"))))
-          .cast("long").as("h2"),
-        size(array_intersect(ids(col("bf")), ids(col("n4"))))
-          .cast("long").as("h4"))
+      .select(col("qid"), overlap(col("bf"), col("n1")).as("h1"),
+        overlap(col("bf"), col("n2")).as("h2"),
+        overlap(col("bf"), col("n4")).as("h4"))
       .selectExpr("qid",
         "stack(3, 1L, h1, 2L, h2, 4L, h4) as (nprobe, hits)")
       .select(col("qid"), col("nprobe").cast("long").as("nprobe"),
@@ -4332,47 +4322,22 @@ object DedupQueries {
       ranges: (Seq[Double], Seq[Double]))
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    import graft.functions.Aggregators
-    val (mns, mxs) = ranges
-    // int8 per-dim affine quantization via the codegen'd
-    // plans/SqQuantize kernel (byte-identical to the earlier HOF form;
-    // shared with q257's bit-width sweep)
-    def quantize(v: org.apache.spark.sql.Column) =
-      org.apache.spark.sql.GraftColumnBridge.column(
-        graft.plans.SqQuantize(
-          org.apache.spark.sql.GraftColumnBridge.expression(v),
-          mns, mxs, 254L))
-    val quantizedProbes = probes.map { case (qid, qv, _) =>
-      val mapped = qv.indices.map { i =>
-        if (mxs(i) > mns(i))
-          (BigDecimal(
-            (qv(i).toDouble - mns(i)) * 254 / (mxs(i) - mns(i)))
-            .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong - 127)
-            .toDouble
-        else 0d
-      }
-      (qid, qv, mapped)
-    }
-    val probesDf = broadcast(quantizedProbes.toDF("qid", "qv", "pq8"))
-    val M = 1099511627776L // 2^40 (id-exact to 1.1e12 ids — r11 audit)
-    val minK10 = udaf(new Aggregators.MinKAgg(10),
-      org.apache.spark.sql.Encoders.scalaLong)
+    import RankKey.{bottomK, overlap, pack, rq}
+    // int8 (254 levels): the SQ kernel q257 sweeps over bit widths
+    val probesDf = broadcast(probes.map { case (qid, qv, _) =>
+      (qid, qv, sqProbe(qv, ranges, 254L))
+    }.toDF("qid", "qv", "pq8"))
+    val minK10 = bottomK(10)
     e.select(col("vec_id"), col("embedding"),
-        quantize(col("embedding")).as("q8"))
+        sqQuantize(col("embedding"), ranges, 254L).as("q8"))
       .crossJoin(probesDf)
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"),
-        (expr("cast(round(dot_product(embedding, qv) * 10000) AS bigint)")
-          * lit(-M) + col("vec_id")).as("bfk"),
-        (expr("cast(dot_product(q8, pq8) AS bigint)")
-          * lit(-M) + col("vec_id")).as("sqk"))
+        pack(rq(col("embedding"), col("qv")), col("vec_id")).as("bfk"),
+        sqKey("q8").as("sqk"))
       .groupBy("qid")
       .agg(minK10(col("bfk")).as("bf"), minK10(col("sqk")).as("sq"))
-      .select(col("qid"),
-        size(array_intersect(
-          transform(col("bf"), k => pmod(k, lit(M))),
-          transform(col("sq"), k => pmod(k, lit(M)))))
-          .cast("long").as("hits"))
+      .select(col("qid"), overlap(col("bf"), col("sq")).as("hits"))
       .select(col("qid"), col("hits"),
         (col("hits") * 100000L).as("recall_ppm"))
       .orderBy("qid")
@@ -4449,12 +4414,7 @@ object DedupQueries {
       rawPairs: org.apache.spark.sql.DataFrame,
       ids: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    import graft.functions.Aggregators
-    val M = 1099511627776L // 2^40 id space: replica/100 TB ids reach
-    // ~1e10 > 2^33, which would alias the pmod decode (r11 audit);
-    // 2^40 is id-exact to 1.1e12 while the rq·M product stays < 2^63
-    val minK5 = udaf(new Aggregators.MinKAgg(5),
-      org.apache.spark.sql.Encoders.scalaLong)
+    import RankKey.pack
     // both directions from ONE pass over the pair stream: a 2-element
     // map-side explode instead of a self-union (which either replans
     // the bucket self-join per side or checkpoints the FULL pre-top-5
@@ -4463,13 +4423,13 @@ object DedupQueries {
     val occ = rawPairs
       .select(explode(array(
         struct(col("id_a").as("src"),
-          (col("rq") * lit(-M) + col("id_b")).as("key")),
+          pack(col("rq"), col("id_b")).as("key")),
         struct(col("id_b").as("src"),
-          (col("rq") * lit(-M) + col("id_a")).as("key")))).as("x"))
+          pack(col("rq"), col("id_a")).as("key")))).as("x"))
       .select(col("x.src").as("src"), col("x.key").as("key"))
-      .groupBy("src").agg(minK5(col("key")).as("ks"))
+      .groupBy("src").agg(RankKey.bottomK(5)(col("key")).as("ks"))
       .select(explode(col("ks")).as("key"))
-      .select(pmod(col("key"), lit(M)).as("dst"))
+      .select(RankKey.id(col("key")).as("dst"))
       .groupBy("dst").agg(count(lit(1)).as("k"))
     ids
       .join(occ.hint("shuffle_hash"),
@@ -4573,38 +4533,25 @@ object DedupQueries {
       probes: Seq[(Long, Seq[Float], Int)])
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    import graft.functions.Aggregators
+    import RankKey.{checkedLabel, packLabeled, rq}
     val probesDf = broadcast(probes.toDF("qid", "qv", "ql"))
-    val M = 17592186044416L // 2^44: key low bits = vec_id*16 + label
-    // (id-exact through vec_id ~1.1e12; rq = round(dot*1e4) <= ~1.6e5
-    // << 2^19 so rq*M can't overflow a Long — the 2^37 width corrupted
-    // the ranking near the cut once vec_id*16+label >= 2^37, i.e.
-    // ids >= ~8.6e9, below the ~1e10 replica/100TB id range)
-    val minK10 = udaf(new Aggregators.MinKAgg(10),
-      org.apache.spark.sql.Encoders.scalaLong)
-    // same loud guard as q216: a label outside [0,16) would silently
-    // corrupt the packed decode while the oracle stays correct
-    val lbl = when(col("label") >= 0 && col("label") < 16, col("label"))
-      .otherwise(raise_error(concat(
-        lit("q224: label outside [0,16) corrupts the packed rank key: "),
-        col("label").cast("string"))))
     val discLit = typedLit(ndcgDisc)
     val prefLit = typedLit(ndcgPref)
     val gathered = e.crossJoin(probesDf)
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("ql"),
-        (expr("cast(round(dot_product(embedding, qv) * 10000) AS bigint)")
-          * lit(-M) + col("vec_id") * 16L + lbl).as("key"),
+        packLabeled(rq(col("embedding"), col("qv")), col("vec_id"),
+          checkedLabel("q224")).as("key"),
         (col("label") === col("ql")).as("rel"))
       .groupBy("qid", "ql")
-      .agg(minK10(col("key")).as("ks"),
+      .agg(RankKey.bottomK(10)(col("key")).as("ks"),
         sum(when(col("rel"), 1L).otherwise(0L)).as("n_rel"))
     // 16 rows from here on: unpack ranks, sum the discounted gains
     gathered
       .select(col("qid"), col("ql"), col("n_rel"),
         posexplode(col("ks")).as(Seq("p", "key")))
       .select(col("qid"), col("n_rel"), (col("p") + 1).as("r"),
-        (expr(s"pmod(key, ${M}L) % 16") === col("ql")).as("rel"))
+        (RankKey.label(col("key")) === col("ql")).as("rel"))
       .groupBy("qid", "n_rel")
       .agg(
         sum(when(col("rel"), element_at(discLit, col("r").cast("int")))
@@ -4695,30 +4642,25 @@ object DedupQueries {
       e: org.apache.spark.sql.DataFrame, probes: Seq[(Long, Seq[Float])])
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    import graft.functions.Aggregators
+    import RankKey.{rq, score}
     val probesDf = broadcast(probes.toDF("qid", "qv"))
-    val M = 1099511627776L // 2^40 (id-exact to 1.1e12 ids — r11 audit)
-    val minK5 = udaf(new Aggregators.MinKAgg(5),
-      org.apache.spark.sql.Encoders.scalaLong)
     // Σ over query tokens i of max over doc tokens j of the quantized
     // 16-dim slice dot — each term codegen'd, max/sum over INTEGERS
     val maxsim = (0 until 4).map { i =>
       greatest((0 until 4).map { j =>
-        expr(s"""cast(round(dot_product(
-          slice(embedding, ${j * 16 + 1}, 16),
-          slice(qv, ${i * 16 + 1}, 16)) * 10000) AS bigint)""")
+        rq(slice(col("embedding"), j * 16 + 1, 16),
+          slice(col("qv"), i * 16 + 1, 16))
       }: _*)
     }.reduce(_ + _)
     e.crossJoin(probesDf)
       .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"),
-        (maxsim * lit(-M) + col("vec_id")).as("key"))
+      .select(col("qid"), RankKey.pack(maxsim, col("vec_id")).as("key"))
       .groupBy("qid")
-      .agg(minK5(col("key")).as("ks"))
+      .agg(RankKey.bottomK(5)(col("key")).as("ks"))
       .select(col("qid"), posexplode(col("ks")).as(Seq("p", "key")))
       .select(col("qid"), (col("p") + 1L).cast("long").as("rk"),
-        expr(s"pmod(key, ${M}L)").as("vec_id"),
-        expr(s"(pmod(key, ${M}L) - key) div ${M}L").as("maxsim_q"))
+        RankKey.id(col("key")).as("vec_id"),
+        score(col("key")).as("maxsim_q"))
       .orderBy("qid", "rk")
   }
 
@@ -4728,34 +4670,27 @@ object DedupQueries {
   private[graft] def pqDistortionCore(
       e: org.apache.spark.sql.DataFrame, qids: Seq[Long])
       : org.apache.spark.sql.DataFrame = {
-      import graft.functions.Aggregators
       val withD = Pq.subspaceDots(e)
       val codes = withD.groupBy("vec_id")
         .agg(Pq.codeAggs.head, Pq.codeAggs.tail: _*)
       val lutArr = Pq.lutArr(withD, qids)
-      val M = 1099511627776L // 2^40 (id-exact to 1.1e12 ids — r11 audit)
-      val minK16 = udaf(new Aggregators.MinKAgg(16),
-        org.apache.spark.sql.Encoders.scalaLong)
       val top = codes.crossJoin(broadcast(lutArr))
         .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"),
-          (round(Pq.adc(col("lut"), col("c0"), col("c1"), col("c2"),
-            col("c3")) * 10000).cast("long") * lit(-M) + col("vec_id"))
-            .as("key"))
+        .select(col("qid"), RankKey.pack(RankKey.quant(Pq.adc(col("lut"),
+            col("c0"), col("c1"), col("c2"), col("c3"))), col("vec_id"))
+          .as("key"))
         .groupBy("qid")
-        .agg(minK16(col("key")).as("ks"))
+        .agg(RankKey.bottomK(16)(col("key")).as("ks"))
         .select(col("qid"), explode(col("ks")).as("key"))
-        .select(col("qid"), expr(s"pmod(key, ${M}L)").as("vec_id"),
-          // exact quotient of the negative key (Spark div truncates)
-          expr(s"(pmod(key, ${M}L) - key) div ${M}L").as("adc_q"))
+        .select(col("qid"), RankKey.id(col("key")).as("vec_id"),
+          RankKey.score(col("key")).as("adc_q"))
       val ex = e.select(col("vec_id"), col("embedding").as("ev"))
         .join(broadcast(top), Seq("vec_id"))
         .join(broadcast(e.filter(col("vec_id").isin(qids: _*))
           .select(col("vec_id").as("qid"), col("embedding").as("qv"))),
           Seq("qid"))
         .select(col("qid"), col("vec_id"), col("adc_q"),
-          expr("cast(round(dot_product(ev, qv) * 10000) AS bigint)")
-            .as("ex_q"))
+          RankKey.rq(col("ev"), col("qv")).as("ex_q"))
         .localCheckpoint(true)
       val a = ex.select(col("qid"), col("vec_id").as("va"),
         col("adc_q").as("aa"), col("ex_q").as("ea"))
@@ -4784,39 +4719,19 @@ object DedupQueries {
       probes: Seq[(Long, Seq[Float], Int)])
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    import graft.functions.Aggregators
+    import RankKey.{checkedLabel, packLabeled, rq}
     val probesDf = broadcast(probes.toDF("qid", "qv", "ql"))
-    val M = 17592186044416L // 2^44: key low bits = vec_id*16 + label
-    // (id-exact through vec_id ~1.1e12; rq = round(dot*1e4) <= ~1.6e5
-    // << 2^19 so rq*M can't overflow a Long — the 2^37 width corrupted
-    // the ranking near the cut once vec_id*16+label >= 2^37, i.e.
-    // ids >= ~8.6e9, below the ~1e10 replica/100TB id range)
-    val minK5 = udaf(new Aggregators.MinKAgg(5),
-      org.apache.spark.sql.Encoders.scalaLong)
-    // the packed key gives label the 4 low bits — a label outside
-    // [0,16) would silently corrupt BOTH the vec_id and neg_label
-    // decodes (the oracle stays correct, so the gate would mismatch
-    // with no error); fail loudly per row instead. Map-side, codegen'd
-    // branch — free next to the dot product.
-    val lbl = when(col("label") >= 0 && col("label") < 16, col("label"))
-      .otherwise(raise_error(concat(
-        lit("q216: label outside [0,16) corrupts the packed rank key: "),
-        col("label").cast("string"))))
     e.crossJoin(probesDf)
       .filter(col("vec_id") =!= col("qid") && col("label") =!= col("ql"))
-      .select(col("qid"),
-        (expr("cast(round(dot_product(embedding, qv) * 10000) AS bigint)")
-          * lit(-M) + col("vec_id") * 16L + lbl).as("key"))
+      .select(col("qid"), packLabeled(rq(col("embedding"), col("qv")),
+        col("vec_id"), checkedLabel("q216")).as("key"))
       .groupBy("qid")
-      .agg(minK5(col("key")).as("ks"))
+      .agg(RankKey.bottomK(5)(col("key")).as("ks"))
       .select(col("qid"), posexplode(col("ks")).as(Seq("p", "key")))
       .select(col("qid"), (col("p") + 1L).cast("long").as("rk"),
-        expr(s"pmod(key, ${M}L) div 16").as("vec_id"),
-        expr(s"pmod(key, ${M}L) % 16").as("neg_label"),
-        // rq = (low - key) / M exactly (Spark `div` TRUNCATES toward
-        // zero and key is negative — a bare `-(key div M)` reads one
-        // low whenever low > 0)
-        (expr(s"(pmod(key, ${M}L) - key) div ${M}L").cast("double")
+        RankKey.labeledId(col("key")).as("vec_id"),
+        RankKey.label(col("key")).as("neg_label"),
+        (RankKey.score(col("key"), RankKey.ML).cast("double")
           / 10000d).as("rdot"))
       .orderBy("qid", "rk")
   }
@@ -4830,40 +4745,22 @@ object DedupQueries {
       probes: Seq[(Long, Seq[Float], Long, Long)])
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    import graft.functions.Aggregators
-    val centStructs = cents.map { case (cid, cv) =>
-      struct(
-        // quantized like the oracle's assign CTE (round(dot*1e4)) so a
-        // near-tie between cells can't flip the assignment cross-engine
-        round(call_function("dot_product", col("embedding"), typedLit(cv))
-          * 10000).cast("long").as("dt"),
-        lit(-cid).as("negid"))
-    }
+    import RankKey.{bottomK, gated, overlap, pack, rq}
     val assigned = e.select(col("vec_id"), col("embedding"),
-      (-greatest(centStructs: _*).getField("negid")).as("cid"))
+      RankKey.nearestCell(col("embedding"), cents).as("cid"))
     val probesDf = broadcast(
       probes.toDF("qid", "qv", "cell1", "cell2"))
-    val M = 1099511627776L // 2^40 id space: replica/100 TB ids reach
-    // ~1e10 > 2^33, which would alias the pmod decode (r11 audit);
-    // 2^40 is id-exact to 1.1e12 while the rq·M product stays < 2^63
-    val minK10 = udaf(new Aggregators.MinKAgg(10),
-      org.apache.spark.sql.Encoders.scalaLong)
+    val minK10 = bottomK(10)
     val keyed = assigned.crossJoin(probesDf)
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"),
-        (expr("cast(round(dot_product(embedding, qv) * 10000) AS bigint)")
-          * lit(-M) + col("vec_id")).as("key"),
+        pack(rq(col("embedding"), col("qv")), col("vec_id")).as("key"),
         (col("cid") === col("cell1") || col("cid") === col("cell2"))
           .as("in_cell"))
     keyed.groupBy("qid")
       .agg(minK10(col("key")).as("bf"),
-        minK10(when(col("in_cell"), col("key"))
-          .otherwise(lit(Long.MaxValue))).as("ivf"))
-      .select(col("qid"),
-        size(array_intersect(
-          transform(col("bf"), k => pmod(k, lit(M))),
-          transform(col("ivf"), k => pmod(k, lit(M)))))
-          .cast("long").as("hits"))
+        minK10(gated(col("key"), col("in_cell"))).as("ivf"))
+      .select(col("qid"), overlap(col("bf"), col("ivf")).as("hits"))
       .select(col("qid"), col("hits"),
         (col("hits") * 100000L).as("recall_ppm"))
       .orderBy("qid")

@@ -85,6 +85,19 @@ private[queries] object OracleSql {
       |  SELECT u.src, rc.r FROM und u JOIN reach rc ON rc.id = u.dst)"""
       .stripMargin
 
+  /** `dot_product` (plans/DotProduct, `TextOps.dot`): Σ a[i]·b[i] over
+    * every position of `a`, each factor cast to DOUBLE and summed in
+    * index order, as the kernel folds. */
+  def dot(a: String, b: String): String = dotTo(a, b, s"len($a) + 1")
+
+  /** [[dot]] over the first `n` positions only (a prefix slice). */
+  def dot(a: String, b: String, n: Int): String = dotTo(a, b, s"${n + 1}")
+
+  private def dotTo(a: String, b: String, end: String): String =
+    s"""list_sum(list_transform(range(1, $end),
+       |      i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"""
+      .stripMargin
+
   /** `DedupQueries.Pq.subspaceDots`: CTEs `cent(cid, cv)`, the 8 seed
     * centroids, and `subdots(vec_id, cid, m, d)`, every vector's dot with
     * every centroid on each of the 4 16-dim subspaces. */

@@ -155,8 +155,7 @@ object PipelineQueries {
         |FROM agg WHERE length(term) >= 4 AND df >= 50
         |ORDER BY term""".stripMargin
     ) { (s, d) =>
-      val minK = udaf(new Aggregators.MinKAgg(5),
-        org.apache.spark.sql.Encoders.scalaLong)
+      val minK = Aggregators.minK(5)
       docs(s, d)
         .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("w"))
         .distinct()
@@ -253,16 +252,13 @@ object PipelineQueries {
     // oracle's row_number form picks the same row (ties break on sid).
     Q(
       "q100_kmeans_assign",
-      """WITH seeds AS (
+      s"""WITH seeds AS (
         |  SELECT vec_id AS sid, embedding AS c FROM embeddings WHERE vec_id < 8),
         |pairs AS (
         |  SELECT e.vec_id, s.sid,
-        |    list_sum(list_transform(range(1, 65),
-        |      i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)))
-        |    - 2 * list_sum(list_transform(range(1, 65),
-        |      i -> CAST(e.embedding[i] AS DOUBLE) * CAST(s.c[i] AS DOUBLE)))
-        |    + list_sum(list_transform(range(1, 65),
-        |      i -> CAST(s.c[i] AS DOUBLE) * CAST(s.c[i] AS DOUBLE))) AS dist
+        |    ${OracleSql.dot("e.embedding", "e.embedding", 64)}
+        |    - 2 * ${OracleSql.dot("e.embedding", "s.c", 64)}
+        |    + ${OracleSql.dot("s.c", "s.c", 64)} AS dist
         |  FROM embeddings e CROSS JOIN seeds s),
         |assigned AS (
         |  SELECT vec_id, sid,
@@ -292,11 +288,9 @@ object PipelineQueries {
       // here too): one ObjectHashAggregate, candidate crossJoin
       // evaluated once — the old min-dist + join-back + min-sid pair
       // computed the n·k distance set twice
-      val amAgg = udaf(graft.functions.Aggregators.ArgMinAgg,
-        org.apache.spark.sql.catalyst.encoders
-          .ExpressionEncoder[(Double, Long)]())
       val assigned = pairs.groupBy("vec_id")
-        .agg(amAgg(col("dist"), col("sid").cast("long")).as("cluster"))
+        .agg(Aggregators.argMin(col("dist"), col("sid").cast("long"))
+          .as("cluster"))
       assigned.join(emb(s, d), "vec_id")
         .groupBy("cluster")
         .agg(count(lit(1)).cast("long").as("n"), cd(0), cd(1), cd(2), cd(3))
@@ -715,11 +709,9 @@ object PipelineQueries {
             (col("vv") - lit(2.0) * vc + col("cc")).as("dist"))
         // fused single-pass argmin (ArgMinAgg): each k-means round now
         // computes its n·k distance set ONCE instead of twice
-        val amAgg = udaf(graft.functions.Aggregators.ArgMinAgg,
-          org.apache.spark.sql.catalyst.encoders
-            .ExpressionEncoder[(Double, Long)]())
         pairs.groupBy("vec_id")
-          .agg(amAgg(col("dist"), col("sid").cast("long")).as("sid"))
+          .agg(Aggregators.argMin(col("dist"), col("sid").cast("long"))
+            .as("sid"))
       }
       def rebuild(adf: DataFrame): DataFrame = {
         val dims = adf.join(ei, "vec_id")
@@ -1212,7 +1204,7 @@ object PipelineQueries {
     // twice (once per modality), never joined at corpus grain.
     Q(
       "q149_rrf_fusion",
-      """WITH probe AS (
+      s"""WITH probe AS (
         |  SELECT embedding AS pv FROM embeddings WHERE vec_id = 0
         |), lex AS (
         |  SELECT doc_id, CAST(len(list_filter(string_split(text, ' '),
@@ -1224,8 +1216,7 @@ object PipelineQueries {
         |  FROM lex QUALIFY lr <= 50
         |), sem AS (
         |  SELECT e.vec_id AS doc_id,
-        |    round(list_sum(list_transform(range(1, len(e.embedding) + 1),
-        |        i -> CAST(e.embedding[i] AS DOUBLE) * CAST(pv[i] AS DOUBLE)))
+        |    round(${OracleSql.dot("e.embedding", "pv")}
         |      / (sqrt(list_sum(list_transform(e.embedding,
         |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
         |       * sqrt(list_sum(list_transform(pv,
@@ -1335,13 +1326,12 @@ object PipelineQueries {
     // (bounded heap), never a full sort.
     Q(
       "q151_hard_negatives",
-      """WITH q AS (
+      s"""WITH q AS (
         |  SELECT vec_id AS qid, embedding AS qv, label AS qlabel
         |  FROM embeddings WHERE vec_id < 5
         |), scored AS (
         |  SELECT q.qid, e.vec_id,
-        |    round(list_sum(list_transform(range(1, len(e.embedding) + 1),
-        |        i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv[i] AS DOUBLE)))
+        |    round(${OracleSql.dot("e.embedding", "qv")}
         |      / (sqrt(list_sum(list_transform(e.embedding,
         |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
         |       * sqrt(list_sum(list_transform(qv,

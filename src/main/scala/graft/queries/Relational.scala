@@ -391,8 +391,7 @@ object Relational {
         |  round(min(l_extendedprice), 2) AS lowest
         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin
     ) { (s, d) =>
-      val min3 = udaf(new graft.functions.Aggregators.MinKAgg(3),
-        org.apache.spark.sql.Encoders.scalaLong)
+      val min3 = graft.functions.Aggregators.minK(3)
       Tables.lineitem(s, d)
         .groupBy("l_returnflag")
         .agg(

@@ -9,17 +9,9 @@ import graft.queries.DedupQueries
   */
 class Round10LawsSpec extends SparkSpec {
   import spark.implicits._
+  import VectorSearchSpec.{dotD, rq}
 
   private val sf = "/root/testdata/sf0.001"
-
-  private def dotD(a: Seq[Float], b: Seq[Float]): Double = {
-    var acc = 0.0; var i = 0
-    while (i < a.length) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
-    acc
-  }
-  private def rq(a: Seq[Float], b: Seq[Float]): Long =
-    BigDecimal(dotD(a, b) * 10000)
-      .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
 
   // ---------------------------------------------------------------- q224
 

@@ -10,6 +10,7 @@ import graft.queries.{DedupQueries, EventQueries}
   */
 class Round9dLawsSpec extends SparkSpec {
   import spark.implicits._
+  import VectorSearchSpec.{dotD, rq}
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -121,11 +122,6 @@ class Round9dLawsSpec extends SparkSpec {
     val cents = (0L until 8L).map(c =>
       c -> (if (c == 0L) Seq(1f, 0f, 0f, 0f)
             else Seq(-1f, c * 0.01f, 0f, 0f)))
-    def dotD(a: Seq[Float], b: Seq[Float]): Double = {
-      var acc = 0.0; var i = 0
-      while (i < a.length) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
-      acc
-    }
     val all = (0L until 40L).map(i => (i, v(i.toInt)))
     val probes = all.filter(p => p._1 >= 10 && p._1 < 18).map {
       case (qid, qv) =>
@@ -146,18 +142,8 @@ class Round9dLawsSpec extends SparkSpec {
     "hits * 1e5, and hits match a driver-side brute-force/IVF mirror") {
     val e = Tables.embeddings(spark, sf).select("vec_id", "embedding")
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
-    def dotD(a: Seq[Float], b: Seq[Float]): Double = {
-      var acc = 0.0; var i = 0
-      while (i < a.length) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
-      acc
-    }
     val cents = e.filter(_._1 < 8).sortBy(_._1).toSeq
     val probes = e.filter(p => p._1 >= 10 && p._1 < 18).sortBy(_._1)
-    // HALF_UP away from zero — math.round ties toward +inf and would
-    // diverge from Spark/DuckDB round() on negative .5 boundaries
-    def rq(a: Seq[Float], b: Seq[Float]): Long =
-      BigDecimal(dotD(a, b) * 10000)
-        .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
     val assign = e.map { case (id, v) =>
       id -> cents.map { case (cid, cv) => (cid, dotD(v, cv)) }
         .minBy { case (cid, dt) => (-dt, cid) }._1

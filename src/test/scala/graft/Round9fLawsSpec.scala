@@ -9,16 +9,9 @@ import graft.queries.DedupQueries
   */
 class Round9fLawsSpec extends SparkSpec {
   import spark.implicits._
+  import VectorSearchSpec.{dotD, halfUp}
 
   private val sf = "/root/testdata/sf0.001"
-
-  private def dotD(a: Seq[Float], b: Seq[Float], lo: Int, hi: Int): Double = {
-    var acc = 0.0; var i = lo
-    while (i < hi) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
-    acc
-  }
-  private def rq(x: Double): Long =
-    BigDecimal(x).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
 
   // ---------------------------------------------------------------- q218
 
@@ -37,7 +30,7 @@ class Round9fLawsSpec extends SparkSpec {
     // mirror: score of doc 1 = Σ_i max_j rq(dot(q_i, q_j))
     val expectTop = (0 until 4).map { i =>
       (0 until 4).map(j =>
-        rq(dotD(qv, qv, j * 16, j * 16 + 16) * 10000)).max
+        halfUp(dotD(qv, qv, j * 16, j * 16 + 16) * 10000)).max
     }.sum
     // (dot over slice i of q against slice j of doc — doc 1 IS qv, so
     // max_j includes j = i, the self term, which dominates here)
@@ -49,7 +42,7 @@ class Round9fLawsSpec extends SparkSpec {
         while (t < 16) {
           acc += qv(j * 16 + t).toDouble * qv(i * 16 + t).toDouble; t += 1
         }
-        rq(acc * 10000)
+        halfUp(acc * 10000)
       }.max
     }.sum
     assert(gotTop == mirror, s"got $gotTop expect $mirror ($expectTop)")
@@ -69,7 +62,7 @@ class Round9fLawsSpec extends SparkSpec {
               acc += v(j * 16 + t).toDouble * qv(i * 16 + t).toDouble
               t += 1
             }
-            rq(acc * 10000)
+            halfUp(acc * 10000)
           }.max
         }.sum
         (id, score)

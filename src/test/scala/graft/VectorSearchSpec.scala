@@ -3,23 +3,67 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.queries.DedupQueries
 
-/** Laws for q216–q217: crafted topologies (a same-label near-twin that
-  * MUST be excluded; a perfect codebook that must show zero distortion)
-  * plus gate-SF brute-force mirrors.
+/** Laws for the vector-search evaluations that rank by the packed
+  * (score, id) key (`DedupQueries.RankKey`): the key's own layout and
+  * order, then per query — q216 (a same-label near-twin that MUST be
+  * excluded; an out-of-range label fails loudly) and q217 (a perfect
+  * codebook shows zero distortion) — crafted topologies plus gate-SF
+  * brute-force mirrors.
   */
-class Round9eLawsSpec extends SparkSpec {
+class VectorSearchSpec extends SparkSpec {
   import spark.implicits._
+  import VectorSearchSpec.rq
 
   private val sf = "/root/testdata/sf0.001"
 
-  private def dotD(a: Seq[Float], b: Seq[Float]): Double = {
-    var acc = 0.0; var i = 0
-    while (i < a.length) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
-    acc
+  // ------------------------------------------------------------- RankKey
+
+  test("law: RankKey packs and unpacks exactly at ids 0, 2^33+1 and " +
+    "2^40-1 for negative, zero and positive scores; equal scores rank " +
+    "the smaller id first; the labelled key is id·16 + label under 2^44") {
+    import DedupQueries.RankKey
+    val ids = Seq(0L, (1L << 33) + 1, (1L << 40) - 1)
+    // the widest scores each layout holds without leaving a Long
+    val scores = Seq(-(1L << 23) + 1, -160000L, -1L, 0L, 1L, 160000L,
+      (1L << 23) - 1)
+    val lScores = Seq(-(1L << 19) + 1, -1L, 0L, 1L, (1L << 19) - 1)
+    val rows = for (s <- scores; i <- ids) yield (s, i)
+    val lRows = for (s <- lScores; i <- ids; l <- Seq(0, 9, 15))
+      yield (s, i, l)
+
+    val k = rows.toDF("score", "id")
+      .select(RankKey.pack(col("score"), col("id")).as("k"))
+    val unpacked = k.select(col("k"), RankKey.score(col("k")),
+        RankKey.id(col("k")))
+      .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2))))
+    assert(unpacked.map(_._2).toSeq == rows)
+    assert(unpacked.forall { case (key, (s, i)) =>
+      key == -s * (1L << 40) + i })
+    val ranked = k.agg(RankKey.bottomK(rows.size)(col("k")).as("ks"))
+      .select(explode(col("ks")).as("k"))
+      .select(RankKey.score(col("k")), RankKey.id(col("k")))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(ranked == rows.sortBy { case (s, i) => (-s, i) })
+
+    val kl = lRows.toDF("score", "id", "label")
+      .select(RankKey.packLabeled(col("score"), col("id"), col("label"))
+        .as("k"))
+    val lUnpacked = kl.select(col("k"),
+        RankKey.score(col("k"), RankKey.ML), RankKey.labeledId(col("k")),
+        RankKey.label(col("k")))
+      .collect().map(r =>
+        (r.getLong(0), (r.getLong(1), r.getLong(2), r.getLong(3).toInt)))
+    assert(lUnpacked.map(_._2).toSeq == lRows)
+    assert(lUnpacked.forall { case (key, (s, i, l)) =>
+      key == -s * (1L << 44) + i * 16 + l })
+    val lRanked = kl.agg(RankKey.bottomK(lRows.size)(col("k")).as("ks"))
+      .select(explode(col("ks")).as("k"))
+      .select(RankKey.score(col("k"), RankKey.ML),
+        RankKey.labeledId(col("k")))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(lRanked == lRows.sortBy { case (s, i, l) => (-s, i, l) }
+      .map { case (s, i, _) => (s, i) })
   }
-  private def rq(a: Seq[Float], b: Seq[Float]): Long =
-    BigDecimal(dotD(a, b) * 10000)
-      .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
 
   // ---------------------------------------------------------------- q216
 
@@ -143,4 +187,23 @@ class Round9eLawsSpec extends SparkSpec {
         r.getLong(3))).toSeq
     assert(got == expect)
   }
+}
+
+/** The driver-side mirrors of the engine's vector kernels the laws
+  * compare against. */
+object VectorSearchSpec {
+  /** `dot_product`: the index-order double fold over positions
+    * [lo, hi). */
+  def dotD(a: Seq[Float], b: Seq[Float], lo: Int, hi: Int): Double = {
+    var acc = 0.0; var i = lo
+    while (i < hi) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
+    acc
+  }
+  def dotD(a: Seq[Float], b: Seq[Float]): Double = dotD(a, b, 0, a.length)
+  /** SQL round(x): HALF_UP, away from zero at .5 — math.round ties
+    * toward +inf and would diverge on negative .5 boundaries. */
+  def halfUp(x: Double): Long =
+    BigDecimal(x).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+  /** The rank score: round(dot·1e4). */
+  def rq(a: Seq[Float], b: Seq[Float]): Long = halfUp(dotD(a, b) * 10000)
 }

@@ -1,0 +1,158 @@
+"""Tests for the two refactor-identity tools, plan_diff.py and
+oracle_diff.py: what each treats as equal, what it reports, and its exit
+code.
+
+Run: python3 -m unittest discover -s tools -p 'test_*.py'
+"""
+import json
+import os
+import shutil
+import subprocess
+import sys
+import tempfile
+import unittest
+
+import oracle_diff
+import plan_diff
+
+TOOLS = os.path.dirname(os.path.abspath(__file__))
+
+
+def write_files(test, contents):
+    """Write each (name, text) pair into a fresh temp dir removed after
+    `test`; return the paths in order."""
+    d = tempfile.mkdtemp()
+    test.addCleanup(shutil.rmtree, d)
+    paths = []
+    for name, text in contents:
+        paths.append(os.path.join(d, name))
+        with open(paths[-1], "w") as f:
+            f.write(text)
+    return paths
+
+
+def run_tool(script, *args):
+    return subprocess.run(
+        [sys.executable, os.path.join(TOOLS, script), *args],
+        capture_output=True, text=True)
+
+
+class PlanDiffNormaliseTest(unittest.TestCase):
+    def same(self, a, b):
+        self.assertEqual(plan_diff.normalise(a), plan_diff.normalise(b))
+
+    def test_expression_ids(self):
+        self.same("Project [vec_id#12L, key#13L]",
+                  "Project [vec_id#34L, key#35L]")
+
+    def test_lambda_variables(self):
+        self.same("transform(bf#1, lambdafunction(pmod(x_3, 2), x_3))",
+                  "transform(bf#1, lambdafunction(pmod(x_9, 2), x_9))")
+
+    def test_object_hashes(self):
+        self.same("MinKAgg@3c62183b(key#5L)", "MinKAgg@7f00a1d2(key#5L)")
+
+    def test_source_positions(self):
+        self.same("MapPartitionsRDD[178] at localCheckpoint at Foo.scala:662",
+                  "MapPartitionsRDD[201] at localCheckpoint at Foo.scala:12")
+
+    def test_plan_content_still_differs(self):
+        for a, b in [
+                ("pmod(key#1L, 1099511627776)", "pmod(key#1L, 8589934592)"),
+                ("Exchange hashpartitioning(qid#1L, 200)",
+                 "Exchange rangepartitioning(qid#1L, 200)"),
+                ("x_3 + 1", "y_3 + 1")]:
+            self.assertNotEqual(plan_diff.normalise(a),
+                                plan_diff.normalise(b))
+
+
+class PlanDiffExitTest(unittest.TestCase):
+    def dumps(self, a, b):
+        return write_files(self, [("a.txt", a), ("b.txt", b)])
+
+    def test_identical_after_normalising(self):
+        pa, pb = self.dumps(
+            "\n## q1\n\n```\nProject [a#1L, b#2L]\n```\n",
+            "\n## q1\n\n```\nProject [a#7L, b#8L]\n```\n")
+        r = run_tool("plan_diff.py", pa, pb)
+        self.assertEqual(r.returncode, 0, r.stdout)
+        self.assertIn("plan_diff: 1/1 identical", r.stdout)
+
+    def test_difference_and_missing_query(self):
+        pa, pb = self.dumps(
+            "\n## q1\n\nProject [a#1L]\n\n## q2\n\nFilter (a#1L > 1)\n",
+            "\n## q1\n\nProject [a#1L]\n\n## q2\n\nFilter (a#1L > 2)\n")
+        r = run_tool("plan_diff.py", pa, pb)
+        self.assertEqual(r.returncode, 1)
+        self.assertIn("DIFF q2", r.stdout)
+        self.assertNotIn("DIFF q1", r.stdout)
+        self.assertIn("plan_diff: 1/2 identical", r.stdout)
+        r = run_tool("plan_diff.py", pa, pb, "q1")
+        self.assertEqual(r.returncode, 0, r.stdout)
+        r = run_tool("plan_diff.py", pa, pb, "q1", "q3")
+        self.assertEqual(r.returncode, 1)
+        self.assertIn("MISSING q3", r.stdout)
+
+
+class OracleDiffTokensTest(unittest.TestCase):
+    SQL = ("SELECT CAST(round(x * 10000) AS BIGINT) AS rq\n"
+           "FROM t WHERE s = 'a  b'\nORDER BY rq")
+
+    def test_whitespace_only_changes_are_equal(self):
+        relaid = ("SELECT CAST( round(x*10000) AS BIGINT )   AS rq "
+                  "FROM t\n      WHERE s='a  b' ORDER BY\n  rq")
+        self.assertEqual(oracle_diff.tokens(self.SQL),
+                         oracle_diff.tokens(relaid))
+
+    def test_space_inside_a_literal_is_data(self):
+        a = oracle_diff.tokens(self.SQL)
+        b = oracle_diff.tokens(self.SQL.replace("'a  b'", "'a b'"))
+        self.assertNotEqual(a, b)
+        self.assertEqual(a[oracle_diff.first_diff(a, b)], "'a  b'")
+
+    def test_changed_literal_is_found_at_its_index(self):
+        a = oracle_diff.tokens(self.SQL)
+        b = oracle_diff.tokens(self.SQL.replace("10000", "1000"))
+        i = oracle_diff.first_diff(a, b)
+        self.assertEqual(i, a.index("10000"))
+        self.assertEqual((a[i], b[i]), ("10000", "1000"))
+
+    def test_prefix_reports_shorter_length(self):
+        a = oracle_diff.tokens("SELECT 1")
+        b = oracle_diff.tokens("SELECT 1 AS x")
+        self.assertEqual(oracle_diff.first_diff(a, b), 2)
+        self.assertEqual(oracle_diff.first_diff(a, a), 2)
+
+
+class OracleDiffExitTest(unittest.TestCase):
+    def files(self, a, b):
+        return write_files(self, [("a.json", json.dumps(a)),
+                                  ("b.json", json.dumps(b))])
+
+    def test_token_identical(self):
+        pa, pb = self.files({"q1": "SELECT 1 AS x", "q2": "SELECT 2"},
+                            {"q1": "SELECT\n  1  AS x", "q2": "SELECT 2"})
+        r = run_tool("oracle_diff.py", pa, pb)
+        self.assertEqual(r.returncode, 0, r.stdout)
+        self.assertIn("2/2 names token-identical", r.stdout)
+
+    def test_changed_literal(self):
+        pa, pb = self.files({"q1": "SELECT round(x, 4) + 0 AS y"},
+                            {"q1": "SELECT round(x, 3) + 0 AS y"})
+        r = run_tool("oracle_diff.py", pa, pb)
+        self.assertEqual(r.returncode, 1)
+        self.assertIn("DIFF q1: first differing token #5", r.stdout)
+        self.assertIn("[[4]]", r.stdout)
+        self.assertIn("[[3]]", r.stdout)
+
+    def test_missing_and_extra_names(self):
+        pa, pb = self.files({"q1": "SELECT 1", "q2": "SELECT 2"},
+                            {"q1": "SELECT 1", "q3": "SELECT 2"})
+        r = run_tool("oracle_diff.py", pa, pb)
+        self.assertEqual(r.returncode, 1)
+        self.assertIn("MISSING q2", r.stdout)
+        self.assertIn("EXTRA q3", r.stdout)
+
+
+if __name__ == "__main__":
+    unittest.main()
