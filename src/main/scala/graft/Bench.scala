@@ -21,19 +21,8 @@ object Bench {
 
     def run(df: org.apache.spark.sql.DataFrame): Unit = {
       df.write.format("noop").mode("overwrite").save()
-      // queries may persist() intermediates (e.g. LSH signatures); drop
-      // them so cache memory doesn't leak across measured queries
-      spark.catalog.clearCache()
-      // clearCache() only empties the SQL CacheManager — eager
-      // localCheckpoint(true) blocks (44 query sites + GraphOps' per-round
-      // barriers, several DISK_ONLY and non-evictable) bypass it and
-      // accumulated across the one-JVM 208-query suite, starving unified
-      // memory as the run advanced (BENCH_r09: shared-173 queries 2.46x
-      // slower than r08 with per-query plans unchanged). Drop every
-      // persistent RDD after each measured query so one query's barriers
-      // can't tax the next.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      // one query's cache and checkpoint blocks must not tax the next
+      GraftSession.releaseQueryState(spark, blocking = false)
     }
     // leak observability: persistent-RDD count + storage bytes AFTER the
     // per-query cleanup — a nonzero trend across the suite is the r09

@@ -99,6 +99,19 @@ object GraftSession {
     s
   }
 
+  /** Release what one query left in the session: the SQL cache and every
+    * persistent RDD. clearCache() only empties the CacheManager; eager
+    * localCheckpoint(true) blocks (the query checkpoints and GraphOps'
+    * per-round barriers, several DISK_ONLY and non-evictable) bypass it
+    * and would accumulate across a one-JVM run of the suite, starving
+    * unified memory as the run advances (BENCH_r09: shared queries 2.46x
+    * slower with per-query plans unchanged). Every main that runs many
+    * queries in one session calls this after each query. */
+  def releaseQueryState(spark: SparkSession, blocking: Boolean): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking))
+  }
+
   /** Prints Dataset `observe` metrics to stderr after each action — the
     * logged-drop channel for scale safety caps (e.g. q52's per-bucket
     * candidate cap): a cap engaging is visible in the run log instead of

@@ -15,6 +15,7 @@ object PlanDump {
       println("```")
       println(Inspect.explainString(q.fn(spark, sfDir)))
       println("```")
+      GraftSession.releaseQueryState(spark, blocking = true)
     }
     spark.stop()
   }

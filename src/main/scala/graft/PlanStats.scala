@@ -99,8 +99,7 @@ object PlanStats {
             System.err.println(s"[planstats] ${q.name} FAILED: $e")
             Map("ERROR" -> 1)
         }
-        // unpersist iterative-query checkpoint blocks (the r10 leak rule)
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+        GraftSession.releaseQueryState(spark, blocking = true)
         val body = s.toSeq.sorted
           .map { case (k, v) => s""""$k":$v""" }.mkString(",")
         System.err.println(s"[planstats] ${q.name} {$body}")

@@ -52,7 +52,7 @@ object SparkEntry {
     }.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops. */
+    * the same parquet tables. Every registered query carries one. */
   def oracleSql: Map[String, String] =
     all.flatMap(q => q.oracle.map(q.name -> _)).toMap
 }

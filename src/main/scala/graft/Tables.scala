@@ -60,8 +60,8 @@ object Tables {
   }
 }
 
-/** One registered query: the Spark-native implementation plus (optionally)
-  * the equivalent ANSI SQL the driver runs in DuckDB as the oracle.
+/** One registered query: the Spark-native implementation plus the
+  * equivalent ANSI SQL the driver runs in DuckDB as the oracle.
   * Column names MUST match between the two (the driver sorts columns by
   * name before hashing); every query orders its output deterministically
   * so row order can never be a source of mismatch.
@@ -74,6 +74,4 @@ final case class Q(
 object Q {
   def apply(name: String, sql: String)(
       fn: (SparkSession, String) => DataFrame): Q = Q(name, fn, Some(sql))
-  def noOracle(name: String)(fn: (SparkSession, String) => DataFrame): Q =
-    Q(name, fn, None)
 }

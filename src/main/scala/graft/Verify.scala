@@ -37,12 +37,7 @@ object Verify {
           }
         }
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        spark.catalog.clearCache()
-        // eager localCheckpoint blocks bypass the CacheManager and would
-        // otherwise accumulate across the one-JVM 208-query dump (the
-        // BENCH_r09 suite-state leak) — drop them per query like Bench
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        GraftSession.releaseQueryState(spark, blocking = false)
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

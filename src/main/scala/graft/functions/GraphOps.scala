@@ -13,17 +13,18 @@ import org.apache.spark.sql.functions._
   * stop when the global label sum stops falling (labels only decrease, so
   * equal sum == fixpoint — an O(1)-row action per round, no row-level
   * diff). Rounds needed = max BFS distance from a component's min node —
-  * for LSH graphs (overlapping near-cliques) a handful; a 100 TB variant
-  * would add large-star/small-star contraction for O(log n) rounds, same
-  * per-round join shape. Each round is one shuffle join + partial-agg min;
-  * intermediate labels persist and the previous round unpersists, so
-  * memory stays one label table.
+  * for LSH graphs (overlapping near-cliques) a handful. Each round is one
+  * shuffle join + partial-agg min; intermediate labels persist and the
+  * previous round unpersists, so memory stays one label table.
   *
   * Measured and rejected: disabling AQE for the loop (3.7x SLOWER — AQE's
   * shuffle-partition coalescing is what keeps the tiny per-round shuffles
-  * from fanning out to full-width task waves), and an f³ pointer
+  * from fanning out to full-width task waves), an f³ pointer
   * composition (saves ~1 round on chain-like graphs, pays a join every
-  * round).
+  * round), and large-star/small-star contraction (Kiveris et al.; lost
+  * the bench-off because the partition-local pre-contraction in
+  * [[connectedComponents]] already shrinks the edge set below its
+  * working set, PLANS.md q92).
   */
 object GraphOps {
 
@@ -130,85 +131,6 @@ object GraphOps {
       .join(labels.select(col("id").as("lid"), col("lbl")),
         col("m") === col("lid"), "left")
       .select(col("id"), coalesce(col("lbl"), col("m")).as("lbl"))
-  }
-
-  /** Connected components by alternating LARGE-STAR / SMALL-STAR
-    * contraction (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond") — the shape for graphs where min-label propagation's
-    * per-round O(E) join is too heavy: each round REWRITES the edge set
-    * toward a star (every node pointing at its component min), so the
-    * working set contracts as components collapse, and high-degree hubs
-    * are broken up instead of re-joined every round.
-    *
-    *  - large-star: per node u over its full neighborhood, connect every
-    *    LARGER neighbor to m = min(N(u) ∪ u).
-    *  - small-star: per node u over its smaller neighbors, connect u and
-    *    all of them to their minimum.
-    *
-    * Rounds are two groupBy-join stages over a shrinking, deduped
-    * (max, min) edge list, checkpointed like the propagation loop.
-    * Convergence = edge-set fixpoint, detected by (count, xxhash64-sum)
-    * — a deterministic O(1)-row action per round. Returns the same
-    * (id, lbl) shape as [[connectedComponents]]. */
-  def connectedComponentsContract(edges: DataFrame, srcCol: String,
-      dstCol: String, maxIter: Int = 50): DataFrame = {
-    def canon(df: DataFrame): DataFrame =
-      df.filter(col("a") =!= col("b"))
-        .select(greatest(col("a"), col("b")).as("a"),
-          least(col("a"), col("b")).as("b"))
-        .distinct()
-    // bit_xor: order-independent and overflow-free (an ANSI sum of
-    // xxhash64 values overflows long). The fingerprint rides the eager
-    // checkpoint job — one driver action per checkpoint, same fusion as
-    // the propagation loop.
-    def checkpointWithFp(df: DataFrame): (DataFrame, (Long, Long)) = {
-      val (out, m) = Scale.checkpointObserved(df, count(lit(1)).as("c"),
-        expr("bit_xor(xxhash64(a, b))").as("x"))
-      (out, (m("c"), m("x")))
-    }
-    val raw = edges.select(col(srcCol).cast("long").as("a"),
-      col(dstCol).cast("long").as("b"))
-    // node set captured BEFORE canon(): a node appearing only in
-    // self-loop edges would otherwise vanish with the dropped (x, x) rows
-    // and diverge from connectedComponents, which keeps it
-    val nodes = raw.select(col("a").as("id"))
-      .union(raw.select(col("b").as("id"))).distinct().persist()
-    var (e, sig) = checkpointWithFp(canon(raw))
-    var i = 0
-    var converged = false
-    while (!converged && i < maxIter) {
-      // large-star over the symmetrized neighborhood
-      val sym = e.union(e.select(col("b").as("a"), col("a").as("b")))
-      val lsm = sym.groupBy("a")
-        .agg(least(min(col("b")), min(col("a"))).as("m"))
-      // (x, m) for every neighbor x > u; x > u >= m, so already (max, min)
-      val ls = sym.join(lsm, "a").filter(col("b") > col("a"))
-        .select(col("b").as("a"), col("m").as("b"))
-        .distinct().localCheckpoint(true)
-      // small-star: edges are (big, small); connect u and all its smaller
-      // neighbors to their min
-      val ssm = ls.groupBy("a").agg(min(col("b")).as("m"))
-      val withM = ls.join(ssm, "a")
-      val ss = withM.select(col("a"), col("m").as("b"))
-        .union(withM.filter(col("b") =!= col("m"))
-          .select(col("b").as("a"), col("m").as("b")))
-      val (e2, newSig) = checkpointWithFp(canon(ss))
-      e = e2
-      converged = newSig == sig
-      sig = newSig
-      i += 1
-    }
-    // fixpoint is a star: every edge is (node, component-min); min nodes
-    // label themselves. groupBy-min guards the (impossible at fixpoint,
-    // cheap anyway) case of residual multi-edges. The nodes left join
-    // restores self-loop-only nodes as their own singleton components.
-    val star = e.select(col("a").as("id"), col("b").as("lbl"))
-      .union(e.select(col("b").as("id"), col("b").as("lbl")))
-      .groupBy("id").agg(min("lbl").as("lbl"))
-    val out = nodes.join(star, Seq("id"), "left")
-      .select(col("id"), coalesce(col("lbl"), col("id")).as("lbl"))
-    nodes.unpersist()
-    out
   }
 
   /** Deterministic fixed-iteration PageRank in INTEGER fixed-point — the

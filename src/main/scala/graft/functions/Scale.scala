@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 /** The scale idioms the LSH / dedup pair factories, the top-k queries and
   * the iterative graph loops share, one home each:
   *  - [[topK]]: the top-k-per-group keep (row_number, `<= k`);
-  *  - [[capPerBucket]] / [[capPerBucketPruned]]: the 256-per-bucket
-  *    membership cap with its observed metric;
+  *  - [[capPerBucket]]: the 256-per-bucket membership cap, pruned
+  *    map-side, with its observed "rows dropped" metric;
   *  - [[bitLen]]: the data-derived bit width;
   *  - [[checkpointObserved]]: the one-action checkpoint that carries an
   *    observe().
@@ -30,7 +30,9 @@ object Scale {
     * `EventStreams.topKStep`. */
   def topK(df: DataFrame, by: Seq[String], order: Seq[Column],
       k: Int): DataFrame =
-    ranked(df, by, order).filter(col("__rk") <= k)
+    df.withColumn("__rk", row_number().over(
+        Window.partitionBy(by.map(col): _*).orderBy(order: _*)))
+      .filter(col("__rk") <= k)
 
   /** Keep the lowest-`order` 256 rows of each `by` bucket.
     *
@@ -38,39 +40,26 @@ object Scale {
     * shingle, one near-duplicate family) turns its bucket into an O(m²)
     * pair factory for the self-join or the collect_list gather that
     * follows. The keep is deterministic (row_number by `order`), so the
-    * oracle models the same cut. The dropped-row count surfaces as the
-    * `metric` observed metric (`dropped_rows`), counted before the filter
-    * so it reads 0 exactly when the cap did not engage.
+    * oracle models the same cut.
+    *
+    * The keep is [[topK]] with k = 257, so every bucket is pruned
+    * map-side to its local top 257 BEFORE the exchange (WindowGroupLimit
+    * partial + final): a hot bucket is cut before the shuffle. The
+    * `metric` observed metric (`max_rank`) is the largest rank that
+    * reached it: 257 exactly when some bucket lost a row, at most 256
+    * when the cap did not engage. The second filter then cuts the 257th
+    * row.
     *
     * A self-join must alias THIS frame twice: identical sides let Spark
     * reuse the scan→bucket→window exchange across build and probe, while
     * a per-side observe() makes the sides differ and doubles the upstream
-    * work (measured 2x on q88). With reuse, the metric may count each
-    * dropped row once per side; it is diagnostic, not exact. */
+    * work (measured 2x on q88). `max` is idempotent, so the metric stays
+    * exact when both sides of the reused exchange feed it. */
   def capPerBucket(df: DataFrame, metric: String, by: Seq[String],
       order: Seq[String]): DataFrame =
-    ranked(df, by, order.map(col))
-      .observe(metric,
-        sum(when(col("__rk") > Cap, 1L).otherwise(0L)).as("dropped_rows"))
-      .filter(col("__rk") <= Cap).drop("__rk")
-
-  /** The same keep as [[capPerBucket]], with the observe AFTER the rank
-    * filter. A CollectMetrics between Window and Filter blocks Spark's
-    * WindowGroupLimit rewrite; this form keeps it, so beyond-cap rows are
-    * pruned map-side BEFORE the exchange (the pair-factory defense at
-    * skew). Pruned rows never reach an observe, so the `metric` is the
-    * largest kept rank (`max_rank`): 256 means the cap engaged. Whether
-    * the exact-count form's sites should move here is an open A/B. */
-  def capPerBucketPruned(df: DataFrame, metric: String, by: Seq[String],
-      order: Seq[String]): DataFrame =
-    topK(df, by, order.map(col), Cap)
+    topK(df, by, order.map(col), Cap + 1)
       .observe(metric, max(col("__rk")).as("max_rank"))
-      .drop("__rk")
-
-  private def ranked(df: DataFrame, by: Seq[String],
-      order: Seq[Column]): DataFrame =
-    df.withColumn("__rk", row_number().over(
-      Window.partitionBy(by.map(col): _*).orderBy(order: _*)))
+      .filter(col("__rk") <= Cap).drop("__rk")
 
   /** bitlen(max(1, n - 1)): the bit width of the largest 0-based index
     * into n items, at least 1. The adaptive LSH/shingle widths derive

@@ -235,28 +235,30 @@ object DedupQueries {
       .filter(col("rdot") > 0.15)
   }
 
-  /** MinHash band rows of a (doc_id, k0..k3) signature frame: one
-    * (rec, band, key) row per permutation, band key = the FULL minhash
-    * value (never a fixed-cardinality fold). rec = (doc_id, k0..k3)
-    * rides along so the verify stage needs no join back to the
-    * signatures: 5 longs per doc, inside the narrow-payload rule. */
-  private def minhashBands(
-      sig: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  /** The MinHash retriever of q52 and q146: verified candidate pairs
+    * (id_a < id_b, not distinct) of a (doc_id, k0..k3) signature frame.
+    *  - Band rows: one (rec, band, key) row per permutation, band key =
+    *    the FULL minhash value (never a fixed-cardinality fold). rec =
+    *    (doc_id, k0..k3) rides along so the verify stage needs no join
+    *    back to the signatures: 5 longs per doc, inside the
+    *    narrow-payload rule.
+    *  - Each (band, key) bucket is capped at 256 by rec (observed as
+    *    `metric`) BEFORE the gather, so collect_list's per-group buffer
+    *    is bounded; a collect-then-slice form would still buffer the
+    *    whole mega-cluster in one final-agg task.
+    *  - Gather each bucket and pair its members (bucket-collect, not a
+    *    self-join: one shuffle of the narrow rows); keep pairs agreeing
+    *    on >= 2 of the 4 minhashes (estimated Jaccard >= 0.5; the
+    *    oracles apply the same threshold). */
+  private def minhashPairs(sig: org.apache.spark.sql.DataFrame,
+      metric: String): org.apache.spark.sql.DataFrame = {
     val ks = TextOps.MinhashPerms.indices.map(i => col(s"k$i"))
-    sig.select(struct(col("doc_id") +: ks: _*).as("rec"),
+    val bands = sig.select(struct(col("doc_id") +: ks: _*).as("rec"),
       posexplode(array(ks: _*)).as(Seq("band", "key")))
-  }
-
-  /** Verified candidate pairs (id_a < id_b, not distinct) of capped
-    * [[minhashBands]] rows: gather each (band, key) bucket, pair its
-    * members (bucket-collect, not a self-join: one shuffle of the narrow
-    * rows), keep pairs agreeing on >= 2 of the 4 minhashes (estimated
-    * Jaccard >= 0.5; the oracles apply the same threshold). */
-  private def agreeingPairs(
-      bands: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val agree = TextOps.MinhashPerms.indices
       .map(i => (col(s"a.k$i") === col(s"b.k$i")).cast("int")).reduce(_ + _)
-    bands.groupBy("band", "key")
+    Scale.capPerBucket(bands, metric, Seq("band", "key"), Seq("rec"))
+      .groupBy("band", "key")
       .agg(sort_array(collect_list(col("rec"))).as("recs"))
       .select(explode(graft.functions.ArrayOps.combinations2(col("recs"),
         fields = Seq("a", "b"))).as("p"))
@@ -445,13 +447,14 @@ object DedupQueries {
     //     exact. At sf0.01 this keeps 32 of 450 candidates.
     //  2. Per-bucket cap: a pathological mega-cluster of m near-identical
     //     docs would still emit O(m²) pairs from its bucket; buckets are
-    //     truncated to the first 256 docs (by doc_id — deterministic) and
-    //     the dropped-doc count surfaces as the `q52_cap` observed metric
-    //     (GraftSession logs it to stderr). The cap cannot engage at gate
-    //     SF (max bucket occupancy is 7 at sf0.01) but does on the
-    //     10x-skew replica's mega cluster, so the oracle models it
-    //     identically (row_number by doc_id <= 256); at 100 TB it bounds
-    //     the worst bucket while the metric makes the truncation visible.
+    //     truncated to the first 256 docs (by doc_id — deterministic);
+    //     the `q52_cap` observed metric reads max_rank 257 when it cut
+    //     a bucket (GraftSession logs it to stderr). The cap cannot
+    //     engage at gate SF (max bucket occupancy is 7 at sf0.01) but
+    //     does on the 10x-skew replica's mega cluster, so the oracle
+    //     models it identically (row_number by doc_id <= 256); at 100 TB
+    //     it bounds the worst bucket while the metric makes the
+    //     truncation visible.
     Q(
       "q52_lsh_pairs",
       s"""WITH ${OracleSql.hashedShingleRows("doc_id")},
@@ -483,15 +486,7 @@ object DedupQueries {
         |ORDER BY id_a, id_b""".stripMargin
     ) { (s, d) =>
       val sig = TextOps.minhashSignatures(docs(s, d), Seq("doc_id"), "k")
-      // cap BEFORE the gather (row_number window, deterministic by the
-      // rec struct whose first field is doc_id): collect_list's per-group
-      // buffer is then bounded at 256 structs — the earlier
-      // collect-then-slice form still buffered the WHOLE mega-cluster in
-      // one final-agg task, the exact state blowup the cap exists to
-      // prevent (r6 review finding; siblings rpPairs/q59/q116 already
-      // capped pre-gather)
-      agreeingPairs(Scale.capPerBucket(minhashBands(sig), "q52_cap",
-          Seq("band", "key"), Seq("rec")))
+      minhashPairs(sig, "q52_cap")
         .distinct()
         .orderBy("id_a", "id_b")
     },
@@ -1794,13 +1789,12 @@ object DedupQueries {
           .hint("shuffle_hash"), "id_b")
         .filter(lit(3) * col("inter") >= col("ma") + col("mb"))
         .select(col("id_a"), col("id_b"))
-      // Production LSH retriever (q52's plan: bucket-collect, capped).
+      // Production LSH retriever: q52's minhashPairs chain.
       val k = TextOps.minhashAggs(col("h"), "k")
       val sig = sets.select(col("doc_id"), explode(col("sh")).as("h"))
         .groupBy("doc_id")
         .agg(k.head, k.tail: _*)
-      val retr = agreeingPairs(Scale.capPerBucketPruned(minhashBands(sig),
-          "q146_cap", Seq("band", "key"), Seq("rec")))
+      val retr = minhashPairs(sig, "q146_cap")
         .filter(col("id_a") < 100)
         .distinct()
       // One-pass fused counting over the tagged union (q109 pattern).
@@ -4811,20 +4805,20 @@ object DedupQueries {
           hashFn(col("tail3")).as("th"))
         .localCheckpoint(true,
           org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      // Cap plan, two hard-won rules: (a) the pruned cap form keeps the
-      // map-side WindowGroupLimit (see Scale.capPerBucketPruned).
-      // (b) the window partitions on (hash, content) — the content-
-      // verify equality is extracted into the join keys, and with
+      // Cap plan, two hard-won rules: (a) the cap keeps the map-side
+      // WindowGroupLimit (see Scale.capPerBucket). (b) the window
+      // partitions on (hash, content) — the content-verify equality is
+      // extracted into the join keys, and with
       // requireAllClusterKeysForCoPartition a hash-only window forces a
       // SECOND exchange per side on (hash, content); since the hash is
       // a pure function of the content, the two-key window is
       // semantically identical and one exchange serves window AND join
       // (verified: WindowGroupLimit partial/final + direct join, no
       // re-exchange).
-      val heads = Scale.capPerBucketPruned(
+      val heads = Scale.capPerBucket(
         base.select(col("doc_id"), col("head3"), col("hh")), "q197_cap_h",
         Seq("hh", "head3"), Seq("doc_id"))
-      val tails = Scale.capPerBucketPruned(
+      val tails = Scale.capPerBucket(
         base.select(col("doc_id"), col("tail3"), col("th")), "q197_cap_t",
         Seq("th", "tail3"), Seq("doc_id"))
       tails.as("a")

@@ -12,6 +12,23 @@ class GraphOpsSpec extends SparkSpec {
     GraphOps.connectedComponents(edges.toDF("a", "b"), "a", "b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
+  /** The reference answer: a plain-Scala union-find with min-root union,
+    * node -> min id of its component, over every node named by an edge. */
+  private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val par = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x0: Long): Long = {
+      var x = x0
+      while (par(x) != x) { par(x) = par(par(x)); x = par(x) }
+      x
+    }
+    edges.foreach { case (a, b) =>
+      par.getOrElseUpdate(a, a); par.getOrElseUpdate(b, b)
+      val ra = find(a); val rb = find(b)
+      if (ra < rb) par(rb) = ra else if (rb < ra) par(ra) = rb
+    }
+    par.keys.map(n => n -> find(n)).toMap
+  }
+
   test("two triangles and an isolated edge") {
     val got = components(Seq((1L, 2L), (2L, 3L), (1L, 3L),
       (10L, 11L), (11L, 12L), (20L, 21L)))
@@ -40,52 +57,32 @@ class GraphOpsSpec extends SparkSpec {
     val edges = (0L until 200L).map(i => (i, i + 1)) ++ // long path
       Seq.fill(300)((rng.nextInt(400).toLong + 500L,
         rng.nextInt(400).toLong + 500L)).filter(e => e._1 != e._2)
-    val par = scala.collection.mutable.HashMap.empty[Long, Long]
-    def find(x0: Long): Long = {
-      var x = x0
-      while (par(x) != x) { par(x) = par(par(x)); x = par(x) }
-      x
-    }
-    edges.foreach { case (a, b) =>
-      par.getOrElseUpdate(a, a); par.getOrElseUpdate(b, b)
-      val ra = find(a); val rb = find(b)
-      if (ra < rb) par(rb) = ra else if (rb < ra) par(ra) = rb
-    }
-    val want = par.keys.map(n => n -> find(n)).toMap
+    val want = unionFind(edges)
     val got = GraphOps
       .connectedComponents(edges.toDF("a", "b").repartition(8), "a", "b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == want)
   }
 
-  test("large-star/small-star contraction agrees with propagation on random graphs") {
+  test("connectedComponents agrees with an in-test union-find on random " +
+    "graphs, a path + star + isolated edge, and a self-loop-only node") {
     val rng = new scala.util.Random(7)
     (0 until 3).foreach { trial =>
       val n = 60 + trial * 40
       val edges = Seq.fill(n)((rng.nextInt(50).toLong, rng.nextInt(50).toLong))
         .filter { case (a, b) => a != b }.distinct
-      val prop = components(edges)
-      val cont = GraphOps
-        .connectedComponentsContract(edges.toDF("a", "b"), "a", "b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(cont == prop, s"trial $trial: contraction != propagation")
+      assert(components(edges) == unionFind(edges), s"trial $trial")
     }
-    // path graph (worst case for contraction round count) + self-contained
-    // star + isolated edge
+    // path graph (the most propagation rounds) + self-contained star +
+    // isolated edge
     val mixed = (0L until 12L).map(i => (i, i + 1)) ++
       Seq((100L, 101L), (100L, 102L), (100L, 103L), (200L, 201L))
-    val prop = components(mixed)
-    val cont = GraphOps
-      .connectedComponentsContract(mixed.toDF("a", "b"), "a", "b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(cont == prop)
-    // a node appearing ONLY in a self-loop must survive as its own
-    // singleton component (canon() drops the (x, x) edge itself)
+    assert(components(mixed) == unionFind(mixed))
+    // a node appearing ONLY in a self-loop survives as its own singleton
+    // component
     val loops = Seq((1L, 2L), (9L, 9L))
-    val cl = GraphOps
-      .connectedComponentsContract(loops.toDF("a", "b"), "a", "b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(cl == components(loops))
+    val cl = components(loops)
+    assert(cl == unionFind(loops))
     assert(cl(9L) == 9L)
   }
 
@@ -110,18 +107,7 @@ class GraphOpsSpec extends SparkSpec {
         (rng.nextInt(2) * 1000L + rng.nextInt(20),
           rng.nextInt(2) * 1000L + rng.nextInt(20))).filter(e => e._1 != e._2)
       val edges = (chains ++ cross).distinct
-      val par = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x0: Long): Long = {
-        var x = x0
-        while (par(x) != x) { par(x) = par(par(x)); x = par(x) }
-        x
-      }
-      edges.foreach { case (a, b) =>
-        par.getOrElseUpdate(a, a); par.getOrElseUpdate(b, b)
-        val ra = find(a); val rb = find(b)
-        if (ra < rb) par(rb) = ra else if (rb < ra) par(ra) = rb
-      }
-      val want = par.keys.map(n => n -> find(n)).toMap
+      val want = unionFind(edges)
       val got = GraphOps
         .connectedComponents(edges.toDF("a", "b").repartition(16), "a", "b")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -45,6 +45,23 @@ class PlanBudgetSpec extends SparkSpec {
     }
   }
 
+  test("every 256-per-bucket cap prunes map-side: q52, q59 and q141 plan " +
+    "a WindowGroupLimit pair (partial + final) per in-plan cap") {
+    // plan_guard.py fails only on counts ABOVE budget, so an observe()
+    // slipped back between the cap's window and its filter (which blocks
+    // the rewrite) would read there as an improvement note, not a failure.
+    // Caps per plan: q59's and q141's capped frame is self-joined, and the
+    // initial plan holds both sides (the exchange is reused at runtime).
+    val caps = Map("q52_lsh_pairs" -> 1, "q59_cosine_dups" -> 2,
+      "q141_ppjoin" -> 2)
+    caps.foreach { case (n, k) =>
+      val got = PlanStats.shape(SparkEntry.queries(n)(spark, sfDir))
+        .getOrElse("window_limit", 0)
+      assert(got >= 2 * k, s"$n: window_limit $got < ${2 * k} for $k cap(s)")
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    }
+  }
+
   test("negative: a lost shuffle_hash hint (SMJ + sorts replacing SHJ) " +
     "exceeds the hinted plan's budget — the gate catches hint removal") {
     val thresholdBefore = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")

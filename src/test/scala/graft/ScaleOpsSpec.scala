@@ -73,42 +73,46 @@ class ScaleOpsSpec extends SparkSpec {
     assert(idx.toSeq == Seq(("p", 0L), ("q", 1L), ("r", 2L)))
   }
 
-  /** 300 rows in bucket "a" (ids 0..299, shuffled) and 10 in "b": only
-    * "a" overflows the 256 cap, by 44 rows. */
-  private def plantedBuckets =
-    (scala.util.Random.shuffle((0 until 300).toList).map(i => ("a", i.toLong))
+  /** `n` rows in bucket "a" (ids 0 until n, shuffled) and 10 in "b". */
+  private def plantedBuckets(n: Int) =
+    (scala.util.Random.shuffle((0 until n).toList).map(i => ("a", i.toLong))
       ++ (1000 until 1010).map(i => ("b", i.toLong)))
       .toDF("bucket", "id").repartition(3)
 
-  test("capPerBucket keeps the lowest 256 per bucket, observes the " +
-    "dropped count, and a self-join of the capped frame reuses its exchange") {
-    val capped = Scale.capPerBucket(plantedBuckets, "t_cap", Seq("bucket"),
-      Seq("id"))
-    val kept = capped.collect().map(r => (r.getString(0), r.getLong(1)))
-    assert(kept.length == 266)
-    assert(kept.filter(_._1 == "a").map(_._2).sorted.toSeq == (0L until 256L))
-    assert(kept.count(_._1 == "b") == 10)
+  private def kept(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
+
+  test("capPerBucket keeps the lowest 256 per bucket, prunes map-side, " +
+    "reads max_rank 257 on overflow, and a self-join reuses its exchange") {
+    // "a" overflows the cap by 44 rows; "b" is below it
+    val capped = Scale.capPerBucket(plantedBuckets(300), "t_cap",
+      Seq("bucket"), Seq("id"))
+    assert(kept(capped) == (0L until 256L).map(("a", _)) ++
+      (1000L until 1010L).map(("b", _)))
     assert(capped.columns.toSeq == Seq("bucket", "id"))
-    assert(capped.queryExecution.observedMetrics("t_cap").getLong(0) == 44L)
+    assert(capped.queryExecution.observedMetrics("t_cap").getInt(0) == 257)
+    val plan = capped.queryExecution.executedPlan.toString
+    assert(plan.contains("WindowGroupLimit"), plan)
     val joined = capped.as("x")
       .join(capped.as("y").hint("shuffle_hash"),
         col("x.bucket") === col("y.bucket") && col("x.id") < col("y.id"))
     // collect, not count(): the final adaptive plan is this Dataset's own
     assert(joined.collect().length == 256 * 255 / 2 + 10 * 9 / 2)
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(plan.contains("ReusedExchange"), plan)
+    val joinedPlan = joined.queryExecution.executedPlan.toString
+    assert(joinedPlan.contains("ReusedExchange"), joinedPlan)
+    // max is idempotent: both sides of the reused exchange read the same
+    assert(joined.queryExecution.observedMetrics("t_cap").getInt(0) == 257)
   }
 
-  test("capPerBucketPruned keeps the same rows, keeps WindowGroupLimit, " +
-    "and observes the largest kept rank") {
-    val pruned = Scale.capPerBucketPruned(plantedBuckets, "t_cap_pruned",
+  test("capPerBucket on a bucket of exactly 256 keeps every row and " +
+    "reads max_rank below 257 (the cap did not engage)") {
+    val capped = Scale.capPerBucket(plantedBuckets(256), "t_cap_full",
       Seq("bucket"), Seq("id"))
-    val kept = pruned.collect().map(r => (r.getString(0), r.getLong(1)))
-    assert(kept.sorted.toSeq == (0L until 256L).map(("a", _)) ++
+    assert(kept(capped) == (0L until 256L).map(("a", _)) ++
       (1000L until 1010L).map(("b", _)))
-    assert(pruned.queryExecution.observedMetrics("t_cap_pruned")
+    assert(capped.queryExecution.observedMetrics("t_cap_full")
       .getInt(0) == 256)
-    val plan = pruned.queryExecution.executedPlan.toString
+    val plan = capped.queryExecution.executedPlan.toString
     assert(plan.contains("WindowGroupLimit"), plan)
   }
 

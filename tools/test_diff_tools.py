@@ -1,6 +1,6 @@
 """Tests for the two refactor-identity tools, plan_diff.py and
-oracle_diff.py: what each treats as equal, what it reports, and its exit
-code.
+oracle_diff.py, and for the plan-shape gate plan_guard.py: what each
+treats as equal (or within budget), what it reports, and its exit code.
 
 Run: python3 -m unittest discover -s tools -p 'test_*.py'
 """
@@ -152,6 +152,83 @@ class OracleDiffExitTest(unittest.TestCase):
         self.assertEqual(r.returncode, 1)
         self.assertIn("MISSING q2", r.stdout)
         self.assertIn("EXTRA q3", r.stdout)
+
+
+class PlanGuardTest(unittest.TestCase):
+    def guard(self, fresh, budget, *extra):
+        """Run plan_guard.py on `fresh` against the budget file `budget`."""
+        pf, pb = write_files(self, [("fresh.json", json.dumps(fresh)),
+                                    ("budget.json", json.dumps(budget))])
+        return run_tool("plan_guard.py", pf, "--budget", pb, *extra)
+
+    def test_exceedance_fails(self):
+        r = self.guard({"q1": {"exchange": 3, "sort": 1},
+                        "q2": {"exchange": 1}},
+                       {"q1": {"exchange": 2, "sort": 1},
+                        "q2": {"exchange": 1}})
+        self.assertEqual(r.returncode, 1, r.stdout)
+        self.assertIn("FAIL q1: exchange 3 > budget 2", r.stdout)
+        self.assertNotIn("FAIL q2", r.stdout)
+        self.assertIn("plan guard FAIL: 1/2 within budget", r.stdout)
+
+    def test_absent_kind_counts_as_zero(self):
+        r = self.guard({"q1": {"window_limit": 2}}, {"q1": {}})
+        self.assertEqual(r.returncode, 1, r.stdout)
+        self.assertIn("FAIL q1: window_limit 2 > budget 0", r.stdout)
+
+    def test_below_budget_is_a_note(self):
+        r = self.guard({"q1": {"exchange": 1}},
+                       {"q1": {"exchange": 2, "window_limit": 2}})
+        self.assertEqual(r.returncode, 0, r.stdout)
+        self.assertNotIn("FAIL", r.stdout)
+        self.assertIn("note: 2 counts below budget across 1 queries",
+                      r.stdout)
+        self.assertIn("q1:exchange 1<2", r.stdout)
+        self.assertIn("q1:window_limit 0<2", r.stdout)
+        self.assertIn("plan guard PASS: 1/1 within budget", r.stdout)
+
+    def test_error_entry_fails(self):
+        r = self.guard({"q1": {"ERROR": 1}}, {"q1": {"exchange": 2}})
+        self.assertEqual(r.returncode, 1, r.stdout)
+        self.assertIn("FAIL q1: query errored during plan construction",
+                      r.stdout)
+
+    def test_missing_query_fails_and_new_query_is_a_note(self):
+        r = self.guard({"q1": {"scan": 1}, "q3": {"scan": 1}},
+                       {"q1": {"scan": 1}, "q2": {"scan": 1}})
+        self.assertEqual(r.returncode, 1, r.stdout)
+        self.assertIn("MISSING q2", r.stdout)
+        self.assertIn("note: 1 queries lack a budget: q3", r.stdout)
+
+    def test_informational_kinds_are_ignored(self):
+        r = self.guard({"q1": {"scan": 1, "wscg": 9, "reused_exchange": 3}},
+                       {"q1": {"scan": 1, "wscg": 2}})
+        self.assertEqual(r.returncode, 0, r.stdout)
+        self.assertNotIn("note", r.stdout)
+        self.assertIn("plan guard PASS: 1/1 within budget", r.stdout)
+        r = self.guard({"q1": {"scan": 1}},
+                       {"q1": {"scan": 1, "wscg": 5, "reused_exchange": 1}})
+        self.assertEqual(r.returncode, 0, r.stdout)
+        self.assertNotIn("note", r.stdout)
+
+    def test_budget_flag_picks_the_file(self):
+        fresh = {"q1": {"exchange": 3}}
+        pf, tight, loose = write_files(self, [
+            ("fresh.json", json.dumps(fresh)),
+            ("tight.json", json.dumps({"q1": {"exchange": 2}})),
+            ("loose.json", json.dumps({"q1": {"exchange": 3}}))])
+        self.assertEqual(
+            run_tool("plan_guard.py", pf, "--budget", tight).returncode, 1)
+        self.assertEqual(
+            run_tool("plan_guard.py", pf, "--budget", loose).returncode, 0)
+        # without the flag the committed sf0.001 budget is read: an
+        # empty fresh file leaves every committed query MISSING
+        pe, = write_files(self, [("empty.json", "{}")])
+        r = run_tool("plan_guard.py", pe)
+        self.assertEqual(r.returncode, 1)
+        with open(os.path.join(TOOLS, "plan_budget.json")) as f:
+            some = sorted(json.load(f))[0]
+        self.assertIn(f"MISSING {some}", r.stdout)
 
 
 if __name__ == "__main__":
