@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Table access over the driver-generated testdata directory layout
   * (TESTDATA.md): one parquet file per table in `$dir/<name>.parquet`.
@@ -9,10 +11,32 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * FileSourceScan with column pruning + predicate pushdown + row-group
   * skipping for free — the reference hand-rolls exactly this
   * ("necessary columns", /root/reference/src/dask_awkward/lib/optimize.py:69-223).
+  * The one thing kept across reads is the schema. A bare read infers it
+  * with a one-task Spark job that ships the Hadoop conf to an executor
+  * to read one footer, on every read; the reference reads footers once
+  * per collection and keeps the form as its meta. So `table` infers a
+  * table's schema once and every later read passes it to
+  * `spark.read.schema`. The memo key is the path, its modification time
+  * (a table rewritten in place is inferred again) and
+  * `spark.sql.legacy.parquet.nanosAsLong`, the one session conf that
+  * changes what inference returns here (`events` sets it). Each read
+  * still builds a fresh relation with its own file listing and
+  * expression ids, so a self-join of two reads resolves as before.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, String), StructType]
+
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val p = new Path(path)
+    val mtime = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(p).getModificationTime
+    val key = (path, mtime, spark.conf.get(NanosAsLong, "false"))
+    spark.read.schema(schemas.computeIfAbsent(key,
+      _ => spark.read.parquet(path).schema)).parquet(path)
+  }
 
   def lineitem(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = table(s, d, "orders")
@@ -29,7 +53,7 @@ object Tables {
     * way, so both generations hash identically through the gate.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    s.conf.set(NanosAsLong, "true")
     val raw = table(s, d, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

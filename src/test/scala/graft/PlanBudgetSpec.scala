@@ -62,6 +62,20 @@ class PlanBudgetSpec extends SparkSpec {
     }
   }
 
+  test("fixed path: a second build of q52, q131, q143 and q55 launches no " +
+    "Spark job (base relations reuse their inferred schema)") {
+    // none of the four checkpoints or collects on the driver while it
+    // builds, so once the first build has inferred each table's schema
+    // (and filled any per-dir memo), building again is driver-only
+    Seq("q52_lsh_pairs", "q131_heavy_hitters", "q143_cdc_chunks",
+        "q55_cosine_knn").foreach { n =>
+      val q = SparkEntry.queries(n)
+      q(spark, sfDir)
+      assert(jobsLaunchedBy(q(spark, sfDir)) == 0, s"$n: second build ran jobs")
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    }
+  }
+
   test("negative: a lost shuffle_hash hint (SMJ + sorts replacing SHJ) " +
     "exceeds the hinted plan's budget — the gate catches hint removal") {
     val thresholdBefore = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")

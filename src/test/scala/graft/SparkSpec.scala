@@ -51,6 +51,42 @@ trait SparkSpec extends AnyFunSuite {
     data.toDF("row_id", "xs")
   }
 
+  /** Spark jobs started while `body` runs. Listener events arrive
+    * asynchronously but in order, so every job started between the start
+    * of a tagged sentinel job before `body` and one after it is counted,
+    * whichever thread launched it. */
+  def jobsLaunchedBy(body: => Any): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.test.sentinel"
+    val tag = java.util.UUID.randomUUID.toString
+    // written by the listener thread only; the latch publishes them
+    var counting = false
+    var started = 0
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(key)).orNull match {
+          case t if t == s"$tag.begin" => counting = true
+          case t if t == s"$tag.end" => counting = false; done.countDown()
+          case _ => if (counting) started += 1
+        }
+    }
+    def sentinel(t: String): Unit = {
+      sc.setLocalProperty(key, t)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sentinel(s"$tag.begin")
+      body
+      sentinel(s"$tag.end")
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the closing sentinel job never reached the listener")
+      started
+    } finally sc.removeSparkListener(listener)
+  }
+
   /** Collect a single expression column as a list of values, ordered by
     * row_id. */
   def eval1(df: DataFrame, c: org.apache.spark.sql.Column): Seq[Any] =
