@@ -19,7 +19,8 @@ import org.apache.spark.sql.types.StructType
   * `spark.read.schema`. The memo key is the path, its modification time
   * (a table rewritten in place is inferred again) and
   * `spark.sql.legacy.parquet.nanosAsLong`, the one session conf that
-  * changes what inference returns here (`events` sets it). Each read
+  * changes what inference returns here (`events` sets it, and only for
+  * a TIMESTAMP(NANOS) `ts`). Each read
   * still builds a fresh relation with its own file listing and
   * expression ids, so a self-join of two reads resolves as before.
   */
@@ -28,14 +29,49 @@ object Tables {
   private val schemas =
     new java.util.concurrent.ConcurrentHashMap[(String, Long, String), StructType]
 
+  private val nanosTs =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long), java.lang.Boolean]
+
+  private def mtime(spark: SparkSession, path: String): Long = {
+    val p = new Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(p).getModificationTime
+  }
+
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val p = new Path(path)
-    val mtime = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .getFileStatus(p).getModificationTime
-    val key = (path, mtime, spark.conf.get(NanosAsLong, "false"))
+    val key = (path, mtime(spark, path), spark.conf.get(NanosAsLong, "false"))
     spark.read.schema(schemas.computeIfAbsent(key,
       _ => spark.read.parquet(path).schema)).parquet(path)
+  }
+
+  /** Whether column `c` of the parquet table `path` (one file, or a
+    * directory of part files sharing a schema) is TIMESTAMP(NANOS), read
+    * from one footer on the driver (no Spark job). */
+  private def nanosColumn(spark: SparkSession, path: String,
+      c: String): Boolean = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{
+      TimeUnit, TimestampLogicalTypeAnnotation}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val file = if (!fs.getFileStatus(root).isDirectory) Some(root)
+      else fs.listStatus(root).iterator.map(_.getPath)
+        .find(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
+    file.exists { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+      try {
+        val schema = r.getFooter.getFileMetaData.getSchema
+        schema.containsField(c) &&
+          (schema.getType(schema.getFieldIndex(c))
+            .getLogicalTypeAnnotation match {
+            case t: TimestampLogicalTypeAnnotation =>
+              t.getUnit == TimeUnit.NANOS
+            case _ => false
+          })
+      } finally r.close()
+    }
   }
 
   def lineitem(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")
@@ -51,9 +87,15 @@ object Tables {
     * rebuild a microsecond timestamp with integer division (nanos exceed
     * 2^53, so `div`, never double `/`). DuckDB truncates ns→us the same
     * way, so both generations hash identically through the gate.
+    * Spark reads the conf from the session when the scan runs, so it is
+    * set on the session, and only when the footer (read once per file
+    * version) says `ts` is nanos: every other parquet read keeps the
+    * default.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set(NanosAsLong, "true")
+    val path = s"$d/events.parquet"
+    if (nanosTs.computeIfAbsent((path, mtime(s, path)),
+        _ => nanosColumn(s, path, "ts"))) s.conf.set(NanosAsLong, "true")
     val raw = table(s, d, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

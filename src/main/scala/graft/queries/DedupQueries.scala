@@ -98,7 +98,7 @@ object DedupQueries {
     * the ranking near the cut (the r11 audit). The labelled layout holds
     * |score| < 2^19 (rq ≤ ~1.6e5). */
   private[graft] object RankKey {
-    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.{Column, DataFrame}
     import org.apache.spark.sql.expressions.UserDefinedFunction
     /** 2^40: the id lane. */
     val M = 1099511627776L
@@ -141,6 +141,26 @@ object DedupQueries {
     /** How many ids two gathered key arrays share, as BIGINT. */
     def overlap(a: Column, b: Column): Column =
       size(array_intersect(ids(a), ids(b))).cast("long")
+    /** The recall tail: rows (qid, hits, recall_ppm), hits = how many of
+      * the exact top-10 keys `bf` the gathered key array `got` holds. */
+    def recall(g: DataFrame, got: String): DataFrame =
+      recallPpm(g.select(col("qid"), overlap(col("bf"), col(got)).as("hits")),
+        Seq("qid"))
+    /** [[recall]] of each (value of `param`, gathered column) in `levels`:
+      * rows (qid, param, hits, recall_ppm), ascending by value. */
+    def recallBy(g: DataFrame, param: String,
+        levels: Seq[(Int, String)]): DataFrame = {
+      val hits = levels.map { case (v, got) =>
+        overlap(col("bf"), col(got)).as(s"h$v") }
+      val stack = levels.map(_._1).sorted.map(v => s"${v}L, h$v")
+        .mkString(s"stack(${levels.size}, ", ", ", s") as ($param, hits)")
+      recallPpm(g.select(col("qid") +: hits: _*).selectExpr("qid", stack),
+        Seq("qid", param))
+    }
+    private def recallPpm(h: DataFrame, keys: Seq[String]): DataFrame =
+      h.select(keys.map(col) ++ Seq(col("hits"),
+          (col("hits") * 100000L).as("recall_ppm")): _*)
+        .orderBy(keys.map(col): _*)
     /** The IVF cell of `v`: the centroid with the largest [[rq]], ties to
       * the smaller cell id — quantized like the oracle's assign CTE, so a
       * near-tie between cells cannot flip the assignment cross-engine. */
@@ -266,6 +286,32 @@ object DedupQueries {
       .filter(agree >= 2)
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
   }
+
+  /** q54/q119's adjacent-id pair co-group over (doc_id, text) rows: per
+    * pair id p, `rs` holds the sorted (role, sh) hashed-shingle sets of
+    * docs p (role 0) and p + 1 (role 1); a pair whose second doc is
+    * missing has one entry. Pair-reduce instead of a self-join: each doc
+    * emits its set into both pairs it belongs to, then one groupBy(pair)
+    * recombines the two sides — one scan, ONE shingle computation, one
+    * shuffle (the self-join form scans and computes shingles twice, and
+    * a lazily-persisted variant races AQE's concurrent map stages into
+    * computing the cache twice). The same co-group shape serves
+    * arbitrary LSH candidate pairs at 100 TB: emit (pair_key, role) per
+    * membership, never broadcast computed shingle tables (their size
+    * estimate comes from source parquet bytes and is off by orders of
+    * magnitude). collect_list (an ObjectHashAggregate) rather than
+    * first(when(...)): array-typed `first` buffers force SortAggregate,
+    * which sorts both sides of the exchange; group state is still the
+    * pair's two rows. */
+  private def adjacentShinglePairs(docs: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    docs.select(col("doc_id"), TextOps.hashedShingles(col("text")).as("sh"))
+      .select(explode(array(
+        struct(col("doc_id").as("pair"), lit(0).as("role"), col("sh")),
+        struct((col("doc_id") - 1).as("pair"), lit(1).as("role"), col("sh"))
+      )).as("e")).select(col("e.pair"), col("e.role"), col("e.sh"))
+      .groupBy("pair")
+      .agg(sort_array(collect_list(struct(col("role"), col("sh")))).as("rs"))
 
   /** One bucketed side of [[rpPairsSql]] with the adaptive plane count
     * derived in SQL (integer-exact twin of [[adaptivePlanes]]) and the
@@ -458,31 +504,12 @@ object DedupQueries {
     Q(
       "q52_lsh_pairs",
       s"""WITH ${OracleSql.hashedShingleRows("doc_id")},
-        |sig AS (
-        |  SELECT doc_id,
-        |    ${OracleSql.minhashAggs("h", "k")}
-        |  FROM hv GROUP BY doc_id),
-        |braw AS (
-        |  SELECT doc_id, unnest([0, 1, 2, 3]) AS band,
-        |         unnest([k0, k1, k2, k3]) AS key FROM sig),
-        |bands AS (
-        |  SELECT doc_id, band, key FROM (
-        |    SELECT doc_id, band, key,
-        |      row_number() OVER (PARTITION BY band, key ORDER BY doc_id)
-        |        AS rk
-        |    FROM braw) t WHERE rk <= 256),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM bands a JOIN bands b
-        |    ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id)
+        |${OracleSql.minhashBands}
         |SELECT id_a, id_b
         |FROM cand
         |JOIN sig sa ON sa.doc_id = cand.id_a
         |JOIN sig sb ON sb.doc_id = cand.id_b
-        |WHERE (CASE WHEN sa.k0 = sb.k0 THEN 1 ELSE 0 END +
-        |       CASE WHEN sa.k1 = sb.k1 THEN 1 ELSE 0 END +
-        |       CASE WHEN sa.k2 = sb.k2 THEN 1 ELSE 0 END +
-        |       CASE WHEN sa.k3 = sb.k3 THEN 1 ELSE 0 END) >= 2
+        |WHERE ${OracleSql.minhashAgree}
         |ORDER BY id_a, id_b""".stripMargin
     ) { (s, d) =>
       val sig = TextOps.minhashSignatures(docs(s, d), Seq("doc_id"), "k")
@@ -571,29 +598,7 @@ object DedupQueries {
       // expected collisions are ~m²/2^33 — harmless for per-pair Jaccard
       // at realistic m (thousands), though a corpus-wide distinct over
       // these hashes would need the full 64-bit width.
-      val sh = TextOps.hashedShingles(col("text"))
-      // Pair-reduce instead of a self-join: each doc emits its shingle set
-      // into both pairs it belongs to ((doc-1, doc) as role b, (doc, doc+1)
-      // as role a), then one groupBy(pair) recombines the two sides. One
-      // scan, ONE shingle computation, one shuffle — the self-join form
-      // scans and computes shingles twice and shuffles both sides (and a
-      // lazily-persisted variant races AQE's concurrent map stages into
-      // computing the cache twice). Per-group state is exactly two rows.
-      // The same co-group shape serves arbitrary LSH candidate pairs at
-      // 100 TB: emit (pair_key, role) per membership, never broadcast
-      // computed shingle tables (their size estimate comes from source
-      // parquet bytes and is off by orders of magnitude).
-      val withSh = docs(s, d).select(col("doc_id"), sh.as("sh"))
-      val sides = withSh.select(explode(array(
-        struct(col("doc_id").as("pair"), lit(0).as("role"), col("sh")),
-        struct((col("doc_id") - 1).as("pair"), lit(1).as("role"), col("sh"))
-      )).as("e")).select(col("e.pair"), col("e.role"), col("e.sh"))
-      // collect_list (an ObjectHashAggregate) rather than first(when(...)):
-      // array-typed `first` buffers force SortAggregate, which inserts a
-      // per-partition sort on both sides of the exchange. Group state is
-      // still bounded: exactly the pair's two (role, sh) rows.
-      sides.groupBy("pair")
-        .agg(sort_array(collect_list(struct(col("role"), col("sh")))).as("rs"))
+      adjacentShinglePairs(docs(s, d))
         .filter(size(col("rs")) === 2)
         .select(col("pair").as("id_a"), (col("pair") + 1).as("id_b"),
           round(TextOps.jaccard(
@@ -1019,17 +1024,10 @@ object DedupQueries {
         |WHERE len(a.sh) > 0 AND len(b.sh) > 0
         |ORDER BY id_a""".stripMargin
     ) { (s, d) =>
-      val sh = TextOps.hashedShingles(col("text"))
-      val withSh = docs(s, d).select(col("doc_id"), sh.as("sh"))
-      val sides = withSh.select(explode(array(
-        struct(col("doc_id").as("pair"), lit(0).as("role"), col("sh")),
-        struct((col("doc_id") - 1).as("pair"), lit(1).as("role"), col("sh"))
-      )).as("e")).select(col("e.pair"), col("e.role"), col("e.sh"))
       val sa = col("rs").getItem(0).getField("sh")
       val sb = col("rs").getItem(1).getField("sh")
       val common = size(array_intersect(sa, sb))
-      sides.groupBy("pair")
-        .agg(sort_array(collect_list(struct(col("role"), col("sh")))).as("rs"))
+      adjacentShinglePairs(docs(s, d))
         .filter(size(col("rs")) === 2 &&
           size(sa) > 0 && size(sb) > 0)
         .select(col("pair").as("id_a"), (col("pair") + 1).as("id_b"),
@@ -1136,13 +1134,18 @@ object DedupQueries {
     // reuse) and streams the wide vectors through a codegen'd
     // shuffle-hash join (bucket-collect is for narrow payloads only).
     Q(
-      "q121_semdedup",
-      """WITH p AS (SELECT (CAST(1 AS BIGINT) <<
+      "q121_semdedup", {
+      def dist(a: String, b: String) =
+        OracleSql.dot64(OracleSql.scaled(a), OracleSql.scaled(b))
+      def dot(a: String, b: String) =
+        s"CAST(${OracleSql.dot64(s"$a.v[i]", s"$b.v[i]")} AS DOUBLE)"
+      val cos = s"${dot("a", "b")} /\n    " +
+        s"(sqrt(${dot("a", "a")}) * sqrt(${dot("b", "b")}))"
+      s"""WITH p AS (SELECT (CAST(1 AS BIGINT) <<
         |    CAST(GREATEST(3, LEAST(10, length(bin(count(*) - 1)) - 6))
         |      AS INTEGER)) AS k FROM embeddings),
         |ei AS (SELECT vec_id,
-        |    list_transform(embedding,
-        |      x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS v
+        |    ${OracleSql.scaledInts} AS v
         |  FROM embeddings),
         |ei2 AS (SELECT vec_id, v,
         |    list_sum(list_transform(v, x ->
@@ -1158,21 +1161,15 @@ object DedupQueries {
         |  FROM seeds, p WHERE sid < LEAST(16, p.k)),
         |scell AS (SELECT sid, cid AS cell FROM (
         |  SELECT s.sid, g.cid, row_number() OVER (PARTITION BY s.sid
-        |    ORDER BY s.cc - 2 * list_sum(list_transform(range(1, 65), i ->
-        |      (CAST(s.c[i] AS DOUBLE) / 10000.0) *
-        |      (CAST(g.gc[i] AS DOUBLE) / 10000.0))) + g.gcc, g.cid) AS rn
+        |    ORDER BY s.cc - 2 * ${dist("s.c", "g.gc")} + g.gcc, g.cid) AS rn
         |  FROM seeds s CROSS JOIN coarse g) t WHERE rn = 1),
         |vcell AS (SELECT vec_id, cid AS cell FROM (
         |  SELECT e.vec_id, g.cid, row_number() OVER (PARTITION BY e.vec_id
-        |    ORDER BY e.vv - 2 * list_sum(list_transform(range(1, 65), i ->
-        |      (CAST(e.v[i] AS DOUBLE) / 10000.0) *
-        |      (CAST(g.gc[i] AS DOUBLE) / 10000.0))) + g.gcc, g.cid) AS rn
+        |    ORDER BY e.vv - 2 * ${dist("e.v", "g.gc")} + g.gcc, g.cid) AS rn
         |  FROM ei2 e CROSS JOIN coarse g) t WHERE rn = 1),
         |assigned AS (SELECT vec_id, sid AS cluster FROM (
         |  SELECT e.vec_id, s.sid, row_number() OVER (PARTITION BY e.vec_id
-        |    ORDER BY e.vv - 2 * list_sum(list_transform(range(1, 65), i ->
-        |      (CAST(e.v[i] AS DOUBLE) / 10000.0) *
-        |      (CAST(s.c[i] AS DOUBLE) / 10000.0))) + s.cc, s.sid) AS rn
+        |    ORDER BY e.vv - 2 * ${dist("e.v", "s.c")} + s.cc, s.sid) AS rn
         |  FROM ei2 e
         |  JOIN vcell ON e.vec_id = vcell.vec_id
         |  JOIN scell ON scell.cell = vcell.cell
@@ -1183,21 +1180,11 @@ object DedupQueries {
         |      AS mrk
         |  FROM assigned a JOIN ei e USING (vec_id)) m WHERE mrk <= 256)
         |SELECT cluster, a.vec_id AS id_a, b.vec_id AS id_b,
-        |  round(CAST(list_sum(list_transform(range(1, 65),
-        |      i -> a.v[i] * b.v[i])) AS DOUBLE) /
-        |    (sqrt(CAST(list_sum(list_transform(range(1, 65),
-        |      i -> a.v[i] * a.v[i])) AS DOUBLE)) *
-        |     sqrt(CAST(list_sum(list_transform(range(1, 65),
-        |      i -> b.v[i] * b.v[i])) AS DOUBLE))), 4) + 0 AS sim
+        |  round($cos, 4) + 0 AS sim
         |FROM capped a JOIN capped b USING (cluster)
-        |WHERE a.vec_id < b.vec_id
-        |  AND CAST(list_sum(list_transform(range(1, 65),
-        |      i -> a.v[i] * b.v[i])) AS DOUBLE) /
-        |    (sqrt(CAST(list_sum(list_transform(range(1, 65),
-        |      i -> a.v[i] * a.v[i])) AS DOUBLE)) *
-        |     sqrt(CAST(list_sum(list_transform(range(1, 65),
-        |      i -> b.v[i] * b.v[i])) AS DOUBLE))) >= 0.40
+        |WHERE a.vec_id < b.vec_id AND $cos >= 0.40
         |ORDER BY cluster, id_a, id_b""".stripMargin
+    }
     ) { (s, d) =>
       val n = embCount(s, d)
       val k = 1L << math.max(3, math.min(10, Scale.bitLen(n) - 6))
@@ -1473,18 +1460,7 @@ object DedupQueries {
         |  FROM codes k JOIN lut l ON l.m = k.m AND l.cid = k.cid
         |  WHERE k.vec_id != l.qid
         |  GROUP BY l.qid, k.vec_id),
-        |top5 AS (
-        |  SELECT qid, vec_id AS cand_id, adc FROM (
-        |    SELECT qid, vec_id, adc,
-        |      row_number() OVER (PARTITION BY qid
-        |                         ORDER BY adc DESC, vec_id) AS rn
-        |    FROM adc) t WHERE rn <= 5)
-        |SELECT t.qid, t.cand_id AS vec_id, round(t.adc, 4) + 0 AS adc_dot,
-        |  round(${OracleSql.dot("e.embedding", "q.embedding")}, 4) + 0 AS exact_dot
-        |FROM top5 t
-        |JOIN embeddings e ON e.vec_id = t.cand_id
-        |JOIN embeddings q ON q.vec_id = t.qid
-        |ORDER BY qid, adc_dot DESC, vec_id""".stripMargin
+        |${OracleSql.pqRescoreTop5}""".stripMargin
     ) { (s, d) =>
       val e = emb(s, d)
       val qids = Seq(20L, 21L, 22L)
@@ -1647,17 +1623,7 @@ object DedupQueries {
     // exploded row count ≈ n_chars/64 — linear.
     Q(
       "q143_cdc_chunks",
-      """WITH ch AS (
-        |  SELECT doc_id, i, unicode(text[i]) AS code, length(text) AS n
-        |  FROM documents, unnest(range(1, length(text)+1)) AS t(i)
-        |), h AS (
-        |  SELECT doc_id, i, n,
-        |    sum(code) OVER (PARTITION BY doc_id ORDER BY i
-        |                    ROWS BETWEEN 15 PRECEDING AND CURRENT ROW) AS hsum
-        |  FROM ch
-        |), cuts AS (
-        |  SELECT doc_id, CAST(i AS BIGINT) AS cut FROM h
-        |  WHERE i >= 16 AND i < n AND (hsum * 2654435761) % 64 = 0
+      s"""WITH ${OracleSql.cdcCuts}
         |  UNION ALL SELECT doc_id, 0 FROM documents
         |  UNION ALL SELECT doc_id, length(text) FROM documents
         |), bounds AS (
@@ -1719,32 +1685,13 @@ object DedupQueries {
         |        len(list_distinct(list_concat(p.sh, c.sh)))),
         |hv AS (
         |  SELECT doc_id, unnest(sh) AS h FROM hs),
-        |sig AS (
-        |  SELECT doc_id,
-        |    ${OracleSql.minhashAggs("h", "k")}
-        |  FROM hv GROUP BY doc_id),
-        |braw AS (
-        |  SELECT doc_id, unnest([0, 1, 2, 3]) AS band,
-        |         unnest([k0, k1, k2, k3]) AS key FROM sig),
-        |bands AS (
-        |  SELECT doc_id, band, key FROM (
-        |    SELECT doc_id, band, key,
-        |      row_number() OVER (PARTITION BY band, key ORDER BY doc_id)
-        |        AS rk
-        |    FROM braw) t WHERE rk <= 256),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM bands a JOIN bands b
-        |    ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
+        |${OracleSql.minhashBands},
         |retr AS (
         |  SELECT id_a, id_b FROM cand
         |  JOIN sig sa ON sa.doc_id = cand.id_a
         |  JOIN sig sb ON sb.doc_id = cand.id_b
         |  WHERE id_a < 100
-        |    AND (CASE WHEN sa.k0 = sb.k0 THEN 1 ELSE 0 END +
-        |         CASE WHEN sa.k1 = sb.k1 THEN 1 ELSE 0 END +
-        |         CASE WHEN sa.k2 = sb.k2 THEN 1 ELSE 0 END +
-        |         CASE WHEN sa.k3 = sb.k3 THEN 1 ELSE 0 END) >= 2),
+        |    AND ${OracleSql.minhashAgree}),
         |tagged AS (
         |  SELECT id_a, id_b, 1 AS t, 0 AS r FROM truth
         |  UNION ALL SELECT id_a, id_b, 0 AS t, 1 AS r FROM retr),
@@ -2051,18 +1998,7 @@ object DedupQueries {
         |  JOIN cellcand cc ON cc.vec_id = k.vec_id
         |  JOIN lut l ON l.m = k.m AND l.cid = k.cid AND l.qid = cc.qid
         |  GROUP BY l.qid, k.vec_id),
-        |top5 AS (
-        |  SELECT qid, vec_id AS cand_id, adc FROM (
-        |    SELECT qid, vec_id, adc,
-        |      row_number() OVER (PARTITION BY qid
-        |        ORDER BY adc DESC, vec_id) AS rn
-        |    FROM adc) t WHERE rn <= 5)
-        |SELECT t.qid, t.cand_id AS vec_id, round(t.adc, 4) + 0 AS adc_dot,
-        |  round(${OracleSql.dot("e.embedding", "q.embedding")}, 4) + 0 AS exact_dot
-        |FROM top5 t
-        |JOIN embeddings e ON e.vec_id = t.cand_id
-        |JOIN embeddings q ON q.vec_id = t.qid
-        |ORDER BY qid, adc_dot DESC, vec_id""".stripMargin
+        |${OracleSql.pqRescoreTop5}""".stripMargin
     ) { (s, d) =>
       val e = emb(s, d)
       val qids = Seq(30L, 31L, 32L)
@@ -2122,17 +2058,7 @@ object DedupQueries {
     // pair-mass joins, a doc-id semi-join and a second pair explode.
     Q(
       "q181_substring_dedup",
-      s"""WITH ch AS (
-        |  SELECT doc_id, i, unicode(text[i]) AS code, length(text) AS n
-        |  FROM documents, unnest(range(1, length(text)+1)) AS t(i)
-        |), h AS (
-        |  SELECT doc_id, i, n,
-        |    sum(code) OVER (PARTITION BY doc_id ORDER BY i
-        |                    ROWS BETWEEN 15 PRECEDING AND CURRENT ROW) AS hsum
-        |  FROM ch
-        |), cuts AS (
-        |  SELECT doc_id, CAST(i AS BIGINT) AS cut FROM h
-        |  WHERE i >= 16 AND i < n AND (hsum * 2654435761) % 64 = 0
+      s"""WITH ${OracleSql.cdcCuts}
         |), anch AS (
         |  SELECT c.doc_id,
         |    row_number() OVER (PARTITION BY c.doc_id ORDER BY cut) AS idx,
@@ -2490,9 +2416,8 @@ object DedupQueries {
     // partition — the fixed-partition window trap defused map-side.
     Q(
       "q206_emb_outliers",
-      """WITH ei AS (SELECT vec_id, label,
-        |    list_transform(embedding,
-        |      x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS v
+      s"""WITH ei AS (SELECT vec_id, label,
+        |    ${OracleSql.scaledInts} AS v
         |  FROM embeddings),
         |cs AS (
         |  SELECT label, i, sum(v[i]) AS s
@@ -2503,17 +2428,9 @@ object DedupQueries {
         |  FROM cs JOIN cn USING (label) GROUP BY 1, 2),
         |d2 AS (
         |  SELECT e.vec_id, e.label,
-        |    list_sum(list_transform(range(1, 65), i ->
-        |      (CAST(e.v[i] AS DOUBLE) / 10000.0)
-        |      * (CAST(e.v[i] AS DOUBLE) / 10000.0)))
-        |    - 2 * list_sum(list_transform(range(1, 65), i ->
-        |      (CAST(e.v[i] AS DOUBLE) / 10000.0)
-        |      * ((CAST(c.c[i] AS DOUBLE) / CAST(c.n AS DOUBLE))
-        |         / 10000.0)))
-        |    + list_sum(list_transform(range(1, 65), i ->
-        |      ((CAST(c.c[i] AS DOUBLE) / CAST(c.n AS DOUBLE)) / 10000.0)
-        |      * ((CAST(c.c[i] AS DOUBLE) / CAST(c.n AS DOUBLE))
-        |         / 10000.0))) AS dist2
+        |    ${OracleSql.l2Sq(OracleSql.scaled("e.v"),
+              "((CAST(c.c[i] AS DOUBLE) / CAST(c.n AS DOUBLE)) / 10000.0)")}
+        |      AS dist2
         |  FROM ei e JOIN cent c USING (label)),
         |rk AS (SELECT *, row_number() OVER (PARTITION BY label
         |         ORDER BY dist2 DESC, vec_id) AS r FROM d2)
@@ -2612,19 +2529,7 @@ object DedupQueries {
     // cross-engine, and the decode is pmod.
     Q(
       "q215_ivf_recall",
-      s"""WITH cent AS (SELECT vec_id AS cid, embedding AS cv
-        |  FROM embeddings WHERE vec_id < 8),
-        |probes AS (SELECT vec_id AS qid, embedding AS qv
-        |  FROM embeddings WHERE vec_id >= 10 AND vec_id < 18),
-        |dots AS (
-        |  SELECT e.vec_id, c.cid,
-        |    ${OracleSql.dot("e.embedding", "c.cv")} AS dot
-        |  FROM embeddings e, cent c),
-        |assign AS (
-        |  SELECT vec_id, cid FROM (
-        |    SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id
-        |      ORDER BY CAST(round(dot * 10000) AS BIGINT) DESC, cid)
-        |      AS rn FROM dots) t WHERE rn = 1),
+      s"""WITH ${OracleSql.ivfAssign},
         |pr AS (
         |  SELECT d.vec_id AS qid, d.cid FROM dots d
         |  JOIN probes p ON d.vec_id = p.qid
@@ -2905,8 +2810,7 @@ object DedupQueries {
     Q(
       "q225_emb_covariance",
       s"""WITH q AS (SELECT vec_id,
-        |    list_transform(embedding,
-        |      x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS qv
+        |    ${OracleSql.scaledInts} AS qv
         |  FROM embeddings
         |  WHERE ${OracleSql.mix("vec_id")} *
         |    (SELECT count(*) FROM embeddings) <
@@ -3055,40 +2959,8 @@ object DedupQueries {
     // 16-row table.
     Q(
       "q233_sq8_recall",
-      s"""WITH rng AS (
-        |  SELECT i, min(embedding[i + 1]) AS mn, max(embedding[i + 1])
-        |    AS mx
-        |  FROM embeddings, range(0, 64) r(i) GROUP BY i),
-        |rr AS (SELECT list(mn ORDER BY i) AS mns, list(mx ORDER BY i)
-        |    AS mxs FROM rng),
-        |qz AS (
-        |  SELECT e.vec_id,
-        |    list_transform(range(1, 65), i ->
-        |      CASE WHEN rr.mxs[i] > rr.mns[i] THEN
-        |        CAST(round((CAST(e.embedding[i] AS DOUBLE) - rr.mns[i])
-        |          * 254 / (rr.mxs[i] - rr.mns[i])) AS BIGINT) - 127
-        |      ELSE 0 END) AS q8
-        |  FROM embeddings e, rr),
-        |probes AS (SELECT vec_id AS qid, embedding AS qv
-        |  FROM embeddings WHERE vec_id >= 10 AND vec_id < 26),
-        |pq AS (SELECT q.vec_id AS qid, q.q8 AS pq8 FROM qz q
-        |  JOIN probes p ON p.qid = q.vec_id),
-        |sc AS (
-        |  SELECT p.qid, e.vec_id,
-        |    CAST(round(${OracleSql.dot("e.embedding", "p.qv", 64)} * 10000) AS BIGINT) AS rq,
-        |    CAST(${OracleSql.dot("z.q8", "w.pq8", 64)} AS BIGINT) AS qd
-        |  FROM probes p
-        |  JOIN embeddings e ON e.vec_id != p.qid
-        |  JOIN qz z ON z.vec_id = e.vec_id
-        |  JOIN pq w ON w.qid = p.qid),
-        |bf AS (
-        |  SELECT qid, vec_id FROM sc
-        |  QUALIFY row_number() OVER (PARTITION BY qid
-        |    ORDER BY rq DESC, vec_id) <= 10),
-        |sq AS (
-        |  SELECT qid, vec_id FROM sc
-        |  QUALIFY row_number() OVER (PARTITION BY qid
-        |    ORDER BY qd DESC, vec_id) <= 10)
+      s"""WITH ${OracleSql.sqScored(Seq(8 -> "qd"))},
+        |${OracleSql.scTop10("sq", "qd")}
         |SELECT b.qid, CAST(count(s.vec_id) AS BIGINT) AS hits,
         |  CAST(count(s.vec_id) * 100000 AS BIGINT) AS recall_ppm
         |FROM bf b LEFT JOIN sq s
@@ -3201,19 +3073,7 @@ object DedupQueries {
     // unpivoted to 24.
     Q(
       "q238_multiprobe_sweep",
-      s"""WITH cent AS (SELECT vec_id AS cid, embedding AS cv
-        |  FROM embeddings WHERE vec_id < 8),
-        |probes AS (SELECT vec_id AS qid, embedding AS qv
-        |  FROM embeddings WHERE vec_id >= 10 AND vec_id < 18),
-        |dots AS (
-        |  SELECT e.vec_id, c.cid,
-        |    ${OracleSql.dot("e.embedding", "c.cv")} AS dot
-        |  FROM embeddings e, cent c),
-        |assign AS (
-        |  SELECT vec_id, cid FROM (
-        |    SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id
-        |      ORDER BY CAST(round(dot * 10000) AS BIGINT) DESC, cid)
-        |      AS rn FROM dots) t WHERE rn = 1),
+      s"""WITH ${OracleSql.ivfAssign},
         |pr AS (
         |  SELECT d.vec_id AS qid, d.cid,
         |    row_number() OVER (PARTITION BY d.vec_id
@@ -3228,10 +3088,7 @@ object DedupQueries {
         |  FROM probes p
         |  JOIN embeddings e ON e.vec_id != p.qid
         |  JOIN assign a ON a.vec_id = e.vec_id),
-        |bf AS (
-        |  SELECT qid, vec_id FROM sc
-        |  QUALIFY row_number() OVER (PARTITION BY qid
-        |    ORDER BY rq DESC, vec_id) <= 10),
+        |${OracleSql.scTop10("bf", "rq")},
         |n(np) AS (VALUES (1), (2), (4)),
         |iv AS (
         |  SELECT sc.qid, n.np, sc.vec_id FROM sc JOIN n ON EXISTS (
@@ -3612,57 +3469,10 @@ object DedupQueries {
     // needs before picking a memory budget.
     Q(
       "q257_sq_bits_sweep",
-      s"""WITH rng AS (
-        |  SELECT i, min(embedding[i + 1]) AS mn, max(embedding[i + 1])
-        |    AS mx
-        |  FROM embeddings, range(0, 64) r(i) GROUP BY i),
-        |rr AS (SELECT list(mn ORDER BY i) AS mns, list(mx ORDER BY i)
-        |    AS mxs FROM rng),
-        |qz AS (
-        |  SELECT e.vec_id,
-        |    list_transform(range(1, 65), i ->
-        |      CASE WHEN rr.mxs[i] > rr.mns[i] THEN
-        |        CAST(round((CAST(e.embedding[i] AS DOUBLE) - rr.mns[i])
-        |          * 14 / (rr.mxs[i] - rr.mns[i])) AS BIGINT) - 7
-        |      ELSE 0 END) AS q4,
-        |    list_transform(range(1, 65), i ->
-        |      CASE WHEN rr.mxs[i] > rr.mns[i] THEN
-        |        CAST(round((CAST(e.embedding[i] AS DOUBLE) - rr.mns[i])
-        |          * 62 / (rr.mxs[i] - rr.mns[i])) AS BIGINT) - 31
-        |      ELSE 0 END) AS q6,
-        |    list_transform(range(1, 65), i ->
-        |      CASE WHEN rr.mxs[i] > rr.mns[i] THEN
-        |        CAST(round((CAST(e.embedding[i] AS DOUBLE) - rr.mns[i])
-        |          * 254 / (rr.mxs[i] - rr.mns[i])) AS BIGINT) - 127
-        |      ELSE 0 END) AS q8
-        |  FROM embeddings e, rr),
-        |probes AS (SELECT vec_id AS qid, embedding AS qv
-        |  FROM embeddings WHERE vec_id >= 10 AND vec_id < 26),
-        |pq AS (SELECT q.vec_id AS qid, q.q4 AS pq4, q.q6 AS pq6,
-        |         q.q8 AS pq8
-        |       FROM qz q JOIN probes p ON p.qid = q.vec_id),
-        |sc AS (
-        |  SELECT p.qid, e.vec_id,
-        |    CAST(round(${OracleSql.dot("e.embedding", "p.qv", 64)} * 10000) AS BIGINT) AS rq,
-        |    CAST(${OracleSql.dot("z.q4", "w.pq4", 64)} AS BIGINT) AS d4,
-        |    CAST(${OracleSql.dot("z.q6", "w.pq6", 64)} AS BIGINT) AS d6,
-        |    CAST(${OracleSql.dot("z.q8", "w.pq8", 64)} AS BIGINT) AS d8
-        |  FROM probes p
-        |  JOIN embeddings e ON e.vec_id != p.qid
-        |  JOIN qz z ON z.vec_id = e.vec_id
-        |  JOIN pq w ON w.qid = p.qid),
-        |bf AS (SELECT qid, vec_id FROM sc
-        |  QUALIFY row_number() OVER (PARTITION BY qid
-        |    ORDER BY rq DESC, vec_id) <= 10),
-        |t4 AS (SELECT qid, vec_id FROM sc
-        |  QUALIFY row_number() OVER (PARTITION BY qid
-        |    ORDER BY d4 DESC, vec_id) <= 10),
-        |t6 AS (SELECT qid, vec_id FROM sc
-        |  QUALIFY row_number() OVER (PARTITION BY qid
-        |    ORDER BY d6 DESC, vec_id) <= 10),
-        |t8 AS (SELECT qid, vec_id FROM sc
-        |  QUALIFY row_number() OVER (PARTITION BY qid
-        |    ORDER BY d8 DESC, vec_id) <= 10),
+      s"""WITH ${OracleSql.sqScored(Seq(4 -> "d4", 6 -> "d6", 8 -> "d8"))},
+        |${OracleSql.scTop10("t4", "d4")},
+        |${OracleSql.scTop10("t6", "d6")},
+        |${OracleSql.scTop10("t8", "d8")},
         |hits AS (
         |  SELECT b.qid,
         |    CAST(count(x4.vec_id) AS BIGINT) AS h4,
@@ -3751,7 +3561,7 @@ object DedupQueries {
       ranges: (Seq[Double], Seq[Double]))
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    import RankKey.{bottomK, overlap, pack, rq}
+    import RankKey.{bottomK, pack, recallBy, rq}
     def levels(b: Int): Long = (1L << b) - 2L
     // codegen'd kernel (plans/SqQuantize): the HOF-lambda form runs
     // interpreted per ELEMENT (HOFs never codegen) and at three bit
@@ -3761,7 +3571,7 @@ object DedupQueries {
         sqProbe(qv, ranges, levels(6)), sqProbe(qv, ranges, levels(8)))
     }.toDF("qid", "qv", "pq4", "pq6", "pq8"))
     val minK10 = bottomK(10)
-    e.select(col("vec_id"), col("embedding"),
+    val gathered = e.select(col("vec_id"), col("embedding"),
         sqQuantize(col("embedding"), ranges, levels(4)).as("q4"),
         sqQuantize(col("embedding"), ranges, levels(6)).as("q6"),
         sqQuantize(col("embedding"), ranges, levels(8)).as("q8"))
@@ -3773,14 +3583,7 @@ object DedupQueries {
       .groupBy("qid")
       .agg(minK10(col("bfk")).as("bf"), minK10(col("k4")).as("t4"),
         minK10(col("k6")).as("t6"), minK10(col("k8")).as("t8"))
-      .select(col("qid"), overlap(col("bf"), col("t4")).as("h4"),
-        overlap(col("bf"), col("t6")).as("h6"),
-        overlap(col("bf"), col("t8")).as("h8"))
-      .selectExpr("qid",
-        "stack(3, 4L, h4, 6L, h6, 8L, h8) as (bits, hits)")
-      .select(col("qid"), col("bits"), col("hits"),
-        (col("hits") * 100000L).as("recall_ppm"))
-      .orderBy("qid", "bits")
+    recallBy(gathered, "bits", Seq(4 -> "t4", 6 -> "t6", 8 -> "t8"))
   }
 
   /** q252 core over any (vec_id, label, embedding) frame. Factored for
@@ -4034,7 +3837,7 @@ object DedupQueries {
     * truncations; vectors orthogonal on the prefix recall ~0). */
   private[graft] def matryoshkaRecallCore(
       e: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    import RankKey.{bottomK, overlap, pack, rq}
+    import RankKey.{bottomK, pack, recallBy, rq}
     val probes = broadcast(e
       .filter(col("vec_id") >= 20 && col("vec_id") < 36)
       .select(col("vec_id").as("qid"), col("embedding").as("qv")))
@@ -4042,19 +3845,14 @@ object DedupQueries {
       rq(slice(col("embedding"), 1, n), slice(col("qv"), 1, n)),
       col("vec_id"))
     val minK10 = bottomK(10)
-    e.crossJoin(probes)
+    recallBy(e.crossJoin(probes)
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), key(64).as("key64"), key(32).as("key32"),
         key(16).as("key16"))
       .groupBy("qid")
       .agg(minK10(col("key64")).as("bf"), minK10(col("key32")).as("t32"),
-        minK10(col("key16")).as("t16"))
-      .select(col("qid"), overlap(col("bf"), col("t32")).as("h32"),
-        overlap(col("bf"), col("t16")).as("h16"))
-      .selectExpr("qid", "stack(2, 16L, h16, 32L, h32) as (dims, hits)")
-      .select(col("qid"), col("dims"), col("hits"),
-        (col("hits") * 100000L).as("recall_ppm"))
-      .orderBy("qid", "dims")
+        minK10(col("key16")).as("t16")),
+      "dims", Seq(32 -> "t32", 16 -> "t16"))
   }
 
   /** Canonical map (doc_id → canonical id) under q223's rule from an
@@ -4166,7 +3964,7 @@ object DedupQueries {
       probes: Seq[(Long, Seq[Float], Seq[Long])])
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    import RankKey.{bottomK, gated, overlap, pack, rq}
+    import RankKey.{bottomK, gated, pack, recallBy, rq}
     val assigned = e.select(col("vec_id"), col("embedding"),
       RankKey.nearestCell(col("embedding"), cents).as("cid"))
     val probesDf = broadcast(probes.map { case (qid, qv, cs) =>
@@ -4180,21 +3978,14 @@ object DedupQueries {
       .select(col("qid"), col("cid"),
         col("c1"), col("c2"), col("c3"), col("c4"),
         pack(rq(col("embedding"), col("qv")), col("vec_id")).as("key"))
-    keyed.groupBy("qid")
+    recallBy(keyed.groupBy("qid")
       .agg(minK10(col("key")).as("bf"),
         gate(col("cid") === col("c1")).as("n1"),
         gate(col("cid") === col("c1") || col("cid") === col("c2"))
           .as("n2"),
         gate(col("cid") === col("c1") || col("cid") === col("c2") ||
-          col("cid") === col("c3") || col("cid") === col("c4")).as("n4"))
-      .select(col("qid"), overlap(col("bf"), col("n1")).as("h1"),
-        overlap(col("bf"), col("n2")).as("h2"),
-        overlap(col("bf"), col("n4")).as("h4"))
-      .selectExpr("qid",
-        "stack(3, 1L, h1, 2L, h2, 4L, h4) as (nprobe, hits)")
-      .select(col("qid"), col("nprobe").cast("long").as("nprobe"),
-        col("hits"), (col("hits") * 100000L).as("recall_ppm"))
-      .orderBy("qid", "nprobe")
+          col("cid") === col("c3") || col("cid") === col("c4")).as("n4")),
+      "nprobe", Seq(1 -> "n1", 2 -> "n2", 4 -> "n4"))
   }
 
   /** q237 core over any (doc_id, source, text) frame. Factored for
@@ -4316,13 +4107,13 @@ object DedupQueries {
       ranges: (Seq[Double], Seq[Double]))
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    import RankKey.{bottomK, overlap, pack, rq}
+    import RankKey.{bottomK, pack, recall, rq}
     // int8 (254 levels): the SQ kernel q257 sweeps over bit widths
     val probesDf = broadcast(probes.map { case (qid, qv, _) =>
       (qid, qv, sqProbe(qv, ranges, 254L))
     }.toDF("qid", "qv", "pq8"))
     val minK10 = bottomK(10)
-    e.select(col("vec_id"), col("embedding"),
+    val gathered = e.select(col("vec_id"), col("embedding"),
         sqQuantize(col("embedding"), ranges, 254L).as("q8"))
       .crossJoin(probesDf)
       .filter(col("vec_id") =!= col("qid"))
@@ -4331,10 +4122,7 @@ object DedupQueries {
         sqKey("q8").as("sqk"))
       .groupBy("qid")
       .agg(minK10(col("bfk")).as("bf"), minK10(col("sqk")).as("sq"))
-      .select(col("qid"), overlap(col("bf"), col("sq")).as("hits"))
-      .select(col("qid"), col("hits"),
-        (col("hits") * 100000L).as("recall_ppm"))
-      .orderBy("qid")
+    recall(gathered, "sq")
   }
 
   /** q232 core over explicit (id_a, id_b, rq) pairs. Factored for
@@ -4739,7 +4527,7 @@ object DedupQueries {
       probes: Seq[(Long, Seq[Float], Long, Long)])
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    import RankKey.{bottomK, gated, overlap, pack, rq}
+    import RankKey.{bottomK, gated, pack, recall, rq}
     val assigned = e.select(col("vec_id"), col("embedding"),
       RankKey.nearestCell(col("embedding"), cents).as("cid"))
     val probesDf = broadcast(
@@ -4751,13 +4539,9 @@ object DedupQueries {
         pack(rq(col("embedding"), col("qv")), col("vec_id")).as("key"),
         (col("cid") === col("cell1") || col("cid") === col("cell2"))
           .as("in_cell"))
-    keyed.groupBy("qid")
+    recall(keyed.groupBy("qid")
       .agg(minK10(col("key")).as("bf"),
-        minK10(gated(col("key"), col("in_cell"))).as("ivf"))
-      .select(col("qid"), overlap(col("bf"), col("ivf")).as("hits"))
-      .select(col("qid"), col("hits"),
-        (col("hits") * 100000L).as("recall_ppm"))
-      .orderBy("qid")
+        minK10(gated(col("key"), col("in_cell"))).as("ivf")), "ivf")
   }
 
   /** q209 core over any (doc_id, text) frame: per-doc DISTINCT winnowed

@@ -1,10 +1,11 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Q, Tables}
 import graft.Tables.{events => ev}
-import graft.functions.Scale
+import graft.functions.{JoinOps, Scale}
 
 /** Time-series / event-log operators over the `events` table: time
   * bucketing, JSON prop extraction, ordered-window gaps, sessionization,
@@ -18,6 +19,33 @@ object EventQueries {
   /** max(unix_micros(ts)) per data dir (q213's decay anchor). */
   private val maxTsMicros = Tables.perDir((s, d) =>
     ev(s, d).agg(max(expr("unix_micros(ts)"))).head().getLong(0))
+
+  /** q89/q112: each purchase with the user's latest click at or before
+    * it by the as-of join `join`, the two queries' only difference; the
+    * oracle [[asofSql]] is DuckDB's native ASOF LEFT JOIN. */
+  private def purchaseAsof(s: org.apache.spark.sql.SparkSession, d: String,
+      join: (DataFrame, DataFrame, String, String, String) => DataFrame)
+      : DataFrame = {
+    val purchases = ev(s, d).filter(col("event_type") === "purchase")
+      .select("event_id", "user_id", "ts", "value")
+    val clicks = ev(s, d).filter(col("event_type") === "click")
+      .select("user_id", "ts", "value")
+    join(purchases, clicks, "user_id", "ts", "_r")
+      .select(col("event_id"), col("user_id"),
+        round(col("value"), 2).as("pvalue"),
+        round(coalesce(col("ts").cast("double") - col("ts_r").cast("double"),
+          lit(-1.0)), 2).as("gap_s"),
+        round(coalesce(col("value_r"), lit(-1.0)), 2).as("cvalue"))
+      .orderBy("event_id")
+  }
+  private val asofSql =
+    """SELECT l.event_id, l.user_id, round(l.value, 2) AS pvalue,
+      |  round(COALESCE(epoch(l.ts) - epoch(r.ts), -1.0), 2) AS gap_s,
+      |  round(COALESCE(r.value, -1.0), 2) AS cvalue
+      |FROM (SELECT * FROM events WHERE event_type = 'purchase') l
+      |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') r
+      |  ON l.user_id = r.user_id AND l.ts >= r.ts
+      |ORDER BY l.event_id""".stripMargin
 
   /** Non-SQL-expressible entries (rows-only driver check): multimodal
     * decode plumbing — the featurize step runs per-partition via
@@ -327,27 +355,8 @@ object EventQueries {
     // Oracle: DuckDB's native ASOF LEFT JOIN.
     Q(
       "q89_asof_join",
-      """SELECT l.event_id, l.user_id, round(l.value, 2) AS pvalue,
-        |  round(COALESCE(epoch(l.ts) - epoch(r.ts), -1.0), 2) AS gap_s,
-        |  round(COALESCE(r.value, -1.0), 2) AS cvalue
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') l
-        |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') r
-        |  ON l.user_id = r.user_id AND l.ts >= r.ts
-        |ORDER BY l.event_id""".stripMargin
-    ) { (s, d) =>
-      import graft.functions.JoinOps
-      val purchases = ev(s, d).filter(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts", "value")
-      val clicks = ev(s, d).filter(col("event_type") === "click")
-        .select("user_id", "ts", "value")
-      JoinOps.asofBackward(purchases, clicks, key = "user_id", ts = "ts")
-        .select(col("event_id"), col("user_id"),
-          round(col("value"), 2).as("pvalue"),
-          round(coalesce(col("ts").cast("double") - col("ts_r").cast("double"),
-            lit(-1.0)), 2).as("gap_s"),
-          round(coalesce(col("value_r"), lit(-1.0)), 2).as("cvalue"))
-        .orderBy("event_id")
-    },
+      asofSql
+    ) { (s, d) => purchaseAsof(s, d, JoinOps.asofBackward) },
 
     // The SAME as-of join on the native whole-operator path (custom
     // AsofJoinNode -> AsofJoinStrategy -> one-pass streaming-merge
@@ -355,27 +364,8 @@ object EventQueries {
     // the gate proves the custom physical operator end-to-end.
     Q(
       "q112_asof_native",
-      """SELECT l.event_id, l.user_id, round(l.value, 2) AS pvalue,
-        |  round(COALESCE(epoch(l.ts) - epoch(r.ts), -1.0), 2) AS gap_s,
-        |  round(COALESCE(r.value, -1.0), 2) AS cvalue
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') l
-        |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') r
-        |  ON l.user_id = r.user_id AND l.ts >= r.ts
-        |ORDER BY l.event_id""".stripMargin
-    ) { (s, d) =>
-      import graft.functions.JoinOps
-      val purchases = ev(s, d).filter(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts", "value")
-      val clicks = ev(s, d).filter(col("event_type") === "click")
-        .select("user_id", "ts", "value")
-      JoinOps.asofBackwardNative(purchases, clicks, key = "user_id", ts = "ts")
-        .select(col("event_id"), col("user_id"),
-          round(col("value"), 2).as("pvalue"),
-          round(coalesce(col("ts").cast("double") - col("ts_r").cast("double"),
-            lit(-1.0)), 2).as("gap_s"),
-          round(coalesce(col("value_r"), lit(-1.0)), 2).as("cvalue"))
-        .orderBy("event_id")
-    },
+      asofSql
+    ) { (s, d) => purchaseAsof(s, d, JoinOps.asofBackwardNative) },
 
     // Range (interval) join (JoinOps.rangeJoinBucketed): events bucketed
     // into value tiers derived from the region table. A pure inequality
@@ -390,7 +380,6 @@ object EventQueries {
         |FROM events e JOIN tiers t ON e.value >= t.lo AND e.value < t.hi
         |GROUP BY t.tier ORDER BY t.tier""".stripMargin
     ) { (s, d) =>
-      import graft.functions.JoinOps
       val tiers = Tables.region(s, d).select(
         col("r_regionkey").cast("long").as("tier"),
         (col("r_regionkey") * 100.0).as("lo"),
@@ -422,7 +411,6 @@ object EventQueries {
         |FROM spans s JOIN errw e ON s.s_lo < e.e_hi AND e.e_lo < s.s_hi
         |GROUP BY s.user_id ORDER BY user_id""".stripMargin
     ) { (s, d) =>
-      import graft.functions.JoinOps
       val sec = col("ts").cast("double")
       val spans = ev(s, d)
         .groupBy(col("user_id"), date_trunc("hour", col("ts")).as("h"))

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import graft.{Q, Tables}
 import graft.Tables.{embeddings => emb}
 import graft.functions.{ArrayOps, Reducers}
@@ -18,6 +18,19 @@ import graft.functions.{ArrayOps, Reducers}
 object NestedQueries {
 
   private def dbl(c: Column): Column = c.cast("double")
+
+  /** q24/q25's tail: one row (vec_id, pos, c0, c1) per element of the
+    * pair list `pairs`; [[pairRowsSql]] is its oracle over `p`. */
+  private def pairRows(e: DataFrame, pairs: Column): DataFrame =
+    e.select(col("vec_id"), posexplode(pairs).as(Seq("pos", "pr")))
+      .select(col("vec_id"), col("pos").cast("long").as("pos"),
+        col("pr.c0").as("c0"), col("pr.c1").as("c1"))
+      .orderBy("vec_id", "pos")
+  private val pairRowsSql =
+    """SELECT vec_id, pos, pr.c0 AS c0, pr.c1 AS c1 FROM (
+      |  SELECT vec_id, unnest(range(0, len(pairs))) AS pos, unnest(pairs) AS pr
+      |  FROM p) u
+      |ORDER BY vec_id, pos""".stripMargin
 
   val queries: Seq[Q] = Seq(
     // flatten(axis=1) with positional index — reference flatten/ravel
@@ -97,46 +110,29 @@ object NestedQueries {
     // combinations(n=2) — reference structure.py:285-332, exploded flat.
     Q(
       "q24_combinations",
-      """WITH t AS (SELECT vec_id, embedding[1:4] AS w FROM embeddings),
+      s"""WITH t AS (SELECT vec_id, embedding[1:4] AS w FROM embeddings),
         |p AS (SELECT vec_id,
         |        flatten(list_transform(range(1, len(w)),
         |          i -> list_transform(w[i+1:], y -> {'c0': w[i], 'c1': y}))) AS pairs
         |      FROM t)
-        |SELECT vec_id, pos, pr.c0 AS c0, pr.c1 AS c1 FROM (
-        |  SELECT vec_id, unnest(range(0, len(pairs))) AS pos, unnest(pairs) AS pr
-        |  FROM p) u
-        |ORDER BY vec_id, pos""".stripMargin
+        |$pairRowsSql""".stripMargin
     ) { (s, d) =>
-      emb(s, d)
-        .select(col("vec_id"),
-          posexplode(ArrayOps.combinations2(slice(col("embedding"), 1, 4)))
-            .as(Seq("pos", "pr")))
-        .select(col("vec_id"), col("pos").cast("long").as("pos"),
-          col("pr.c0").as("c0"), col("pr.c1").as("c1"))
-        .orderBy("vec_id", "pos")
+      pairRows(emb(s, d),
+        ArrayOps.combinations2(slice(col("embedding"), 1, 4)))
     },
 
     // cartesian(axis=1) of two aligned lists — reference structure.py:245-282.
     Q(
       "q25_cartesian",
-      """WITH t AS (SELECT vec_id, embedding[1:2] AS a, embedding[3:4] AS b
+      s"""WITH t AS (SELECT vec_id, embedding[1:2] AS a, embedding[3:4] AS b
         |           FROM embeddings),
         |p AS (SELECT vec_id,
         |        flatten(list_transform(a, x -> list_transform(b, y -> {'c0': x, 'c1': y}))) AS pairs
         |      FROM t)
-        |SELECT vec_id, pos, pr.c0 AS c0, pr.c1 AS c1 FROM (
-        |  SELECT vec_id, unnest(range(0, len(pairs))) AS pos, unnest(pairs) AS pr
-        |  FROM p) u
-        |ORDER BY vec_id, pos""".stripMargin
+        |$pairRowsSql""".stripMargin
     ) { (s, d) =>
-      emb(s, d)
-        .select(col("vec_id"),
-          posexplode(ArrayOps.cartesian(
-            slice(col("embedding"), 1, 2), slice(col("embedding"), 3, 2)))
-            .as(Seq("pos", "pr")))
-        .select(col("vec_id"), col("pos").cast("long").as("pos"),
-          col("pr.c0").as("c0"), col("pr.c1").as("c1"))
-        .orderBy("vec_id", "pos")
+      pairRows(emb(s, d), ArrayOps.cartesian(
+        slice(col("embedding"), 1, 2), slice(col("embedding"), 3, 2)))
     },
 
     // run_lengths — reference structure.py:775-798 (runs of the sign bit).

@@ -33,6 +33,14 @@ private[queries] object OracleSql {
   def shingles3(ws: String): String =
     s"list_transform(range(1, len($ws) - 1),\n      i -> array_to_string($ws[i:i+2], ' '))"
 
+  /** `TextOps.shingles(ws, 2)` posexploded: one row per word bigram `b`
+    * of `ws`, with `w1` its first word. */
+  val bigramRows: String =
+    """unnest(list_transform(range(1, len(ws)),
+      |      i -> ws[i] || ' ' || ws[i+1])) AS b,
+      |    unnest(list_transform(range(1, len(ws)), i -> ws[i])) AS w1"""
+      .stripMargin
+
   /** `TextOps.hashedShingles`: the distinct 8-nibble digests of the word
     * 3-shingles of `ws`. */
   def hashedShingles(ws: String): String =
@@ -94,21 +102,38 @@ private[queries] object OracleSql {
   def dot(a: String, b: String, n: Int): String = dotTo(a, b, s"${n + 1}")
 
   private def dotTo(a: String, b: String, end: String): String =
-    s"""list_sum(list_transform(range(1, $end),
-       |      i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"""
-      .stripMargin
+    sumOf(end, s"CAST($a[i] AS DOUBLE)", s"CAST($b[i] AS DOUBLE)")
+
+  /** Σ x·y over i in [1, end), x and y expressions of the index i. */
+  private def sumOf(end: String, x: String, y: String): String =
+    s"list_sum(list_transform(range(1, $end),\n      i -> $x * $y))"
+
+  /** `dot_product` of two 64-dim vectors, given per dimension as
+    * expressions `x`, `y` of the index i (e.g. `a.v[i]`, [[scaled]]). */
+  def dot64(x: String, y: String): String = sumOf("65", x, y)
+
+  /** `embedding` as scaled ints, round(x·1e4) as BIGINT per dim. */
+  val scaledInts: String = "list_transform(embedding,\n" +
+    "      x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT))"
+
+  /** Dim i of the scaled-int vector `v` back in embedding units. */
+  def scaled(v: String): String = s"(CAST($v[i] AS DOUBLE) / 10000.0)"
+
+  /** Squared L2 |x − y|² as x·x − 2·x·y + y·y ([[dot64]] terms), the
+    * `dot_product` identity of q118's `assign` and q206. */
+  def l2Sq(x: String, y: String): String =
+    s"${dot64(x, x)}\n    - 2 * ${dot64(x, y)}\n    + ${dot64(y, y)}"
 
   /** `DedupQueries.Pq.subspaceDots`: CTEs `cent(cid, cv)`, the 8 seed
     * centroids, and `subdots(vec_id, cid, m, d)`, every vector's dot with
     * every centroid on each of the 4 16-dim subspaces. */
   val pqSubdots: String =
-    """cent AS (SELECT vec_id AS cid, embedding AS cv
+    s"""cent AS (SELECT vec_id AS cid, embedding AS cv
       |             FROM embeddings WHERE vec_id < 8),
       |subdots AS (
       |  SELECT e.vec_id, c.cid, m.m,
-      |    list_sum(list_transform(range(1, 17),
-      |      i -> CAST(e.embedding[m.m * 16 + i] AS DOUBLE) *
-      |           CAST(c.cv[m.m * 16 + i] AS DOUBLE))) AS d
+      |    ${sumOf("17", "CAST(e.embedding[m.m * 16 + i] AS DOUBLE)",
+                   "CAST(c.cv[m.m * 16 + i] AS DOUBLE)")} AS d
       |  FROM embeddings e, cent c, (SELECT unnest(range(0, 4)) AS m) m)"""
       .stripMargin
 
@@ -129,6 +154,132 @@ private[queries] object OracleSql {
   def pqSlotSum(q: String): String =
     (0 until 4).map(m => s"max(CASE WHEN ${q}m = $m THEN ${q}d END)")
       .mkString(" +\n    ")
+
+  /** `DedupQueries.Pq.rescoreTop5` over CTE `adc(qid, vec_id, adc)`: CTE
+    * `top5`, then the final SELECT re-scoring it by the exact dot. */
+  val pqRescoreTop5: String =
+    s"""top5 AS (
+       |  SELECT qid, vec_id AS cand_id, adc FROM (SELECT qid, vec_id, adc,
+       |    row_number() OVER (PARTITION BY qid ORDER BY adc DESC, vec_id) AS rn
+       |    FROM adc) t WHERE rn <= 5)
+       |SELECT t.qid, t.cand_id AS vec_id, round(t.adc, 4) + 0 AS adc_dot,
+       |  round(${dot("e.embedding", "q.embedding")}, 4) + 0 AS exact_dot
+       |FROM top5 t
+       |JOIN embeddings e ON e.vec_id = t.cand_id
+       |JOIN embeddings q ON q.vec_id = t.qid
+       |ORDER BY qid, adc_dot DESC, vec_id""".stripMargin
+
+  /** `DedupQueries.minhashPairs`' banding over `hv(doc_id, h)`: CTEs
+    * `sig` (minima k0..k3), `braw`/`bands` (buckets capped at 256 by
+    * doc_id) and `cand(id_a, id_b)`, the same-bucket pairs. */
+  val minhashBands: String =
+    s"""sig AS (SELECT doc_id, ${minhashAggs("h", "k")}
+       |  FROM hv GROUP BY doc_id),
+       |braw AS (SELECT doc_id, unnest([0, 1, 2, 3]) AS band,
+       |  unnest([k0, k1, k2, k3]) AS key FROM sig),
+       |bands AS (SELECT doc_id, band, key FROM (SELECT doc_id, band, key,
+       |    row_number() OVER (PARTITION BY band, key ORDER BY doc_id) AS rk
+       |  FROM braw) t WHERE rk <= 256),
+       |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+       |  FROM bands a JOIN bands b
+       |    ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id)"""
+      .stripMargin
+
+  /** `minhashPairs`' verify: `sig` rows `sa`, `sb` agree on >= 2 of 4. */
+  val minhashAgree: String =
+    MinhashPerms.indices
+      .map(i => s"CASE WHEN sa.k$i = sb.k$i THEN 1 ELSE 0 END")
+      .mkString("(", " +\n       ", ") >= 2")
+
+  /** `DedupQueries.RankKey.nearestCell` on `ivfEvalSeeds`: CTEs `cent`,
+    * `probes`, `dots` and `assign(vec_id, cid)` by the rounded dot. */
+  val ivfAssign: String =
+    s"""cent AS (SELECT vec_id AS cid, embedding AS cv
+       |  FROM embeddings WHERE vec_id < 8),
+       |probes AS (SELECT vec_id AS qid, embedding AS qv
+       |  FROM embeddings WHERE vec_id >= 10 AND vec_id < 18),
+       |dots AS (SELECT e.vec_id, c.cid, ${dot("e.embedding", "c.cv")} AS dot
+       |  FROM embeddings e, cent c),
+       |assign AS (SELECT vec_id, cid FROM (SELECT vec_id, cid,
+       |    row_number() OVER (PARTITION BY vec_id
+       |      ORDER BY CAST(round(dot * 10000) AS BIGINT) DESC, cid) AS rn
+       |  FROM dots) t WHERE rn = 1)""".stripMargin
+
+  /** `RankKey.bottomK(10)` over `sc`: CTE `name`, the 10 largest `key`. */
+  def scTop10(name: String, key: String): String =
+    s"""$name AS (SELECT qid, vec_id FROM sc
+       |  QUALIFY row_number() OVER (PARTITION BY qid
+       |    ORDER BY $key DESC, vec_id) <= 10)""".stripMargin
+
+  /** The SQ scoring of q233/q257 (`DedupQueries.sqRanges`, `sqQuantize`,
+    * `sqKey`): CTEs `rng`/`rr` (per-dim ranges), `qz` (column q<b> per bit
+    * width b of `dots`), `probes`, `pq`, `sc(qid, vec_id, rq, alias...)`
+    * with each width's quantized dot, and `bf`, the exact top 10. */
+  def sqScored(dots: Seq[(Int, String)]): String =
+    s"""rng AS (SELECT i, min(embedding[i + 1]) AS mn,
+       |    max(embedding[i + 1]) AS mx
+       |  FROM embeddings, range(0, 64) r(i) GROUP BY i),
+       |rr AS (SELECT list(mn ORDER BY i) AS mns, list(mx ORDER BY i) AS mxs
+       |  FROM rng),
+       |qz AS (SELECT e.vec_id, ${dots.map { case (b, _) =>
+              s"${sqQuantize((1 << b) - 2)} AS q$b" }.mkString(",\n    ")}
+       |  FROM embeddings e, rr),
+       |probes AS (SELECT vec_id AS qid, embedding AS qv
+       |  FROM embeddings WHERE vec_id >= 10 AND vec_id < 26),
+       |pq AS (SELECT q.vec_id AS qid,
+       |    ${dots.map { case (b, _) => s"q.q$b AS pq$b" }.mkString(", ")}
+       |  FROM qz q JOIN probes p ON p.qid = q.vec_id),
+       |sc AS (SELECT p.qid, e.vec_id,
+       |    CAST(round(${dot("e.embedding", "p.qv", 64)} * 10000) AS BIGINT) AS rq,
+       |    ${dots.map { case (b, a) =>
+              s"CAST(${dot(s"z.q$b", s"w.pq$b", 64)} AS BIGINT) AS $a" }
+              .mkString(",\n    ")}
+       |  FROM probes p JOIN embeddings e ON e.vec_id != p.qid
+       |  JOIN qz z ON z.vec_id = e.vec_id JOIN pq w ON w.qid = p.qid),
+       |${scTop10("bf", "rq")}""".stripMargin
+
+  /** `sq_quantize` (plans/SqQuantize) of `e.embedding` onto `levels` + 1
+    * steps of its `rr` range, centred on 0; a flat dim maps to 0. */
+  private def sqQuantize(levels: Int): String =
+    s"""list_transform(range(1, 65), i -> CASE WHEN rr.mxs[i] > rr.mns[i] THEN
+       |        CAST(round((CAST(e.embedding[i] AS DOUBLE) - rr.mns[i])
+       |          * $levels / (rr.mxs[i] - rr.mns[i])) AS BIGINT) - ${levels / 2}
+       |      ELSE 0 END)""".stripMargin
+
+  /** `cdc_cuts` (plans/CdcCuts): CTEs `ch`, `h` (16-wide rolling code sum)
+    * and `cuts(doc_id, cut)`, left open for the caller's boundary rows. */
+  val cdcCuts: String =
+    """ch AS (
+      |  SELECT doc_id, i, unicode(text[i]) AS code, length(text) AS n
+      |  FROM documents, unnest(range(1, length(text)+1)) AS t(i)
+      |), h AS (
+      |  SELECT doc_id, i, n, sum(code) OVER (PARTITION BY doc_id ORDER BY i
+      |      ROWS BETWEEN 15 PRECEDING AND CURRENT ROW) AS hsum
+      |  FROM ch
+      |), cuts AS (
+      |  SELECT doc_id, CAST(i AS BIGINT) AS cut FROM h
+      |  WHERE i >= 16 AND i < n AND (hsum * 2654435761) % 64 = 0"""
+      .stripMargin
+
+  /** `TextOps.gopherStats` over the word list `ws`: n_words, mwl, sr, ttr. */
+  val gopherStats: String =
+    """CAST(len(ws) AS BIGINT) AS n_words,
+      |  list_sum(list_transform(ws, x -> CAST(length(x) AS DOUBLE)))
+      |    / len(ws) AS mwl,
+      |  CAST(len(list_filter(ws,
+      |    x -> x IN ('the','a','of','and','to','in','is'))) AS DOUBLE)
+      |    / len(ws) AS sr,
+      |  CAST(len(list_distinct(ws)) AS DOUBLE) / len(ws) AS ttr""".stripMargin
+
+  /** `Mixing.sqrtTargets` over CTE `c(lang, n)`: CTEs `<w>` (wt =
+    * floor(√n)), `tot` and `tgt(lang, n, target)`. */
+  def sqrtTargets(w: String): String =
+    s"""$w AS (SELECT lang, n,
+       |  CAST(floor(sqrt(CAST(n AS DOUBLE))) AS BIGINT) AS wt FROM c),
+       |tot AS (SELECT CAST(sum(wt) AS BIGINT) AS z,
+       |  CAST(sum(n) AS BIGINT) AS ntot FROM $w),
+       |tgt AS (SELECT lang, n, (t.ntot // 2) * $w.wt // t.z AS target
+       |  FROM $w, tot t)""".stripMargin
 
   /** `Mixing.HashMul`/`HashMod`: the integer pick hash of id `x`, reduced
     * mod M before the multiply. */

@@ -631,51 +631,13 @@ object PipelineQueries {
     // eager localCheckpoint so round N+1's plan does not re-run round N.
     Q(
       "q118_kmeans_iterate",
-      """WITH ei AS (
+      s"""WITH ei AS (
         |  SELECT vec_id,
-        |    list_transform(embedding,
-        |      x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS v
+        |    ${OracleSql.scaledInts} AS v
         |  FROM embeddings),
         |c0 AS (SELECT vec_id AS sid, v AS cnum, CAST(1 AS BIGINT) AS cden
         |       FROM ei WHERE vec_id < 8),
-        |a1 AS (
-        |  SELECT vec_id, sid FROM (
-        |    SELECT e.vec_id, c.sid,
-        |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-        |        list_sum(list_transform(range(1, 65), i ->
-        |          (CAST(e.v[i] AS DOUBLE) / 10000.0) * (CAST(e.v[i] AS DOUBLE) / 10000.0)))
-        |        - 2 * list_sum(list_transform(range(1, 65), i ->
-        |          (CAST(e.v[i] AS DOUBLE) / 10000.0) *
-        |          (CAST(c.cnum[i] AS DOUBLE) / CAST(c.cden AS DOUBLE) / 10000.0)))
-        |        + list_sum(list_transform(range(1, 65), i ->
-        |          (CAST(c.cnum[i] AS DOUBLE) / CAST(c.cden AS DOUBLE) / 10000.0) *
-        |          (CAST(c.cnum[i] AS DOUBLE) / CAST(c.cden AS DOUBLE) / 10000.0))), c.sid) AS rn
-        |    FROM ei e CROSS JOIN c0 c) d WHERE rn = 1),
-        |c1 AS (
-        |  SELECT sid, list(s ORDER BY dim) AS cnum, max(n) AS cden FROM (
-        |    SELECT a.sid, u.i AS dim, sum(e.v[u.i]) AS s, count(*) AS n
-        |    FROM a1 a JOIN ei e USING (vec_id), range(1, 65) u(i)
-        |    GROUP BY a.sid, u.i) t
-        |  GROUP BY sid),
-        |a2 AS (
-        |  SELECT vec_id, sid FROM (
-        |    SELECT e.vec_id, c.sid,
-        |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-        |        list_sum(list_transform(range(1, 65), i ->
-        |          (CAST(e.v[i] AS DOUBLE) / 10000.0) * (CAST(e.v[i] AS DOUBLE) / 10000.0)))
-        |        - 2 * list_sum(list_transform(range(1, 65), i ->
-        |          (CAST(e.v[i] AS DOUBLE) / 10000.0) *
-        |          (CAST(c.cnum[i] AS DOUBLE) / CAST(c.cden AS DOUBLE) / 10000.0)))
-        |        + list_sum(list_transform(range(1, 65), i ->
-        |          (CAST(c.cnum[i] AS DOUBLE) / CAST(c.cden AS DOUBLE) / 10000.0) *
-        |          (CAST(c.cnum[i] AS DOUBLE) / CAST(c.cden AS DOUBLE) / 10000.0))), c.sid) AS rn
-        |    FROM ei e CROSS JOIN c1 c) d WHERE rn = 1),
-        |c2 AS (
-        |  SELECT sid, list(s ORDER BY dim) AS cnum, max(n) AS cden FROM (
-        |    SELECT a.sid, u.i AS dim, sum(e.v[u.i]) AS s, count(*) AS n
-        |    FROM a2 a JOIN ei e USING (vec_id), range(1, 65) u(i)
-        |    GROUP BY a.sid, u.i) t
-        |  GROUP BY sid)
+        |${(1 to 2).map(LloydOracle.round).mkString(",\n")}
         |SELECT sid AS cluster, CAST(cden AS BIGINT) AS n,
         |  round(CAST(cnum[1] AS DOUBLE) / cden / 10000.0, 4) + 0 AS c0,
         |  round(CAST(cnum[2] AS DOUBLE) / cden / 10000.0, 4) + 0 AS c1,
@@ -828,12 +790,7 @@ object PipelineQueries {
       "q124_temperature_mix",
       s"""WITH c AS (SELECT lang, CAST(count(*) AS BIGINT) AS n
         |  FROM documents GROUP BY lang),
-        |w AS (SELECT lang, n,
-        |  CAST(floor(sqrt(CAST(n AS DOUBLE))) AS BIGINT) AS wt FROM c),
-        |tot AS (SELECT CAST(sum(wt) AS BIGINT) AS z,
-        |  CAST(sum(n) AS BIGINT) AS ntot FROM w),
-        |tgt AS (SELECT lang, n, (t.ntot // 2) * w.wt // t.z AS target
-        |  FROM w, tot t)
+        |${OracleSql.sqrtTargets("w")}
         |SELECT d.lang, max(t.n) AS n, max(t.target) AS target,
         |  CAST(count(*) AS BIGINT) AS picked,
         |  CAST(sum(d.doc_id) AS BIGINT) AS sum_ids
@@ -870,13 +827,7 @@ object PipelineQueries {
       s"""WITH w AS (SELECT doc_id, lang, source, text,
         |  string_split(text, ' ') AS ws FROM documents),
         |s AS (SELECT doc_id, lang, source, text,
-        |  CAST(len(ws) AS BIGINT) AS n_words,
-        |  list_sum(list_transform(ws, x -> CAST(length(x) AS DOUBLE)))
-        |    / len(ws) AS mwl,
-        |  CAST(len(list_filter(ws,
-        |    x -> x IN ('the','a','of','and','to','in','is'))) AS DOUBLE)
-        |    / len(ws) AS sr,
-        |  CAST(len(list_distinct(ws)) AS DOUBLE) / len(ws) AS ttr FROM w),
+        |  ${OracleSql.gopherStats} FROM w),
         |kept AS (SELECT doc_id, lang, source, text FROM s
         |  WHERE n_words BETWEEN 20 AND 50000 AND mwl >= 4.25 AND mwl <= 4.75
         |    AND sr >= 0.04 AND ttr >= 0.35),
@@ -885,12 +836,7 @@ object PipelineQueries {
         |  FROM kept k JOIN ded USING (doc_id)),
         |c AS (SELECT lang, CAST(count(*) AS BIGINT) AS n
         |  FROM corpus GROUP BY lang),
-        |wgt AS (SELECT lang, n,
-        |  CAST(floor(sqrt(CAST(n AS DOUBLE))) AS BIGINT) AS wt FROM c),
-        |tot AS (SELECT CAST(sum(wt) AS BIGINT) AS z,
-        |  CAST(sum(n) AS BIGINT) AS ntot FROM wgt),
-        |tgt AS (SELECT lang, n, (t.ntot // 2) * wgt.wt // t.z AS target
-        |  FROM wgt, tot t)
+        |${OracleSql.sqrtTargets("wgt")}
         |SELECT d.lang, d.source, CAST(count(*) AS BIGINT) AS picked,
         |  CAST(sum(d.doc_id) AS BIGINT) AS sum_ids
         |FROM corpus d JOIN tgt t ON d.lang = t.lang
@@ -1030,12 +976,11 @@ object PipelineQueries {
     // vectors with their exact integer projections (scale 1e8).
     Q(
       "q130_power_iteration",
-      """WITH kk AS (SELECT GREATEST(0, length(bin(count(*))) - 16) AS k
+      s"""WITH kk AS (SELECT GREATEST(0, length(bin(count(*))) - 16) AS k
         |           FROM embeddings),
         |ei AS (
         |  SELECT vec_id,
-        |    list_transform(embedding,
-        |      x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS v
+        |    ${OracleSql.scaledInts} AS v
         |  FROM embeddings),
         |d0 AS (SELECT vec_id, v, CAST(list_sum(v) AS BIGINT) >> kk.k AS ds
         |       FROM ei, kk),
@@ -2463,6 +2408,26 @@ private object MmrOracle {
       |  UNION ALL SELECT p, 4, cid, score FROM s4)
       |ORDER BY probe, sel_round""".stripMargin)
     sb.toString
+  }
+}
+
+/** Lloyd round `r` of q118's oracle: CTE `a<r>`, each vector's nearest
+  * centroid of `c<r-1>`, and `c<r>`, the new integer-sum centroids. */
+private object LloydOracle {
+  def round(r: Int): String = {
+    val c = "(CAST(c.cnum[i] AS DOUBLE) / CAST(c.cden AS DOUBLE) / 10000.0)"
+    s"""a$r AS (
+       |  SELECT vec_id, sid FROM (
+       |    SELECT e.vec_id, c.sid,
+       |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
+       |        ${OracleSql.l2Sq(OracleSql.scaled("e.v"), c)}, c.sid) AS rn
+       |    FROM ei e CROSS JOIN c${r - 1} c) d WHERE rn = 1),
+       |c$r AS (
+       |  SELECT sid, list(s ORDER BY dim) AS cnum, max(n) AS cden FROM (
+       |    SELECT a.sid, u.i AS dim, sum(e.v[u.i]) AS s, count(*) AS n
+       |    FROM a$r a JOIN ei e USING (vec_id), range(1, 65) u(i)
+       |    GROUP BY a.sid, u.i) t
+       |  GROUP BY sid)""".stripMargin
   }
 }
 

@@ -332,15 +332,9 @@ object TextQueries {
     // shuffle-free.
     Q(
       "q122_gopher_rules",
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+      s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
         |s AS (SELECT doc_id,
-        |  CAST(len(ws) AS BIGINT) AS n_words,
-        |  list_sum(list_transform(ws, x -> CAST(length(x) AS DOUBLE)))
-        |    / len(ws) AS mwl,
-        |  CAST(len(list_filter(ws,
-        |    x -> x IN ('the','a','of','and','to','in','is'))) AS DOUBLE)
-        |    / len(ws) AS sr,
-        |  CAST(len(list_distinct(ws)) AS DOUBLE) / len(ws) AS ttr
+        |  ${OracleSql.gopherStats}
         |  FROM w)
         |SELECT doc_id, n_words,
         |  round(mwl, 4) AS mean_wlen, round(sr, 4) AS stop_ratio,
@@ -825,10 +819,7 @@ object TextQueries {
       s"""WITH tok AS (
         |  SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
         |bg AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(range(1, len(ws)),
-        |      i -> ws[i] || ' ' || ws[i+1])) AS b,
-        |    unnest(list_transform(range(1, len(ws)), i -> ws[i])) AS w1
+        |  SELECT doc_id, ${OracleSql.bigramRows}
         |  FROM tok WHERE len(ws) >= 2),
         |bh AS (SELECT doc_id, ${OracleSql.md560("b")} AS hb,
         |         ${OracleSql.md560("w1")} AS hw
@@ -1283,9 +1274,7 @@ object TextQueries {
       s"""WITH tok AS (
         |  SELECT string_split(text, ' ') AS ws FROM documents),
         |bg AS (
-        |  SELECT unnest(list_transform(range(1, len(ws)),
-        |      i -> ws[i] || ' ' || ws[i+1])) AS b,
-        |    unnest(list_transform(range(1, len(ws)), i -> ws[i])) AS w1,
+        |  SELECT ${OracleSql.bigramRows},
         |    unnest(list_transform(range(1, len(ws)), i -> ws[i+1])) AS w2
         |  FROM tok WHERE len(ws) >= 2),
         |bh AS (SELECT ${OracleSql.md560("b")} AS hb, b,

@@ -13,6 +13,11 @@ import org.json4s.jackson.JsonMethods
   *   1. representative query shapes still fit their committed budgets;
   *   2. the gate MECHANISM catches a deliberately-degraded plan —
   *      removing a shuffle_hash hint (SMJ + sorts appear) is flagged.
+  * The budgets count nodes of the AQE-INITIAL plan, before anything
+  * runs. AQE decides exchange reuse at runtime, so the initial plan
+  * lists both sides of a self-join and a lost reuse changes no count;
+  * the budgets do not gate reuse. The q59 test below does, on the final
+  * adaptive plan of an executed query.
   */
 class PlanBudgetSpec extends SparkSpec {
 
@@ -74,6 +79,23 @@ class PlanBudgetSpec extends SparkSpec {
       assert(jobsLaunchedBy(q(spark, sfDir)) == 0, s"$n: second build ran jobs")
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
     }
+  }
+
+  test("q59's capped self-join reuses its exchange at runtime: the final " +
+    "adaptive plan holds a ReusedExchange") {
+    // the Scale doc's self-join rule: one subtree aliased twice, so the
+    // second side reads the first side's shuffle (measured 2x on q88
+    // when a per-side difference broke it)
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val df = SparkEntry.queries("q59_cosine_dups")(spark, sfDir)
+    df.collect()
+    val reused = new AdaptiveSparkPlanHelper {}
+      .collectWithSubqueries(df.queryExecution.executedPlan) {
+        case r: ReusedExchangeExec => r }
+    assert(reused.nonEmpty, "no ReusedExchange in q59's final plan:\n" +
+      df.queryExecution.executedPlan)
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
   }
 
   test("negative: a lost shuffle_hash hint (SMJ + sorts replacing SHJ) " +

@@ -3,14 +3,14 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
-import graft.queries.{DedupQueries, EventQueries}
+import graft.queries.EventQueries
 
-/** Laws for the round-9 batch q212–q215: crafted decay/cell topologies
-  * the gate SFs cannot reach, plus gate-SF brute-force mirrors.
+/** Laws for the round-9 batch q212–q214: crafted decay topologies the
+  * gate SFs cannot reach, plus gate-SF brute-force mirrors (q215's laws
+  * live in VectorSearchSpec).
   */
 class Round9dLawsSpec extends SparkSpec {
   import spark.implicits._
-  import VectorSearchSpec.{dotD, rq}
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -107,63 +107,5 @@ class Round9dLawsSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4))).toSeq
     assert(got == expect)
-  }
-
-  // ---------------------------------------------------------------- q215
-
-  test("law: q215 crafted all-one-cell corpus — IVF candidates equal " +
-    "brute force, recall is exactly 10/10 for every probe") {
-    val dim = 4
-    // centroid 0 dominates: every vector has a large positive first
-    // coordinate, so all assign to cell 0 and every probe's top cell
-    // is 0 — IVF then sees the full corpus and must match brute force.
-    def v(seed: Int): Seq[Float] =
-      Seq(10f, (seed % 7) * 0.1f, (seed % 5) * 0.1f, (seed % 3) * 0.1f)
-    val cents = (0L until 8L).map(c =>
-      c -> (if (c == 0L) Seq(1f, 0f, 0f, 0f)
-            else Seq(-1f, c * 0.01f, 0f, 0f)))
-    val all = (0L until 40L).map(i => (i, v(i.toInt)))
-    val probes = all.filter(p => p._1 >= 10 && p._1 < 18).map {
-      case (qid, qv) =>
-        val cells = cents.map { case (cid, cv) => (cid, dotD(qv, cv)) }
-          .sortBy { case (cid, dt) => (-dt, cid) }.take(2).map(_._1)
-        (qid, qv, cells(0), cells(1))
-    }
-    assert(probes.forall(_._3 == 0L)) // top cell is 0 for every probe
-    val got = DedupQueries.ivfRecallCore(spark,
-      all.toDF("vec_id", "embedding"), cents, probes)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    assert(got.length == 8)
-    assert(got.forall { case (_, h, ppm) => h == 10L && ppm == 1000000L },
-      s"got ${got.toSeq}")
-  }
-
-  test("law: q215 gate SF — 8 probes, 0 <= hits <= 10, recall_ppm = " +
-    "hits * 1e5, and hits match a driver-side brute-force/IVF mirror") {
-    val e = Tables.embeddings(spark, sf).select("vec_id", "embedding")
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
-    val cents = e.filter(_._1 < 8).sortBy(_._1).toSeq
-    val probes = e.filter(p => p._1 >= 10 && p._1 < 18).sortBy(_._1)
-    val assign = e.map { case (id, v) =>
-      id -> cents.map { case (cid, cv) => (cid, dotD(v, cv)) }
-        .minBy { case (cid, dt) => (-dt, cid) }._1
-    }.toMap
-    val expect = probes.map { case (qid, qv) =>
-      val cells = cents.map { case (cid, cv) => (cid, dotD(qv, cv)) }
-        .sortBy { case (cid, dt) => (-dt, cid) }.take(2).map(_._1).toSet
-      val others = e.filter(_._1 != qid)
-      val bf = others.sortBy { case (id, v) => (-rq(qv, v), id) }
-        .take(10).map(_._1).toSet
-      val ivf = others.filter(o => cells(assign(o._1)))
-        .sortBy { case (id, v) => (-rq(qv, v), id) }
-        .take(10).map(_._1).toSet
-      (qid, (bf & ivf).size.toLong)
-    }
-    val got = SparkEntry.queries("q215_ivf_recall")(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .toSeq
-    assert(got.map(g => (g._1, g._2)) == expect.toSeq)
-    assert(got.forall { case (_, h, ppm) =>
-      h >= 0L && h <= 10L && ppm == h * 100000L })
   }
 }

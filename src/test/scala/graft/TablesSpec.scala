@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   * (path, modification time, nanosAsLong) key runs Spark's one-task
   * footer-inference job, later reads pass the memoized schema and run
   * none. The memoized read must resolve exactly like a bare
-  * `spark.read.parquet`. */
+  * `spark.read.parquet`. `events` sets nanosAsLong on the session only
+  * for a TIMESTAMP(NANOS) `ts`. */
 class TablesSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
@@ -86,6 +87,55 @@ class TablesSpec extends SparkSpec {
     } finally before match {
       case Some(v) => spark.conf.set(conf, v)
       case None => spark.conf.unset(conf)
+    }
+  }
+
+  /** Runs `body` with nanosAsLong first unset, restoring its old value. */
+  private def withNanosUnset(body: => Unit): Unit = {
+    val conf = "spark.sql.legacy.parquet.nanosAsLong"
+    val before = spark.conf.getOption(conf)
+    spark.conf.unset(conf)
+    try body finally before match {
+      case Some(v) => spark.conf.set(conf, v)
+      case None => spark.conf.unset(conf)
+    }
+  }
+
+  test("events over a TIMESTAMP(MICROS) ts leaves nanosAsLong unset") {
+    withNanosUnset {
+      Tables.events(spark, sfDir).schema
+      assert(!spark.conf.getAll.contains(
+        "spark.sql.legacy.parquet.nanosAsLong"))
+    }
+  }
+
+  test("events over a TIMESTAMP(NANOS) ts sets nanosAsLong and reads ts " +
+    "as the same microseconds, truncated") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = Files.createTempDirectory("graft-tables-spec").toString
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; " +
+        "required int64 ts (TIMESTAMP(NANOS,false)); }")
+    val nanos = Seq(0L, 1700000000123456789L, 1700000000999999999L)
+    val w = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$dir/events.parquet"))
+      .withType(schema).withConf(spark.sparkContext.hadoopConfiguration)
+      .build()
+    try {
+      val rows = new SimpleGroupFactory(schema)
+      nanos.zipWithIndex.foreach { case (n, i) =>
+        w.write(rows.newGroup().append("event_id", i.toLong).append("ts", n))
+      }
+    } finally w.close()
+    withNanosUnset {
+      val ev = Tables.events(spark, dir)
+      assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+      assert(ev.schema("ts").dataType ==
+        org.apache.spark.sql.types.TimestampType)
+      assert(ev.orderBy("event_id").select(expr("unix_micros(ts)"))
+        .collect().map(_.getLong(0)).toSeq == nanos.map(_ / 1000))
     }
   }
 }

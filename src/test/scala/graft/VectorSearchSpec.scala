@@ -5,14 +5,15 @@ import graft.queries.DedupQueries
 
 /** Laws for the vector-search evaluations that rank by the packed
   * (score, id) key (`DedupQueries.RankKey`): the key's own layout and
-  * order, then per query — q216 (a same-label near-twin that MUST be
-  * excluded; an out-of-range label fails loudly) and q217 (a perfect
-  * codebook shows zero distortion) — crafted topologies plus gate-SF
-  * brute-force mirrors.
+  * order, then per query — q215 (an all-one-cell corpus recalls 10/10),
+  * q218 (the doc holding the query's own token vectors ranks first),
+  * q216 (a same-label near-twin that MUST be excluded; an out-of-range
+  * label fails loudly) and q217 (a perfect codebook shows zero
+  * distortion) — crafted topologies plus gate-SF brute-force mirrors.
   */
 class VectorSearchSpec extends SparkSpec {
   import spark.implicits._
-  import VectorSearchSpec.rq
+  import VectorSearchSpec.{dotD, halfUp, rq}
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -63,6 +64,126 @@ class VectorSearchSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(lRanked == lRows.sortBy { case (s, i, l) => (-s, i, l) }
       .map { case (s, i, _) => (s, i) })
+  }
+
+  // ---------------------------------------------------------------- q215
+
+  test("law: q215 crafted all-one-cell corpus — IVF candidates equal " +
+    "brute force, recall is exactly 10/10 for every probe") {
+    val dim = 4
+    // centroid 0 dominates: every vector has a large positive first
+    // coordinate, so all assign to cell 0 and every probe's top cell
+    // is 0 — IVF then sees the full corpus and must match brute force.
+    def v(seed: Int): Seq[Float] =
+      Seq(10f, (seed % 7) * 0.1f, (seed % 5) * 0.1f, (seed % 3) * 0.1f)
+    val cents = (0L until 8L).map(c =>
+      c -> (if (c == 0L) Seq(1f, 0f, 0f, 0f)
+            else Seq(-1f, c * 0.01f, 0f, 0f)))
+    val all = (0L until 40L).map(i => (i, v(i.toInt)))
+    val probes = all.filter(p => p._1 >= 10 && p._1 < 18).map {
+      case (qid, qv) =>
+        val cells = cents.map { case (cid, cv) => (cid, dotD(qv, cv)) }
+          .sortBy { case (cid, dt) => (-dt, cid) }.take(2).map(_._1)
+        (qid, qv, cells(0), cells(1))
+    }
+    assert(probes.forall(_._3 == 0L)) // top cell is 0 for every probe
+    val got = DedupQueries.ivfRecallCore(spark,
+      all.toDF("vec_id", "embedding"), cents, probes)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(got.length == 8)
+    assert(got.forall { case (_, h, ppm) => h == 10L && ppm == 1000000L },
+      s"got ${got.toSeq}")
+  }
+
+  test("law: q215 gate SF — 8 probes, 0 <= hits <= 10, recall_ppm = " +
+    "hits * 1e5, and hits match a driver-side brute-force/IVF mirror") {
+    val e = Tables.embeddings(spark, sf).select("vec_id", "embedding")
+      .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
+    val cents = e.filter(_._1 < 8).sortBy(_._1).toSeq
+    val probes = e.filter(p => p._1 >= 10 && p._1 < 18).sortBy(_._1)
+    val assign = e.map { case (id, v) =>
+      id -> cents.map { case (cid, cv) => (cid, dotD(v, cv)) }
+        .minBy { case (cid, dt) => (-dt, cid) }._1
+    }.toMap
+    val expect = probes.map { case (qid, qv) =>
+      val cells = cents.map { case (cid, cv) => (cid, dotD(qv, cv)) }
+        .sortBy { case (cid, dt) => (-dt, cid) }.take(2).map(_._1).toSet
+      val others = e.filter(_._1 != qid)
+      val bf = others.sortBy { case (id, v) => (-rq(qv, v), id) }
+        .take(10).map(_._1).toSet
+      val ivf = others.filter(o => cells(assign(o._1)))
+        .sortBy { case (id, v) => (-rq(qv, v), id) }
+        .take(10).map(_._1).toSet
+      (qid, (bf & ivf).size.toLong)
+    }
+    val got = SparkEntry.queries("q215_ivf_recall")(spark, sf)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .toSeq
+    assert(got.map(g => (g._1, g._2)) == expect.toSeq)
+    assert(got.forall { case (_, h, ppm) =>
+      h >= 0L && h <= 10L && ppm == h * 100000L })
+  }
+
+  // ---------------------------------------------------------------- q218
+
+  test("law: q218 crafted — the doc holding the query's own 4 token " +
+    "vectors scores Σ_i max_j <q_i,q_j> and ranks first") {
+    val qv: Seq[Float] = (0 until 64).map(i => ((i % 5) + 1) * 0.1f)
+    val weak: Seq[Float] = (0 until 64).map(_ => 0.01f)
+    val rows = Seq(
+      (30L, qv), // the query itself (excluded)
+      (1L, qv), // exact multi-vector match
+      (2L, weak), (3L, weak.map(_ * 2)), (4L, weak.map(_ * 3)),
+      (5L, weak.map(_ * 4)), (6L, weak.map(_ * 5)))
+    val got = DedupQueries.maxSimCore(spark,
+      rows.toDF("vec_id", "embedding"), Seq((30L, qv))).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    // mirror: score of doc 1 = Σ_i max_j rq(dot(q_i, q_j))
+    val expectTop = (0 until 4).map { i =>
+      (0 until 4).map(j =>
+        halfUp(dotD(qv, qv, j * 16, j * 16 + 16) * 10000)).max
+    }.sum
+    // (dot over slice i of q against slice j of doc — doc 1 IS qv, so
+    // max_j includes j = i, the self term, which dominates here)
+    assert(got.head._3 == 1L && got.head._2 == 1L)
+    val gotTop = got.head._4
+    val mirror = (0 until 4).map { i =>
+      (0 until 4).map { j =>
+        var acc = 0.0; var t = 0
+        while (t < 16) {
+          acc += qv(j * 16 + t).toDouble * qv(i * 16 + t).toDouble; t += 1
+        }
+        halfUp(acc * 10000)
+      }.max
+    }.sum
+    assert(gotTop == mirror, s"got $gotTop expect $mirror ($expectTop)")
+    assert(got.map(_._2).toSeq == Seq(1L, 2L, 3L, 4L, 5L))
+  }
+
+  test("law: q218 at the gate SF equals a driver-side MaxSim mirror") {
+    val e = Tables.embeddings(spark, sf).select("vec_id", "embedding")
+      .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
+    val probes = e.filter(p => p._1 >= 30 && p._1 < 34).sortBy(_._1)
+    val expect = probes.flatMap { case (qid, qv) =>
+      e.filter(_._1 != qid).map { case (id, v) =>
+        val score = (0 until 4).map { i =>
+          (0 until 4).map { j =>
+            var acc = 0.0; var t = 0
+            while (t < 16) {
+              acc += v(j * 16 + t).toDouble * qv(i * 16 + t).toDouble
+              t += 1
+            }
+            halfUp(acc * 10000)
+          }.max
+        }.sum
+        (id, score)
+      }.sortBy { case (id, sc) => (-sc, id) }.take(5)
+        .zipWithIndex.map { case ((id, sc), k) => (qid, k + 1L, id, sc) }
+    }.toSeq
+    val got = SparkEntry.queries("q218_maxsim")(spark, sf)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getLong(3))).toSeq
+    assert(got == expect)
   }
 
   // ---------------------------------------------------------------- q216

@@ -8,11 +8,14 @@ Usage: bench_compare.py <old.json> <new.json> [ratio_threshold=2.0]
 
 Accepts either the driver's wrapper ({"tail": "..."} with the metric line
 inside) or a raw metric line / file containing one; handles both the
-legacy full-name dict and the positional qn/queries centisecond encoding.
+legacy full-name dict and the positional qn/queries centisecond encoding
+(decoded by bench_guard.decode_queries, the one parser of both).
 """
 import json
 import re
 import sys
+
+from bench_guard import decode_queries
 
 
 def load_queries(path):
@@ -25,12 +28,7 @@ def load_queries(path):
     if m is None:
         raise SystemExit(f"no metric line in {path}")
     bench = json.loads(m.group(0))
-    q = bench["queries"]
-    if isinstance(q, list):
-        ids = bench["qn"].split(",")
-        assert len(ids) == len(q), "qn/queries misaligned"
-        return {"q" + i: cs / 100.0 for i, cs in zip(ids, q)}, bench["value"]
-    return ({k.split("_")[0]: v for k, v in q.items()}, bench["value"])
+    return decode_queries(bench), bench["value"]
 
 
 def main():

@@ -53,6 +53,28 @@ def short(name):
     return name.split("_")[0]
 
 
+def decode_queries(bench):
+    """{qNN: seconds} from one parsed Bench metric line, either encoding.
+
+    Positional (round 8): "qn" = comma-joined qNN ids with the 'q'
+    stripped, "queries" = centisecond ints in the same order; since
+    round 11 a token may be an inclusive range over the name-sorted
+    emission order ("1-9,100-109,10,..."). Ids re-pad as qNN with a
+    2-digit minimum (q01..q99, q100+ as-is). Legacy: "queries" is a
+    {full name: seconds} dict, keyed here by its qNN prefix."""
+    if not isinstance(bench["queries"], list):
+        return {short(k): v for k, v in bench["queries"].items()}
+    ids = []
+    for tok in bench["qn"].split(","):
+        if "-" in tok:
+            a, b = tok.split("-")
+            ids.extend(range(int(a), int(b) + 1))
+        else:
+            ids.append(int(tok))
+    assert len(ids) == len(bench["queries"]), "qn/queries misaligned"
+    return {f"q{n:02d}": cs / 100.0 for n, cs in zip(ids, bench["queries"])}
+
+
 def main() -> int:
     src = open(sys.argv[1]) if len(sys.argv) > 1 else sys.stdin
     lines = list(src)
@@ -66,24 +88,7 @@ def main() -> int:
         print("== bench guard FAIL: no metric line found in input")
         return 1
     bench = json.loads(line[line.index("{"):])
-    if isinstance(bench["queries"], list):
-        # round-8 positional encoding: "qn" = comma-joined qNN ids with
-        # the 'q' stripped, "queries" = centisecond ints, same order.
-        # round-11: tokens may be inclusive ranges over the name-sorted
-        # emission order ("1-9,100-109,10,..."); ids re-pad as qNN with a
-        # 2-digit minimum (q01..q99, q100+ as-is).
-        ids = []
-        for tok in bench["qn"].split(","):
-            if "-" in tok:
-                a, b = tok.split("-")
-                ids.extend(range(int(a), int(b) + 1))
-            else:
-                ids.append(int(tok))
-        assert len(ids) == len(bench["queries"]), "qn/queries misaligned"
-        bench_q = {f"q{n:02d}": cs / 100.0
-                   for n, cs in zip(ids, bench["queries"])}
-    else:
-        bench_q = {short(k): v for k, v in bench["queries"].items()}
+    bench_q = decode_queries(bench)
     # pick the baseline matching the run's SF when one is committed
     # (round-13: an sf0.1 line fed to the guard silently compared
     # against the sf0.01 baseline); fall back to the sf0.01 dev gate

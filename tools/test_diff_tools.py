@@ -1,6 +1,8 @@
 """Tests for the two refactor-identity tools, plan_diff.py and
-oracle_diff.py, and for the plan-shape gate plan_guard.py: what each
-treats as equal (or within budget), what it reports, and its exit code.
+oracle_diff.py, the plan-shape gate plan_guard.py, the oracle clone
+report oracle_clones.py and the Bench metric-line decoder the bench
+tools share: what each treats as equal (or within budget), what it
+reports, and its exit code.
 
 Run: python3 -m unittest discover -s tools -p 'test_*.py'
 """
@@ -12,6 +14,8 @@ import sys
 import tempfile
 import unittest
 
+import bench_guard
+import oracle_clones
 import oracle_diff
 import plan_diff
 
@@ -229,6 +233,71 @@ class PlanGuardTest(unittest.TestCase):
         with open(os.path.join(TOOLS, "plan_budget.json")) as f:
             some = sorted(json.load(f))[0]
         self.assertIn(f"MISSING {some}", r.stdout)
+
+
+class OracleClonesTest(unittest.TestCase):
+    # 70 tokens: SELECT, then c0..c34 joined by commas
+    RUN = "SELECT " + ", ".join(f"c{i}" for i in range(35))
+
+    def report(self, *literals):
+        """Run oracle_clones.py over one Scala file holding `literals`,
+        each a query's triple-quoted oracle."""
+        src = "\n".join(f'  Q(\n    "q{i}_x",\n    {lit}\n  ) {{ f }},'
+                        for i, lit in enumerate(literals, 1))
+        path, = write_files(self, [("X.scala", src)])
+        return run_tool("oracle_clones.py", os.path.dirname(path))
+
+    def test_shared_run_is_reported(self):
+        r = self.report(f'"""WITH a AS ({self.RUN} FROM t)"""',
+                        f'"""{self.RUN} FROM u WHERE x > 1"""')
+        self.assertEqual(r.returncode, 1, r.stdout)
+        self.assertIn("CLONE 71 tokens: X.scala:q1_x:", r.stdout)
+        self.assertIn("X.scala:q2_x:", r.stdout)
+
+    def test_run_differing_in_one_token_is_not(self):
+        other = self.RUN.replace("c17", "d17")
+        r = self.report(f'"""{self.RUN} FROM t"""', f'"""{other} FROM t"""')
+        self.assertEqual(r.returncode, 0, r.stdout)
+        self.assertIn("0 shared runs", r.stdout)
+
+    def test_interpolated_twin_is_not(self):
+        twin = "s\"\"\"WITH ${OracleSql.twin(\"h\", \"k\")} FROM t\"\"\""
+        r = self.report(twin, twin.replace("FROM t", "FROM u"))
+        self.assertEqual(r.returncode, 0, r.stdout)
+        self.assertEqual(
+            oracle_clones.tokenize('WITH ${OracleSql.twin("h", "k")},\nx'),
+            ["WITH", '${OracleSql.twin("h","k")}', ",", "x"])
+
+    def test_margin_is_dropped_and_repeat_in_one_literal_found(self):
+        body = f"{self.RUN}\n        |UNION ALL\n        |{self.RUN}"
+        r = self.report(f'"""{body}""".stripMargin')
+        self.assertEqual(r.returncode, 1, r.stdout)
+        self.assertIn("CLONE 70 tokens", r.stdout)
+        self.assertNotIn("|", r.stdout.split("tokens:")[1].split("...")[0])
+
+    def test_queries_have_no_unlisted_clone(self):
+        r = run_tool("oracle_clones.py")
+        self.assertEqual(r.returncode, 0, r.stdout)
+
+
+class BenchDecodeTest(unittest.TestCase):
+    LINE = {"metric": "total_s", "value": 1.0,
+            "qn": "1-3,10", "queries": [10, 20, 30, 40]}
+
+    def test_ranges_expand_and_ids_pad(self):
+        self.assertEqual(bench_guard.decode_queries(self.LINE),
+                         {"q01": 0.1, "q02": 0.2, "q03": 0.3, "q10": 0.4})
+
+    def test_legacy_dict_keys_by_prefix(self):
+        self.assertEqual(bench_guard.decode_queries(
+            {"queries": {"q01_agg_pricing": 1.5, "q100_x": 2.0}}),
+            {"q01": 1.5, "q100": 2.0})
+
+    def test_bench_compare_reads_a_ranged_line(self):
+        pa, = write_files(self, [("a.json", json.dumps(self.LINE))])
+        r = run_tool("bench_compare.py", pa, pa)
+        self.assertEqual(r.returncode, 0, r.stderr)
+        self.assertIn("== shared 4 queries", r.stdout)
 
 
 if __name__ == "__main__":
