@@ -293,6 +293,26 @@ object Aggregators {
         .ExpressionEncoder[Seq[(String, Long)]]()
   }
 
+  /** An aggregator whose state is `size` long lanes, zero at the start,
+    * merged element-wise and returned as is: the shape of [[GramAgg]]
+    * and [[PermLanesAgg]], which differ only in `reduce`. */
+  sealed abstract class LongLanesAgg[IN](size: Int)
+      extends Aggregator[IN, Array[Long], Seq[Long]] {
+    override def zero: Array[Long] = new Array[Long](size)
+    override def merge(x: Array[Long], y: Array[Long]): Array[Long] = {
+      var i = 0
+      while (i < size) { x(i) += y(i); i += 1 }
+      x
+    }
+    override def finish(r: Array[Long]): Seq[Long] = r.toSeq
+    override def bufferEncoder: Encoder[Array[Long]] =
+      org.apache.spark.sql.catalyst.encoders
+        .ExpressionEncoder[Array[Long]]()
+    override def outputEncoder: Encoder[Seq[Long]] =
+      org.apache.spark.sql.catalyst.encoders
+        .ExpressionEncoder[Seq[Long]]()
+  }
+
   /** Fixed-point Gram accumulator for q225: per input vector, quantize
     * each component to round(x·1e4) (the exact BigDecimal HALF_UP
     * Spark's own Round uses, so the result is byte-identical to the SQL
@@ -305,10 +325,7 @@ object Aggregators {
     * through a Generate (measured 44 s → sub-second at the 100×
     * replica: HOF lambdas never codegen, a fused JVM loop does the
     * same multiplies at memory speed). */
-  final class GramAgg(d: Int)
-      extends Aggregator[Seq[Float], Array[Long], Seq[Long]] {
-    private val size = d * d + d + 1
-    override def zero: Array[Long] = new Array[Long](size)
+  final class GramAgg(d: Int) extends LongLanesAgg[Seq[Float]](d * d + d + 1) {
     override def reduce(buf: Array[Long], xs: Seq[Float]): Array[Long] = {
       val q = new Array[Long](d)
       var i = 0
@@ -329,18 +346,6 @@ object Aggregators {
       buf(d * d + d) += 1L
       buf
     }
-    override def merge(x: Array[Long], y: Array[Long]): Array[Long] = {
-      var i = 0
-      while (i < size) { x(i) += y(i); i += 1 }
-      x
-    }
-    override def finish(r: Array[Long]): Seq[Long] = r.toSeq
-    override def bufferEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders
-        .ExpressionEncoder[Array[Long]]()
-    override def outputEncoder: Encoder[Seq[Long]] =
-      org.apache.spark.sql.catalyst.encoders
-        .ExpressionEncoder[Seq[Long]]()
   }
 
   /** Fixed-point permutation-test accumulator for q248 (the GramAgg
@@ -354,8 +359,7 @@ object Aggregators {
     * rows (the r10 fused-buffer rule: a per-row O(k) expansion feeding
     * a low-cardinality aggregate belongs in an Aggregator buffer). */
   final class PermLanesAgg(lanes: Int)
-      extends Aggregator[(Long, Long), Array[Long], Seq[Long]] {
-    override def zero: Array[Long] = new Array[Long](lanes)
+      extends LongLanesAgg[(Long, Long)](lanes) {
     override def reduce(buf: Array[Long], in: (Long, Long)): Array[Long] = {
       val (h, m) = in
       var k = 0
@@ -366,17 +370,5 @@ object Aggregators {
       }
       buf
     }
-    override def merge(x: Array[Long], y: Array[Long]): Array[Long] = {
-      var i = 0
-      while (i < lanes) { x(i) += y(i); i += 1 }
-      x
-    }
-    override def finish(r: Array[Long]): Seq[Long] = r.toSeq
-    override def bufferEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders
-        .ExpressionEncoder[Array[Long]]()
-    override def outputEncoder: Encoder[Seq[Long]] =
-      org.apache.spark.sql.catalyst.encoders
-        .ExpressionEncoder[Seq[Long]]()
   }
 }

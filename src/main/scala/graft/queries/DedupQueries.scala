@@ -106,6 +106,10 @@ object DedupQueries {
     val ML = 17592186044416L
     /** A dot product quantized to round(dot·1e4) as BIGINT. */
     def quant(dot: Column): Column = round(dot * 10000).cast("long")
+    /** `embedding` as scaled ints, [[quant]] per dim: the Spark twin of
+      * `OracleSql.scaledInts`. */
+    def scaledInts: Column =
+      transform(col("embedding"), x => quant(x.cast("double")))
     /** [[quant]] of the codegen'd `dot_product(a, b)`. */
     def rq(a: Column, b: Column): Column =
       quant(call_function("dot_product", a, b))
@@ -157,6 +161,12 @@ object DedupQueries {
       recallPpm(g.select(col("qid") +: hits: _*).selectExpr("qid", stack),
         Seq("qid", param))
     }
+    /** The ranked tail: one row (qid, rk, `decode`...) per key of the
+      * gathered array `ks`, rk its 1-based position, ordered by (qid, rk). */
+    def ranks(g: DataFrame, decode: Column*): DataFrame =
+      g.select(col("qid"), posexplode(col("ks")).as(Seq("p", "key")))
+        .select(col("qid") +: (col("p") + 1L).cast("long").as("rk") +: decode: _*)
+        .orderBy("qid", "rk")
     private def recallPpm(h: DataFrame, keys: Seq[String]): DataFrame =
       h.select(keys.map(col) ++ Seq(col("hits"),
           (col("hits") * 100000L).as("recall_ppm")): _*)
@@ -332,16 +342,20 @@ object DedupQueries {
       |     FROM embeddings) p) rawb) cappedb
       |WHERE __rk <= 256)""".stripMargin
 
-  /** The oracle-SQL twin of [[rpPairs]] (no ORDER BY; composable in CTEs),
-    * cap included via [[rpSideSql]]. */
-  private val rpPairsSql: String =
+  /** The oracle-SQL twin of [[bucketCosinePairs]] over the bucketed
+    * relation `side`, aliased `a` and `b` (no ORDER BY). */
+  private def bucketCosinePairsSql(side: String): String =
     s"""SELECT a.vec_id AS id_a, b.vec_id AS id_b,
       |  round(${OracleSql.dot("a.embedding", "b.embedding")}, 4) + 0
       |    AS rdot
-      |FROM $rpSideSql a
-      |JOIN $rpSideSql b
+      |FROM $side a
+      |JOIN $side b
       |  ON a.bucket = b.bucket AND a.vec_id < b.vec_id
       |WHERE round(${OracleSql.dot("a.embedding", "b.embedding")}, 4) + 0 > 0.15""".stripMargin
+
+  /** The oracle-SQL twin of [[rpPairs]] (no ORDER BY; composable in CTEs),
+    * cap included via [[rpSideSql]]. */
+  private val rpPairsSql: String = bucketCosinePairsSql(rpSideSql)
 
   /** Degree bound for connected-components edge input: each id_a of
     * `pairs(id_a, id_b, rdot)` keeps its 32 strongest edges (rdot desc,
@@ -384,6 +398,15 @@ object DedupQueries {
       |      AS rn
       |  FROM ($rpPairsSql) full_pairs) ranked
       |WHERE rn <= 32""".stripMargin
+
+  /** The connected-components oracle over [[rpEdgesSql]]: CTEs `pairs`,
+    * `und` and `reach`, then `grp`, each node (selected as `id`, e.g.
+    * `id AS vec_id`) with its component label `label`. */
+  private def rpGroupsSql(id: String, label: String): String =
+    s"""WITH RECURSIVE pairs AS ($rpEdgesSql),
+      |${OracleSql.und("pairs")},
+      |${OracleSql.reach},
+      |grp AS (SELECT $id, min(r) AS $label FROM reach GROUP BY id)""".stripMargin
 
   /** The oracle-SQL twin of [[boundaryOverlap]] with the real 60-bit
     * hash (q197's pair set, composable — no ORDER BY). */
@@ -579,9 +602,7 @@ object DedupQueries {
     // (consecutive doc pairs — in production the LSH candidates feed this).
     Q(
       "q54_jaccard",
-      s"""WITH hs AS (
-        |  SELECT doc_id, ${OracleSql.hashedShingles("ws")} AS sh
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents) i)
+      s"""WITH ${OracleSql.shingleSets}
         |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
         |  round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
         |        len(list_distinct(list_concat(a.sh, b.sh))), 4) AS jac
@@ -615,15 +636,9 @@ object DedupQueries {
         |           WHERE vec_id < 3),
         |scored AS (
         |  SELECT q.qid, e.vec_id,
-        |    round(${OracleSql.dot("e.embedding", "q.qv")}
-        |      / (sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |       * sqrt(list_sum(list_transform(q.qv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 4) + 0
-        |      AS rcos
+        |    ${OracleSql.cosine("e.embedding", "q.qv")} AS rcos
         |  FROM embeddings e, q WHERE e.vec_id != q.qid),
-        |ranked AS (
-        |  SELECT qid, vec_id, rcos,
-        |    row_number() OVER (PARTITION BY qid ORDER BY rcos DESC, vec_id) AS rn
-        |  FROM scored)
+        |${OracleSql.rcosRanked}
         |SELECT qid, vec_id, rcos FROM ranked WHERE rn <= 5
         |ORDER BY qid, rcos DESC, vec_id""".stripMargin
     ) { (s, d) =>
@@ -644,9 +659,7 @@ object DedupQueries {
       "q56_ann_lsh",
       s"""WITH b AS (
         |  SELECT vec_id, embedding,
-        |    CAST(list_sum(list_transform(range(0, 4), i ->
-        |      CASE WHEN embedding[i + 1] > 0 THEN 1 << i ELSE 0 END)) AS BIGINT)
-        |      AS bucket
+        |    ${OracleSql.signBucket("4")} AS bucket
         |  FROM embeddings),
         |q AS (SELECT vec_id AS qid, embedding AS qv, bucket FROM b
         |      WHERE vec_id < 5),
@@ -689,19 +702,8 @@ object DedupQueries {
         |  SELECT e.vec_id, c.cid,
         |    ${OracleSql.dot("e.embedding", "c.cv")} AS dot
         |  FROM embeddings e, cent c),
-        |assign AS (
-        |  SELECT vec_id, cid FROM (
-        |    SELECT vec_id, cid,
-        |      row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cid) AS rn
-        |    FROM dots) t WHERE rn = 1),
-        |probes AS (
-        |  SELECT vec_id AS qid, cid FROM (
-        |    SELECT vec_id, cid,
-        |      row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cid) AS rn
-        |    FROM dots WHERE vec_id IN (10, 11, 12)) t WHERE rn <= 2),
-        |cand AS (
-        |  SELECT p.qid, a.vec_id FROM probes p
-        |  JOIN assign a ON a.cid = p.cid AND a.vec_id != p.qid),
+        |${OracleSql.ivfProbes("dots", "10, 11, 12")},
+        |${OracleSql.cellCand("cand")},
         |scored AS (
         |  SELECT c.qid, c.vec_id,
         |    round(${OracleSql.dot("e.embedding", "q.embedding")}, 4) + 0
@@ -758,9 +760,7 @@ object DedupQueries {
       "q59_cosine_dups",
       s"""WITH braw AS (
         |  SELECT vec_id, embedding,
-        |    CAST(list_sum(list_transform(range(0, p.nb), i ->
-        |      CASE WHEN embedding[i + 1] > 0 THEN 1 << i ELSE 0 END)) AS BIGINT)
-        |      AS bucket
+        |    ${OracleSql.signBucket("p.nb")} AS bucket
         |  FROM embeddings,
         |    (SELECT GREATEST(6, length(bin(count(*) - 1)) - 5) AS nb
         |     FROM embeddings) p),
@@ -769,11 +769,7 @@ object DedupQueries {
         |    SELECT vec_id, embedding, bucket,
         |      row_number() OVER (PARTITION BY bucket ORDER BY vec_id) AS rk
         |    FROM braw) t WHERE rk <= 256)
-        |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  round(${OracleSql.dot("a.embedding", "b.embedding")}, 4) + 0
-        |    AS rdot
-        |FROM b a JOIN b b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-        |WHERE round(${OracleSql.dot("a.embedding", "b.embedding")}, 4) + 0 > 0.15
+        |${bucketCosinePairsSql("b")}
         |ORDER BY id_a, id_b""".stripMargin
     ) { (s, d) =>
       // No persist: signBucket is a handful of element_at's per row —
@@ -836,10 +832,7 @@ object DedupQueries {
     // rows the sort would have sorted.
     Q(
       "q111_canonical_docs",
-      s"""WITH RECURSIVE pairs AS ($rpEdgesSql),
-        |${OracleSql.und("pairs")},
-        |${OracleSql.reach},
-        |grp AS (SELECT id AS vec_id, min(r) AS group_id FROM reach GROUP BY id),
+      s"""${rpGroupsSql("id AS vec_id", "group_id")},
         |qual AS (SELECT doc_id AS vec_id, n_chars FROM documents),
         |best AS (SELECT g.group_id, max(q.n_chars) AS best_len,
         |           CAST(count(*) AS BIGINT) AS n_members
@@ -883,11 +876,7 @@ object DedupQueries {
     // per-row hash — both scale-free.
     Q(
       "q134_group_split",
-      s"""WITH RECURSIVE pairs AS ($rpEdgesSql),
-        |${OracleSql.und("pairs")},
-        |${OracleSql.reach},
-        |grp AS (SELECT id AS vec_id, min(r) AS group_id FROM reach
-        |        GROUP BY id),
+      s"""${rpGroupsSql("id AS vec_id", "group_id")},
         |base AS (
         |  SELECT e.vec_id, coalesce(g.group_id, e.vec_id) AS group_id
         |  FROM embeddings e LEFT JOIN grp g USING (vec_id)),
@@ -1010,9 +999,7 @@ object DedupQueries {
     // array_intersect, a bounded constant, not the q104 struct trap.
     Q(
       "q119_containment",
-      s"""WITH hs AS (
-        |  SELECT doc_id, ${OracleSql.hashedShingles("ws")} AS sh
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents) i)
+      s"""WITH ${OracleSql.shingleSets}
         |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
         |  CAST(len(a.sh) AS BIGINT) AS n_a, CAST(len(b.sh) AS BIGINT) AS n_b,
         |  CAST(len(list_intersect(a.sh, b.sh)) AS BIGINT) AS n_common,
@@ -1141,21 +1128,16 @@ object DedupQueries {
         s"CAST(${OracleSql.dot64(s"$a.v[i]", s"$b.v[i]")} AS DOUBLE)"
       val cos = s"${dot("a", "b")} /\n    " +
         s"(sqrt(${dot("a", "a")}) * sqrt(${dot("b", "b")}))"
+      val vv = "list_sum(list_transform(v, x ->\n" +
+        "      (CAST(x AS DOUBLE) / 10000.0) * (CAST(x AS DOUBLE) / 10000.0)))"
       s"""WITH p AS (SELECT (CAST(1 AS BIGINT) <<
         |    CAST(GREATEST(3, LEAST(10, length(bin(count(*) - 1)) - 6))
         |      AS INTEGER)) AS k FROM embeddings),
         |ei AS (SELECT vec_id,
         |    ${OracleSql.scaledInts} AS v
         |  FROM embeddings),
-        |ei2 AS (SELECT vec_id, v,
-        |    list_sum(list_transform(v, x ->
-        |      (CAST(x AS DOUBLE) / 10000.0) * (CAST(x AS DOUBLE) / 10000.0)))
-        |      AS vv
-        |  FROM ei),
-        |seeds AS (SELECT vec_id AS sid, v AS c,
-        |    list_sum(list_transform(v, x ->
-        |      (CAST(x AS DOUBLE) / 10000.0) * (CAST(x AS DOUBLE) / 10000.0)))
-        |      AS cc
+        |ei2 AS (SELECT vec_id, v, $vv AS vv FROM ei),
+        |seeds AS (SELECT vec_id AS sid, v AS c, $vv AS cc
         |  FROM ei, p WHERE vec_id < p.k),
         |coarse AS (SELECT sid AS cid, c AS gc, cc AS gcc
         |  FROM seeds, p WHERE sid < LEAST(16, p.k)),
@@ -1191,8 +1173,7 @@ object DedupQueries {
       // vd = exact integer values as doubles; vs = vd/1e4 (the assignment
       // space); both are plain projected columns so the HOFs run once
       val ei = emb(s, d).select(col("vec_id"),
-          transform(col("embedding"),
-            x => round(x.cast("double") * 10000).cast("long")).as("v"))
+          RankKey.scaledInts.as("v"))
         .select(col("vec_id"),
           transform(col("v"), _.cast("double")).as("vd"))
         .select(col("vec_id"), col("vd"),
@@ -1451,9 +1432,7 @@ object DedupQueries {
       "q138_pq_ann",
       s"""WITH ${OracleSql.pqSubdots},
         |${OracleSql.pqCodes},
-        |lut AS (
-        |  SELECT s.vec_id AS qid, s.m, s.cid, s.d FROM subdots s
-        |  WHERE s.vec_id IN (20, 21, 22)),
+        |${OracleSql.pqLut("20, 21, 22")},
         |adc AS (
         |  SELECT l.qid, k.vec_id,
         |    ${OracleSql.pqSlotSum("l.")} AS adc
@@ -1672,11 +1651,7 @@ object DedupQueries {
     // pair union (max-marker groupBy — the q109 twin-agg pattern).
     Q(
       "q146_lsh_recall",
-      s"""WITH ws AS (SELECT doc_id, string_split(text, ' ') AS ws
-        |            FROM documents),
-        |hs AS (
-        |  SELECT doc_id, ${OracleSql.hashedShingles("ws")} AS sh
-        |  FROM ws),
+      s"""WITH ${OracleSql.wordShingleSets},
         |truth AS (
         |  SELECT p.doc_id AS id_a, c.doc_id AS id_b
         |  FROM hs p JOIN hs c ON c.doc_id > p.doc_id
@@ -1910,7 +1885,7 @@ object DedupQueries {
     Q(
       "q160_novelty",
       s"""WITH shr AS (
-        |  SELECT doc_id, unnest(${OracleSql.shingles3("ws")}) AS s
+        |  SELECT doc_id, unnest(${OracleSql.shingles("ws")}) AS s
         |  FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents) t),
         |dh AS (
         |  SELECT DISTINCT doc_id,
@@ -1972,25 +1947,10 @@ object DedupQueries {
         |  SELECT vec_id, cid,
         |    ${OracleSql.pqSlotSum("")} AS dot
         |  FROM subdots GROUP BY vec_id, cid),
-        |assign AS (
-        |  SELECT vec_id, cid FROM (
-        |    SELECT vec_id, cid,
-        |      row_number() OVER (PARTITION BY vec_id
-        |        ORDER BY dot DESC, cid) AS rn
-        |    FROM fulld) t WHERE rn = 1),
-        |probes AS (
-        |  SELECT vec_id AS qid, cid FROM (
-        |    SELECT vec_id, cid,
-        |      row_number() OVER (PARTITION BY vec_id
-        |        ORDER BY dot DESC, cid) AS rn
-        |    FROM fulld WHERE vec_id IN (30, 31, 32)) t WHERE rn <= 2),
+        |${OracleSql.ivfProbes("fulld", "30, 31, 32")},
         |${OracleSql.pqCodes},
-        |lut AS (
-        |  SELECT s.vec_id AS qid, s.m, s.cid, s.d FROM subdots s
-        |  WHERE s.vec_id IN (30, 31, 32)),
-        |cellcand AS (
-        |  SELECT p.qid, a.vec_id FROM probes p
-        |  JOIN assign a ON a.cid = p.cid AND a.vec_id != p.qid),
+        |${OracleSql.pqLut("30, 31, 32")},
+        |${OracleSql.cellCand("cellcand")},
         |adc AS (
         |  SELECT l.qid, k.vec_id,
         |    ${OracleSql.pqSlotSum("l.")} AS adc
@@ -2155,10 +2115,7 @@ object DedupQueries {
     // re-run CC.
     Q(
       "q182_leakage_free_split",
-      s"""WITH RECURSIVE pairs AS ($rpEdgesSql),
-        |${OracleSql.und("pairs")},
-        |${OracleSql.reach},
-        |grp AS (SELECT id AS doc_id, min(r) AS lbl FROM reach GROUP BY id),
+      s"""${rpGroupsSql("id AS doc_id", "lbl")},
         |asg AS (
         |  SELECT d.doc_id, d.n_chars, coalesce(g.lbl, d.doc_id) AS group_id
         |  FROM documents d LEFT JOIN grp g USING (doc_id)),
@@ -2440,8 +2397,7 @@ object DedupQueries {
     ) { (s, d) =>
       import graft.functions.ArrayOps
       val ei = emb(s, d).select(col("vec_id"), col("label"),
-        transform(col("embedding"),
-          x => round(x.cast("double") * 10000).cast("long")).as("v"))
+        RankKey.scaledInts.as("v"))
         .localCheckpoint(true) // two consumers: centroid sums + members
       val cs = ei.select(col("label"),
           posexplode(col("v")).as(Seq("i0", "x")))
@@ -2539,8 +2495,7 @@ object DedupQueries {
         |  SELECT p.qid, e.vec_id FROM probes p
         |  JOIN embeddings e ON e.vec_id != p.qid
         |  QUALIFY row_number() OVER (PARTITION BY p.qid ORDER BY
-        |    CAST(round(${OracleSql.dot("e.embedding", "p.qv")}
-        |      * 10000) AS BIGINT) DESC, e.vec_id) <= 10),
+        |    ${OracleSql.rq("e.embedding", "p.qv")} DESC, e.vec_id) <= 10),
         |cand AS (
         |  SELECT pr.qid, a.vec_id FROM pr
         |  JOIN assign a ON a.cid = pr.cid AND a.vec_id != pr.qid),
@@ -2549,10 +2504,8 @@ object DedupQueries {
         |  JOIN embeddings e ON e.vec_id = c.vec_id
         |  JOIN embeddings q ON q.vec_id = c.qid
         |  QUALIFY row_number() OVER (PARTITION BY c.qid ORDER BY
-        |    CAST(round(${OracleSql.dot("e.embedding", "q.embedding")}
-        |      * 10000) AS BIGINT) DESC, c.vec_id) <= 10)
-        |SELECT b.qid, CAST(count(i.vec_id) AS BIGINT) AS hits,
-        |  CAST(count(i.vec_id) * 100000 AS BIGINT) AS recall_ppm
+        |    ${OracleSql.rq("e.embedding", "q.embedding")} DESC, c.vec_id) <= 10)
+        |SELECT b.qid, ${OracleSql.recallCounts("i.vec_id")}
         |FROM bf b LEFT JOIN ivf i
         |  ON b.qid = i.qid AND b.vec_id = i.vec_id
         |GROUP BY b.qid ORDER BY b.qid""".stripMargin
@@ -2579,8 +2532,7 @@ object DedupQueries {
         |  FROM embeddings WHERE vec_id >= 10 AND vec_id < 18),
         |hn AS (
         |  SELECT p.qid, e.vec_id, e.label,
-        |    CAST(round(${OracleSql.dot("e.embedding", "p.qv")}
-        |      * 10000) AS BIGINT) AS rq
+        |    ${OracleSql.rq("e.embedding", "p.qv")} AS rq
         |  FROM probes p JOIN embeddings e
         |    ON e.vec_id != p.qid AND e.label != p.ql
         |  QUALIFY row_number() OVER (PARTITION BY p.qid
@@ -2622,8 +2574,7 @@ object DedupQueries {
         |    ORDER BY adc_q DESC, vec_id) <= 16),
         |ex AS (
         |  SELECT t.qid, t.vec_id, t.adc_q,
-        |    CAST(round(${OracleSql.dot("e.embedding", "q.embedding")} * 10000) AS BIGINT)
-        |      AS ex_q
+        |    ${OracleSql.rq("e.embedding", "q.embedding")} AS ex_q
         |  FROM top t JOIN embeddings e ON e.vec_id = t.vec_id
         |  JOIN embeddings q ON q.vec_id = t.qid),
         |pairs AS (
@@ -2698,11 +2649,7 @@ object DedupQueries {
     // |sources|-bounded.
     Q(
       "q223_dedup_savings",
-      s"""WITH RECURSIVE pairs AS ($rpEdgesSql),
-        |${OracleSql.und("pairs")},
-        |${OracleSql.reach},
-        |grp AS (SELECT id AS doc_id, min(r) AS group_id FROM reach
-        |        GROUP BY id),
+      s"""${rpGroupsSql("id AS doc_id", "group_id")},
         |g AS (SELECT grp.doc_id, grp.group_id, d.source, d.n_chars
         |      FROM grp JOIN documents d USING (doc_id)),
         |best AS (SELECT group_id, max(n_chars) AS best_len FROM g
@@ -2760,8 +2707,7 @@ object DedupQueries {
         |  FROM embeddings WHERE vec_id >= 10 AND vec_id < 26),
         |cand AS (
         |  SELECT p.qid, p.ql, e.vec_id, e.label,
-        |    CAST(round(${OracleSql.dot("e.embedding", "p.qv")}
-        |      * 10000) AS BIGINT) AS rq
+        |    ${OracleSql.rq("e.embedding", "p.qv")} AS rq
         |  FROM probes p JOIN embeddings e ON e.vec_id != p.qid),
         |nrel AS (SELECT qid, CAST(count(*) FILTER (label = ql) AS BIGINT)
         |    AS n_rel
@@ -2881,10 +2827,7 @@ object DedupQueries {
     // everything after is group-scale then |distinct-size|-scale.
     Q(
       "q228_cluster_cohesion",
-      s"""WITH RECURSIVE pairs AS ($rpEdgesSql),
-        |${OracleSql.und("pairs")},
-        |${OracleSql.reach},
-        |grp AS (SELECT id, min(r) AS lbl FROM reach GROUP BY id),
+      s"""${rpGroupsSql("id", "lbl")},
         |sizes AS (SELECT lbl, count(*) AS sz FROM grp GROUP BY lbl),
         |er AS (
         |  SELECT g.lbl, CAST(round(p.rdot * 10000) AS BIGINT) AS rq
@@ -2961,8 +2904,7 @@ object DedupQueries {
       "q233_sq8_recall",
       s"""WITH ${OracleSql.sqScored(Seq(8 -> "qd"))},
         |${OracleSql.scTop10("sq", "qd")}
-        |SELECT b.qid, CAST(count(s.vec_id) AS BIGINT) AS hits,
-        |  CAST(count(s.vec_id) * 100000 AS BIGINT) AS recall_ppm
+        |SELECT b.qid, ${OracleSql.recallCounts("s.vec_id")}
         |FROM bf b LEFT JOIN sq s
         |  ON b.qid = s.qid AND b.vec_id = s.vec_id
         |GROUP BY b.qid ORDER BY b.qid""".stripMargin
@@ -2984,11 +2926,7 @@ object DedupQueries {
     // is 11-row bounded.
     Q(
       "q236_minhash_calibration",
-      s"""WITH ws AS (
-        |  SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |hs AS (
-        |  SELECT doc_id, ${OracleSql.hashedShingles("ws")} AS sh
-        |  FROM ws),
+      s"""WITH ${OracleSql.wordShingleSets},
         |sg AS (
         |  SELECT doc_id, sh,
         |    [list_min(list_transform(sh,
@@ -3083,8 +3021,7 @@ object DedupQueries {
         |  QUALIFY cr <= 4),
         |sc AS (
         |  SELECT p.qid, e.vec_id, a.cid,
-        |    CAST(round(${OracleSql.dot("e.embedding", "p.qv")}
-        |      * 10000) AS BIGINT) AS rq
+        |    ${OracleSql.rq("e.embedding", "p.qv")} AS rq
         |  FROM probes p
         |  JOIN embeddings e ON e.vec_id != p.qid
         |  JOIN assign a ON a.vec_id = e.vec_id),
@@ -3097,8 +3034,7 @@ object DedupQueries {
         |  QUALIFY row_number() OVER (PARTITION BY sc.qid, n.np
         |    ORDER BY sc.rq DESC, sc.vec_id) <= 10)
         |SELECT b.qid, CAST(n.np AS BIGINT) AS nprobe,
-        |  CAST(count(i.vec_id) AS BIGINT) AS hits,
-        |  CAST(count(i.vec_id) * 100000 AS BIGINT) AS recall_ppm
+        |  ${OracleSql.recallCounts("i.vec_id")}
         |FROM bf b CROSS JOIN n
         |LEFT JOIN iv i ON i.qid = b.qid AND i.np = n.np
         |  AND i.vec_id = b.vec_id
@@ -3121,51 +3057,42 @@ object DedupQueries {
     // scale); the flip join is doc-keyed; the rollup is
     // |sources|-bounded.
     Q(
-      "q239_canonical_flip",
+      "q239_canonical_flip", {
+      // the 32 strongest `allp` edges of each id_a, of the pairs `where`
+      def top32(where: String) =
+        s"""SELECT id_a, id_b FROM (
+           |    SELECT id_a, id_b, row_number() OVER (PARTITION BY id_a
+           |      ORDER BY rdot DESC, id_b) AS rn FROM allp$where) r
+           |  WHERE rn <= 32""".stripMargin
+      // day i's components over `edges`: CTEs u<i>, r<i>, g<i>(doc_id, lbl)
+      def groups(i: Int, edges: String) =
+        s"""u$i AS (SELECT id_a AS src, id_b AS dst FROM $edges
+           |       UNION ALL SELECT id_b, id_a FROM $edges),
+           |r$i(id, r) AS (
+           |  SELECT src, src FROM (SELECT DISTINCT src FROM u$i) t
+           |  UNION
+           |  SELECT u.src, rc.r FROM u$i u JOIN r$i rc ON rc.id = u.dst),
+           |g$i AS (SELECT id AS doc_id, min(r) AS lbl FROM r$i GROUP BY id)"""
+          .stripMargin
+      // CTE m<i>(doc_id, can): each g<i> member's canonical (longest,
+      // then lowest id)
+      def canon(i: Int) =
+        s"""m$i AS (
+           |  SELECT g.doc_id, c.can FROM g$i g JOIN (
+           |    SELECT gg.lbl, min(gg.doc_id) AS can
+           |    FROM (SELECT g$i.doc_id, g$i.lbl, d.n_chars FROM g$i
+           |          JOIN documents d USING (doc_id)) gg
+           |    JOIN (SELECT g$i.lbl, max(d.n_chars) AS bl FROM g$i
+           |          JOIN documents d USING (doc_id) GROUP BY g$i.lbl) b
+           |      ON b.lbl = gg.lbl AND gg.n_chars = b.bl
+           |    GROUP BY gg.lbl) c ON c.lbl = g.lbl)""".stripMargin
       s"""WITH RECURSIVE allp AS (SELECT * FROM ($rpPairsSql) fp),
-        |pairs AS (
-        |  SELECT id_a, id_b FROM (
-        |    SELECT id_a, id_b, row_number() OVER (PARTITION BY id_a
-        |      ORDER BY rdot DESC, id_b) AS rn FROM allp) r
-        |  WHERE rn <= 32),
-        |p1 AS (
-        |  SELECT id_a, id_b FROM (
-        |    SELECT id_a, id_b, row_number() OVER (PARTITION BY id_a
-        |      ORDER BY rdot DESC, id_b) AS rn FROM allp
-        |    WHERE id_a % 10 != 7 AND id_b % 10 != 7) r
-        |  WHERE rn <= 32),
-        |u1 AS (SELECT id_a AS src, id_b AS dst FROM p1
-        |       UNION ALL SELECT id_b, id_a FROM p1),
-        |r1(id, r) AS (
-        |  SELECT src, src FROM (SELECT DISTINCT src FROM u1) t
-        |  UNION
-        |  SELECT u.src, rc.r FROM u1 u JOIN r1 rc ON rc.id = u.dst),
-        |g1 AS (SELECT id AS doc_id, min(r) AS lbl FROM r1 GROUP BY id),
-        |u2 AS (SELECT id_a AS src, id_b AS dst FROM pairs
-        |       UNION ALL SELECT id_b, id_a FROM pairs),
-        |r2(id, r) AS (
-        |  SELECT src, src FROM (SELECT DISTINCT src FROM u2) t
-        |  UNION
-        |  SELECT u.src, rc.r FROM u2 u JOIN r2 rc ON rc.id = u.dst),
-        |g2 AS (SELECT id AS doc_id, min(r) AS lbl FROM r2 GROUP BY id),
-        |m1 AS (
-        |  SELECT g.doc_id, c.can FROM g1 g JOIN (
-        |    SELECT gg.lbl, min(gg.doc_id) AS can
-        |    FROM (SELECT g1.doc_id, g1.lbl, d.n_chars FROM g1
-        |          JOIN documents d USING (doc_id)) gg
-        |    JOIN (SELECT g1.lbl, max(d.n_chars) AS bl FROM g1
-        |          JOIN documents d USING (doc_id) GROUP BY g1.lbl) b
-        |      ON b.lbl = gg.lbl AND gg.n_chars = b.bl
-        |    GROUP BY gg.lbl) c ON c.lbl = g.lbl),
-        |m2 AS (
-        |  SELECT g.doc_id, c.can FROM g2 g JOIN (
-        |    SELECT gg.lbl, min(gg.doc_id) AS can
-        |    FROM (SELECT g2.doc_id, g2.lbl, d.n_chars FROM g2
-        |          JOIN documents d USING (doc_id)) gg
-        |    JOIN (SELECT g2.lbl, max(d.n_chars) AS bl FROM g2
-        |          JOIN documents d USING (doc_id) GROUP BY g2.lbl) b
-        |      ON b.lbl = gg.lbl AND gg.n_chars = b.bl
-        |    GROUP BY gg.lbl) c ON c.lbl = g.lbl),
+        |pairs AS (${top32("")}),
+        |p1 AS (${top32("\n    WHERE id_a % 10 != 7 AND id_b % 10 != 7")}),
+        |${groups(1, "p1")},
+        |${groups(2, "pairs")},
+        |${canon(1)},
+        |${canon(2)},
         |f AS (
         |  SELECT d.source,
         |    CASE WHEN coalesce(m1.can, d.doc_id) !=
@@ -3178,6 +3105,7 @@ object DedupQueries {
         |  CAST(sum(fl) AS BIGINT) AS n_flipped,
         |  CAST(sum(fl) * 1000000 // count(*) AS BIGINT) AS flip_ppm
         |FROM f GROUP BY source ORDER BY source""".stripMargin
+    }
     ) { (s, d) =>
       // Day-1 edges are degree-bounded over DAY-1 PAIRS ONLY — filtering
       // the full-corpus top-32 instead lets a day-2 neighbor evict a
@@ -3241,9 +3169,12 @@ object DedupQueries {
     // 32-bit space saturates and both engines measure the same
     // saturated sets, so the calibration stays exact).
     Q(
-      "q240_kmv_overlap",
+      "q240_kmv_overlap", {
+      // the exact Jaccard of the two sources' shingle sets, ppm
+      val exact = """(coalesce(ex.i, 0) * 1000000)
+        |    // (p.n_1 + p.n_2 - coalesce(ex.i, 0))""".stripMargin
       s"""WITH shr AS (
-        |  SELECT source, unnest(${OracleSql.shingles3("ws")}) AS s
+        |  SELECT source, unnest(${OracleSql.shingles("ws")}) AS s
         |  FROM (SELECT source, string_split(text, ' ') AS ws
         |        FROM documents) t),
         |hv AS (
@@ -3280,16 +3211,15 @@ object DedupQueries {
         |  WHERE r <= 128 GROUP BY 1, 2)
         |SELECT p.src_1, p.src_2, p.n_1, p.n_2,
         |  CAST(coalesce(ex.i, 0) AS BIGINT) AS n_inter,
-        |  CAST((coalesce(ex.i, 0) * 1000000)
-        |    // (p.n_1 + p.n_2 - coalesce(ex.i, 0)) AS BIGINT) AS exact_ppm,
+        |  CAST($exact AS BIGINT) AS exact_ppm,
         |  CAST((est.com * 1000000) // est.ssz AS BIGINT) AS est_ppm,
         |  CAST(abs((est.com * 1000000) // est.ssz
-        |       - (coalesce(ex.i, 0) * 1000000)
-        |         // (p.n_1 + p.n_2 - coalesce(ex.i, 0))) AS BIGINT) AS err_ppm
+        |       - $exact) AS BIGINT) AS err_ppm
         |FROM pairs p
         |LEFT JOIN ex ON ex.es1 = p.src_1 AND ex.es2 = p.src_2
         |JOIN est ON est.ts1 = p.src_1 AND est.ts2 = p.src_2
         |ORDER BY p.src_1, p.src_2""".stripMargin
+    }
     ) { (s, d) => kmvOverlapCore(docs(s, d)) },
 
     // TRIANGLE CENSUS — the clustering structure of the near-dup graph:
@@ -3434,10 +3364,7 @@ object DedupQueries {
     // checkpoints, ≤ 8 rounds; state per round is node-scale.
     Q(
       "q253_chain_depth",
-      s"""WITH RECURSIVE pairs AS ($rpEdgesSql),
-        |${OracleSql.und("pairs")},
-        |${OracleSql.reach},
-        |grp AS (SELECT id, min(r) AS lbl FROM reach GROUP BY id),
+      s"""${rpGroupsSql("id", "lbl")},
         |dist(v, dd) AS (
         |  SELECT DISTINCT lbl, 0 FROM grp
         |  UNION
@@ -3933,15 +3860,8 @@ object DedupQueries {
       while (i < a.length) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
       acc
     }
-    val cents = emb(s, d).filter(col("vec_id") < 8)
-      .select("vec_id", "embedding").collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
-      .sortBy(_._1)
-    val probes = emb(s, d)
-      .filter(col("vec_id") >= 10 && col("vec_id") < 18)
-      .select("vec_id", "embedding").collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
-      .sortBy(_._1)
+    val cents = vectors(s, d, col("vec_id") < 8)
+    val probes = vectors(s, d, col("vec_id") >= 10 && col("vec_id") < 18)
       .map { case (qid, qv) =>
         val cells = cents
           .map { case (cid, cv) => (cid, math.round(dotD(qv, cv) * 10000)) }
@@ -4304,6 +4224,13 @@ object DedupQueries {
       .map(r => (r.getLong(0), r.getSeq[Float](1), r.getInt(2))).toSeq
       .sortBy(_._1)
 
+  /** The (vec_id, embedding) rows where `keep` holds, collected to the
+    * driver in vec_id order (one eager job per call). */
+  private def vectors(s: org.apache.spark.sql.SparkSession, d: String,
+      keep: org.apache.spark.sql.Column): Seq[(Long, Seq[Float])] =
+    emb(s, d).filter(keep).select("vec_id", "embedding").collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq.sortBy(_._1)
+
   /** nDCG probe seeds, vec_id in [10, 26) (16 rows). */
   private val ndcgProbes = Tables.perDir(labeledProbes(_, _, 10, 26))
 
@@ -4411,11 +4338,8 @@ object DedupQueries {
   }
 
   /** MaxSim query seeds (vec_id 30..33). */
-  private val maxSimProbes = Tables.perDir { (s, d) =>
-    emb(s, d).filter(col("vec_id") >= 30 && col("vec_id") < 34)
-      .select("vec_id", "embedding").collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq.sortBy(_._1)
-  }
+  private val maxSimProbes = Tables.perDir(
+    vectors(_, _, col("vec_id") >= 30 && col("vec_id") < 34))
 
   /** q218 core over any (vec_id, embedding) frame plus explicit query
     * seeds. Factored for the crafted one-hot law (a document holding
@@ -4434,16 +4358,13 @@ object DedupQueries {
           slice(col("qv"), i * 16 + 1, 16))
       }: _*)
     }.reduce(_ + _)
-    e.crossJoin(probesDf)
+    val gathered = e.crossJoin(probesDf)
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), RankKey.pack(maxsim, col("vec_id")).as("key"))
       .groupBy("qid")
       .agg(RankKey.bottomK(5)(col("key")).as("ks"))
-      .select(col("qid"), posexplode(col("ks")).as(Seq("p", "key")))
-      .select(col("qid"), (col("p") + 1L).cast("long").as("rk"),
-        RankKey.id(col("key")).as("vec_id"),
-        score(col("key")).as("maxsim_q"))
-      .orderBy("qid", "rk")
+    RankKey.ranks(gathered, RankKey.id(col("key")).as("vec_id"),
+      score(col("key")).as("maxsim_q"))
   }
 
   /** q217 core over any (vec_id, embedding) frame. Factored for the
@@ -4503,19 +4424,16 @@ object DedupQueries {
     import s.implicits._
     import RankKey.{checkedLabel, packLabeled, rq}
     val probesDf = broadcast(probes.toDF("qid", "qv", "ql"))
-    e.crossJoin(probesDf)
+    val gathered = e.crossJoin(probesDf)
       .filter(col("vec_id") =!= col("qid") && col("label") =!= col("ql"))
       .select(col("qid"), packLabeled(rq(col("embedding"), col("qv")),
         col("vec_id"), checkedLabel("q216")).as("key"))
       .groupBy("qid")
       .agg(RankKey.bottomK(5)(col("key")).as("ks"))
-      .select(col("qid"), posexplode(col("ks")).as(Seq("p", "key")))
-      .select(col("qid"), (col("p") + 1L).cast("long").as("rk"),
-        RankKey.labeledId(col("key")).as("vec_id"),
-        RankKey.label(col("key")).as("neg_label"),
-        (RankKey.score(col("key"), RankKey.ML).cast("double")
-          / 10000d).as("rdot"))
-      .orderBy("qid", "rk")
+    RankKey.ranks(gathered, RankKey.labeledId(col("key")).as("vec_id"),
+      RankKey.label(col("key")).as("neg_label"),
+      (RankKey.score(col("key"), RankKey.ML).cast("double") / 10000d)
+        .as("rdot"))
   }
 
   /** q215 core over any (vec_id, embedding) frame plus explicit

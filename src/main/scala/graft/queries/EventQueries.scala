@@ -38,6 +38,18 @@ object EventQueries {
         round(coalesce(col("value_r"), lit(-1.0)), 2).as("cvalue"))
       .orderBy("event_id")
   }
+  /** The rows of `e` that carry an item (`props.$.k`), projected to
+    * `cols` of the item column (`item`, BIGINT). The null filter runs on
+    * the raw value, before the cast, as the oracles' `IS NOT NULL` does:
+    * filtering the cast value would also drop non-integer `$.k` rows
+    * that DuckDB keeps — a silent shift on dirty data. */
+  private def itemEvents(e: DataFrame)(
+      cols: org.apache.spark.sql.Column => Seq[org.apache.spark.sql.Column])
+      : DataFrame = {
+    val k = get_json_object(col("props"), "$.k")
+    e.filter(k.isNotNull).select(cols(k.cast("long").as("item")): _*)
+  }
+
   private val asofSql =
     """SELECT l.event_id, l.user_id, round(l.value, 2) AS pvalue,
       |  round(COALESCE(epoch(l.ts) - epoch(r.ts), -1.0), 2) AS gap_s,
@@ -759,14 +771,9 @@ object EventQueries {
         |ORDER BY user_id, event_id""".stripMargin
     ) { (s, d) =>
       val w = Window.partitionBy("user_id").orderBy("event_id")
-      ev(s, d)
-        .filter(col("event_type").isin("view", "click", "purchase"))
-        // pre-cast null filter, matching the oracle (and q165/q171/q172):
-        // filtering the post-cast value would also drop non-integer $.k
-        // rows that DuckDB keeps — a silent window shift on dirty data
-        .filter(get_json_object(col("props"), "$.k").isNotNull)
-        .select(col("user_id"), col("event_id"),
-          get_json_object(col("props"), "$.k").cast("long").as("item"))
+      itemEvents(ev(s, d)
+          .filter(col("event_type").isin("view", "click", "purchase")))(
+          item => Seq(col("user_id"), col("event_id"), item))
         .select(col("user_id"), col("event_id"),
           lag("item", 1).over(w).as("c1"),
           lag("item", 2).over(w).as("c2"),
@@ -870,10 +877,7 @@ object EventQueries {
       // corpus-scale checkpoint goes DISK_ONLY per the q155 doctrine
       // (checkpoint blocks are non-evictable); the barrier costs ~1 s at
       // the sf0.01 gate — the deliberate small-SF price of the 1000x win.
-      val base = ev(s, d)
-        .filter(get_json_object(col("props"), "$.k").isNotNull)
-        .select(col("user_id"),
-          get_json_object(col("props"), "$.k").cast("long").as("item"))
+      val base = itemEvents(ev(s, d))(item => Seq(col("user_id"), item))
         .localCheckpoint(true,
           org.apache.spark.storage.StorageLevel.DISK_ONLY)
       val ni = base.agg((max("item") + 1L).as("n"))
@@ -936,10 +940,7 @@ object EventQueries {
         |FROM pairs GROUP BY 1, 2
         |ORDER BY n_users DESC, item_a, item_b LIMIT 50""".stripMargin
     ) { (s, d) =>
-      val ui = ev(s, d)
-        .filter(get_json_object(col("props"), "$.k").isNotNull)
-        .select(col("user_id"),
-          get_json_object(col("props"), "$.k").cast("long").as("item"))
+      val ui = itemEvents(ev(s, d))(item => Seq(col("user_id"), item))
         .groupBy("user_id", "item").agg(count(lit(1)).as("n"))
       val capped = Scale.topK(ui, Seq("user_id"),
           Seq(col("n").desc, col("item")), 32)
@@ -1054,10 +1055,8 @@ object EventQueries {
         |    ELSE 0 END) AS BIGINT) AS leaked_test_events
         |FROM side GROUP BY 1 ORDER BY 1""".stripMargin
     ) { (s, d) =>
-      val e = ev(s, d)
-        .filter(get_json_object(col("props"), "$.k").isNotNull)
-        .select(unix_micros(col("ts")).as("t"), col("event_type"),
-          get_json_object(col("props"), "$.k").cast("long").as("item"))
+      val e = itemEvents(ev(s, d))(item =>
+          Seq(unix_micros(col("ts")).as("t"), col("event_type"), item))
         .localCheckpoint(true,
           org.apache.spark.storage.StorageLevel.DISK_ONLY)
       val cut = e.agg(
@@ -1118,15 +1117,12 @@ object EventQueries {
         |ORDER BY n_users DESC, chosen, rejected LIMIT 50""".stripMargin
     ) { (s, d) =>
       val wU = Window.partitionBy("user_id")
-      val rk = ev(s, d)
-        .filter(get_json_object(col("props"), "$.k").isNotNull)
-        .select(col("user_id"),
-          get_json_object(col("props"), "$.k").cast("long").as("item"),
+      val rk = itemEvents(ev(s, d))(item => Seq(col("user_id"), item,
           when(col("event_type") === "purchase", 3L)
             .when(col("event_type") === "signup", 2L)
             .when(col("event_type") === "click", 1L)
             .when(col("event_type") === "view", 0L)
-            .otherwise(-2L).as("w"))
+            .otherwise(-2L).as("w")))
         .groupBy("user_id", "item")
         .agg(sum("w").as("eng"))
         .localCheckpoint(true,
@@ -1575,23 +1571,21 @@ object EventQueries {
     // timestamps (code 2 = view over 1 = click), exact in both
     // engines (us·8 ≤ 1.4e17 < 2^63 through year 5138).
     Q(
-      "q249_attribution",
-      """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS us
+      "q249_attribution", {
+      // the touch code over the user's trailing 24 h, before `agg`
+      val touch =
+        """(CASE WHEN event_type IN ('click', 'view')
+          |        THEN us * 8 + CASE event_type WHEN 'click' THEN 1
+          |          ELSE 2 END END)
+          |      OVER (PARTITION BY user_id ORDER BY us
+          |            RANGE BETWEEN 86400000000 PRECEDING AND 1 PRECEDING)"""
+          .stripMargin
+      s"""WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS us
         |           FROM events),
         |w AS (
         |  SELECT user_id, event_type, us,
-        |    max(CASE WHEN event_type IN ('click', 'view')
-        |        THEN us * 8 + CASE event_type WHEN 'click' THEN 1
-        |          ELSE 2 END END)
-        |      OVER (PARTITION BY user_id ORDER BY us
-        |            RANGE BETWEEN 86400000000 PRECEDING AND 1 PRECEDING)
-        |      AS lt,
-        |    min(CASE WHEN event_type IN ('click', 'view')
-        |        THEN us * 8 + CASE event_type WHEN 'click' THEN 1
-        |          ELSE 2 END END)
-        |      OVER (PARTITION BY user_id ORDER BY us
-        |            RANGE BETWEEN 86400000000 PRECEDING AND 1 PRECEDING)
-        |      AS ft
+        |    max$touch AS lt,
+        |    min$touch AS ft
         |  FROM e),
         |p AS (SELECT * FROM w WHERE event_type = 'purchase'),
         |lab AS (
@@ -1605,6 +1599,7 @@ object EventQueries {
         |  SELECT 'first' AS kind, firstt AS touch FROM lab
         |  UNION ALL SELECT 'last', lastt FROM lab) t
         |GROUP BY 1, 2 ORDER BY kind, touch""".stripMargin
+    }
     ) { (s, d) => attributionCore(ev(s, d)) },
 
     // DELETION AUDIT (right-to-be-forgotten) — when a 100 TB store
@@ -1620,7 +1615,10 @@ object EventQueries {
     // bit), checkpointed for the two derivations; values enter as
     // floor(value·100) cents so every sum is integer-exact.
     Q(
-      "q250_deletion_audit",
+      "q250_deletion_audit", {
+      val sums = """SELECT event_type, CAST(sum(n) AS BIGINT) AS n,
+        |    CAST(sum(c) AS BIGINT) AS c, CAST(count(*) AS BIGINT) AS u
+        |  FROM per""".stripMargin
       s"""WITH e AS (SELECT event_type, user_id,
         |    CAST(floor(value * 100) AS BIGINT) AS cents,
         |    ${OracleSql.md5Int("'del|' || CAST(user_id AS VARCHAR)")} % 16 = 0
@@ -1629,12 +1627,8 @@ object EventQueries {
         |per AS (SELECT event_type, user_id, forget,
         |    CAST(count(*) AS BIGINT) AS n, CAST(sum(cents) AS BIGINT) AS c
         |  FROM e GROUP BY 1, 2, 3),
-        |tot AS (SELECT event_type, CAST(sum(n) AS BIGINT) AS n,
-        |    CAST(sum(c) AS BIGINT) AS c, CAST(count(*) AS BIGINT) AS u
-        |  FROM per GROUP BY 1),
-        |del AS (SELECT event_type, CAST(sum(n) AS BIGINT) AS n,
-        |    CAST(sum(c) AS BIGINT) AS c, CAST(count(*) AS BIGINT) AS u
-        |  FROM per WHERE forget GROUP BY 1),
+        |tot AS ($sums GROUP BY 1),
+        |del AS ($sums WHERE forget GROUP BY 1),
         |inc AS (SELECT t.event_type, t.n - coalesce(d.n, 0) AS n_inc,
         |    t.c - coalesce(d.c, 0) AS c_inc, t.u - coalesce(d.u, 0) AS u_inc,
         |    coalesce(d.n, 0) AS n_forgotten
@@ -1651,6 +1645,7 @@ object EventQueries {
         |  CAST(i.n_forgotten AS BIGINT) AS n_forgotten
         |FROM inc i JOIN dir b USING (event_type)
         |ORDER BY i.event_type""".stripMargin
+    }
     ) { (s, d) => deletionAuditCore(ev(s, d)) },
 
     // SEASONALITY PROFILE — the capacity-planning monitor: per event

@@ -495,18 +495,19 @@ object NestedQueries {
     // through a built array<array<float>>: ufunc map, aligned zip, and
     // scalar broadcast, each reduced to a scalar for the oracle.
     Q(
-      "q94_deep_broadcast",
-      """SELECT vec_id,
-        |  round(list_sum(flatten(list_transform(range(0, 4), i ->
-        |    list_transform(embedding[i*4+1:i*4+4],
-        |      x -> CAST(x AS DOUBLE) * 2 + 1)))), 3) + 0 AS deep_sum,
-        |  round(list_sum(flatten(list_transform(range(0, 4), i ->
-        |    list_transform(embedding[i*4+1:i*4+4],
-        |      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 3) + 0 AS deep_dot,
-        |  round(list_max(flatten(list_transform(range(0, 4), i ->
-        |    list_transform(embedding[i*4+1:i*4+4],
-        |      x -> CAST(x AS DOUBLE) + 10)))), 3) + 0 AS deep_max
+      "q94_deep_broadcast", {
+      // `leaf` of every x of the 4x4 chunked prefix, flattened
+      def leaves(leaf: String) =
+        s"""flatten(list_transform(range(0, 4), i ->
+           |    list_transform(embedding[i*4+1:i*4+4],
+           |      x -> $leaf)))""".stripMargin
+      s"""SELECT vec_id,
+        |  round(list_sum(${leaves("CAST(x AS DOUBLE) * 2 + 1")}), 3) + 0 AS deep_sum,
+        |  round(list_sum(${leaves("CAST(x AS DOUBLE) * CAST(x AS DOUBLE)")}), 3) + 0
+        |    AS deep_dot,
+        |  round(list_max(${leaves("CAST(x AS DOUBLE) + 10")}), 3) + 0 AS deep_max
         |FROM embeddings WHERE vec_id < 200 ORDER BY vec_id""".stripMargin
+    }
     ) { (s, d) =>
       import graft.functions.{ArrayOps, NestedOps}
       import org.apache.spark.sql.types.{ArrayType, FloatType}

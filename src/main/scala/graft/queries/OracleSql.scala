@@ -28,10 +28,10 @@ private[queries] object OracleSql {
   def md560(e: String): String =
     s"${md5Digits(e, 1, 8)} * 4294967296\n    + ${md5Digits(e, 8, 16)}"
 
-  /** `TextOps.shingles(ws, 3)`: the word 3-shingles of the word list `ws`,
+  /** `TextOps.shingles(ws, n)`: the word n-shingles of the word list `ws`,
     * each joined by one space. */
-  def shingles3(ws: String): String =
-    s"list_transform(range(1, len($ws) - 1),\n      i -> array_to_string($ws[i:i+2], ' '))"
+  def shingles(ws: String, n: Int = 3): String =
+    s"list_transform(range(1, len($ws) - ${n - 2}),\n      i -> array_to_string($ws[i:i+${n - 1}], ' '))"
 
   /** `TextOps.shingles(ws, 2)` posexploded: one row per word bigram `b`
     * of `ws`, with `w1` its first word. */
@@ -45,7 +45,7 @@ private[queries] object OracleSql {
     * 3-shingles of `ws`. */
   def hashedShingles(ws: String): String =
     s"""list_distinct(list_transform(
-       |    ${shingles3(ws)},
+       |    ${shingles(ws)},
        |    s -> ${md5Int("s")}))""".stripMargin
 
   /** `TextOps.hashedShingleRows` over `documents`: CTE `shr(keys, s)`,
@@ -53,12 +53,43 @@ private[queries] object OracleSql {
     * digest, duplicates kept. */
   def hashedShingleRows(keys: String): String =
     s"""shr AS (
-       |  SELECT $keys, unnest(${shingles3("ws")}) AS s
+       |  SELECT $keys, unnest(${shingles("ws")}) AS s
        |  FROM (SELECT $keys, string_split(text, ' ') AS ws FROM documents) t),
        |hv AS (
        |  SELECT $keys,
        |    ${md5Int("s")} AS h
        |  FROM shr)""".stripMargin
+
+  /** [[hashedShingles]] per document: CTE `hs(doc_id, sh)`, the words
+    * split inline. */
+  val shingleSets: String =
+    s"""hs AS (
+       |  SELECT doc_id, ${hashedShingles("ws")} AS sh
+       |  FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents) i)"""
+      .stripMargin
+
+  /** [[hashedShingles]] per document over a words CTE: `ws(doc_id, ws)`,
+    * then `hs(doc_id, sh)`. */
+  val wordShingleSets: String =
+    s"""ws AS (
+       |  SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+       |hs AS (
+       |  SELECT doc_id, ${hashedShingles("ws")} AS sh
+       |  FROM ws)""".stripMargin
+
+  /** CTE `uni(hw, cu)`: the count of each word of CTE `tok(ws)`, keyed by
+    * its [[md560]] digest (`md5_prefix60` of the exploded words). */
+  val unigramCounts: String =
+    s"""uni AS (SELECT ${md560("w")} AS hw, count(*) AS cu FROM
+       |        (SELECT unnest(ws) AS w FROM tok) GROUP BY 1)""".stripMargin
+
+  /** The Q20 distinct-word ratio of `text`: distinct words · 2^20 div
+    * words, the integer floor division of q150/q152's
+    * `(n_distinct * 1048576) div n_words`. */
+  val distinctQ20: String =
+    """(CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT)
+      |      * 1048576)
+      |      // CAST(len(string_split(text, ' ')) AS BIGINT)""".stripMargin
 
   private val MinhashPerms = Seq((1000003L, 12345L), (2000029L, 54321L),
     (3000073L, 98765L), (4000037L, 13579L))
@@ -124,6 +155,33 @@ private[queries] object OracleSql {
   def l2Sq(x: String, y: String): String =
     s"${dot64(x, x)}\n    - 2 * ${dot64(x, y)}\n    + ${dot64(y, y)}"
 
+  /** `RankKey.rq`: [[dot]] quantized to round(dot·1e4) as BIGINT. */
+  def rq(a: String, b: String): String =
+    s"CAST(round(${dot(a, b)}\n      * 10000) AS BIGINT)"
+
+  /** `round(TextOps.cosine(a, b), 4) + 0`: [[dot]] over the two L2 norms,
+    * each Σ x² over the whole vector. */
+  def cosine(a: String, b: String): String = {
+    def norm(v: String) = s"sqrt(list_sum(list_transform($v,\n" +
+      "           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
+    s"round(${dot(a, b)}\n      / (${norm(a)}\n       * ${norm(b)}), 4) + 0"
+  }
+
+  /** The rank of `Scale.topK(scored, qid, (rcos DESC, vec_id))`: CTE
+    * `ranked(qid, vec_id, rcos, rn)` over `scored(qid, vec_id, rcos)`. */
+  val rcosRanked: String =
+    """ranked AS (
+      |  SELECT qid, vec_id, rcos,
+      |    row_number() OVER (PARTITION BY qid ORDER BY rcos DESC, vec_id) AS rn
+      |  FROM scored)""".stripMargin
+
+  /** `TextOps.signBucket(embedding, bits)`: bit i set where dim i + 1 of
+    * `embedding` is positive, over the first `bits` dims. */
+  def signBucket(bits: String): String =
+    s"""CAST(list_sum(list_transform(range(0, $bits), i ->
+       |      CASE WHEN embedding[i + 1] > 0 THEN 1 << i ELSE 0 END)) AS BIGINT)"""
+      .stripMargin
+
   /** `DedupQueries.Pq.subspaceDots`: CTEs `cent(cid, cv)`, the 8 seed
     * centroids, and `subdots(vec_id, cid, m, d)`, every vector's dot with
     * every centroid on each of the 4 16-dim subspaces. */
@@ -147,6 +205,13 @@ private[queries] object OracleSql {
       |      row_number() OVER (PARTITION BY vec_id, m
       |                         ORDER BY d DESC, cid) AS rn
       |    FROM subdots) t WHERE rn = 1)""".stripMargin
+
+  /** `DedupQueries.Pq.lutArr`: CTE `lut(qid, m, cid, d)`, the `subdots`
+    * rows of the probe vectors `qids` (a comma list). */
+  def pqLut(qids: String): String =
+    s"""lut AS (
+       |  SELECT s.vec_id AS qid, s.m, s.cid, s.d FROM subdots s
+       |  WHERE s.vec_id IN ($qids))""".stripMargin
 
   /** `DedupQueries.Pq.adc`: the 4 subspace terms of `subdots`-shaped
     * columns `${q}m`/`${q}d` added in fixed order (a bare sum() would be
@@ -191,6 +256,14 @@ private[queries] object OracleSql {
       .map(i => s"CASE WHEN sa.k$i = sb.k$i THEN 1 ELSE 0 END")
       .mkString("(", " +\n       ", ") >= 2")
 
+  /** Each vector's cells in `from(vec_id, cid, dot)` ranked as `rn` by
+    * `key` DESC, ties to the smaller cid. */
+  private def cellRank(key: String, from: String): String =
+    s"""SELECT vec_id, cid,
+       |      row_number() OVER (PARTITION BY vec_id
+       |        ORDER BY $key DESC, cid) AS rn
+       |    FROM $from""".stripMargin
+
   /** `DedupQueries.RankKey.nearestCell` on `ivfEvalSeeds`: CTEs `cent`,
     * `probes`, `dots` and `assign(vec_id, cid)` by the rounded dot. */
   val ivfAssign: String =
@@ -200,16 +273,42 @@ private[queries] object OracleSql {
        |  FROM embeddings WHERE vec_id >= 10 AND vec_id < 18),
        |dots AS (SELECT e.vec_id, c.cid, ${dot("e.embedding", "c.cv")} AS dot
        |  FROM embeddings e, cent c),
-       |assign AS (SELECT vec_id, cid FROM (SELECT vec_id, cid,
-       |    row_number() OVER (PARTITION BY vec_id
-       |      ORDER BY CAST(round(dot * 10000) AS BIGINT) DESC, cid) AS rn
-       |  FROM dots) t WHERE rn = 1)""".stripMargin
+       |assign AS (SELECT vec_id, cid FROM (
+       |    ${cellRank("CAST(round(dot * 10000) AS BIGINT)", "dots")}) t
+       |  WHERE rn = 1)""".stripMargin
+
+  /** The IVF front of q58/q167 over `dots(vec_id, cid, dot)`: CTEs
+    * `assign(vec_id, cid)`, each vector's best-dot cell, and
+    * `probes(qid, cid)`, the 2 best cells of each vector in `qids` (a
+    * comma list). */
+  def ivfProbes(dots: String, qids: String): String =
+    s"""assign AS (
+       |  SELECT vec_id, cid FROM (
+       |    ${cellRank("dot", dots)}) t WHERE rn = 1),
+       |probes AS (
+       |  SELECT vec_id AS qid, cid FROM (
+       |    ${cellRank("dot", s"$dots WHERE vec_id IN ($qids)")}) t
+       |  WHERE rn <= 2)""".stripMargin
+
+  /** CTE `name(qid, vec_id)` over [[ivfProbes]]: the vectors of each
+    * probe's cells, the probe itself excluded. */
+  def cellCand(name: String): String =
+    s"""$name AS (
+       |  SELECT p.qid, a.vec_id FROM probes p
+       |  JOIN assign a ON a.cid = p.cid AND a.vec_id != p.qid)""".stripMargin
 
   /** `RankKey.bottomK(10)` over `sc`: CTE `name`, the 10 largest `key`. */
   def scTop10(name: String, key: String): String =
     s"""$name AS (SELECT qid, vec_id FROM sc
        |  QUALIFY row_number() OVER (PARTITION BY qid
        |    ORDER BY $key DESC, vec_id) <= 10)""".stripMargin
+
+  /** The recall columns over the top-10 `bf` rows joined to a top-10
+    * list: `hits` = how many carry a `hit` id, and recall_ppm
+    * (`RankKey.recall`'s tail). */
+  def recallCounts(hit: String): String =
+    s"""CAST(count($hit) AS BIGINT) AS hits,
+       |  CAST(count($hit) * 100000 AS BIGINT) AS recall_ppm""".stripMargin
 
   /** The SQ scoring of q233/q257 (`DedupQueries.sqRanges`, `sqQuantize`,
     * `sqKey`): CTEs `rng`/`rr` (per-dim ranges), `qz` (column q<b> per bit

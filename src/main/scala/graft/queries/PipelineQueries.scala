@@ -381,7 +381,7 @@ object PipelineQueries {
       "q109_contamination",
       s"""WITH sh AS (
         |  SELECT DISTINCT doc_id, unnest(list_transform(
-        |    ${OracleSql.shingles3("ws")},
+        |    ${OracleSql.shingles("ws")},
         |    sg -> ${OracleSql.md5Int("sg")})) AS s
         |  FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents) t
         |  WHERE len(ws) >= 3),
@@ -509,8 +509,7 @@ object PipelineQueries {
       "q115_dup_ngram_fraction",
       s"""WITH sh AS (
         |  SELECT DISTINCT doc_id, unnest(list_transform(
-        |    list_transform(range(1, len(ws) - 3),
-        |      i -> array_to_string(ws[i:i+4], ' ')),
+        |    ${OracleSql.shingles("ws", 5)},
         |    sg -> ${OracleSql.md5Int("sg")})) AS g
         |  FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents) t
         |  WHERE len(ws) >= 5),
@@ -654,8 +653,7 @@ object PipelineQueries {
       // deterministic expressions), they just evaluate n + 8 times
       // instead of 8n (measured ~2x on the assign stages at 100x)
       val ei = emb(s, d).select(col("vec_id"),
-        transform(col("embedding"),
-          x => round(x.cast("double") * 10000).cast("long")).as("v"))
+        DedupQueries.RankKey.scaledInts.as("v"))
         .withColumn("vv",
           call_function("dot_product", vd(col("v")), vd(col("v"))))
         .localCheckpoint(true)
@@ -975,7 +973,17 @@ object PipelineQueries {
     // byte-identical to the unshifted form. Output: top-20 |projection|
     // vectors with their exact integer projections (scale 1e8).
     Q(
-      "q130_power_iteration",
+      "q130_power_iteration", {
+      // round r's direction u<r>: the d<r-1>-weighted dim sums w<r>,
+      // scaled by their max |w| (m<r>) to 1e4 integers
+      def direction(r: Int) =
+        s"""w$r AS (
+           |  SELECT u.i AS dim, sum(d${r - 1}.v[u.i] * d${r - 1}.ds) AS w
+           |  FROM d${r - 1}, range(1, 65) u(i) GROUP BY u.i),
+           |m$r AS (SELECT GREATEST(max(abs(w)), 1) AS m FROM w$r),
+           |u$r AS (SELECT list(CAST(round(CAST(w AS DOUBLE) / CAST(m AS DOUBLE)
+           |                    * 10000) AS BIGINT) ORDER BY dim) AS u
+           |       FROM w$r, m$r GROUP BY m)""".stripMargin
       s"""WITH kk AS (SELECT GREATEST(0, length(bin(count(*))) - 16) AS k
         |           FROM embeddings),
         |ei AS (
@@ -984,25 +992,13 @@ object PipelineQueries {
         |  FROM embeddings),
         |d0 AS (SELECT vec_id, v, CAST(list_sum(v) AS BIGINT) >> kk.k AS ds
         |       FROM ei, kk),
-        |w1 AS (
-        |  SELECT u.i AS dim, sum(d0.v[u.i] * d0.ds) AS w
-        |  FROM d0, range(1, 65) u(i) GROUP BY u.i),
-        |m1 AS (SELECT GREATEST(max(abs(w)), 1) AS m FROM w1),
-        |u1 AS (SELECT list(CAST(round(CAST(w AS DOUBLE) / CAST(m AS DOUBLE)
-        |                    * 10000) AS BIGINT) ORDER BY dim) AS u
-        |       FROM w1, m1 GROUP BY m),
+        |${direction(1)},
         |d1 AS (
         |  SELECT vec_id, v,
         |    CAST(list_sum(list_transform(range(1, 65),
         |      i -> v[i] * u1.u[i])) AS BIGINT) >> kk.k AS ds
         |  FROM ei, u1, kk),
-        |w2 AS (
-        |  SELECT u.i AS dim, sum(d1.v[u.i] * d1.ds) AS w
-        |  FROM d1, range(1, 65) u(i) GROUP BY u.i),
-        |m2 AS (SELECT GREATEST(max(abs(w)), 1) AS m FROM w2),
-        |u2 AS (SELECT list(CAST(round(CAST(w AS DOUBLE) / CAST(m AS DOUBLE)
-        |                    * 10000) AS BIGINT) ORDER BY dim) AS u
-        |       FROM w2, m2 GROUP BY m),
+        |${direction(2)},
         |proj AS (
         |  SELECT vec_id,
         |    CAST(list_sum(list_transform(range(1, 65),
@@ -1010,14 +1006,14 @@ object PipelineQueries {
         |  FROM ei, u2)
         |SELECT CAST(vec_id AS BIGINT) AS vec_id, p AS proj
         |FROM proj ORDER BY abs(p) DESC, vec_id LIMIT 20""".stripMargin
+    }
     ) { (s, d) =>
       import org.apache.spark.sql.DataFrame
       val kDf = emb(s, d).agg(
         greatest(length(bin(count(lit(1)))) - 16, lit(0)).cast("int")
           .as("k"))
       val ei = emb(s, d).select(col("vec_id"),
-          transform(col("embedding"),
-            x => round(x.cast("double") * 10000).cast("long")).as("v"))
+          DedupQueries.RankKey.scaledInts.as("v"))
         .localCheckpoint(true)
       val vDbl = transform(col("v"), _.cast("double"))
       // one power-iteration round: 1-row direction table -> next 1-row
@@ -1120,12 +1116,7 @@ object PipelineQueries {
         |  CAST(sum(q20) // count(*) AS BIGINT) AS mean_quality_q20
         |FROM flagged GROUP BY source, lang ORDER BY source, lang""".stripMargin
     ) { (s, d) =>
-      val ws = TextOps.tokens(col("text"))
-      Tables.documents(s, d)
-        .select(col("source"), col("lang"), md5(col("text")).as("dg"),
-          size(ws).cast("long").as("n_words"),
-          size(array_distinct(ws)).cast("long").as("n_distinct"))
-        .withColumn("q20", expr("(n_distinct * 1048576) div n_words"))
+      distinctQ20(s, d, col("source"), col("lang"), md5(col("text")).as("dg"))
         .withColumn("dgn", count(lit(1)).over(Window.partitionBy("dg")))
         .groupBy("source", "lang")
         .agg(count(lit(1)).cast("long").as("n_docs"),
@@ -1161,12 +1152,7 @@ object PipelineQueries {
         |  FROM lex QUALIFY lr <= 50
         |), sem AS (
         |  SELECT e.vec_id AS doc_id,
-        |    round(${OracleSql.dot("e.embedding", "pv")}
-        |      / (sqrt(list_sum(list_transform(e.embedding,
-        |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |       * sqrt(list_sum(list_transform(pv,
-        |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 4) + 0
-        |      AS rcos
+        |    ${OracleSql.cosine("e.embedding", "pv")} AS rcos
         |  FROM embeddings e, probe
         |), srank AS (
         |  SELECT doc_id,
@@ -1218,12 +1204,10 @@ object PipelineQueries {
     // global), then the grouped manifest.
     Q(
       "q150_adaptive_filter",
-      """WITH scored AS (
+      s"""WITH scored AS (
         |  SELECT doc_id, source,
         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
-        |    (CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT)
-        |      * 1048576)
-        |      // CAST(len(string_split(text, ' ')) AS BIGINT) AS q20
+        |    ${OracleSql.distinctQ20} AS q20
         |  FROM documents
         |), ranked AS (
         |  SELECT *,
@@ -1240,11 +1224,7 @@ object PipelineQueries {
         |  min(CASE WHEN rk * 4 <= n * 3 THEN q20 END) AS cutoff_q20
         |FROM ranked GROUP BY source ORDER BY source""".stripMargin
     ) { (s, d) =>
-      val ws = TextOps.tokens(col("text"))
-      val scored = Tables.documents(s, d).select(col("doc_id"), col("source"),
-          size(ws).cast("long").as("n_words"),
-          size(array_distinct(ws)).cast("long").as("n_distinct"))
-        .withColumn("q20", expr("(n_distinct * 1048576) div n_words"))
+      val scored = distinctQ20(s, d, col("doc_id"), col("source"))
       val w = Window.partitionBy("source")
       scored
         .withColumn("rk",
@@ -1276,19 +1256,10 @@ object PipelineQueries {
         |  FROM embeddings WHERE vec_id < 5
         |), scored AS (
         |  SELECT q.qid, e.vec_id,
-        |    round(${OracleSql.dot("e.embedding", "qv")}
-        |      / (sqrt(list_sum(list_transform(e.embedding,
-        |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |       * sqrt(list_sum(list_transform(qv,
-        |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 4) + 0
-        |      AS rcos
+        |    ${OracleSql.cosine("e.embedding", "qv")} AS rcos
         |  FROM embeddings e, q
         |  WHERE e.vec_id != q.qid AND e.label != q.qlabel
-        |), ranked AS (
-        |  SELECT qid, vec_id, rcos,
-        |    row_number() OVER (PARTITION BY qid
-        |                       ORDER BY rcos DESC, vec_id) AS rn
-        |  FROM scored)
+        |), ${OracleSql.rcosRanked}
         |SELECT qid, vec_id AS neg_id, rcos, CAST(rn AS BIGINT) AS rn
         |FROM ranked WHERE rn <= 3 ORDER BY qid, rn""".stripMargin
     ) { (s, d) =>
@@ -1319,11 +1290,9 @@ object PipelineQueries {
     // map stage. Ties share a decile by construction on both engines.
     Q(
       "q152_curriculum",
-      """WITH scored AS (
+      s"""WITH scored AS (
         |  SELECT doc_id,
-        |    (CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT)
-        |      * 1048576)
-        |      // CAST(len(string_split(text, ' ')) AS BIGINT) AS q20,
+        |    ${OracleSql.distinctQ20} AS q20,
         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words
         |  FROM documents
         |), ranked AS (
@@ -1342,11 +1311,7 @@ object PipelineQueries {
         |  CAST(sum(n_words) AS BIGINT) AS tokens
         |FROM assigned GROUP BY decile ORDER BY decile""".stripMargin
     ) { (s, d) =>
-      val ws = TextOps.tokens(col("text"))
-      val scored = Tables.documents(s, d).select(col("doc_id"),
-          size(ws).cast("long").as("n_words"),
-          size(array_distinct(ws)).cast("long").as("n_distinct"))
-        .withColumn("q20", expr("(n_distinct * 1048576) div n_words"))
+      val scored = distinctQ20(s, d, col("doc_id"))
         .select("doc_id", "q20", "n_words")
       val hist = scored.groupBy("q20").agg(count(lit(1)).as("c"))
       val wCum = Window.orderBy("q20")
@@ -2119,32 +2084,28 @@ object PipelineQueries {
     // the bounded histogram, never over docs; the outlier rollup is
     // |sources|-scale.
     Q(
-      "q234_mad_outliers",
-      """WITH h AS (
+      "q234_mad_outliers", {
+      // CTE `out`: the per-source lower median of `v` in the (source, v,
+      // c) count histogram `t`
+      def median(out: String, t: String, v: String) =
+        s"""$out AS (
+           |  SELECT source, min($v) AS $out FROM (
+           |    SELECT $t.source, $t.$v,
+           |      coalesce(sum(c) OVER (PARTITION BY $t.source ORDER BY $v
+           |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+           |        AS below, c, n.n
+           |    FROM $t JOIN n USING (source)) t
+           |  WHERE below < (n + 1) // 2 AND (n + 1) // 2 <= below + c
+           |  GROUP BY source)""".stripMargin
+      s"""WITH h AS (
         |  SELECT source, n_chars AS v, count(*) AS c
         |  FROM documents GROUP BY 1, 2),
         |n AS (SELECT source, sum(c) AS n FROM h GROUP BY source),
-        |med AS (
-        |  SELECT source, min(v) AS med FROM (
-        |    SELECT h.source, h.v,
-        |      coalesce(sum(c) OVER (PARTITION BY h.source ORDER BY v
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |        AS below, c, n.n
-        |    FROM h JOIN n USING (source)) t
-        |  WHERE below < (n + 1) // 2 AND (n + 1) // 2 <= below + c
-        |  GROUP BY source),
+        |${median("med", "h", "v")},
         |dh AS (
         |  SELECT h.source, abs(h.v - m.med) AS dv, sum(c) AS c
         |  FROM h JOIN med m USING (source) GROUP BY 1, 2),
-        |mad AS (
-        |  SELECT source, min(dv) AS mad FROM (
-        |    SELECT dh.source, dh.dv,
-        |      coalesce(sum(c) OVER (PARTITION BY dh.source ORDER BY dv
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |        AS below, c, n.n
-        |    FROM dh JOIN n USING (source)) t
-        |  WHERE below < (n + 1) // 2 AND (n + 1) // 2 <= below + c
-        |  GROUP BY source),
+        |${median("mad", "dh", "dv")},
         |outl AS (
         |  SELECT h.source, sum(CASE WHEN abs(h.v - m.med) > 5 * d.mad
         |    THEN c ELSE 0 END) AS n_out
@@ -2157,6 +2118,7 @@ object PipelineQueries {
         |FROM n JOIN med m USING (source) JOIN mad d USING (source)
         |JOIN outl o USING (source)
         |ORDER BY n.source""".stripMargin
+    }
     ) { (s, d) =>
       madOutliersCore(docs(s, d).select(col("source"), col("n_chars")))
     },
@@ -2264,6 +2226,18 @@ object PipelineQueries {
       .groupBy("source").agg(min("v").as(out))
   }
 
+  /** `documents` as `keys` plus n_words, n_distinct and q20, the Q20
+    * distinct-word ratio n_distinct·2^20 div n_words (q147, q150, q152;
+    * the oracles' `OracleSql.distinctQ20`). */
+  private def distinctQ20(s: org.apache.spark.sql.SparkSession, d: String,
+      keys: org.apache.spark.sql.Column*): org.apache.spark.sql.DataFrame = {
+    val ws = TextOps.tokens(col("text"))
+    Tables.documents(s, d).select(keys ++ Seq(
+        size(ws).cast("long").as("n_words"),
+        size(array_distinct(ws)).cast("long").as("n_distinct")): _*)
+      .withColumn("q20", expr("(n_distinct * 1048576) div n_words"))
+  }
+
   /** q234 core over any (source, n_chars) frame. Factored for crafted
     * median/MAD laws (odd/even counts, a planted mega-outlier). */
   private[graft] def madOutliersCore(
@@ -2359,7 +2333,7 @@ object PipelineQueries {
   */
 private object MmrOracle {
   private def dot(a: String, b: String): String =
-    s"list_sum(list_transform(range(1, 65), i -> $a[i] * $b[i]))"
+    OracleSql.dot64(s"$a[i]", s"$b[i]")
   val sql: String = {
     val sb = new StringBuilder
     sb.append(s"""WITH q AS (
@@ -2438,15 +2412,14 @@ private object LloydOracle {
 private object KCenterOracle {
   def sql(rounds: Int): String = {
     val sb = new StringBuilder
+    val d2 = OracleSql.dot64("(qv[i] - cv[i])", "(qv[i] - cv[i])")
     sb.append(
-      """WITH q AS (
+      s"""WITH q AS (
         |  SELECT vec_id, list_transform(embedding,
         |    x -> CAST(floor(CAST(x AS DOUBLE) * 64) AS BIGINT)) AS qv
         |  FROM embeddings),
         |c0 AS (SELECT qv AS cv FROM q WHERE vec_id = 0),
-        |m1 AS (SELECT vec_id, qv,
-        |  list_sum(list_transform(range(1, 65),
-        |    i -> (qv[i] - cv[i]) * (qv[i] - cv[i]))) AS mind2
+        |m1 AS (SELECT vec_id, qv, $d2 AS mind2
         |  FROM q, c0)""".stripMargin)
     for (r <- 2 to rounds) {
       sb.append(s""",
@@ -2455,8 +2428,7 @@ private object KCenterOracle {
         |c${r - 1} AS (SELECT qv AS cv FROM q
         |  WHERE vec_id = (SELECT vec_id FROM p${r - 1}x)),
         |m$r AS (SELECT m${r - 1}.vec_id, m${r - 1}.qv,
-        |  least(m${r - 1}.mind2, list_sum(list_transform(range(1, 65),
-        |    i -> (qv[i] - cv[i]) * (qv[i] - cv[i])))) AS mind2
+        |  least(m${r - 1}.mind2, $d2) AS mind2
         |  FROM m${r - 1}, c${r - 1})""".stripMargin)
     }
     val picks = (1 to rounds).map { r =>

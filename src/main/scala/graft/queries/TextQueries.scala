@@ -155,17 +155,19 @@ object TextQueries {
     // Quality scoring: stopword ratio, mean word length, long-word share,
     // and a combined score.
     Q(
-      "q44_quality",
-      """SELECT doc_id,
-        |  round(CAST(len(list_filter(ws, w -> w IN ('the','a','of','and','to','in','is')))
-        |        AS DOUBLE) / len(ws), 4) AS stop_ratio,
+      "q44_quality", {
+      val stopRatio =
+        """CAST(len(list_filter(ws, w -> w IN ('the','a','of','and','to','in','is')))
+          |        AS DOUBLE) / len(ws)""".stripMargin
+      s"""SELECT doc_id,
+        |  round($stopRatio, 4) AS stop_ratio,
         |  round(CAST(len(list_filter(ws, w -> length(w) >= 6)) AS DOUBLE) / len(ws), 4)
         |    AS long_ratio,
-        |  round(0.5 * (CAST(len(list_filter(ws, w -> w IN ('the','a','of','and','to','in','is')))
-        |          AS DOUBLE) / len(ws))
+        |  round(0.5 * ($stopRatio)
         |      + 0.5 * least(CAST(len(ws) AS DOUBLE) / 100, 1.0), 4) AS quality
         |FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents) t
         |ORDER BY doc_id""".stripMargin
+    }
     ) { (s, d) =>
       val ws = TextOps.tokens(col("text"))
       val stopRatio = size(filter(ws,
@@ -825,8 +827,7 @@ object TextQueries {
         |         ${OracleSql.md560("w1")} AS hw
         |       FROM bg),
         |cnt AS (SELECT hb, count(*) AS c FROM bh GROUP BY 1),
-        |uni AS (SELECT ${OracleSql.md560("w")} AS hw, count(*) AS cu FROM
-        |        (SELECT unnest(ws) AS w FROM tok) GROUP BY 1),
+        |${OracleSql.unigramCounts},
         |sc AS (SELECT bh.doc_id,
         |         CASE WHEN cnt.c >= 2 THEN cnt.c * 1000 ELSE uni.cu END AS s
         |       FROM bh JOIN cnt USING (hb) JOIN uni USING (hw))
@@ -1115,8 +1116,7 @@ object TextQueries {
     Q(
       "q204_novelty_curve",
       s"""WITH shr AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(ws) - 3),
-        |           i -> array_to_string(ws[i:i+4], ' '))) AS s
+        |  SELECT doc_id, unnest(${OracleSql.shingles("ws", 5)}) AS s
         |  FROM (SELECT doc_id, string_split(text, ' ') AS ws
         |        FROM documents) t),
         |dh AS (SELECT DISTINCT doc_id, ${OracleSql.md560("s")} AS h FROM shr),
@@ -1283,8 +1283,7 @@ object TextQueries {
         |cnt AS (SELECT hb, count(*) AS c12, min(b) AS bigram,
         |          min(hw1) AS hw1, min(hw2) AS hw2
         |        FROM bh GROUP BY 1),
-        |uni AS (SELECT ${OracleSql.md560("w")} AS hw, count(*) AS cu FROM
-        |        (SELECT unnest(ws) AS w FROM tok) GROUP BY 1)
+        |${OracleSql.unigramCounts}
         |SELECT bigram, CAST(c12 AS BIGINT) AS c12,
         |  ((CAST(c12 AS DOUBLE) * c12) / u1.cu) / u2.cu AS score
         |FROM cnt

@@ -3,94 +3,13 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.queries.DedupQueries
 
-/** Laws for the round-10 operators. q224: crafted rankings with known
-  * nDCG/MRR closed forms (ideal, single-hit-at-rank-3, zero-relevant)
-  * plus a gate-SF brute-force mirror.
+/** Laws for the round-10 operators; those of the vector-search
+  * evaluations (q224, q226, q233, q238) live in VectorSearchSpec.
   */
 class Round10LawsSpec extends SparkSpec {
   import spark.implicits._
-  import VectorSearchSpec.{dotD, rq}
 
   private val sf = "/root/testdata/sf0.001"
-
-  // ---------------------------------------------------------------- q224
-
-  private val qv = Seq(1f, 0f, 0f, 0f)
-  private def v(x: Float) = Seq(x, 0f, 0f, 0f)
-
-  test("law: q224 ideal ranking — 12 same-label vectors fill the top-10 " +
-    "(n_rel > 10 exercises the pref[10] denominator): nDCG = MRR = 1e6") {
-    val rows = (10L, qv, 1) +: (1 to 12).map(i =>
-      (20L + i, v(1f - i * 0.01f), 1)) :+ ((40L, v(0.5f), 2))
-    val got = DedupQueries.knnNdcgCore(spark,
-      rows.toDF("vec_id", "embedding", "label"),
-      Seq((10L, qv, 1))).collect()
-    assert(got.length == 1)
-    val r = got.head
-    assert((r.getLong(1), r.getLong(2), r.getLong(3)) ==
-      ((10L, 1000000L, 1000000L)), s"got ${r}")
-  }
-
-  test("law: q224 single relevant at rank 3 with n_rel = 1 — " +
-    "nDCG = disc[3]/disc[1] = 500000, MRR = 333333") {
-    val rows = Seq(
-      (10L, qv, 1), // the probe itself
-      (21L, v(0.9f), 2),
-      (22L, v(0.8f), 3),
-      (23L, v(0.7f), 1), // the only relevant, at rank 3
-      (24L, v(0.6f), 4),
-      (25L, v(0.5f), 5))
-    val got = DedupQueries.knnNdcgCore(spark,
-      rows.toDF("vec_id", "embedding", "label"),
-      Seq((10L, qv, 1))).collect()
-    val r = got.head
-    assert((r.getLong(1), r.getLong(2), r.getLong(3)) ==
-      ((1L, 500000L, 333333L)), s"got ${r}")
-  }
-
-  test("law: q224 zero relevant candidates in the corpus — all three " +
-    "metrics are 0 (the n_rel = 0 guard, not a division error)") {
-    val rows = Seq(
-      (10L, qv, 1),
-      (21L, v(0.9f), 2),
-      (22L, v(0.8f), 3))
-    val got = DedupQueries.knnNdcgCore(spark,
-      rows.toDF("vec_id", "embedding", "label"),
-      Seq((10L, qv, 1))).collect()
-    val r = got.head
-    assert((r.getLong(1), r.getLong(2), r.getLong(3)) ==
-      ((0L, 0L, 0L)), s"got ${r}")
-  }
-
-  test("law: q224 at the gate SF equals a driver-side brute-force " +
-    "nDCG/MRR mirror (all 16 probes)") {
-    val disc = Seq(1000000L, 630929L, 500000L, 430676L, 386852L,
-      356207L, 333333L, 315464L, 301029L, 289064L)
-    val pref = disc.scanLeft(0L)(_ + _).tail
-    val e = Tables.embeddings(spark, sf)
-      .select("vec_id", "embedding", "label").collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1), r.getInt(2)))
-    val probes = e.filter(p => p._1 >= 10 && p._1 < 26).sortBy(_._1)
-    val expect = probes.map { case (qid, pv, ql) =>
-      val cands = e.filter(_._1 != qid)
-      val nRel = cands.count(_._3 == ql).toLong
-      val top = cands.map(o => (o._1, o._3, rq(pv, o._2)))
-        .sortBy { case (id, _, r) => (-r, id) }.take(10)
-      val dcg = top.zipWithIndex.collect {
-        case ((_, l, _), i) if l == ql => disc(i) }.sum
-      val hits = top.count(_._2 == ql).toLong
-      val frank = top.zipWithIndex.collectFirst {
-        case ((_, l, _), i) if l == ql => i + 1L }
-      val ndcg = if (nRel == 0) 0L
-        else dcg * 1000000L / pref((nRel.min(10) - 1).toInt)
-      val mrr = frank.map(1000000L / _).getOrElse(0L)
-      (qid, hits, ndcg, mrr)
-    }.toSeq
-    val got = SparkEntry.queries("q224_knn_ndcg")(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3))).toSeq
-    assert(got == expect)
-  }
 
   // ---------------------------------------------------------------- q225
 
@@ -144,43 +63,6 @@ class Round10LawsSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSeq
     assert(got == expect)
-  }
-
-  // ---------------------------------------------------------------- q226
-
-  test("law: q226 crafted star topology — the hub is in all 4 spokes' " +
-    "top-5, spokes only in the hub's; isolated vector lands in the " +
-    "zero bucket") {
-    // pairs: hub 99 connects to 1..4 (strong); 1-2 weakly; 50 isolated
-    val pairs = Seq(
-      (1L, 99L, 9000L), (2L, 99L, 9000L), (3L, 99L, 9000L),
-      (4L, 99L, 9000L), (1L, 2L, 2000L))
-    val ids = Seq(1L, 2L, 3L, 4L, 50L, 99L)
-    val got = graft.queries.DedupQueries.hubnessCore(spark,
-      pairs.toDF("id_a", "id_b", "rq"),
-      ids.toDF("vec_id")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    // occurrences: 99 appears in top-5 of 1,2,3,4 => k_occ 4 (1 vec).
-    // 1 and 2 appear in each other's and the hub's lists => k_occ 2
-    // (2 vecs: ids 1, 2). 3 and 4 appear only in the hub's list =>
-    // k_occ 1 (2 vecs). 50 isolated => k_occ 0 (1 vec).
-    assert(got == Seq((0L, 1L), (1L, 2L), (2L, 2L), (4L, 1L)),
-      s"got ${got}")
-  }
-
-  test("law: q226 top-5 bound — a src with 7 candidates votes for " +
-    "exactly its 5 strongest (rq desc, dst asc ties)") {
-    val pairs = (1L to 7L).map(i => (0L, 10L + i, 1000L * (8 - i)))
-    val ids = (Seq(0L) ++ (11L to 17L)).toSeq
-    val got = graft.queries.DedupQueries.hubnessCore(spark,
-      pairs.toDF("id_a", "id_b", "rq"),
-      ids.toDF("vec_id")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    // node 0 votes for 11..15 (the 5 strongest); 16,17 miss the cut
-    // but still vote for 0 themselves => 0 has k_occ 7? No: every
-    // spoke has only one candidate (0), so all 7 vote for 0 => k_occ
-    // 7 (1 vec); 11..15 get 1 vote each (5 vecs); 16,17 get 0 (2).
-    assert(got == Map(7L -> 1L, 1L -> 5L, 0L -> 2L), s"got ${got}")
   }
 
   // ---------------------------------------------------------------- q227
@@ -328,24 +210,6 @@ class Round10LawsSpec extends SparkSpec {
       (8000L, 1L, 2L)), s"got ${got}")
   }
 
-  // ---------------------------------------------------------------- q233
-
-  test("law: q233 small corpus with a constant dim — the degenerate-" +
-    "range guard maps it to 0 and SQ8 recall is total (both top-10s " +
-    "are the full candidate set)") {
-    // dim 2 is constant across the corpus (mx == mn)
-    val rows = (1L to 9L).map(i =>
-      (i, Seq(i.toFloat / 10, 1f - i.toFloat / 10, 0.5f)))
-    val probes = Seq((1L, rows.head._2, 0))
-    val got = graft.queries.DedupQueries.sq8RecallCore(spark,
-      rows.toDF("vec_id", "embedding"), probes,
-      (Seq(0.1, 0.1, 0.5), Seq(0.9, 0.9, 0.5))).collect()
-    assert(got.length == 1)
-    // 8 candidates (self excluded), both top-10s hold all 8
-    assert((got.head.getLong(1), got.head.getLong(2)) ==
-      ((8L, 800000L)), s"got ${got.toSeq}")
-  }
-
   // ---------------------------------------------------------------- q234
 
   test("law: q234 crafted odd/even medians and a planted mega-outlier " +
@@ -428,37 +292,6 @@ class Round10LawsSpec extends SparkSpec {
     val a = got("a")
     assert(a._1 == 2L && a._2 == 1L + collide && a._3 == 1L)
     assert(a._4 == (a._2 - a._3) * 1000000L / math.max(a._2, 1L))
-  }
-
-  // ---------------------------------------------------------------- q238
-
-  test("law: q238 all-one-cell corpus — recall is total at EVERY " +
-    "nprobe level (the n-level gather fusion cannot drop members)") {
-    // centroid 0 dominates every corpus vector; probes probe cells
-    // (0, 1, 2, 3) in that order
-    val cents = (0L to 7L).map(c =>
-      (c, (0 until 8).map(i =>
-        if (i == c) (if (c == 0) 10f else 0.1f) else 0f).toSeq))
-    val corpus = (20L to 27L).map(i =>
-      (i, Seq(1f, 0.01f, 0f, 0f, 0f, 0f, 0f, 0f)))
-    val probes = Seq((20L, corpus.head._2, Seq(0L, 1L, 2L, 3L)))
-    val got = graft.queries.DedupQueries.multiProbeCore(spark,
-      corpus.toDF("vec_id", "embedding"), cents, probes).collect()
-      .map(r => (r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    // 7 candidates (self excluded), all in cell 0 = c1
-    assert(got == Seq((1L, 7L, 700000L), (2L, 7L, 700000L),
-      (4L, 7L, 700000L)), s"got ${got}")
-  }
-
-  test("law: q238 recall is monotone in nprobe at the gate SF") {
-    val got = SparkEntry.queries("q238_multiprobe_sweep")(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .groupBy(_._1)
-    got.values.foreach { rows =>
-      val byNp = rows.sortBy(_._2).map(_._3)
-      assert(byNp.sorted.sameElements(byNp),
-        s"recall not monotone: ${rows.toSeq}")
-    }
   }
 
   // ---------------------------------------------------------------- q239

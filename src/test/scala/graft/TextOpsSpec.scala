@@ -218,4 +218,32 @@ class TextOpsSpec extends SparkSpec {
       }
     }
   }
+
+  test("each registered native function rejects a wrong-typed argument " +
+      "at analysis, naming itself") {
+    graft.plans.GraftExtensions.install(spark)
+    val calls = Map(
+      "md5_prefix64" -> "md5_prefix64(1)",
+      "md5_prefix60" -> "md5_prefix60(1)",
+      "prefix_offsets" -> "prefix_offsets('a')",
+      "deflate_ratio" -> "deflate_ratio(array(1))",
+      "dot_product" -> "dot_product('a', array(1.0D))",
+      "quantize_stats" -> "quantize_stats(array('a'))",
+      "min_md5_hex" -> "min_md5_hex('a')",
+      "min_shingle_md5_hex" -> "min_shingle_md5_hex(array('a'), 'b')",
+      "cdc_cuts" -> "cdc_cuts(1)",
+      "bigram_sq_sum" -> "bigram_sq_sum(array('a'))")
+    // every registered function has its wrong-typed call
+    assert(calls.keySet == graft.plans.GraftExtensions.functionDescriptors
+      .map(_._1.funcName).toSet)
+    // a type-check failure (not, say, an unresolved function) naming fn
+    val wrong = calls.toSeq.sorted.flatMap { case (fn, call) =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        spark.sql(s"SELECT $call AS r"))
+      if (e.getCondition.startsWith("DATATYPE_MISMATCH") &&
+          e.getMessage.contains(fn)) None
+      else Some(s"$fn: ${e.getMessage}")
+    }
+    assert(wrong.isEmpty, wrong.mkString("\n"))
+  }
 }

@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Report every run of >= 60 identical tokens that two oracle string
+"""Report every run of >= 30 identical tokens that two oracle string
 literals share, or that one literal holds twice, so a DuckDB twin typed
 out at two call sites is found and moved into `graft.queries.OracleSql`
 (one home per twin).
@@ -26,7 +26,7 @@ import re
 import sys
 from collections import defaultdict
 
-MIN_RUN = 60
+MIN_RUN = 30
 ROOT = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..",
                     "src", "main", "scala", "graft", "queries")
 

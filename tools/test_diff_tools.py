@@ -236,8 +236,12 @@ class PlanGuardTest(unittest.TestCase):
 
 
 class OracleClonesTest(unittest.TestCase):
-    # 70 tokens: SELECT, then c0..c34 joined by commas
-    RUN = "SELECT " + ", ".join(f"c{i}" for i in range(35))
+    N = oracle_clones.MIN_RUN
+
+    @staticmethod
+    def run_of(n, prefix="c"):
+        """`n` distinct tokens: c0 c1 ... c<n-1>."""
+        return " ".join(f"{prefix}{i}" for i in range(n))
 
     def report(self, *literals):
         """Run oracle_clones.py over one Scala file holding `literals`,
@@ -248,17 +252,30 @@ class OracleClonesTest(unittest.TestCase):
         return run_tool("oracle_clones.py", os.path.dirname(path))
 
     def test_shared_run_is_reported(self):
-        r = self.report(f'"""WITH a AS ({self.RUN} FROM t)"""',
-                        f'"""{self.RUN} FROM u WHERE x > 1"""')
+        run = self.run_of(self.N + 10)
+        r = self.report(f'"""WITH a AS ({run} FROM t)"""',
+                        f'"""{run} FROM u WHERE x > 1"""')
         self.assertEqual(r.returncode, 1, r.stdout)
-        self.assertIn("CLONE 71 tokens: X.scala:q1_x:", r.stdout)
+        self.assertIn(f"CLONE {self.N + 11} tokens: X.scala:q1_x:", r.stdout)
         self.assertIn("X.scala:q2_x:", r.stdout)
 
     def test_run_differing_in_one_token_is_not(self):
-        other = self.RUN.replace("c17", "d17")
-        r = self.report(f'"""{self.RUN} FROM t"""', f'"""{other} FROM t"""')
+        n = self.N + 10
+        run = self.run_of(n)
+        other = run.replace(f"c{n // 2} ", f"d{n // 2} ")
+        r = self.report(f'"""{run} FROM t"""', f'"""{other} FROM t"""')
         self.assertEqual(r.returncode, 0, r.stdout)
         self.assertIn("0 shared runs", r.stdout)
+
+    def test_run_of_min_run_tokens_is_reported_one_less_is_not(self):
+        for n, rc in ((self.N, 1), (self.N - 1, 0)):
+            run = self.run_of(n)
+            r = self.report(f'"""x {run} y"""', f'"""z {run} w"""')
+            self.assertEqual(r.returncode, rc, r.stdout)
+            if rc:
+                self.assertIn(f"CLONE {n} tokens", r.stdout)
+            else:
+                self.assertIn("0 shared runs", r.stdout)
 
     def test_interpolated_twin_is_not(self):
         twin = "s\"\"\"WITH ${OracleSql.twin(\"h\", \"k\")} FROM t\"\"\""
@@ -269,10 +286,11 @@ class OracleClonesTest(unittest.TestCase):
             ["WITH", '${OracleSql.twin("h","k")}', ",", "x"])
 
     def test_margin_is_dropped_and_repeat_in_one_literal_found(self):
-        body = f"{self.RUN}\n        |UNION ALL\n        |{self.RUN}"
+        run = self.run_of(self.N + 10)
+        body = f"{run}\n        |UNION ALL\n        |{run}"
         r = self.report(f'"""{body}""".stripMargin')
         self.assertEqual(r.returncode, 1, r.stdout)
-        self.assertIn("CLONE 70 tokens", r.stdout)
+        self.assertIn(f"CLONE {self.N + 10} tokens", r.stdout)
         self.assertNotIn("|", r.stdout.split("tokens:")[1].split("...")[0])
 
     def test_queries_have_no_unlisted_clone(self):
