@@ -33,9 +33,7 @@ object SparkEntry {
       .join(Tables.orders(spark, d),
         col("l_orderkey") === col("o_orderkey"))
       .groupBy("o_orderpriority")
-      .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-        .as("revenue"),
-        count(lit(1)).as("n"))
+      .agg(graft.queries.Relational.revenue.as("revenue"), count(lit(1)).as("n"))
       .orderBy("o_orderpriority")
   }
 

@@ -64,27 +64,33 @@ object TextOps {
   /** Gopher-rule surface shared by q122 (per-rule bitmask form) and q125
     * (composed pipeline) so the thresholds live in ONE place on the Scala
     * side — the same no-drift treatment piiRedact gives the PII paths.
-    * Stats: (n_words, mean word length, stopword ratio, type-token
-    * ratio); every value is an in-order integer-valued sum over the token
-    * list, so both engines compute bit-identical doubles and the rule
-    * comparisons can never straddle an ulp. */
+    * Stats: columns n_words, mwl (mean word length), sr (stopword
+    * ratio) and ttr (type-token ratio); every value is an in-order
+    * integer-valued sum over the token list, so both engines compute
+    * bit-identical doubles and the rule comparisons can never straddle
+    * an ulp. */
   val GopherStops: Seq[String] = Seq("the", "a", "of", "and", "to", "in", "is")
   def gopherStats(text: Column): Seq[Column] = {
     val ws = tokens(text)
     val n = size(ws)
-    Seq(n.cast("long"),
-      aggregate(ws, lit(0.0), (a, x) => a + length(x).cast("double"))
-        / n,
-      size(filter(ws, x => x.isin(GopherStops: _*))).cast("double") / n,
-      size(array_distinct(ws)).cast("double") / n)
+    Seq(n.cast("long").as("n_words"),
+      (aggregate(ws, lit(0.0), (a, x) => a + length(x).cast("double"))
+        / n).as("mwl"),
+      (size(filter(ws, x => x.isin(GopherStops: _*))).cast("double") / n)
+        .as("sr"),
+      (size(array_distinct(ws)).cast("double") / n).as("ttr"))
   }
-  /** The four rule booleans over [[gopherStats]] columns, bitmask order. */
-  def gopherRules(nWords: Column, mwl: Column, sr: Column,
-      ttr: Column): Seq[Column] = Seq(
-    nWords.between(20, 50000),
-    mwl >= 4.25 && mwl <= 4.75,
-    sr >= 0.04,
-    ttr >= 0.35)
+  /** `f` of the [[tokens]] of column `text`, tokenized once
+    * ([[ArrayOps.bindOnce]]). */
+  def bindWords(f: Column => Column): Column =
+    ArrayOps.bindOnce(tokens(col("text")))(f)
+  /** The four rule booleans over the [[gopherStats]] columns n_words,
+    * mwl, sr and ttr, bitmask order. */
+  def gopherRules: Seq[Column] = Seq(
+    col("n_words").between(20, 50000),
+    col("mwl") >= 4.25 && col("mwl") <= 4.75,
+    col("sr") >= 0.04,
+    col("ttr") >= 0.35)
 
   /** Compression-ratio quality signal (deflate size / raw size) — the
     * Gopher/RefinedWeb-style repetitiveness filter: templated or looping

@@ -26,9 +26,18 @@ object Multimodal {
   private[multimodal] def looksLikeImage(p: Array[Byte]): Boolean =
     p != null && p.length >= 4 && (
       (p(0) == 0x89.toByte && p(1) == 'P' && p(2) == 'N' && p(3) == 'G') ||
-      (p(0) == 'B' && p(1) == 'M') ||
-      (p(0) == 'G' && p(1) == 'I' && p(2) == 'F' && p(3) == '8') ||
+      (p(0) == 'B' && p(1) == 'M') || hasMagic(p, 0, "GIF8") ||
       (p(0) == 0xFF.toByte && p(1) == 0xD8.toByte && p(2) == 0xFF.toByte))
+
+  /** Whether `p` holds the bytes of the ASCII `magic` at offset `at`. */
+  private def hasMagic(p: Array[Byte], at: Int, magic: String): Boolean =
+    p.length >= at + magic.length &&
+      magic.indices.forall(i => p(at + i) == magic(i))
+
+  /** RIFF sniff: "RIFF" at 0 and the 4-byte `form` at 8. */
+  private def looksLikeRiff(p: Array[Byte], form: String): Boolean =
+    p != null && p.length >= 12 && hasMagic(p, 0, "RIFF") &&
+      hasMagic(p, 8, form)
 
   /** Real image decode: normalized luminance histogram (integer-scaled
     * BT.601 weights) over all pixels. Returns null if the payload is not
@@ -77,9 +86,7 @@ object Multimodal {
   /** WAV sniff: RIFF container carrying a WAVE form ("RIFF" at 0, "WAVE"
     * at 8). Gates the javax.sound.sampled decode path. */
   private[graft] def looksLikeWav(p: Array[Byte]): Boolean =
-    p != null && p.length >= 12 &&
-      p(0) == 'R' && p(1) == 'I' && p(2) == 'F' && p(3) == 'F' &&
-      p(8) == 'W' && p(9) == 'A' && p(10) == 'V' && p(11) == 'E'
+    looksLikeRiff(p, "WAVE")
 
   /** Real WAV/PCM audio decode via the JDK's `javax.sound.sampled` (no
     * native codecs needed for PCM): returns the mono-mixed samples
@@ -136,15 +143,17 @@ object Multimodal {
     } catch { case scala.util.control.NonFatal(_) => null }
   }
 
+  /** The (width, height, n_frames) metadata of a media row. */
+  private val metaField = StructField("meta", StructType(Seq(
+    StructField("width", IntegerType, nullable = false),
+    StructField("height", IntegerType, nullable = false),
+    StructField("n_frames", IntegerType, nullable = false))),
+    nullable = false)
+
   val mediaSchema: StructType = StructType(Seq(
     StructField("media_id", LongType, nullable = false),
     StructField("kind", StringType, nullable = false),
-    StructField("payload", BinaryType, nullable = true),
-    StructField("meta", StructType(Seq(
-      StructField("width", IntegerType, nullable = false),
-      StructField("height", IntegerType, nullable = false),
-      StructField("n_frames", IntegerType, nullable = false))),
-      nullable = false)))
+    StructField("payload", BinaryType, nullable = true), metaField))
 
   /** Synthesize a media table from any keyed string column: payload =
     * UTF-8 bytes (a deterministic fake "encoded image"), metadata derived
@@ -187,43 +196,37 @@ object Multimodal {
     * byte histogram. Same schema either way; the plumbing (schema,
     * batching, partitioning) is identical for all paths.
     */
-  def decodeAndFeaturize(media: DataFrame, bins: Int = 8): DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(featureSchema)
-    media.select("media_id", "payload").mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val payload = if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1)
-        if (payload == null) Row(id, 0L, null)
-        else {
-          val decoded =
-            if (looksLikeImage(payload)) lumHistogram(payload, bins)
-            else if (looksLikeWav(payload)) {
-              val pcm = decodePcm(payload)
-              if (pcm == null) null
-              else {
-                val (samples, _) = pcm
-                val h = new Array[Double](bins)
-                samples.foreach { s =>
-                  val b = (((s + 1.0) / 2.0) * bins).toInt
-                  h(math.min(math.max(b, 0), bins - 1)) += 1.0
-                }
-                val n = samples.length.toDouble.max(1.0)
-                var i = 0
-                while (i < bins) { h(i) /= n; i += 1 }
-                h
+  def decodeAndFeaturize(media: DataFrame, bins: Int = 8): DataFrame =
+    mapPayloads(media, featureSchema) { (id, payload) =>
+      if (payload == null) Row(id, 0L, null)
+      else {
+        val decoded =
+          if (looksLikeImage(payload)) lumHistogram(payload, bins)
+          else if (looksLikeWav(payload)) {
+            val pcm = decodePcm(payload)
+            if (pcm == null) null
+            else {
+              val (samples, _) = pcm
+              val h = new Array[Double](bins)
+              samples.foreach { s =>
+                val b = (((s + 1.0) / 2.0) * bins).toInt
+                h(math.min(math.max(b, 0), bins - 1)) += 1.0
               }
-            } else null
-          val hist = if (decoded != null) decoded else {
-            val h = new Array[Double](bins)
-            payload.foreach(b => h((b & 0xff) * bins / 256) += 1.0)
-            val n = payload.length.toDouble.max(1.0)
-            h.map(_ / n)
-          }
-          Row(id, payload.length.toLong, hist.toSeq)
+              val n = samples.length.toDouble.max(1.0)
+              var i = 0
+              while (i < bins) { h(i) /= n; i += 1 }
+              h
+            }
+          } else null
+        val hist = if (decoded != null) decoded else {
+          val h = new Array[Double](bins)
+          payload.foreach(b => h((b & 0xff) * bins / 256) += 1.0)
+          val n = payload.length.toDouble.max(1.0)
+          h.map(_ / n)
         }
+        Row(id, payload.length.toLong, hist.toSeq)
       }
-    }(enc)
-  }
+    }
 
   val audioFeatureSchema: StructType = StructType(Seq(
     StructField("media_id", LongType, nullable = false),
@@ -238,42 +241,31 @@ object Multimodal {
     * the decode degrades, the partition doesn't fail). Per-partition
     * streaming like [[decodeAndFeaturize]] — no shuffle, no driver
     * round-trip, constant memory at any corpus size. */
-  def audioFeatures(media: DataFrame): DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(audioFeatureSchema)
-    media.select("media_id", "payload").mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val payload = if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1)
-        val pcm = if (looksLikeWav(payload)) decodePcm(payload) else null
-        if (pcm == null) Row(id, null, null, null, null)
-        else {
-          val (s, rate) = pcm
-          val n = s.length
-          var sumSq = 0.0
-          var crossings = 0L
-          var i = 0
-          while (i < n) {
-            sumSq += s(i) * s(i)
-            if (i > 0 && ((s(i - 1) < 0.0) != (s(i) < 0.0))) crossings += 1
-            i += 1
-          }
-          val rms = if (n == 0) 0.0 else math.sqrt(sumSq / n)
-          val zcr = if (n > 1) crossings.toDouble / (n - 1) else 0.0
-          Row(id, rate.toDouble, n.toLong, rms, zcr)
+  def audioFeatures(media: DataFrame): DataFrame =
+    mapPayloads(media, audioFeatureSchema) { (id, payload) =>
+      val pcm = if (looksLikeWav(payload)) decodePcm(payload) else null
+      if (pcm == null) Row(id, null, null, null, null)
+      else {
+        val (s, rate) = pcm
+        val n = s.length
+        var sumSq = 0.0
+        var crossings = 0L
+        var i = 0
+        while (i < n) {
+          sumSq += s(i) * s(i)
+          if (i > 0 && ((s(i - 1) < 0.0) != (s(i) < 0.0))) crossings += 1
+          i += 1
         }
+        val rms = if (n == 0) 0.0 else math.sqrt(sumSq / n)
+        val zcr = if (n > 1) crossings.toDouble / (n - 1) else 0.0
+        Row(id, rate.toDouble, n.toLong, rms, zcr)
       }
-    }(enc)
-  }
+    }
 
   val resizedSchema: StructType = StructType(Seq(
     StructField("media_id", LongType, nullable = false),
     StructField("kind", StringType, nullable = false),
-    StructField("resized", BinaryType, nullable = true),
-    StructField("meta", StructType(Seq(
-      StructField("width", IntegerType, nullable = false),
-      StructField("height", IntegerType, nullable = false),
-      StructField("n_frames", IntegerType, nullable = false))),
-      nullable = false)))
+    StructField("resized", BinaryType, nullable = true), metaField))
 
   /** Resize: nearest-neighbor resample of the payload interpreted as a
     * row-major `meta.width x meta.height` byte grid (what the stub decode
@@ -321,16 +313,13 @@ object Multimodal {
   /** GIF sniff ("GIF87a"/"GIF89a") — the one multi-frame (video-container)
     * format the pure JDK can decode. */
   private[graft] def looksLikeGif(p: Array[Byte]): Boolean =
-    p != null && p.length >= 4 &&
-      p(0) == 'G' && p(1) == 'I' && p(2) == 'F' && p(3) == '8'
+    p != null && hasMagic(p, 0, "GIF8")
 
   /** AVI sniff: RIFF container carrying an "AVI " form — the MJPEG-in-AVI
     * layout is the one video container a pure JDK can fully decode (RIFF
     * walk + per-frame JPEG via ImageIO). */
   private[graft] def looksLikeAvi(p: Array[Byte]): Boolean =
-    p != null && p.length >= 12 &&
-      p(0) == 'R' && p(1) == 'I' && p(2) == 'F' && p(3) == 'F' &&
-      p(8) == 'A' && p(9) == 'V' && p(10) == 'I' && p(11) == ' '
+    looksLikeRiff(p, "AVI ")
 
   /** Walk the RIFF chunk tree of an AVI payload and return the
     * video-stream frame payloads: the data of every `NNdc`/`NNdb` chunk
@@ -356,19 +345,20 @@ object Multimodal {
       else 0
     var depth = 0
     var live = p.length >= 12
+    def resumeParent(): Unit =
+      if (stack.isEmpty) live = false
+      else { val t = stack.pop(); off = t._1; end = t._2; depth = t._3 }
     while (live) {
       if (off + 8 > end || depth > 16) {
         // span done (or pathological nesting): resume the parent span
-        if (stack.isEmpty) live = false
-        else { val t = stack.pop(); off = t._1; end = t._2; depth = t._3 }
+        resumeParent()
       } else {
         val o = off.toInt
         val sz = le32(o + 4)
         val dataStart = off + 8
         val dataEnd = math.min(dataStart + sz, end.toLong)
         if (dataEnd < dataStart) { // corrupt size: abandon this span
-          if (stack.isEmpty) live = false
-          else { val t = stack.pop(); off = t._1; end = t._2; depth = t._3 }
+          resumeParent()
         } else {
           val next = dataStart + sz + (sz & 1L) // chunks pad to even length
           val isList = p(o) == 'L' && p(o + 1) == 'I' &&
@@ -420,50 +410,57 @@ object Multimodal {
   def videoFrameFeatures(media: DataFrame, stride: Int = 2, bins: Int = 8)
       : DataFrame = {
     require(stride > 0, "stride must be positive")
-    val enc = org.apache.spark.sql.Encoders.row(videoFeatureSchema)
+    mapPayloads(media, videoFeatureSchema) { (id, payload) =>
+      if (looksLikeAvi(payload)) {
+        // MJPEG-in-AVI: every 00dc/00db chunk under movi is one JPEG
+        val frames = try aviMjpegFrames(payload)
+          catch { case scala.util.control.NonFatal(_) => Array.empty[Array[Byte]] }
+        if (frames.isEmpty) Row(id, null, null)
+        else {
+          val kept = (0 until frames.length by stride).map { i =>
+            val img =
+              try javax.imageio.ImageIO.read(
+                new java.io.ByteArrayInputStream(frames(i)))
+              catch { case scala.util.control.NonFatal(_) => null }
+            val h = if (img == null) null else lumHistOf(img, bins)
+            Row(i, if (h == null) null else h.toSeq)
+          }
+          Row(id, frames.length.toLong, kept)
+        }
+      }
+      else if (!looksLikeGif(payload)) Row(id, null, null)
+      else try {
+        val iis = javax.imageio.ImageIO.createImageInputStream(
+          new java.io.ByteArrayInputStream(payload))
+        try {
+          val readers = javax.imageio.ImageIO.getImageReaders(iis)
+          if (!readers.hasNext) Row(id, null, null)
+          else {
+            val reader = readers.next()
+            try {
+              reader.setInput(iis)
+              val n = reader.getNumImages(true)
+              val frames = (0 until n by stride).map { i =>
+                val h = lumHistOf(reader.read(i), bins)
+                Row(i, if (h == null) null else h.toSeq)
+              }
+              Row(id, n.toLong, frames)
+            } finally reader.dispose()
+          }
+        } finally iis.close()
+      } catch { case scala.util.control.NonFatal(_) => Row(id, null, null) }
+    }
+  }
+
+  /** Per-partition map of each (media_id, payload) row of `media` to a row
+    * of `schema` (payload null when absent) — the Scala analogue of a
+    * Pandas UDF over mapInPandas: one iterator per partition, constant
+    * memory, no driver round-trip. */
+  private def mapPayloads(media: DataFrame, schema: StructType)(
+      f: (Long, Array[Byte]) => Row): DataFrame =
     media.select("media_id", "payload").mapPartitions { rows =>
       rows.map { r =>
-        val id = r.getLong(0)
-        val payload = if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1)
-        if (looksLikeAvi(payload)) {
-          // MJPEG-in-AVI: every 00dc/00db chunk under movi is one JPEG
-          val frames = try aviMjpegFrames(payload)
-            catch { case scala.util.control.NonFatal(_) => Array.empty[Array[Byte]] }
-          if (frames.isEmpty) Row(id, null, null)
-          else {
-            val kept = (0 until frames.length by stride).map { i =>
-              val img =
-                try javax.imageio.ImageIO.read(
-                  new java.io.ByteArrayInputStream(frames(i)))
-                catch { case scala.util.control.NonFatal(_) => null }
-              val h = if (img == null) null else lumHistOf(img, bins)
-              Row(i, if (h == null) null else h.toSeq)
-            }
-            Row(id, frames.length.toLong, kept)
-          }
-        }
-        else if (!looksLikeGif(payload)) Row(id, null, null)
-        else try {
-          val iis = javax.imageio.ImageIO.createImageInputStream(
-            new java.io.ByteArrayInputStream(payload))
-          try {
-            val readers = javax.imageio.ImageIO.getImageReaders(iis)
-            if (!readers.hasNext) Row(id, null, null)
-            else {
-              val reader = readers.next()
-              try {
-                reader.setInput(iis)
-                val n = reader.getNumImages(true)
-                val frames = (0 until n by stride).map { i =>
-                  val h = lumHistOf(reader.read(i), bins)
-                  Row(i, if (h == null) null else h.toSeq)
-                }
-                Row(id, n.toLong, frames)
-              } finally reader.dispose()
-            }
-          } finally iis.close()
-        } catch { case scala.util.control.NonFatal(_) => Row(id, null, null) }
+        f(r.getLong(0), if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1))
       }
-    }(enc)
-  }
+    }(org.apache.spark.sql.Encoders.row(schema))
 }

@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
-import java.security.MessageDigest
 
 /** Native fingerprint kernels (SURVEY §7.3 path (b)) for the document
   * fingerprint family (ref `str/kernels` fingerprinting; q46): the composed
@@ -44,8 +43,6 @@ case class MinMd5Hex(child: Expression) extends UnaryExpression {
 }
 
 object MinMd5Hex {
-  private val digests = ThreadLocal.withInitial[MessageDigest](() =>
-    MessageDigest.getInstance("MD5"))
   private val hexDigits = "0123456789abcdef".getBytes
 
   private def hex(d: Array[Byte]): UTF8String = {
@@ -60,18 +57,17 @@ object MinMd5Hex {
   }
 
   /** Called from both interpreted eval and generated code. */
+  /** The unsigned-smaller of `best` (null: none yet) and `d`. */
+  private def lower(best: Array[Byte], d: Array[Byte]): Array[Byte] =
+    if (best == null || java.util.Arrays.compareUnsigned(d, best) < 0) d
+    else best
+
   def minHex(arr: ArrayData): UTF8String = {
     val n = arr.numElements()
-    val md = digests.get()
     var best: Array[Byte] = null
     var i = 0
     while (i < n) {
-      if (!arr.isNullAt(i)) {
-        md.reset()
-        val d = md.digest(arr.getUTF8String(i).getBytes)
-        if (best == null || java.util.Arrays.compareUnsigned(d, best) < 0)
-          best = d
-      }
+      if (!arr.isNullAt(i)) best = lower(best, Md5.of(arr.getUTF8String(i)))
       i += 1
     }
     if (best == null) null else hex(best)
@@ -89,7 +85,6 @@ object MinMd5Hex {
   def minShingleHex(arr: ArrayData, n: Int): UTF8String = {
     val len = arr.numElements()
     if (n <= 0 || len < n) return null
-    val md = digests.get()
     var best: Array[Byte] = null
     var i = 0
     while (i <= len - n) {
@@ -97,16 +92,14 @@ object MinMd5Hex {
       var j = i
       while (ok && j < i + n) { if (arr.isNullAt(j)) ok = false; j += 1 }
       if (ok) {
-        md.reset()
+        val md = Md5.digester()
         j = i
         while (j < i + n) {
           if (j > i) md.update(space)
           md.update(arr.getUTF8String(j).getBytes)
           j += 1
         }
-        val d = md.digest()
-        if (best == null || java.util.Arrays.compareUnsigned(d, best) < 0)
-          best = d
+        best = lower(best, md.digest())
       }
       i += 1
     }

@@ -1,11 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.unsafe.types.UTF8String
 import java.security.MessageDigest
 
@@ -35,15 +33,27 @@ case class Md5Prefix64(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object Md5Prefix64 {
+/** One MD5 digester per thread, shared by the md5 kernels
+  * ([[Md5Prefix64]], [[Md5Prefix60]], [[MinMd5Hex]]). */
+private[plans] object Md5 {
   private val digests = ThreadLocal.withInitial[MessageDigest](() =>
     MessageDigest.getInstance("MD5"))
 
-  /** Called from both interpreted eval and generated code. */
-  def hash(s: UTF8String): Long = {
+  /** This thread's digester, reset. */
+  def digester(): MessageDigest = {
     val md = digests.get()
     md.reset()
-    val d = md.digest(s.getBytes)
+    md
+  }
+
+  /** The 16 md5 bytes of `s`. */
+  def of(s: UTF8String): Array[Byte] = digester().digest(s.getBytes)
+}
+
+object Md5Prefix64 {
+  /** Called from both interpreted eval and generated code. */
+  def hash(s: UTF8String): Long = {
+    val d = Md5.of(s)
     ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
       ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
   }
@@ -80,76 +90,12 @@ case class Md5Prefix60(child: Expression) extends UnaryExpression {
 }
 
 object Md5Prefix60 {
-  private val digests = ThreadLocal.withInitial[MessageDigest](() =>
-    MessageDigest.getInstance("MD5"))
-
   /** First 8 md5 bytes big-endian, shifted right 4: the top 15 nibbles. */
   def hash(s: UTF8String): Long = {
-    val md = digests.get()
-    md.reset()
-    val d = md.digest(s.getBytes)
+    val d = Md5.of(s)
     var v = 0L
     var i = 0
     while (i < 8) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
     v >>> 4
-  }
-}
-
-/** Session extension registering the engine's native functions —
-  * `spark.sql.extensions=graft.plans.GraftExtensions`. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftExtensions.functionDescriptors.foreach(ext.injectFunction)
-    ext.injectOptimizerRule(_ => SizeFilterToExists)
-    // operator-optimization batch — runs before SchemaPruning's early
-    // scan-pushdown batch, so the extracted form is what pruning sees
-    ext.injectOptimizerRule(_ => TransformFieldExtraction)
-  }
-}
-
-object GraftExtensions {
-  private[graft] val functionDescriptors = Seq(
-    (new FunctionIdentifier("md5_prefix64"),
-      new ExpressionInfo(classOf[Md5Prefix64].getName, "md5_prefix64"),
-      (children: Seq[Expression]) => Md5Prefix64(children.head): Expression),
-    (new FunctionIdentifier("md5_prefix60"),
-      new ExpressionInfo(classOf[Md5Prefix60].getName, "md5_prefix60"),
-      (children: Seq[Expression]) => Md5Prefix60(children.head): Expression),
-    (new FunctionIdentifier("prefix_offsets"),
-      new ExpressionInfo(classOf[PrefixOffsets].getName, "prefix_offsets"),
-      (children: Seq[Expression]) => PrefixOffsets(children.head): Expression),
-    (new FunctionIdentifier("deflate_ratio"),
-      new ExpressionInfo(classOf[DeflateRatio].getName, "deflate_ratio"),
-      (children: Seq[Expression]) => DeflateRatio(children.head): Expression),
-    (new FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (children: Seq[Expression]) =>
-        DotProduct(children(0), children(1)): Expression),
-    (new FunctionIdentifier("quantize_stats"),
-      new ExpressionInfo(classOf[QuantizeStats].getName, "quantize_stats"),
-      (children: Seq[Expression]) => QuantizeStats(children.head): Expression),
-    (new FunctionIdentifier("min_md5_hex"),
-      new ExpressionInfo(classOf[MinMd5Hex].getName, "min_md5_hex"),
-      (children: Seq[Expression]) => MinMd5Hex(children.head): Expression),
-    (new FunctionIdentifier("min_shingle_md5_hex"),
-      new ExpressionInfo(classOf[MinShingleMd5Hex].getName,
-        "min_shingle_md5_hex"),
-      (children: Seq[Expression]) =>
-        MinShingleMd5Hex(children(0), children(1)): Expression),
-    (new FunctionIdentifier("cdc_cuts"),
-      new ExpressionInfo(classOf[CdcCuts].getName, "cdc_cuts"),
-      (children: Seq[Expression]) => CdcCuts(children.head): Expression),
-    (new FunctionIdentifier("bigram_sq_sum"),
-      new ExpressionInfo(classOf[BigramSqSum].getName, "bigram_sq_sum"),
-      (children: Seq[Expression]) => BigramSqSum(children.head): Expression))
-
-  /** Imperative fallback: if `getOrCreate` returned a session built without
-    * `spark.sql.extensions=graft.plans.GraftExtensions` (e.g. a harness
-    * created it first), register the functions directly. Idempotent. */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    functionDescriptors.foreach { case (id, info, builder) =>
-      if (!reg.functionExists(id)) reg.registerFunction(id, info, builder)
-    }
   }
 }

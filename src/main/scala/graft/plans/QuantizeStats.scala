@@ -83,6 +83,10 @@ object QuantizeStats {
     else JBigDecimal.valueOf(d).setScale(0, RoundingMode.HALF_UP).doubleValue()
   }
 
+  /** Element `i` of a float or double array, as a double. */
+  private def elem(a: ArrayData, i: Int, isFloat: Boolean): Double =
+    if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)
+
   /** Called from both interpreted eval and generated code. Null for
     * empty/all-null arrays. */
   def stats(a: ArrayData, isFloat: Boolean): GenericArrayData = {
@@ -93,7 +97,7 @@ object QuantizeStats {
     var i = 0
     while (i < n) {
       if (!a.isNullAt(i)) {
-        val x = if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)
+        val x = elem(a, i, isFloat)
         if (x < mn) mn = x
         if (x > mx) mx = x
         seen = true
@@ -108,7 +112,7 @@ object QuantizeStats {
       i = 0
       while (i < n) {
         if (!a.isNullAt(i)) {
-          val x = if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)
+          val x = elem(a, i, isFloat)
           val q = sparkRound((x - mn) / sc)
           qSum += q
           val err = math.abs(mn + q * sc - x)

@@ -138,16 +138,24 @@ object TransformFieldExtraction extends Rule[LogicalPlan] {
     structArray(arr).flatMap { case (at, st) =>
       if (bareUse(body, v)) None
       else ordsOf(body, v) match {
-        case Seq(ord) =>
-          val nv = leafVar(v, at, st, ord)
-          val nb = body.transformUp {
-            case GetStructField(x: NamedLambdaVariable, o, _)
-                if x.exprId == v.exprId && o == ord => nv
-          }
-          Some((extract(arr, at, st, ord), nv, nb))
+        case Seq(ord) => Some(leafRewrite(arr, at, st, ord, v, body))
         case _ => None
       }
     }
+
+  /** The rewrite of `body` reading only field `ord` of `v`: (the leaf
+    * array extracted from `arr`, a fresh leaf variable, `body` with each
+    * `v.field` read replaced by that variable). */
+  private def leafRewrite(arr: Expression, at: ArrayType, st: StructType,
+      ord: Int, v: NamedLambdaVariable, body: Expression)
+      : (Expression, NamedLambdaVariable, Expression) = {
+    val nv = leafVar(v, at, st, ord)
+    val nb = body.transformUp {
+      case GetStructField(x: NamedLambdaVariable, o, _)
+          if x.exprId == v.exprId && o == ord => nv
+    }
+    (extract(arr, at, st, ord), nv, nb)
+  }
 
   /** Multi-leaf rewrite over ONE reference to `arr` (which may be a
     * CommonExpressionRef when the caller With-wraps a computed array):
@@ -178,13 +186,8 @@ object TransformFieldExtraction extends Rule[LogicalPlan] {
       body: Expression, extraVars: Seq[NamedLambdaVariable],
       hidden: Boolean): Option[Expression] = ords match {
     case Seq(ord) =>
-      val nv = leafVar(v, at, st, ord)
-      val nb = body.transformUp {
-        case GetStructField(x: NamedLambdaVariable, o, _)
-            if x.exprId == v.exprId && o == ord => nv
-      }
-      Some(ArrayTransform(extract(arrRef, at, st, ord),
-        LambdaFunction(nb, nv +: extraVars, hidden)))
+      val (leaf, nv, nb) = leafRewrite(arrRef, at, st, ord, v, body)
+      Some(ArrayTransform(leaf, LambdaFunction(nb, nv +: extraVars, hidden)))
     case Seq(o1, o2) if extraVars.isEmpty =>
       // the pinned two-leaf form: zip_with over the two extracted leaves
       val n1 = leafVar(v, at, st, o1)

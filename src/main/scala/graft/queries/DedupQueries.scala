@@ -48,6 +48,9 @@ object DedupQueries {
       * cid. */
     def codeAggs: Seq[Column] = (0 until 4).map(m =>
       max_by(col("cid"), struct(col(s"d$m"), -col("cid"))).as(s"c$m"))
+    /** (vec_id, c0..c3): each vector's [[codeAggs]]. */
+    def codes(withD: DataFrame): DataFrame =
+      withD.groupBy("vec_id").agg(codeAggs.head, codeAggs.tail: _*)
     /** Per-query 32-slot LUT array from the (vec_id, cid, d0..d3)
       * subspace-dot table, bounded collect_list of 32 structs. */
     def lutArr(withD: DataFrame, qids: Seq[Long]): DataFrame =
@@ -60,13 +63,13 @@ object DedupQueries {
             (col("m") * 8 + col("cid")).cast("int").as("i"),
             col("ld").as("v")))),
           x => x.getField("v")).as("lut"))
-    /** ADC score: the 4 code lookups added in fixed order. */
-    def adc(lut: Column, c0: Column, c1: Column, c2: Column,
-        c3: Column): Column =
-      element_at(lut, c0.cast("int") + 1) +
-        element_at(lut, c1.cast("int") + 9) +
-        element_at(lut, c2.cast("int") + 17) +
-        element_at(lut, c3.cast("int") + 25)
+    /** ADC score: the 4 code lookups of c0..c3 in `lut`, added in fixed
+      * order. */
+    def adc: Column =
+      element_at(col("lut"), col("c0").cast("int") + 1) +
+        element_at(col("lut"), col("c1").cast("int") + 9) +
+        element_at(col("lut"), col("c2").cast("int") + 17) +
+        element_at(col("lut"), col("c3").cast("int") + 25)
     /** The ANN tail over (qid, vec_id, adc) scores: top-5 per query
       * (WindowGroupLimit), then an exact dot re-score of just those
       * survivors, broadcast. */
@@ -77,13 +80,11 @@ object DedupQueries {
         .select(col("qid"), col("vec_id").as("cand_id"), col("adc"))
       e.select(col("vec_id").as("cand_id"), col("embedding").as("ev"))
         .join(broadcast(top5), "cand_id")
-        .join(broadcast(e.filter(col("vec_id").isin(qids: _*))
-          .select(col("vec_id").as("qid"), col("embedding").as("qv"))),
+        .join(broadcast(RankKey.probeVecs(e, col("vec_id").isin(qids: _*))),
           "qid")
         .select(col("qid"), col("cand_id").as("vec_id"),
-          (round(col("adc"), 4) + lit(0.0)).as("adc_dot"),
-          (round(TextOps.dot(col("ev"), col("qv")), 4) + lit(0.0))
-            .as("exact_dot"))
+          RankKey.round4(col("adc")).as("adc_dot"),
+          RankKey.round4(TextOps.dot(col("ev"), col("qv"))).as("exact_dot"))
         .orderBy(col("qid"), col("adc_dot").desc, col("vec_id"))
     }
   }
@@ -104,6 +105,27 @@ object DedupQueries {
     val M = 1099511627776L
     /** 2^44: the (id·16 + label) lane. */
     val ML = 17592186044416L
+    /** The probe front: (qid, qv) of the rows of `e` where `which` holds. */
+    def probeVecs(e: DataFrame, which: Column): DataFrame =
+      e.filter(which).select(col("vec_id").as("qid"), col("embedding").as("qv"))
+    /** `x` rounded to 4 places, −0.0 read as 0.0 (the oracle's `+ 0`). */
+    def round4(x: Column): Column = round(x, 4) + lit(0.0)
+    /** The rounded cosine of each row's `embedding` with its probe's `qv`. */
+    def rcos: Column =
+      round4(TextOps.cosine(col("embedding"), col("qv"))).as("rcos")
+    /** The rows of `e` against every probe of `probes` (qid, ...) but the
+      * row's own vector. */
+    def crossProbes(e: DataFrame, probes: DataFrame): DataFrame =
+      e.crossJoin(probes).filter(col("vec_id") =!= col("qid"))
+    /** The `k` best rows of `scored` per qid: `score` DESC, then vec_id. */
+    def topScored(scored: DataFrame, score: String, k: Int): DataFrame =
+      Scale.topK(scored, Seq("qid"), Seq(col(score).desc, col("vec_id")), k)
+    /** The Spark twin of `OracleSql.ivfProbes`: the 2 cells (cid) of
+      * largest `dot` per probe vector of `dots` where `which` holds, ties
+      * to the smaller cid. */
+    def ivfProbes(dots: DataFrame, which: Column): DataFrame =
+      Scale.topK(dots.filter(which), Seq("vec_id"),
+        Seq(col("dot").desc, col("cid")), 2)
     /** A dot product quantized to round(dot·1e4) as BIGINT. */
     def quant(dot: Column): Column = round(dot * 10000).cast("long")
     /** `embedding` as scaled ints, [[quant]] per dim: the Spark twin of
@@ -114,6 +136,9 @@ object DedupQueries {
     def rq(a: Column, b: Column): Column =
       quant(call_function("dot_product", a, b))
     def pack(score: Column, id: Column): Column = score * lit(-M) + id
+    /** The brute-force key: [[rq]] of the row's `embedding` with its
+      * probe's `qv`, packed with vec_id. */
+    def bfKey: Column = pack(rq(col("embedding"), col("qv")), col("vec_id"))
     def packLabeled(score: Column, id: Column, label: Column): Column =
       score * lit(-ML) + id * 16L + label
     def id(key: Column): Column = pmod(key, lit(M))
@@ -161,6 +186,10 @@ object DedupQueries {
       recallPpm(g.select(col("qid") +: hits: _*).selectExpr("qid", stack),
         Seq("qid", param))
     }
+    /** [[ranks]] of the `k` smallest `key`s per qid of `keyed`. */
+    def topRanks(keyed: DataFrame, k: Int, decode: Column*): DataFrame =
+      ranks(keyed.groupBy("qid").agg(bottomK(k)(col("key")).as("ks")),
+        decode: _*)
     /** The ranked tail: one row (qid, rk, `decode`...) per key of the
       * gathered array `ks`, rk its 1-based position, ordered by (qid, rk). */
     def ranks(g: DataFrame, decode: Column*): DataFrame =
@@ -178,6 +207,10 @@ object DedupQueries {
       -greatest(cents.map { case (cid, cv) =>
         struct(rq(v, typedLit(cv)).as("dt"), lit(-cid).as("negid"))
       }: _*).getField("negid")
+    /** (vec_id, embedding) of `e` with each row's [[nearestCell]] as cid. */
+    def withCell(e: DataFrame, cents: Seq[(Long, Seq[Float])]): DataFrame =
+      e.select(col("vec_id"), col("embedding"),
+        nearestCell(col("embedding"), cents).as("cid"))
   }
 
   /** Per-dim affine scalar quantization (SQ) to `levels` + 1 integer
@@ -399,6 +432,15 @@ object DedupQueries {
       |  FROM ($rpPairsSql) full_pairs) ranked
       |WHERE rn <= 32""".stripMargin
 
+  /** Each node of [[rpEdges]]'s connected components, selected as `id`,
+    * with its component label selected as `label`: the Spark twin of
+    * [[rpGroupsSql]]. */
+  private def rpGroups(s: org.apache.spark.sql.SparkSession, d: String,
+      id: String, label: String): org.apache.spark.sql.DataFrame =
+    graft.functions.GraphOps
+      .connectedComponents(rpEdges(s, d), "id_a", "id_b")
+      .select(col("id").as(id), col("lbl").as(label))
+
   /** The connected-components oracle over [[rpEdgesSql]]: CTEs `pairs`,
     * `und` and `reach`, then `grp`, each node (selected as `id`, e.g.
     * `id AS vec_id`) with its component label `label`. */
@@ -571,8 +613,7 @@ object DedupQueries {
         |FROM sh s, (SELECT simhash FROM sh WHERE doc_id = 0) f
         |ORDER BY s.doc_id""".stripMargin
     ) { (s, d) =>
-      val words = docs(s, d).select(col("doc_id"),
-        explode(TextOps.tokens(col("text"))).as("w"))
+      val words = PipelineQueries.docWords(s, d)
       // first 4 md5 hex digits == top 16 bits of the codegen'd
       // md5_prefix64 (first 4 digest bytes): one digest per word, no
       // 32-char hex-string materialization + re-parse (the conv/substring
@@ -642,13 +683,10 @@ object DedupQueries {
         |SELECT qid, vec_id, rcos FROM ranked WHERE rn <= 5
         |ORDER BY qid, rcos DESC, vec_id""".stripMargin
     ) { (s, d) =>
-      val q = emb(s, d).filter(col("vec_id") < 3)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val scored = emb(s, d).crossJoin(broadcast(q))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"),
-          (round(TextOps.cosine(col("embedding"), col("qv")), 4) + lit(0.0)).as("rcos"))
-      Scale.topK(scored, Seq("qid"), Seq(col("rcos").desc, col("vec_id")), 5)
+      val q = RankKey.probeVecs(emb(s, d), col("vec_id") < 3)
+      val scored = RankKey.crossProbes(emb(s, d), broadcast(q))
+        .select(col("qid"), col("vec_id"), RankKey.rcos)
+      RankKey.topScored(scored, "rcos", 5)
         .select("qid", "vec_id", "rcos")
         .orderBy(col("qid"), col("rcos").desc, col("vec_id"))
     },
@@ -683,8 +721,8 @@ object DedupQueries {
       val scored = withB.join(broadcast(q),
         col("bucket") === col("qbucket") && col("vec_id") =!= col("qid"))
         .select(col("qid"), col("vec_id"), col("bucket"),
-          (round(TextOps.dot(col("embedding"), col("qv")), 4) + lit(0.0)).as("rdot"))
-      Scale.topK(scored, Seq("qid"), Seq(col("rdot").desc, col("vec_id")), 3)
+          RankKey.round4(TextOps.dot(col("embedding"), col("qv"))).as("rdot"))
+      RankKey.topScored(scored, "rdot", 3)
         .select("qid", "vec_id", "bucket", "rdot")
         .orderBy(col("qid"), col("rdot").desc, col("vec_id"))
     },
@@ -729,19 +767,18 @@ object DedupQueries {
       // (partition, vector). Ties break to the smaller centroid id.
       val assign = dots.groupBy("vec_id")
         .agg(max_by(col("cid"), struct(col("dot"), -col("cid"))).as("cid"))
-      val probes = Scale.topK(dots.filter(col("vec_id").isin(10, 11, 12)),
-          Seq("vec_id"), Seq(col("dot").desc, col("cid")), 2)
+      val probes = RankKey.ivfProbes(dots, col("vec_id").isin(10, 11, 12))
         .select(col("vec_id").as("qid"), col("cid"))
       val cand = probes.join(assign.withColumnRenamed("vec_id", "cand_id"), "cid")
         .filter(col("cand_id") =!= col("qid"))
       val scored = cand
         .join(e.select(col("vec_id").as("cand_id"), col("embedding").as("ev")),
           "cand_id")
-        .join(broadcast(e.filter(col("vec_id").isin(10, 11, 12))
-          .select(col("vec_id").as("qid"), col("embedding").as("qv"))), "qid")
+        .join(broadcast(RankKey.probeVecs(e, col("vec_id").isin(10, 11, 12))),
+          "qid")
         .select(col("qid"), col("cand_id").as("vec_id"),
-          (round(TextOps.dot(col("ev"), col("qv")), 4) + lit(0.0)).as("rdot"))
-      Scale.topK(scored, Seq("qid"), Seq(col("rdot").desc, col("vec_id")), 3)
+          RankKey.round4(TextOps.dot(col("ev"), col("qv"))).as("rdot"))
+      RankKey.topScored(scored, "rdot", 3)
         .select("qid", "vec_id", "rdot")
         .orderBy(col("qid"), col("rdot").desc, col("vec_id"))
     },
@@ -814,10 +851,7 @@ object DedupQueries {
         |SELECT id AS vec_id, min(r) AS group_id FROM reach
         |GROUP BY id ORDER BY vec_id""".stripMargin
     ) { (s, d) =>
-      graft.functions.GraphOps
-        .connectedComponents(rpEdges(s, d), "id_a", "id_b")
-        .select(col("id").as("vec_id"), col("lbl").as("group_id"))
-        .orderBy("vec_id")
+      rpGroups(s, d, "vec_id", "group_id").orderBy("vec_id")
     },
 
     // Canonical-document selection per near-dup group — the step after
@@ -844,9 +878,7 @@ object DedupQueries {
         |GROUP BY b.group_id, b.n_members, b.best_len
         |ORDER BY group_id""".stripMargin
     ) { (s, d) =>
-      val grp = graft.functions.GraphOps
-        .connectedComponents(rpEdges(s, d), "id_a", "id_b")
-        .select(col("id").as("vec_id"), col("lbl").as("group_id"))
+      val grp = rpGroups(s, d, "vec_id", "group_id")
       val qual = docs(s, d)
         .select(col("doc_id").as("vec_id"), col("n_chars"))
       // r14: ONE fused aggregate (count + max + canonPick argmax) over
@@ -889,9 +921,7 @@ object DedupQueries {
         |FROM h ORDER BY vec_id""".stripMargin
     ) { (s, d) =>
       import graft.functions.Mixing
-      val grp = graft.functions.GraphOps
-        .connectedComponents(rpEdges(s, d), "id_a", "id_b")
-        .select(col("id").as("vec_id"), col("lbl").as("group_id"))
+      val grp = rpGroups(s, d, "vec_id", "group_id")
       val base = emb(s, d).select(col("vec_id"))
         .join(grp.hint("shuffle_hash"), Seq("vec_id"), "left")
         .select(col("vec_id"),
@@ -1208,40 +1238,29 @@ object DedupQueries {
       // Tie-break (min value at equal dist) matches the oracle's
       // row_number ORDER BY dist, id exactly — A/B'd at sf0.1 AND the
       // 100x replica per the q240 rule before adopting.
+      // Candidates are scored by the squared distance xx - 2·x·c + cc
+      // of each (key vector x, value vector c) with their norms.
       def argmin(cands: org.apache.spark.sql.DataFrame, key: String,
-          value: String, out: String): org.apache.spark.sql.DataFrame =
-        cands.groupBy(key).agg(graft.functions.Aggregators
-          .argMin(col("dist"), col(value).cast("long")).as(out))
+          value: String, out: String, xx: String, x: String, c: String,
+          cc: String): org.apache.spark.sql.DataFrame =
+        cands.select(col(key), col(value),
+            (col(xx) - lit(2.0) * TextOps.dot(col(x), col(c))
+              + col(cc)).as("dist"))
+          .groupBy(key).agg(graft.functions.Aggregators
+            .argMin(col("dist"), col(value).cast("long")).as(out))
       val ei2 = ei.withColumn("vv", TextOps.dot(col("vs"), col("vs")))
       val assigned = if (k <= cNum) {
-        argmin(
-          ei2.crossJoin(broadcast(seeds))
-            .select(col("vec_id"), col("sid"),
-              (col("vv") - lit(2.0) * TextOps.dot(col("vs"), col("cs"))
-                + col("cc")).as("dist")),
-          "vec_id", "sid", "cluster")
+        argmin(ei2.crossJoin(broadcast(seeds)),
+          "vec_id", "sid", "cluster", "vv", "vs", "cs", "cc")
       } else {
-        val scell = argmin(
-          seeds.crossJoin(broadcast(coarse))
-            .select(col("sid"), col("cid"),
-              (col("cc") - lit(2.0) * TextOps.dot(col("cs"), col("gcs"))
-                + col("gcc")).as("dist")),
-          "sid", "cid", "cell")
-        val vcell = argmin(
-          ei2.crossJoin(broadcast(coarse))
-            .select(col("vec_id"), col("cid"),
-              (col("vv") - lit(2.0) * TextOps.dot(col("vs"), col("gcs"))
-                + col("gcc")).as("dist")),
-          "vec_id", "cid", "cell")
+        val scell = argmin(seeds.crossJoin(broadcast(coarse)),
+          "sid", "cid", "cell", "cc", "cs", "gcs", "gcc")
+        val vcell = argmin(ei2.crossJoin(broadcast(coarse)),
+          "vec_id", "cid", "cell", "vv", "vs", "gcs", "gcc")
         val cellSeeds = seeds.join(scell, "sid")
           .select(col("cell"), col("sid"), col("cs"), col("cc"))
-        argmin(
-          ei2.join(vcell, "vec_id")
-            .join(broadcast(cellSeeds), "cell")
-            .select(col("vec_id"), col("sid"),
-              (col("vv") - lit(2.0) * TextOps.dot(col("vs"), col("cs"))
-                + col("cc")).as("dist")),
-          "vec_id", "sid", "cluster")
+        argmin(ei2.join(vcell, "vec_id").join(broadcast(cellSeeds), "cell"),
+          "vec_id", "sid", "cluster", "vv", "vs", "cs", "cc")
       }
       // norms hoist to one per member (vs one per PAIR side in the naive
       // form): sqrt(dot(vd,vd)) is the identical exactly-rounded value
@@ -1444,16 +1463,12 @@ object DedupQueries {
       val e = emb(s, d)
       val qids = Seq(20L, 21L, 22L)
       val withD = Pq.subspaceDots(e)
-      val codes = withD.groupBy("vec_id")
-        .agg(Pq.codeAggs.head, Pq.codeAggs.tail: _*)
+      val codes = Pq.codes(withD)
       // 3 queries x 4 subspaces x 8 centroids -> one 32-slot array per
       // query (Pq.lutArr: bounded collect_list, 32 elements)
       val lutArr = Pq.lutArr(withD, qids)
-      val scored = codes.crossJoin(broadcast(lutArr))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"),
-          Pq.adc(col("lut"), col("c0"), col("c1"), col("c2"), col("c3"))
-            .as("adc"))
+      val scored = RankKey.crossProbes(codes, broadcast(lutArr))
+        .select(col("qid"), col("vec_id"), Pq.adc.as("adc"))
       Pq.rescoreTop5(e, scored, qids)
     },
 
@@ -1969,17 +1984,14 @@ object DedupQueries {
       val assigned = withD.groupBy("vec_id").agg(
         max_by(col("cid"), struct(col("dot"), -col("cid"))).as("cell"),
         Pq.codeAggs: _*)
-      val probes = Scale.topK(withD.filter(col("vec_id").isin(qids: _*)),
-          Seq("vec_id"), Seq(col("dot").desc, col("cid")), 2)
+      val probes = RankKey.ivfProbes(withD, col("vec_id").isin(qids: _*))
         .select(col("vec_id").as("qid"), col("cid").as("cell"))
       val lutArr = Pq.lutArr(withD, qids)
       val scored = assigned
         .join(broadcast(probes), Seq("cell"))
         .filter(col("vec_id") =!= col("qid"))
         .join(broadcast(lutArr), Seq("qid"))
-        .select(col("qid"), col("vec_id"),
-          Pq.adc(col("lut"), col("c0"), col("c1"), col("c2"), col("c3"))
-            .as("adc"))
+        .select(col("qid"), col("vec_id"), Pq.adc.as("adc"))
       Pq.rescoreTop5(e, scored, qids)
     },
 
@@ -2136,9 +2148,7 @@ object DedupQueries {
         |FROM sp s CROSS JOIN leak l
         |GROUP BY s.split, l.spanning_groups ORDER BY s.split""".stripMargin
     ) { (s, d) =>
-      val grp = graft.functions.GraphOps
-        .connectedComponents(rpEdges(s, d), "id_a", "id_b")
-        .select(col("id").as("doc_id"), col("lbl"))
+      val grp = rpGroups(s, d, "doc_id", "lbl")
       val b = call_function("md5_prefix64",
         col("group_id").cast("string")) % 10L
       val sp = docs(s, d).select(col("doc_id"), col("n_chars"))
@@ -2676,9 +2686,7 @@ object DedupQueries {
         |FROM tot t LEFT JOIN dr USING (source)
         |ORDER BY t.source""".stripMargin
     ) { (s, d) =>
-      val grp = graft.functions.GraphOps
-        .connectedComponents(rpEdges(s, d), "id_a", "id_b")
-        .select(col("id").as("doc_id"), col("lbl").as("group_id"))
+      val grp = rpGroups(s, d, "doc_id", "group_id")
       dedupSavingsCore(grp,
         docs(s, d).select(col("doc_id"), col("source"), col("n_chars")))
     },
@@ -3278,17 +3286,15 @@ object DedupQueries {
     // cross-engine; 2^40 (not the earlier 2^33) keeps the pmod decode
     // id-exact through 1.1e12 vectors (replica ids reach ~1e10).
     Q(
-      "q247_matryoshka_recall",
+      "q247_matryoshka_recall", {
+      // the packed rank key (RankKey.pack) of the n-dim prefix dot
+      def key(n: Int) =
+        s"CAST(round(${OracleSql.dot("c.embedding", "p.qv", n)} * 10000)" +
+          s" AS BIGINT) * (-1099511627776) + c.vec_id AS key$n"
       s"""WITH probes AS (SELECT vec_id AS qid, embedding AS qv
         |  FROM embeddings WHERE vec_id >= 20 AND vec_id < 36),
         |keyed AS (
-        |  SELECT p.qid, c.vec_id,
-        |    CAST(round(${OracleSql.dot("c.embedding", "p.qv", 64)}
-        |      * 10000) AS BIGINT) * (-1099511627776) + c.vec_id AS key64,
-        |    CAST(round(${OracleSql.dot("c.embedding", "p.qv", 32)}
-        |      * 10000) AS BIGINT) * (-1099511627776) + c.vec_id AS key32,
-        |    CAST(round(${OracleSql.dot("c.embedding", "p.qv", 16)}
-        |      * 10000) AS BIGINT) * (-1099511627776) + c.vec_id AS key16
+        |  SELECT p.qid, c.vec_id, ${key(64)}, ${key(32)}, ${key(16)}
         |  FROM embeddings c CROSS JOIN probes p
         |  WHERE c.vec_id <> p.qid),
         |rk AS (
@@ -3309,6 +3315,7 @@ object DedupQueries {
         |FROM (SELECT qid, unnest([16, 32]) AS dims,
         |             unnest([h16, h32]) AS hits FROM hits) t
         |ORDER BY qid, dims""".stripMargin
+    }
     ) { (s, d) => matryoshkaRecallCore(emb(s, d)) },
 
     // CENTROID SPLIT-DRIFT — is the embedding column STABLE under
@@ -3484,11 +3491,11 @@ object DedupQueries {
     * width represents exactly must recall 10/10 at 4, 6 and 8 bits). */
   private[graft] def sqBitsSweepCore(s: org.apache.spark.sql.SparkSession,
       e: org.apache.spark.sql.DataFrame,
-      probes: Seq[(Long, Seq[Float], Int)],
+      probes: LabeledProbes,
       ranges: (Seq[Double], Seq[Double]))
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    import RankKey.{bottomK, pack, recallBy, rq}
+    import RankKey.{bottomK, recallBy}
     def levels(b: Int): Long = (1L << b) - 2L
     // codegen'd kernel (plans/SqQuantize): the HOF-lambda form runs
     // interpreted per ELEMENT (HOFs never codegen) and at three bit
@@ -3498,14 +3505,12 @@ object DedupQueries {
         sqProbe(qv, ranges, levels(6)), sqProbe(qv, ranges, levels(8)))
     }.toDF("qid", "qv", "pq4", "pq6", "pq8"))
     val minK10 = bottomK(10)
-    val gathered = e.select(col("vec_id"), col("embedding"),
+    val quantized = e.select(col("vec_id"), col("embedding"),
         sqQuantize(col("embedding"), ranges, levels(4)).as("q4"),
         sqQuantize(col("embedding"), ranges, levels(6)).as("q6"),
         sqQuantize(col("embedding"), ranges, levels(8)).as("q8"))
-      .crossJoin(probesDf)
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"),
-        pack(rq(col("embedding"), col("qv")), col("vec_id")).as("bfk"),
+    val gathered = RankKey.crossProbes(quantized, probesDf)
+      .select(col("qid"), RankKey.bfKey.as("bfk"),
         sqKey("q4").as("k4"), sqKey("q6").as("k6"), sqKey("q8").as("k8"))
       .groupBy("qid")
       .agg(minK10(col("bfk")).as("bf"), minK10(col("k4")).as("t4"),
@@ -3772,8 +3777,7 @@ object DedupQueries {
       rq(slice(col("embedding"), 1, n), slice(col("qv"), 1, n)),
       col("vec_id"))
     val minK10 = bottomK(10)
-    recallBy(e.crossJoin(probes)
-      .filter(col("vec_id") =!= col("qid"))
+    recallBy(RankKey.crossProbes(e, probes)
       .select(col("qid"), key(64).as("key64"), key(32).as("key32"),
         key(16).as("key16"))
       .groupBy("qid")
@@ -3884,20 +3888,16 @@ object DedupQueries {
       probes: Seq[(Long, Seq[Float], Seq[Long])])
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    import RankKey.{bottomK, gated, pack, recallBy, rq}
-    val assigned = e.select(col("vec_id"), col("embedding"),
-      RankKey.nearestCell(col("embedding"), cents).as("cid"))
+    import RankKey.{bottomK, gated, recallBy}
     val probesDf = broadcast(probes.map { case (qid, qv, cs) =>
       (qid, qv, cs(0), cs(1), cs(2), cs(3))
     }.toDF("qid", "qv", "c1", "c2", "c3", "c4"))
     val minK10 = bottomK(10)
     def gate(cond: org.apache.spark.sql.Column) =
       minK10(gated(col("key"), cond))
-    val keyed = assigned.crossJoin(probesDf)
-      .filter(col("vec_id") =!= col("qid"))
+    val keyed = RankKey.crossProbes(RankKey.withCell(e, cents), probesDf)
       .select(col("qid"), col("cid"),
-        col("c1"), col("c2"), col("c3"), col("c4"),
-        pack(rq(col("embedding"), col("qv")), col("vec_id")).as("key"))
+        col("c1"), col("c2"), col("c3"), col("c4"), RankKey.bfKey.as("key"))
     recallBy(keyed.groupBy("qid")
       .agg(minK10(col("key")).as("bf"),
         gate(col("cid") === col("c1")).as("n1"),
@@ -4023,23 +4023,20 @@ object DedupQueries {
     * quantization grid must give recall 10/10). */
   private[graft] def sq8RecallCore(s: org.apache.spark.sql.SparkSession,
       e: org.apache.spark.sql.DataFrame,
-      probes: Seq[(Long, Seq[Float], Int)],
+      probes: LabeledProbes,
       ranges: (Seq[Double], Seq[Double]))
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    import RankKey.{bottomK, pack, recall, rq}
+    import RankKey.{bottomK, recall}
     // int8 (254 levels): the SQ kernel q257 sweeps over bit widths
     val probesDf = broadcast(probes.map { case (qid, qv, _) =>
       (qid, qv, sqProbe(qv, ranges, 254L))
     }.toDF("qid", "qv", "pq8"))
     val minK10 = bottomK(10)
-    val gathered = e.select(col("vec_id"), col("embedding"),
-        sqQuantize(col("embedding"), ranges, 254L).as("q8"))
-      .crossJoin(probesDf)
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"),
-        pack(rq(col("embedding"), col("qv")), col("vec_id")).as("bfk"),
-        sqKey("q8").as("sqk"))
+    val gathered = RankKey.crossProbes(e.select(col("vec_id"),
+        col("embedding"), sqQuantize(col("embedding"), ranges, 254L).as("q8")),
+        probesDf)
+      .select(col("qid"), RankKey.bfKey.as("bfk"), sqKey("q8").as("sqk"))
       .groupBy("qid")
       .agg(minK10(col("bfk")).as("bf"), minK10(col("sqk")).as("sq"))
     recall(gathered, "sq")
@@ -4215,10 +4212,13 @@ object DedupQueries {
     430676L, 386852L, 356207L, 333333L, 315464L, 301029L, 289064L)
   private val ndcgPref: Seq[Long] = ndcgDisc.scanLeft(0L)(_ + _).tail
 
+  /** Probe seeds: (vec_id, embedding, label) rows. */
+  private[graft] type LabeledProbes = Seq[(Long, Seq[Float], Int)]
+
   /** Probe seeds (vec_id, embedding, label) with lo <= vec_id < hi, by
     * vec_id — one bounded collect. */
   private def labeledProbes(s: org.apache.spark.sql.SparkSession,
-      d: String, lo: Int, hi: Int): Seq[(Long, Seq[Float], Int)] =
+      d: String, lo: Int, hi: Int): LabeledProbes =
     emb(s, d).filter(col("vec_id") >= lo && col("vec_id") < hi)
       .select("vec_id", "embedding", "label").collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1), r.getInt(2))).toSeq
@@ -4239,15 +4239,14 @@ object DedupQueries {
     * known-worst orderings pin the nDCG arithmetic). */
   private[graft] def knnNdcgCore(s: org.apache.spark.sql.SparkSession,
       e: org.apache.spark.sql.DataFrame,
-      probes: Seq[(Long, Seq[Float], Int)])
+      probes: LabeledProbes)
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
     import RankKey.{checkedLabel, packLabeled, rq}
     val probesDf = broadcast(probes.toDF("qid", "qv", "ql"))
     val discLit = typedLit(ndcgDisc)
     val prefLit = typedLit(ndcgPref)
-    val gathered = e.crossJoin(probesDf)
-      .filter(col("vec_id") =!= col("qid"))
+    val gathered = RankKey.crossProbes(e, probesDf)
       .select(col("qid"), col("ql"),
         packLabeled(rq(col("embedding"), col("qv")), col("vec_id"),
           checkedLabel("q224")).as("key"),
@@ -4358,13 +4357,9 @@ object DedupQueries {
           slice(col("qv"), i * 16 + 1, 16))
       }: _*)
     }.reduce(_ + _)
-    val gathered = e.crossJoin(probesDf)
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), RankKey.pack(maxsim, col("vec_id")).as("key"))
-      .groupBy("qid")
-      .agg(RankKey.bottomK(5)(col("key")).as("ks"))
-    RankKey.ranks(gathered, RankKey.id(col("key")).as("vec_id"),
-      score(col("key")).as("maxsim_q"))
+    RankKey.topRanks(RankKey.crossProbes(e, probesDf)
+        .select(col("qid"), RankKey.pack(maxsim, col("vec_id")).as("key")),
+      5, RankKey.id(col("key")).as("vec_id"), score(col("key")).as("maxsim_q"))
   }
 
   /** q217 core over any (vec_id, embedding) frame. Factored for the
@@ -4374,14 +4369,10 @@ object DedupQueries {
       e: org.apache.spark.sql.DataFrame, qids: Seq[Long])
       : org.apache.spark.sql.DataFrame = {
       val withD = Pq.subspaceDots(e)
-      val codes = withD.groupBy("vec_id")
-        .agg(Pq.codeAggs.head, Pq.codeAggs.tail: _*)
       val lutArr = Pq.lutArr(withD, qids)
-      val top = codes.crossJoin(broadcast(lutArr))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), RankKey.pack(RankKey.quant(Pq.adc(col("lut"),
-            col("c0"), col("c1"), col("c2"), col("c3"))), col("vec_id"))
-          .as("key"))
+      val top = RankKey.crossProbes(Pq.codes(withD), broadcast(lutArr))
+        .select(col("qid"),
+          RankKey.pack(RankKey.quant(Pq.adc), col("vec_id")).as("key"))
         .groupBy("qid")
         .agg(RankKey.bottomK(16)(col("key")).as("ks"))
         .select(col("qid"), explode(col("ks")).as("key"))
@@ -4389,8 +4380,7 @@ object DedupQueries {
           RankKey.score(col("key")).as("adc_q"))
       val ex = e.select(col("vec_id"), col("embedding").as("ev"))
         .join(broadcast(top), Seq("vec_id"))
-        .join(broadcast(e.filter(col("vec_id").isin(qids: _*))
-          .select(col("vec_id").as("qid"), col("embedding").as("qv"))),
+        .join(broadcast(RankKey.probeVecs(e, col("vec_id").isin(qids: _*))),
           Seq("qid"))
         .select(col("qid"), col("vec_id"), col("adc_q"),
           RankKey.rq(col("ev"), col("qv")).as("ex_q"))
@@ -4419,18 +4409,16 @@ object DedupQueries {
     * same-label vector must be excluded). */
   private[graft] def hardNegCore(s: org.apache.spark.sql.SparkSession,
       e: org.apache.spark.sql.DataFrame,
-      probes: Seq[(Long, Seq[Float], Int)])
+      probes: LabeledProbes)
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
     import RankKey.{checkedLabel, packLabeled, rq}
     val probesDf = broadcast(probes.toDF("qid", "qv", "ql"))
-    val gathered = e.crossJoin(probesDf)
+    val keyed = e.crossJoin(probesDf)
       .filter(col("vec_id") =!= col("qid") && col("label") =!= col("ql"))
       .select(col("qid"), packLabeled(rq(col("embedding"), col("qv")),
         col("vec_id"), checkedLabel("q216")).as("key"))
-      .groupBy("qid")
-      .agg(RankKey.bottomK(5)(col("key")).as("ks"))
-    RankKey.ranks(gathered, RankKey.labeledId(col("key")).as("vec_id"),
+    RankKey.topRanks(keyed, 5, RankKey.labeledId(col("key")).as("vec_id"),
       RankKey.label(col("key")).as("neg_label"),
       (RankKey.score(col("key"), RankKey.ML).cast("double") / 10000d)
         .as("rdot"))
@@ -4445,16 +4433,12 @@ object DedupQueries {
       probes: Seq[(Long, Seq[Float], Long, Long)])
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    import RankKey.{bottomK, gated, pack, recall, rq}
-    val assigned = e.select(col("vec_id"), col("embedding"),
-      RankKey.nearestCell(col("embedding"), cents).as("cid"))
+    import RankKey.{bottomK, gated, recall}
     val probesDf = broadcast(
       probes.toDF("qid", "qv", "cell1", "cell2"))
     val minK10 = bottomK(10)
-    val keyed = assigned.crossJoin(probesDf)
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"),
-        pack(rq(col("embedding"), col("qv")), col("vec_id")).as("key"),
+    val keyed = RankKey.crossProbes(RankKey.withCell(e, cents), probesDf)
+      .select(col("qid"), RankKey.bfKey.as("key"),
         (col("cid") === col("cell1") || col("cid") === col("cell2"))
           .as("in_cell"))
     recall(keyed.groupBy("qid")
@@ -4637,11 +4621,11 @@ object DedupQueries {
     * over the whitespace tokens (exposed for the segment-partition law in
     * LateBatchLawsSpec). */
   private[graft] def segments8: org.apache.spark.sql.Column = {
-    import graft.functions.{ArrayOps, TextOps}
+    import graft.functions.TextOps
     // ws is computed and referenced per-element -> bindOnce (alias
     // barrier); word count >= 1 always (split of any string is
     // non-empty), so sequence never descends
-    ArrayOps.bindOnce(TextOps.tokens(col("text"))) { w =>
+    TextOps.bindWords { w =>
       transform(
         sequence(lit(0), floor((size(w) + lit(7)) / lit(8.0)).cast("int")
           - lit(1)),

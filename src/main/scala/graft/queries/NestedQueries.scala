@@ -373,17 +373,19 @@ object NestedQueries {
         |FROM embeddings WHERE vec_id < 100 ORDER BY vec_id""".stripMargin
     ) { (s, d) =>
       import graft.functions.ArrayOps
+      // each (c0, c1) index pair widened to longs, as JSON
+      def longPairs(pairs: org.apache.spark.sql.Column) =
+        Ser.js(transform(pairs,
+          p => struct(p.getField("c0").cast("long").as("c0"),
+            p.getField("c1").cast("long").as("c1"))))
       emb(s, d).filter(col("vec_id") < 100).select(
         col("vec_id"),
         Ser.jsfp(ArrayOps.concatInner(slice(col("embedding"), 1, 2),
           slice(col("embedding"), 3, 2))).as("joined"),
-        Ser.js(transform(ArrayOps.argcartesian(slice(col("embedding"), 1, 2),
-          slice(col("embedding"), 3, 2)),
-          p => struct(p.getField("c0").cast("long").as("c0"),
-            p.getField("c1").cast("long").as("c1")))).as("argcart"),
-        Ser.js(transform(ArrayOps.argcombinations2(slice(col("embedding"), 1, 4)),
-          p => struct(p.getField("c0").cast("long").as("c0"),
-            p.getField("c1").cast("long").as("c1")))).as("argcomb"),
+        longPairs(ArrayOps.argcartesian(slice(col("embedding"), 1, 2),
+          slice(col("embedding"), 3, 2))).as("argcart"),
+        longPairs(ArrayOps.argcombinations2(slice(col("embedding"), 1, 4)))
+          .as("argcomb"),
         Ser.js(transform(ArrayOps.localIndex(slice(col("embedding"), 1, 3)),
           i => i.cast("long"))).as("lidx"))
         .orderBy("vec_id")

@@ -63,8 +63,7 @@ object PipelineQueries {
         |  round(score, 4) AS score
         |FROM ranked WHERE rnk <= 3 ORDER BY doc_id, rnk""".stripMargin
     ) { (s, d) =>
-      val toks = docs(s, d).select(col("doc_id"),
-        explode(TextOps.tokens(col("text"))).as("w"))
+      val toks = docWords(s, d)
       val tf = toks.groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
       val dfreq = tf.groupBy("w").agg(count(lit(1)).as("df"))
       val n = docs(s, d).agg(count(lit(1)).as("n"))
@@ -122,8 +121,7 @@ object PipelineQueries {
         |  round(CAST(topc AS DOUBLE) / nw, 4) AS top_word_frac
         |FROM stats ORDER BY doc_id""".stripMargin
     ) { (s, d) =>
-      docs(s, d)
-        .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("w"))
+      docWords(s, d)
         .groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
         .groupBy("doc_id")
         .agg(sum("c").as("nw"), max("c").as("topc"), count(lit(1)).as("nd"))
@@ -156,8 +154,7 @@ object PipelineQueries {
         |ORDER BY term""".stripMargin
     ) { (s, d) =>
       val minK = Aggregators.minK(5)
-      docs(s, d)
-        .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("w"))
+      docWords(s, d)
         .distinct()
         .groupBy(col("w").as("term"))
         .agg(count(lit(1)).as("df"), minK(col("doc_id")).as("top"))
@@ -224,8 +221,7 @@ object PipelineQueries {
         |FROM toks t JOIN freq f ON t.w = f.w CROSS JOIN tot
         |GROUP BY t.doc_id ORDER BY doc_id""".stripMargin
     ) { (s, d) =>
-      val toks = docs(s, d).select(col("doc_id"),
-        explode(TextOps.tokens(col("text"))).as("w"))
+      val toks = docWords(s, d)
       val freq = toks.groupBy("w").agg(count(lit(1)).as("c"))
       val tot = freq.agg(sum("c").as("t"))
       toks.join(freq, "w")
@@ -293,7 +289,7 @@ object PipelineQueries {
           .as("cluster"))
       assigned.join(emb(s, d), "vec_id")
         .groupBy("cluster")
-        .agg(count(lit(1)).cast("long").as("n"), cd(0), cd(1), cd(2), cd(3))
+        .agg(count(lit(1)).cast("long").as("n"), (0 until 4).map(cd): _*)
         .orderBy("cluster")
     },
 
@@ -576,13 +572,12 @@ object PipelineQueries {
         |FROM sel ORDER BY doc_id""".stripMargin
     ) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      import graft.functions.ArrayOps
       // eager localCheckpoint: four consumers (total, histogram, kept
       // buckets, boundary fill) otherwise each re-run the tokenize-heavy
       // scan — the dominant cost — once apiece; the checkpointed frame is
       // three narrow columns
       val base = docs(s, d).select(col("doc_id"),
-        ArrayOps.bindOnce(TextOps.tokens(col("text"))) { ws =>
+        TextOps.bindWords { ws =>
           struct(size(ws).cast("long").as("toks"),
             floor(size(array_distinct(ws)) * lit(1000.0) / size(ws))
               .cast("long").as("qb"))
@@ -693,8 +688,8 @@ object PipelineQueries {
       val c2Df = rebuild(assign(c1Df))
       def cd(i: Int) = (round(col("cnum").getItem(i).cast("double") /
         col("cden").cast("double") / tenK, 4) + lit(0.0)).as(s"c$i")
-      c2Df.select(col("sid").as("cluster"),
-          col("cden").cast("long").as("n"), cd(0), cd(1), cd(2), cd(3))
+      c2Df.select(Seq(col("sid").as("cluster"),
+          col("cden").cast("long").as("n")) ++ (0 until 4).map(cd): _*)
         .orderBy("cluster")
     },
 
@@ -743,8 +738,7 @@ object PipelineQueries {
       val dl = docs(s, d).select(col("doc_id"),
         size(TextOps.tokens(col("text"))).cast("long").as("dl"))
       val stats = dl.agg(count(lit(1)).as("n"), sum("dl").as("tot"))
-      val tf = docs(s, d)
-        .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("w"))
+      val tf = docWords(s, d)
         .filter(col("w").isin("data", "join", "the", "stream", "query"))
         .groupBy(col("doc_id"), col("w"))
         .agg(count(lit(1)).as("tf"))
@@ -797,16 +791,8 @@ object PipelineQueries {
         |  t.target * 1000000007
         |GROUP BY d.lang ORDER BY d.lang""".stripMargin
     ) { (s, d) =>
-      import graft.functions.Mixing
-      val c = docs(s, d).groupBy("lang").agg(count(lit(1)).as("n"))
-      val tgt = Mixing.sqrtTargets(c)
-      docs(s, d).join(broadcast(tgt), "lang")
-        .filter(Mixing.hashPicked(col("doc_id"), col("n"), col("target")))
-        .groupBy("lang")
-        .agg(max(col("n")).as("n"), max(col("target")).as("target"),
-          count(lit(1)).cast("long").as("picked"),
-          sum(col("doc_id")).cast("long").as("sum_ids"))
-        .orderBy("lang")
+      sqrtPick(docs(s, d), Seq("lang"), max(col("n")).as("n"),
+        max(col("target")).as("target"))
     },
 
     // The FULL curation pipeline as one Catalyst plan — quality filter
@@ -842,11 +828,8 @@ object PipelineQueries {
         |  t.target * 1000000007
         |GROUP BY d.lang, d.source ORDER BY d.lang, d.source""".stripMargin
     ) { (s, d) =>
-      import graft.functions.Mixing
-      val Seq(nw, mwl, sr, ttr) = TextOps.gopherStats(col("text"))
-      val stats = docs(s, d).select(col("doc_id"), col("lang"),
-        col("source"), col("text"),
-        nw.as("n_words"), mwl.as("mwl"), sr.as("sr"), ttr.as("ttr"))
+      val stats = docs(s, d).select(Seq(col("doc_id"), col("lang"),
+        col("source"), col("text")) ++ TextOps.gopherStats(col("text")): _*)
       // ONE scan + ONE Gopher-kernel pass: everything downstream
       // (dedup group, dedup probe, per-lang counts feeding tgt twice,
       // final pick) needs only (doc_id, lang, source, digest) — project
@@ -854,8 +837,7 @@ object PipelineQueries {
       // the five re-reads of this subtree scan ~40 B/row checkpoint
       // blocks instead of re-running string kernels over the parquet
       // (the r11 verdict's 6-scan plan, 2.2x the committed baseline).
-      val kept = stats.filter(TextOps.gopherRules(col("n_words"),
-          col("mwl"), col("sr"), col("ttr")).reduce(_ && _))
+      val kept = stats.filter(TextOps.gopherRules.reduce(_ && _))
         .select(col("doc_id"), col("lang"), col("source"),
           md5(col("text")).as("digest"))
         .localCheckpoint(true)
@@ -864,14 +846,7 @@ object PipelineQueries {
         .select("doc_id")
       val corpus = kept.join(ded, "doc_id")
         .select(col("doc_id"), col("lang"), col("source"))
-      val c = corpus.groupBy("lang").agg(count(lit(1)).as("n"))
-      val tgt = Mixing.sqrtTargets(c)
-      corpus.join(broadcast(tgt), "lang")
-        .filter(Mixing.hashPicked(col("doc_id"), col("n"), col("target")))
-        .groupBy("lang", "source")
-        .agg(count(lit(1)).cast("long").as("picked"),
-          sum(col("doc_id")).cast("long").as("sum_ids"))
-        .orderBy("lang", "source")
+      sqrtPick(corpus, Seq("lang", "source"))
     },
 
     // DSIR-style importance weighting (Xie et al. 2023, "Data Selection
@@ -919,9 +894,8 @@ object PipelineQueries {
         |       THEN 1 ELSE 0 END AS BIGINT) AS kept
         |FROM sc ORDER BY doc_id""".stripMargin
     ) { (s, d) =>
-      import graft.functions.ArrayOps
       val feat = docs(s, d).select(col("doc_id"), col("lang"),
-        explode(ArrayOps.bindOnce(TextOps.tokens(col("text"))) { ws =>
+        explode(TextOps.bindWords { ws =>
           concat(ws, TextOps.shingles(ws, 2))
         }).as("f"))
         .select(col("doc_id"), col("lang"),
@@ -1269,10 +1243,8 @@ object PipelineQueries {
           col("label").as("qlabel"))
       val scored = emb.join(broadcast(probes),
           col("vec_id") =!= col("qid") && col("label") =!= col("qlabel"))
-        .select(col("qid"), col("vec_id"),
-          (round(TextOps.cosine(col("embedding"), col("qv")), 4) + lit(0.0))
-            .as("rcos"))
-      Scale.topK(scored, Seq("qid"), Seq(col("rcos").desc, col("vec_id")), 3)
+        .select(col("qid"), col("vec_id"), DedupQueries.RankKey.rcos)
+      DedupQueries.RankKey.topScored(scored, "rcos", 3)
         .select(col("qid"), col("vec_id").as("neg_id"), col("rcos"),
           col("__rk").cast("long").as("rn"))
         .orderBy("qid", "rn")
@@ -1369,8 +1341,7 @@ object PipelineQueries {
     ) { (s, d) =>
       val w998 = (call_function("md5_prefix64", col("w")) % 4096L) *
         2654435761L % 1997L
-      docs(s, d)
-        .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("w"))
+      docWords(s, d)
         .select(col("doc_id"), w998.as("w998"))
         .groupBy("doc_id")
         .agg(count(lit(1)).cast("long").as("n_tok"),
@@ -1401,9 +1372,7 @@ object PipelineQueries {
       KCenterOracle.sql(rounds = 6)
     ) { (s, d) =>
       import org.apache.spark.sql.Row
-      val base = emb(s, d).select(col("vec_id"),
-        transform(col("embedding"),
-          x => floor(x.cast("double") * 64).cast("double")).as("qv"))
+      val base = gridVectors(s, d)
         .withColumn("norm2",
           call_function("dot_product", col("qv"), col("qv")))
         .localCheckpoint(true)
@@ -1495,9 +1464,7 @@ object PipelineQueries {
       MmrOracle.sql
     ) { (s, d) =>
       import org.apache.spark.sql.Row
-      val base = emb(s, d).select(col("vec_id"),
-        transform(col("embedding"),
-          x => floor(x.cast("double") * 64).cast("double")).as("qv"))
+      val base = gridVectors(s, d)
       val probes = broadcast(base.filter(col("vec_id") < 3)
         .select(col("vec_id").as("p"), col("qv").as("pqv")))
       val rel = base.crossJoin(probes)
@@ -2225,6 +2192,38 @@ object PipelineQueries {
         expr("(n + 1) div 2 <= below + c"))
       .groupBy("source").agg(min("v").as(out))
   }
+
+  /** q124/q125's temperature-sampled pick: the rows (doc_id, lang, ...) of
+    * `corpus` that `Mixing.hashPicked` keeps under the sqrt-temperature
+    * targets of its per-lang counts, grouped by `keys` into the `first`
+    * aggregates, then picked (rows) and sum_ids (their doc_id sum),
+    * ordered by `keys`. */
+  private def sqrtPick(corpus: org.apache.spark.sql.DataFrame,
+      keys: Seq[String], first: org.apache.spark.sql.Column*)
+      : org.apache.spark.sql.DataFrame = {
+    import graft.functions.Mixing
+    val tgt = Mixing.sqrtTargets(
+      corpus.groupBy("lang").agg(count(lit(1)).as("n")))
+    val aggs = first ++ Seq(count(lit(1)).cast("long").as("picked"),
+      sum(col("doc_id")).cast("long").as("sum_ids"))
+    corpus.join(broadcast(tgt), "lang")
+      .filter(Mixing.hashPicked(col("doc_id"), col("n"), col("target")))
+      .groupBy(keys.head, keys.tail: _*)
+      .agg(aggs.head, aggs.tail: _*)
+      .orderBy(keys.head, keys.tail: _*)
+  }
+
+  /** (doc_id, w): one row per token of each document. */
+  private[queries] def docWords(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame =
+    docs(s, d).select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("w"))
+
+  /** (vec_id, qv): each embedding on the 1/64 grid, floor(x·64) per dim
+    * as doubles (q163, q166; the oracles' `KCenterOracle`/`MmrOracle`). */
+  private def gridVectors(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame =
+    emb(s, d).select(col("vec_id"), transform(col("embedding"),
+      x => floor(x.cast("double") * 64).cast("double")).as("qv"))
 
   /** `documents` as `keys` plus n_words, n_distinct and q20, the Q20
     * distinct-word ratio n_distinct·2^20 div n_words (q147, q150, q152;

@@ -18,6 +18,16 @@ import graft.functions.Scale
   */
 object Relational {
 
+  /** round(sum(l_extendedprice · (1 − l_discount)), 2): the discounted
+    * revenue of TPC-H Q1, Q3 and Q5 (and `SparkEntry.entry`). */
+  private[graft] def revenue: org.apache.spark.sql.Column =
+    round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
+
+  /** q11/q17's group keys, a grand-total NULL read as 'ALL'. */
+  private def flagKeys: Seq[org.apache.spark.sql.Column] = Seq(
+    coalesce(col("l_returnflag"), lit("ALL")).as("rflag"),
+    coalesce(col("l_linestatus"), lit("ALL")).as("lstatus"))
+
   val queries: Seq[Q] = Seq(
     // TPC-H Q1 shape: the canonical partial+final aggregation. Group keys
     // are low-cardinality => map-side combine shrinks the shuffle to
@@ -42,8 +52,7 @@ object Relational {
         .agg(
           round(sum("l_quantity"), 2).as("sum_qty"),
           round(sum("l_extendedprice"), 2).as("sum_base_price"),
-          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-            .as("sum_disc_price"),
+          revenue.as("sum_disc_price"),
           round(avg("l_quantity"), 4).as("avg_qty"),
           round(avg("l_discount"), 4).as("avg_disc"),
           count(lit(1)).as("count_order"))
@@ -95,10 +104,7 @@ object Relational {
       c.join(o, col("c_custkey") === col("o_custkey"))
         .join(l, col("o_orderkey") === col("l_orderkey"))
         .groupBy("c_mktsegment")
-        .agg(
-          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-            .as("revenue"),
-          count(lit(1)).as("n_lines"))
+        .agg(revenue.as("revenue"), count(lit(1)).as("n_lines"))
         .orderBy("c_mktsegment")
     },
 
@@ -149,8 +155,7 @@ object Relational {
         .join(broadcast(Tables.region(s, d)),
           col("n_regionkey") === col("r_regionkey"))
         .groupBy("n_name")
-        .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-          .as("revenue"))
+        .agg(revenue.as("revenue"))
         .orderBy("n_name")
     },
 
@@ -255,9 +260,7 @@ object Relational {
       Tables.lineitem(s, d)
         .rollup("l_returnflag", "l_linestatus")
         .agg(round(sum("l_quantity"), 2).as("sum_qty"))
-        .select(coalesce(col("l_returnflag"), lit("ALL")).as("rflag"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("lstatus"),
-          col("sum_qty"))
+        .select(flagKeys :+ col("sum_qty"): _*)
         .orderBy("rflag", "lstatus")
     },
 
@@ -332,9 +335,7 @@ object Relational {
       Tables.lineitem(s, d)
         .cube("l_returnflag", "l_linestatus")
         .agg(count(lit(1)).as("n"), round(sum("l_quantity"), 2).as("sum_qty"))
-        .select(coalesce(col("l_returnflag"), lit("ALL")).as("rflag"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("lstatus"),
-          col("n"), col("sum_qty"))
+        .select(flagKeys ++ Seq(col("n"), col("sum_qty")): _*)
         .orderBy("rflag", "lstatus")
     },
 

@@ -51,6 +51,14 @@ object SurfaceQueries {
     val deltaFilter: Column = (col("doc_id") % 10).isin(3, 5, 7)
   }
 
+  /** `events` grouped by user_id and pivoted on the three event types
+    * (q156, q157). */
+  private def eventTypesByUser(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.RelationalGroupedDataset =
+    Tables.events(s, d)
+      .groupBy("user_id")
+      .pivot("event_type", Seq("click", "purchase", "view"))
+
   val queries: Seq[Q] = Seq(
     // N-ary cartesian + argcartesian (reference structure.py:245-282
     // accepts a LIST of arrays; the 2-ary form is q25). Slices are
@@ -275,9 +283,7 @@ object SurfaceQueries {
         |    2) AS view_sv
         |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin
     ) { (s, d) =>
-      Tables.events(s, d)
-        .groupBy("user_id")
-        .pivot("event_type", Seq("click", "purchase", "view"))
+      eventTypesByUser(s, d)
         .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sv"))
         .select(col("user_id"),
           col("click_n"), col("click_sv"),
@@ -307,9 +313,7 @@ object SurfaceQueries {
         |UNPIVOT (n FOR kind IN (click, purchase, vw))
         |ORDER BY user_id, kind""".stripMargin
     ) { (s, d) =>
-      Tables.events(s, d)
-        .groupBy("user_id")
-        .pivot("event_type", Seq("click", "purchase", "view"))
+      eventTypesByUser(s, d)
         .agg(count(lit(1)))
         .withColumnRenamed("view", "vw")
         .unpivot(Array(col("user_id")),

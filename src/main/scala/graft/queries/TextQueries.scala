@@ -350,11 +350,9 @@ object TextQueries {
         |    AND sr >= 0.04 AND ttr >= 0.35 AS keep
         |FROM s ORDER BY doc_id""".stripMargin
     ) { (s, d) =>
-      val Seq(nw, mwl, sr, ttr) = TextOps.gopherStats(col("text"))
-      val stats = docs(s, d).select(col("doc_id"), nw.as("n_words"),
-        mwl.as("mwl"), sr.as("sr"), ttr.as("ttr"))
-      val rules = TextOps.gopherRules(col("n_words"), col("mwl"),
-        col("sr"), col("ttr"))
+      val stats = docs(s, d)
+        .select(col("doc_id") +: TextOps.gopherStats(col("text")): _*)
+      val rules = TextOps.gopherRules
       stats.select(col("doc_id"), col("n_words"),
           round(col("mwl"), 4).as("mean_wlen"),
           round(col("sr"), 4).as("stop_ratio"),
@@ -423,9 +421,8 @@ object TextQueries {
         |SELECT doc_id, n_tokens, margin, margin > 0 AS kept
         |FROM s ORDER BY doc_id""".stripMargin
     ) { (s, d) =>
-      import graft.functions.ArrayOps
       docs(s, d).select(col("doc_id"),
-          ArrayOps.bindOnce(TextOps.tokens(col("text"))) { ws =>
+          TextOps.bindWords { ws =>
             struct(size(ws).cast("long").as("n_tokens"),
               aggregate(
                 transform(ws, w =>
@@ -846,9 +843,7 @@ object TextQueries {
           call_function("md5_prefix60",
             element_at(col("ws"), col("p") + 1)).as("hw"))
       val cnt = bh.groupBy("hb").agg(count(lit(1)).as("c"))
-      val uni = tok.select(explode(col("ws")).as("w"))
-        .select(call_function("md5_prefix60", col("w")).as("hw"))
-        .groupBy("hw").agg(count(lit(1)).as("cu"))
+      val uni = unigramCounts(tok)
       bh.join(cnt.hint("shuffle_hash"), Seq("hb"))
         .join(uni.hint("shuffle_hash"), Seq("hw"))
         .select(col("doc_id"),
@@ -1319,11 +1314,10 @@ object TextQueries {
         |    AS chars_per_tok_c
         |FROM t GROUP BY lang ORDER BY lang""".stripMargin
     ) { (s, d) =>
-      import graft.functions.ArrayOps
       docs(s, d)
         .select(col("lang"), col("n_chars"),
           size(TextOps.tokens(col("text"))).cast("long").as("words"),
-          ArrayOps.bindOnce(TextOps.tokens(col("text"))) { ws =>
+          TextOps.bindWords { ws =>
             aggregate(ws, lit(0L),
               (acc, w) => acc + shiftright(length(w) + lit(3), 2)
                 .cast("long"))
@@ -1739,6 +1733,15 @@ object TextQueries {
       .orderBy("lang")
   }
 
+  /** (hw, cu): each distinct 60-bit word hash of the token arrays `ws`
+    * of `tok` with its count. The Spark twin of `OracleSql.unigramCounts`
+    * (q191, q210). */
+  private def unigramCounts(
+      tok: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    tok.select(explode(col("ws")).as("w"))
+      .select(call_function("md5_prefix60", col("w")).as("hw"))
+      .groupBy("hw").agg(count(lit(1)).as("cu"))
+
   /** q210 core over any (text) frame: PMI-shaped bigram lexicon, top-64.
     * Factored for crafted-corpus laws (always-paired bigram scores
     * exactly 1.0; Cauchy-Schwarz bound score <= 1). */
@@ -1763,9 +1766,7 @@ object TextQueries {
     // subtrees (verified in the plan — three corpus scans without it);
     // the barrier makes both joins read one vocab-scale materialization.
     // DISK_ONLY: vocab scales with the corpus (q183 lesson).
-    val uni = tok.select(explode(col("ws")).as("w"))
-      .select(call_function("md5_prefix60", col("w")).as("hw"))
-      .groupBy("hw").agg(count(lit(1)).as("cu"))
+    val uni = unigramCounts(tok)
       .localCheckpoint(true,
         org.apache.spark.storage.StorageLevel.DISK_ONLY)
     cnt

@@ -8,8 +8,9 @@ import graft.queries.{DedupQueries, EventQueries, PipelineQueries,
 /** Laws for the round-11 operators (q240–q247): each a crafted frame
   * with a hand-computed closed form, exercising the semantics the
   * gate's synthetic corpus cannot pin down (exact burst shapes, planted
-  * steps, cliques vs paths, identical vs disjoint sketch sources,
-  * prefix-only vs suffix-only embedding mass).
+  * steps, cliques vs paths, identical vs disjoint sketch sources).
+  * The vector-search laws (q247, q257 and the packed-key audits) live
+  * in VectorSearchSpec.
   */
 class Round11LawsSpec extends SparkSpec {
   import spark.implicits._
@@ -451,25 +452,6 @@ class Round11LawsSpec extends SparkSpec {
     }
   }
 
-  // ---------------------------------------------------------------- q257
-
-  test("law: q257 a 0/1-coordinate corpus is exactly representable at " +
-    "4, 6 and 8 bits — quantized ranking equals truth, recall 1e6 at " +
-    "every width") {
-    def v(bits: Int*): Seq[Float] =
-      Seq.tabulate(64)(i => if (bits.contains(i)) 1f else 0f)
-    // probe overlaps corpus vectors by a strictly decreasing number of
-    // set dims -> unambiguous ranking at every quantization
-    val probe = (20L, v(0 until 16: _*), 0)
-    val corpus = (0 until 12).map(i =>
-      (i.toLong, v(0 until (16 - i): _*)))
-    val ranges = (Seq.fill(64)(0.0), Seq.fill(64)(1.0))
-    val got = DedupQueries.sqBitsSweepCore(spark,
-      corpus.toDF("vec_id", "embedding"), Seq(probe), ranges).collect()
-    assert(got.length == 3)
-    got.foreach(r => assert(r.getLong(3) == 1000000L, s"got $r"))
-  }
-
   // ---------------------------------------------------------------- q258
 
   test("law: q258 a planted zero vector counts in n_zero AND " +
@@ -489,99 +471,5 @@ class Round11LawsSpec extends SparkSpec {
       ((10L, 0L, 1L, 2L)), s"got $r")
     // mean over 10 = (8·1e8 + 6_270_016) / 10, floored
     assert(r.getLong(4) == 80627001L, s"got $r")
-  }
-
-  // ------------------------------------------------- 2^40 key audit
-
-  test("law: encoded rank keys are id-exact for ids ≥ 2^33 — a big-id " +
-    "vector at the top-10 boundary ranks by its TRUE dot (under the " +
-    "old 2^33 keys its id high bits leaked into the rq lane, demoting " +
-    "it below the cut AND mangling its decoded id)") {
-    val bigId = 2L * 8589934592L + 3L // id div 2^33 = 2 — the leak
-    def v(a: Float, b: Float) = Seq(a, b, 0f, 0f)
-    val cell0 = Seq( // x-dominant ⇒ assigned to centroid 0
-      (1L, v(0.9f, 0f)), (2L, v(0.89f, 0f)), (3L, v(0.88f, 0f)),
-      (4L, v(0.87f, 0f)), (5L, v(0.865f, 0f)), (bigId, v(0.8001f, 0f)))
-    val cell1 = Seq( // y-dominant ⇒ assigned to centroid 1
-      (6L, v(0.86f, 0.95f)), (7L, v(0.85f, 0.95f)),
-      (8L, v(0.84f, 0.95f)), (9L, v(0.83f, 0.95f)),
-      (10L, v(0.8f, 0.95f)), (11L, v(0.4f, 0.95f)))
-    val e = (cell0 ++ cell1).toDF("vec_id", "embedding")
-    val cents = Seq((0L, Seq(1f, 0f, 0f, 0f)), (1L, Seq(0f, 1f, 0f, 0f)))
-    // probe ranks by x; nprobe=1 probes cell 0 only
-    val probes = Seq((999L, Seq(1f, 0f, 0f, 0f), Seq(0L, 1L, 1L, 1L)))
-    val got = DedupQueries.multiProbeCore(spark, e, cents, probes)
-      .collect()
-    assert(got.length == 3)
-    // true top-10 by x: 9 vecs above 0.8001, then the big-id vec (in),
-    // then id 10 at 0.8 (out at rank 11): cell-0 hits = 6 of 10
-    val hits = got.map(r => (r.getLong(1), r.getLong(2))).toMap
-    assert(hits == Map(1L -> 6L, 2L -> 10L, 4L -> 10L), s"got $hits")
-  }
-
-  // ---------------------------------------------------------------- q247
-
-  private def vec(at: Int, x: Float): Seq[Float] =
-    Seq.tabulate(64)(i => if (i == at) x else 0f)
-
-  test("law: q247 prefix-resident mass — all signal in dim 0: prefix " +
-    "ranking equals full ranking, recall 1e6 at d=16 and d=32") {
-    val corpus = (0 until 12).map(i =>
-      (i.toLong, vec(0, 1f - i * 0.01f)))
-    val probe = Seq((20L, vec(0, 1f)))
-    val got = DedupQueries.matryoshkaRecallCore(
-      (corpus ++ probe).toDF("vec_id", "embedding")).collect()
-    assert(got.length == 2)
-    got.foreach(r => assert(r.getLong(3) == 1000000L, s"got $r"))
-  }
-
-  test("law: q247 suffix-resident mass — all signal in dim 40 with 20 " +
-    "corpus vectors: full top-10 = ids 10..19, prefix keys all tie to " +
-    "vec_id order = ids 0..9 ⇒ recall 0 at both truncations") {
-    val corpus = (0 until 20).map(i => (i.toLong, vec(40, i * 0.01f)))
-    val probe = Seq((20L, vec(40, 1f)))
-    val got = DedupQueries.matryoshkaRecallCore(
-      (corpus ++ probe).toDF("vec_id", "embedding")).collect()
-    assert(got.length == 2)
-    got.foreach(r => assert(r.getLong(3) == 0L, s"got $r"))
-  }
-
-  // ------------------------------------- 2^44 packed-key audit (ADVICE)
-
-  // Under the old 2^37 width, low = vec_id·16 + label overflows its lane
-  // once vec_id ≥ 2^33 (~8.6e9 — below replica/100TB ids ~1e10): the
-  // spill leaks into the rq lane, DEMOTING the vector near the cut and
-  // mangling its decoded id. ids here are chosen so the leaked key loses
-  // exactly one rank — the test fails under 2^37 and passes under 2^44.
-  private val pkBigId = 2L * 8589934592L + 3L // low = id·16+l ≈ 2.75e11
-
-  test("law: q216 packed rank keys are id-exact past 2^33 — a big-id " +
-    "negative at the top-5 boundary keeps its true rank, id and rdot") {
-    def v(x: Float) = Seq(x, 0f, 0f, 0f)
-    val e = Seq(
-      (1L, v(0.9f), 1), (2L, v(0.89f), 1), (3L, v(0.88f), 1),
-      (4L, v(0.87f), 1), (pkBigId, v(0.86f), 1), (10L, v(0.8599f), 1))
-      .toDF("vec_id", "embedding", "label")
-    val probes = Seq((999L, Seq(1f, 0f, 0f, 0f), 0))
-    val got = DedupQueries.hardNegCore(spark, e, probes).collect()
-    assert(got.length == 5)
-    val r5 = got.last // (qid, rk, vec_id, neg_label, rdot)
-    assert((r5.getLong(1), r5.getLong(2), r5.getLong(3),
-      r5.getDouble(4)) == ((5L, pkBigId, 1L, 0.86)), s"got $r5")
-  }
-
-  test("law: q224 packed rank keys are id-exact past 2^33 — the only " +
-    "relevant vector, big-id at rank 10, still scores hits=1 and " +
-    "ndcg = disc[10] (under 2^37 it fell out of the cut: hits 0)") {
-    def v(x: Float) = Seq(x, 0f, 0f, 0f)
-    val corpus = (1 to 9).map(i => (i.toLong, v((1f - i * 0.01f)), 1)) ++
-      Seq((pkBigId, v(0.86f), 0), (20L, v(0.8599f), 1))
-    val probes = Seq((999L, Seq(1f, 0f, 0f, 0f), 0))
-    val got = DedupQueries.knnNdcgCore(spark,
-      corpus.toDF("vec_id", "embedding", "label"), probes).collect()
-    assert(got.length == 1)
-    val r = got.head // (qid, hits, ndcg_ppm, mrr_ppm)
-    assert((r.getLong(1), r.getLong(2), r.getLong(3)) ==
-      ((1L, 289064L, 100000L)), s"got $r")
   }
 }

@@ -1,11 +1,13 @@
 """Tests for the two refactor-identity tools, plan_diff.py and
-oracle_diff.py, the plan-shape gate plan_guard.py, the oracle clone
-report oracle_clones.py and the Bench metric-line decoder the bench
-tools share: what each treats as equal (or within budget), what it
-reports, and its exit code.
+oracle_diff.py, the plan-shape gate plan_guard.py, the clone report
+oracle_clones.py (its oracle and code scans) and the Bench metric-line
+decoder the bench tools share: what each treats as equal (or within
+budget), what it reports, and its exit code.
 
 Run: python3 -m unittest discover -s tools -p 'test_*.py'
 """
+import contextlib
+import io
 import json
 import os
 import shutil
@@ -13,6 +15,7 @@ import subprocess
 import sys
 import tempfile
 import unittest
+from unittest import mock
 
 import bench_guard
 import oracle_clones
@@ -296,6 +299,83 @@ class OracleClonesTest(unittest.TestCase):
     def test_queries_have_no_unlisted_clone(self):
         r = run_tool("oracle_clones.py")
         self.assertEqual(r.returncode, 0, r.stdout)
+
+
+class CodeClonesTest(unittest.TestCase):
+    N = oracle_clones.CODE_MIN_RUN
+    SUMMARY = "shared code runs of >= %d tokens" % oracle_clones.CODE_MIN_RUN
+
+    def report(self, *sources):
+        """Run oracle_clones.py over Scala files A.scala, B.scala, ...
+        holding `sources`."""
+        names = [f"{chr(65 + i)}.scala" for i in range(len(sources))]
+        path, *_ = write_files(self, list(zip(names, sources)))
+        return run_tool("oracle_clones.py", os.path.dirname(path))
+
+    def test_run_of_code_min_run_tokens_is_reported_one_less_is_not(self):
+        for n, rc in ((self.N, 1), (self.N - 1, 0)):
+            run = OracleClonesTest.run_of(n)
+            r = self.report(f"x {run} y", f"z {run} w")
+            self.assertEqual(r.returncode, rc, r.stdout)
+            if rc:
+                self.assertIn(f"CLONE {n} tokens: A.scala:?:1 @1 <-> "
+                              "B.scala:?:1 @1", r.stdout)
+            else:
+                self.assertIn(f"0 {self.SUMMARY}", r.stdout)
+
+    def test_triple_quoted_literal_breaks_a_run(self):
+        a = OracleClonesTest.run_of(self.N - 10)
+        b = OracleClonesTest.run_of(self.N - 10, prefix="d")
+        src = f'{a} """SELECT 1""" {b}'
+        r = self.report(f"x {src}", f"y {src}")
+        self.assertEqual(r.returncode, 0, r.stdout)
+        self.assertIn(f"0 {self.SUMMARY}", r.stdout)
+
+    def test_import_lines_and_comments_are_ignored(self):
+        run = OracleClonesTest.run_of(self.N + 10).split()
+        half = len(run) // 2
+        a = (f"x {' '.join(run[:half])}\n  import foo.bar.Baz\n"
+             f"  // a note\n  /* a /* nested */ block */ "
+             f"{' '.join(run[half:])}\n")
+        r = self.report(a, f"y {' '.join(run)}")
+        self.assertEqual(r.returncode, 1, r.stdout)
+        self.assertIn(f"CLONE {self.N + 10} tokens", r.stdout)
+
+    def test_qualified_names_count_from_the_first_capital(self):
+        toks = oracle_clones.code_tokens
+        self.assertEqual(
+            toks("def f(e: org.apache.spark.sql.DataFrame) = e")[0],
+            toks("def f(e: DataFrame) = e")[0])
+        self.assertEqual(
+            toks("graft.functions.GraphOps.connectedComponents(g)")[0],
+            ["GraphOps", ".", "connectedComponents", "(", "g", ")"])
+        self.assertEqual(toks('df.select($"a" =!= s"b$c")')[0],
+                         ["df", ".", "select", "(", '$"a"', "=!=",
+                          's"b$c"', ")"])
+
+    def test_allowed_pair_passes(self):
+        run = OracleClonesTest.run_of(self.N)
+        path, _ = write_files(self, [("A.scala", f"  def f = {run}\n"),
+                                     ("B.scala", f"  def g = {run}\n")])
+        out = io.StringIO()
+        allowed = {("A.scala:f", "B.scala:g"): "two copies on purpose"}
+        argv = ["oracle_clones.py", os.path.dirname(path)]
+        with mock.patch.dict(oracle_clones.ALLOWED, allowed), \
+                mock.patch.object(sys, "argv", argv), \
+                contextlib.redirect_stdout(out), \
+                self.assertRaises(SystemExit) as done:
+            oracle_clones.main()
+        self.assertEqual(done.exception.code, 0, out.getvalue())
+        self.assertIn(f"allowed {self.N + 1} tokens: A.scala:f:1",
+                      out.getvalue())
+        self.assertIn(f"1 {self.SUMMARY} in 2 files, 0 not allowed",
+                      out.getvalue())
+
+    def test_repo_has_no_unlisted_code_run(self):
+        r = run_tool("oracle_clones.py")
+        self.assertEqual(r.returncode, 0, r.stdout)
+        self.assertRegex(r.stdout,
+                         self.SUMMARY + r" in \d+ files, 0 not allowed")
 
 
 class BenchDecodeTest(unittest.TestCase):
