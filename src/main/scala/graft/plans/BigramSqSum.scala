@@ -1,8 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -17,21 +15,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * `substr(text, i, 2) for i in 1..length(text)-1` (both engines index
   * strings by code point), so the oracle mirror is integer-exact.
   */
-case class BigramSqSum(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"bigram_sq_sum requires a string argument, got ${child.dataType}")
-  override def dataType: DataType = LongType
-  override def prettyName: String = "bigram_sq_sum"
-
+case class BigramSqSum(child: Expression) extends UnaryKernel("bigram_sq_sum",
+    "a string argument", LongType, "graft.plans.BigramSqSum.sqSum") {
+  override protected def accepts(t: DataType): Boolean = t == StringType
   override protected def nullSafeEval(input: Any): Any =
     BigramSqSum.sqSum(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.BigramSqSum.sqSum($c)")
-
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }

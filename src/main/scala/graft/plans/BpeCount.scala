@@ -1,10 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Native Catalyst expression (SURVEY §7.3 path (b)): total BPE token
   * count of a word array under a learned merge table — the single-pass
@@ -40,35 +39,28 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * the SqQuantize pattern.
   */
 case class BpeCount(child: Expression, ls: Seq[String], rs: Seq[String])
-    extends UnaryExpression {
+    extends UnaryKernel("bpe_count", "array<string>", LongType,
+      "graft.plans.BpeCount.total", nullResult = true) {
 
   @transient private lazy val lsArr: Array[String] = ls.toArray
   @transient private lazy val rsArr: Array[String] = rs.toArray
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"bpe_count requires array<string>, got $t")
-    }
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "bpe_count"
-
+  override protected def accepts(t: DataType): Boolean = Kernel.strings(t)
   override protected def nullSafeEval(input: Any): Any =
     BpeCount.total(input.asInstanceOf[ArrayData], lsArr, rsArr)
+  override protected def extraArgs(ctx: CodegenContext): Seq[String] = Seq(
+    ctx.addReferenceObj("ls", lsArr, "java.lang.String[]"),
+    ctx.addReferenceObj("rs", rsArr, "java.lang.String[]"))
 
+  // the entry returns a boxed Long, unboxed here
   override protected def doGenCode(ctx: CodegenContext,
       ev: ExprCode): ExprCode = {
-    val lsRef = ctx.addReferenceObj("ls", lsArr, "java.lang.String[]")
-    val rsRef = ctx.addReferenceObj("rs", rsArr, "java.lang.String[]")
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |Object r = graft.plans.BpeCount.total($c, $lsRef, $rsRef);
-         |if (r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = ((Long) r).longValue(); }
-       """.stripMargin
-    })
+    val extra = extraArgs(ctx)
+    nullSafeCodeGen(ctx, ev, c => s"""
+      Object r = ${call(c +: extra)};
+      if (r == null) { ${ev.isNull} = true; }
+      else { ${ev.value} = ((Long) r).longValue(); }
+    """)
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

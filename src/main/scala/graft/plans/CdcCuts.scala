@@ -1,8 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -28,21 +26,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * per row inside whole-stage codegen, so the chunking stage is map-only
   * and scales with scan bandwidth alone.
   */
-case class CdcCuts(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"cdc_cuts requires a string argument, got ${child.dataType}")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "cdc_cuts"
-
+case class CdcCuts(child: Expression) extends UnaryKernel("cdc_cuts",
+    "a string argument", ArrayType(LongType, containsNull = false),
+    "graft.plans.CdcCuts.compute") {
+  override protected def accepts(t: DataType): Boolean = t == StringType
   override protected def nullSafeEval(input: Any): Any =
     CdcCuts.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.CdcCuts.compute($c)")
-
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }

@@ -1,8 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import java.util.zip.Deflater
@@ -14,21 +12,11 @@ import java.util.zip.Deflater
   * lengths). A per-row scalar kernel like Md5Prefix64: runs once per
   * document, so the Deflater is thread-local and reused. Empty input -> 1.0.
   */
-case class DeflateRatio(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"deflate_ratio requires a string argument, got ${child.dataType}")
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "deflate_ratio"
-
+case class DeflateRatio(child: Expression) extends UnaryKernel("deflate_ratio",
+    "a string argument", DoubleType, "graft.plans.DeflateRatio.ratio") {
+  override protected def accepts(t: DataType): Boolean = t == StringType
   override protected def nullSafeEval(input: Any): Any =
     DeflateRatio.ratio(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.DeflateRatio.ratio($c)")
-
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }

@@ -1,10 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{DataType, DoubleType}
+
+import Kernel.{floats, isFloat}
 
 /** Native codegen'd dot product over two numeric arrays (SURVEY §7.3 path
   * (b)) — the hot kernel of every embedding operator (cosine kNN, ANN
@@ -21,34 +22,15 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * the shorter array.
   */
 case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  private def okInput(t: DataType): Boolean = t match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-  private def isFloat(t: DataType): Boolean =
-    t.asInstanceOf[ArrayType].elementType == FloatType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (okInput(left.dataType) && okInput(right.dataType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"dot_product requires array<float|double> arguments, " +
-        s"got (${left.dataType}, ${right.dataType})")
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "dot_product"
-
+    extends BinaryKernel("dot_product", "array<float|double> arguments",
+      DoubleType, "graft.plans.DotProduct.dot") {
+  override protected def accepts(l: DataType, r: DataType): Boolean =
+    floats(l) && floats(r)
   override protected def nullSafeEval(a: Any, b: Any): Any =
     DotProduct.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
       isFloat(left.dataType), isFloat(right.dataType))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.plans.DotProduct.dot($a, $b, ${isFloat(left.dataType)}, " +
-        s"${isFloat(right.dataType)})")
-
+  override protected def extraArgs(ctx: CodegenContext): Seq[String] =
+    Seq(s"${isFloat(left.dataType)}", s"${isFloat(right.dataType)}")
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): Expression = copy(left = newLeft, right = newRight)
 }

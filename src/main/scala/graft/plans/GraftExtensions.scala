@@ -17,40 +17,22 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
+  private def fn(name: String, cls: Class[_ <: Expression])(
+      build: Seq[Expression] => Expression) =
+    (new FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
+
   private[graft] val functionDescriptors = Seq(
-    (new FunctionIdentifier("md5_prefix64"),
-      new ExpressionInfo(classOf[Md5Prefix64].getName, "md5_prefix64"),
-      (children: Seq[Expression]) => Md5Prefix64(children.head): Expression),
-    (new FunctionIdentifier("md5_prefix60"),
-      new ExpressionInfo(classOf[Md5Prefix60].getName, "md5_prefix60"),
-      (children: Seq[Expression]) => Md5Prefix60(children.head): Expression),
-    (new FunctionIdentifier("prefix_offsets"),
-      new ExpressionInfo(classOf[PrefixOffsets].getName, "prefix_offsets"),
-      (children: Seq[Expression]) => PrefixOffsets(children.head): Expression),
-    (new FunctionIdentifier("deflate_ratio"),
-      new ExpressionInfo(classOf[DeflateRatio].getName, "deflate_ratio"),
-      (children: Seq[Expression]) => DeflateRatio(children.head): Expression),
-    (new FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (children: Seq[Expression]) =>
-        DotProduct(children(0), children(1)): Expression),
-    (new FunctionIdentifier("quantize_stats"),
-      new ExpressionInfo(classOf[QuantizeStats].getName, "quantize_stats"),
-      (children: Seq[Expression]) => QuantizeStats(children.head): Expression),
-    (new FunctionIdentifier("min_md5_hex"),
-      new ExpressionInfo(classOf[MinMd5Hex].getName, "min_md5_hex"),
-      (children: Seq[Expression]) => MinMd5Hex(children.head): Expression),
-    (new FunctionIdentifier("min_shingle_md5_hex"),
-      new ExpressionInfo(classOf[MinShingleMd5Hex].getName,
-        "min_shingle_md5_hex"),
-      (children: Seq[Expression]) =>
-        MinShingleMd5Hex(children(0), children(1)): Expression),
-    (new FunctionIdentifier("cdc_cuts"),
-      new ExpressionInfo(classOf[CdcCuts].getName, "cdc_cuts"),
-      (children: Seq[Expression]) => CdcCuts(children.head): Expression),
-    (new FunctionIdentifier("bigram_sq_sum"),
-      new ExpressionInfo(classOf[BigramSqSum].getName, "bigram_sq_sum"),
-      (children: Seq[Expression]) => BigramSqSum(children.head): Expression))
+    fn("md5_prefix64", classOf[Md5Prefix64])(c => Md5Prefix64(c.head)),
+    fn("md5_prefix60", classOf[Md5Prefix60])(c => Md5Prefix60(c.head)),
+    fn("prefix_offsets", classOf[PrefixOffsets])(c => PrefixOffsets(c.head)),
+    fn("deflate_ratio", classOf[DeflateRatio])(c => DeflateRatio(c.head)),
+    fn("dot_product", classOf[DotProduct])(c => DotProduct(c(0), c(1))),
+    fn("quantize_stats", classOf[QuantizeStats])(c => QuantizeStats(c.head)),
+    fn("min_md5_hex", classOf[MinMd5Hex])(c => MinMd5Hex(c.head)),
+    fn("min_shingle_md5_hex", classOf[MinShingleMd5Hex])(
+      c => MinShingleMd5Hex(c(0), c(1))),
+    fn("cdc_cuts", classOf[CdcCuts])(c => CdcCuts(c.head)),
+    fn("bigram_sq_sum", classOf[BigramSqSum])(c => BigramSqSum(c.head)))
 
   /** Imperative fallback: if `getOrCreate` returned a session built without
     * `spark.sql.extensions=graft.plans.GraftExtensions` (e.g. a harness

@@ -1,10 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
+import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native fingerprint kernels (SURVEY §7.3 path (b)) for the document
@@ -18,26 +16,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * row. Null elements are skipped (array_min / list_min semantics); an
   * empty or all-null array yields null.
   */
-case class MinMd5Hex(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"min_md5_hex requires array<string>, got $t")
-  }
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "min_md5_hex"
-
+case class MinMd5Hex(child: Expression) extends UnaryKernel("min_md5_hex",
+    "array<string>", StringType, "graft.plans.MinMd5Hex.minHex",
+    nullResult = true) {
+  override protected def accepts(t: DataType): Boolean = Kernel.strings(t)
   override protected def nullSafeEval(input: Any): Any =
     MinMd5Hex.minHex(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.plans.MinMd5Hex.minHex($c);
-      ${ev.isNull} = (${ev.value} == null);
-    """)
-
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
@@ -109,29 +93,13 @@ object MinMd5Hex {
 
 /** `min_shingle_md5_hex(words, n)` — see [[MinMd5Hex.minShingleHex]]. */
 case class MinShingleMd5Hex(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), IntegerType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"min_shingle_md5_hex requires (array<string>, int), got ($l, $r)")
-    }
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "min_shingle_md5_hex"
-
+    extends BinaryKernel("min_shingle_md5_hex", "(array<string>, int)",
+      StringType, "graft.plans.MinMd5Hex.minShingleHex", nullResult = true) {
+  override protected def accepts(l: DataType, r: DataType): Boolean =
+    Kernel.strings(l) && r == IntegerType
   override protected def nullSafeEval(words: Any, n: Any): Any =
     MinMd5Hex.minShingleHex(words.asInstanceOf[ArrayData],
       n.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (w, n) => s"""
-      ${ev.value} = graft.plans.MinMd5Hex.minShingleHex($w, $n);
-      ${ev.isNull} = (${ev.value} == null);
-    """)
-
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): Expression = copy(left = newLeft, right = newRight)
 }

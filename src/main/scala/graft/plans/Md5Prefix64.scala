@@ -1,8 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import java.security.MessageDigest
@@ -14,21 +12,11 @@ import java.security.MessageDigest
   * string and re-parses it per row; in the MinHash pipeline this runs once
   * per shingle, i.e. billions of times at 100 TB).
   */
-case class Md5Prefix64(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"md5_prefix64 requires a string argument, got ${child.dataType}")
-  override def dataType: DataType = LongType
-  override def prettyName: String = "md5_prefix64"
-
+case class Md5Prefix64(child: Expression) extends UnaryKernel("md5_prefix64",
+    "a string argument", LongType, "graft.plans.Md5Prefix64.hash") {
+  override protected def accepts(t: DataType): Boolean = t == StringType
   override protected def nullSafeEval(input: Any): Any =
     Md5Prefix64.hash(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.Md5Prefix64.hash($c)")
-
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
@@ -70,21 +58,11 @@ object Md5Prefix64 {
   * At 60 bits the expected cross-content collisions at 10^12 keys are
   * ~400 globally — rare enough that a content-verify stage over the
   * collision mass is effectively free. */
-case class Md5Prefix60(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"md5_prefix60 requires a string argument, got ${child.dataType}")
-  override def dataType: DataType = LongType
-  override def prettyName: String = "md5_prefix60"
-
+case class Md5Prefix60(child: Expression) extends UnaryKernel("md5_prefix60",
+    "a string argument", LongType, "graft.plans.Md5Prefix60.hash") {
+  override protected def accepts(t: DataType): Boolean = t == StringType
   override protected def nullSafeEval(input: Any): Any =
     Md5Prefix60.hash(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.Md5Prefix60.hash($c)")
-
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }

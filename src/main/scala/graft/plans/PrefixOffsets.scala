@@ -1,8 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -14,27 +13,22 @@ import org.apache.spark.sql.types._
   * every step, i.e. O(n²) allocation, which is wrong for a library
   * primitive applied to long lists. Null elements count as 0.
   */
-case class PrefixOffsets(child: Expression) extends UnaryExpression {
-
+case class PrefixOffsets(child: Expression) extends UnaryKernel(
+    "prefix_offsets", "array<int> or array<bigint>",
+    ArrayType(LongType, containsNull = false),
+    "graft.plans.PrefixOffsets.compute") {
   private lazy val elemIsLong: Boolean = child.dataType match {
     case ArrayType(LongType, _) => true
     case _ => false
   }
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(IntegerType | LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"prefix_offsets requires array<int> or array<bigint>, got $other")
+  override protected def accepts(t: DataType): Boolean = t match {
+    case ArrayType(IntegerType | LongType, _) => true
+    case _ => false
   }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "prefix_offsets"
-
   override protected def nullSafeEval(input: Any): Any =
     PrefixOffsets.compute(input.asInstanceOf[ArrayData], elemIsLong)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.PrefixOffsets.compute($c, $elemIsLong)")
-
+  override protected def extraArgs(ctx: CodegenContext): Seq[String] =
+    Seq(s"$elemIsLong")
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }

@@ -2,11 +2,10 @@ package graft.plans
 
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Fused int8-quantization statistics over a numeric array — the hot
   * kernel of q104 (vector-storage compression audit): one primitive pass
@@ -32,38 +31,16 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * `sc <= 0` (constant vector) q_sum/max_err are 0 and callers filter on
   * `result[0] > 0` exactly as they filtered `sc > 0`.
   */
-case class QuantizeStats(child: Expression) extends UnaryExpression {
-
-  private def okInput(t: DataType): Boolean = t match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-  private def isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (okInput(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"quantize_stats requires an array<float|double> argument, " +
-        s"got ${child.dataType}")
-
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "quantize_stats"
-
+case class QuantizeStats(child: Expression) extends UnaryKernel(
+    "quantize_stats", "an array<float|double> argument",
+    ArrayType(DoubleType, containsNull = false),
+    "graft.plans.QuantizeStats.stats", nullResult = true) {
+  private def isFloat: Boolean = Kernel.isFloat(child.dataType)
+  override protected def accepts(t: DataType): Boolean = Kernel.floats(t)
   override protected def nullSafeEval(a: Any): Any =
     QuantizeStats.stats(a.asInstanceOf[ArrayData], isFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val code = nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = graft.plans.QuantizeStats.stats($c, $isFloat);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin
-    })
-    code
-  }
-
+  override protected def extraArgs(ctx: CodegenContext): Seq[String] =
+    Seq(s"$isFloat")
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }

@@ -1,8 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
@@ -20,7 +19,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * the oracle's CASE.
   */
 case class SqQuantize(child: Expression, mns: Seq[Double],
-    mxs: Seq[Double], levels: Long) extends UnaryExpression {
+    mxs: Seq[Double], levels: Long) extends UnaryKernel("sq_quantize",
+      "array<float>", ArrayType(DoubleType, false),
+      "graft.plans.SqQuantize.quantize") {
 
   // Seq params (structural equals/hashCode) so Catalyst canonicalization
   // and subexpression/exchange reuse recognize semantically identical
@@ -29,26 +30,16 @@ case class SqQuantize(child: Expression, mns: Seq[Double],
   @transient private lazy val mnsArr: Array[Double] = mns.toArray
   @transient private lazy val mxsArr: Array[Double] = mxs.toArray
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"sq_quantize requires array<float>, got $t")
-    }
-  override def dataType: DataType = ArrayType(DoubleType, false)
-  override def prettyName: String = "sq_quantize"
-
+  override protected def accepts(t: DataType): Boolean = t match {
+    case ArrayType(FloatType, _) => true
+    case _ => false
+  }
   override protected def nullSafeEval(input: Any): Any =
     SqQuantize.quantize(input.asInstanceOf[ArrayData], mnsArr, mxsArr,
       levels)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val mnsRef = ctx.addReferenceObj("mns", mnsArr, "double[]")
-    val mxsRef = ctx.addReferenceObj("mxs", mxsArr, "double[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.plans.SqQuantize.quantize($c, $mnsRef, $mxsRef, ${levels}L)")
-  }
-
+  override protected def extraArgs(ctx: CodegenContext): Seq[String] = Seq(
+    ctx.addReferenceObj("mns", mnsArr, "double[]"),
+    ctx.addReferenceObj("mxs", mxsArr, "double[]"), s"${levels}L")
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }

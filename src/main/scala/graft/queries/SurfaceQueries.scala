@@ -13,29 +13,14 @@ import graft.sources.Sources
   */
 object SurfaceQueries {
 
-  /** Scratch dir for the round-trip gate queries, recursively deleted at
-    * JVM exit — repeated Verify/Bench loops would otherwise leak slice
-    * copies into /tmp. Exit-time (not eager) deletion because the
-    * returned DataFrames read these files lazily at action time.
-    * Per-JVM: one dir per prefix, reused across builder invocations (a
-    * long-lived sbt/test session would otherwise accumulate a shutdown
-    * hook and a fresh slice copy per invocation — round-9 advice item);
-    * one shared hook reaps them all. */
+  /** Scratch dir for the round-trip gate queries, deleted at JVM exit
+    * ([[graft.io.TempDirs]]). Per-JVM: one dir per prefix, reused across
+    * builder invocations (a long-lived sbt/test session would otherwise
+    * accumulate a fresh slice copy per invocation — round-9 advice item). */
   private val scratchDirs =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private lazy val scratchHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete()
-      }
-      scratchDirs.values().forEach(d => rm(new java.io.File(d)))
-    }))
-  private def scratchDir(prefix: String): String = {
-    scratchHook
-    scratchDirs.computeIfAbsent(prefix,
-      p => java.nio.file.Files.createTempDirectory(p).toString)
-  }
-
+  private def scratchDir(prefix: String): String =
+    scratchDirs.computeIfAbsent(prefix, p => graft.io.TempDirs.fresh(p))
 
   /** The synthesized snapshot pair shared by q168 (diff) and q173
     * (incremental stats) — ONE definition so the two queries (and the

@@ -1,6 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -15,6 +18,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * sessionization state is one small record per active user.
   */
 object EventStreams {
+
+  /** Every operator's row, key and state encoder, derived from its type:
+    * callers pass none, so no caller sees an operator's state type. */
+  private implicit def encoder[T: TypeTag]: Encoder[T] = ExpressionEncoder[T]()
 
   /** Tumbling 1-hour counts with a 1-hour watermark: late events beyond the
     * watermark are dropped, state for closed windows is evicted. Batch twin:
@@ -65,9 +72,7 @@ object EventStreams {
     * per distinct bucket — bounded by the LSH band space, not the stream
     * length. Batch twin: q52_lsh_pairs.
     */
-  def dedupNearStream(docs: Dataset[Doc])(
-      implicit e1: org.apache.spark.sql.Encoder[Long],
-      e2: org.apache.spark.sql.Encoder[DedupDecision]): Dataset[DedupDecision] =
+  def dedupNearStream(docs: Dataset[Doc]): Dataset[DedupDecision] =
     docs.groupByKey(_.bucket)
       .flatMapGroupsWithState[Long, DedupDecision](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
@@ -91,10 +96,8 @@ object EventStreams {
   /** Session assembly with explicit keyed state (flatMapGroupsWithState):
     * a session closes after `gapSec` of silence (processing-time timeout in
     * this minimal variant). Batch twin: q64_sessionize. */
-  def sessionize(events: Dataset[Ev], gapSec: Double = 1800.0)(
-      implicit e1: org.apache.spark.sql.Encoder[SessionState],
-      e2: org.apache.spark.sql.Encoder[Session],
-      e3: org.apache.spark.sql.Encoder[Long]): Dataset[Session] = {
+  def sessionize(events: Dataset[Ev], gapSec: Double = 1800.0)
+      : Dataset[Session] = {
     events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[SessionState, Session](
@@ -135,10 +138,7 @@ object EventStreams {
     * history. State is O(1) per user and never grows with stream length.
     */
   def funnelStream(events: Dataset[FunnelEv],
-      horizonUs: Long = 604800000000L)(
-      implicit e1: org.apache.spark.sql.Encoder[FunnelState],
-      e2: org.apache.spark.sql.Encoder[StageReach],
-      e3: org.apache.spark.sql.Encoder[Long]): Dataset[StageReach] = {
+      horizonUs: Long = 604800000000L): Dataset[StageReach] = {
     events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[FunnelState, StageReach](
@@ -230,10 +230,7 @@ object EventStreams {
     * a snapshot arriving in a LATER micro-batch than a query with a later
     * ts cannot retroactively match (stream reality — feed snapshots with
     * a watermark lead if exactness across batches matters). */
-  def asofStream(ticks: Dataset[Tick])(
-      implicit e1: org.apache.spark.sql.Encoder[(Long, Double)],
-      e2: org.apache.spark.sql.Encoder[Enriched],
-      e3: org.apache.spark.sql.Encoder[Long]): Dataset[Enriched] =
+  def asofStream(ticks: Dataset[Tick]): Dataset[Enriched] =
     ticks.groupByKey(_.user_id)
       .flatMapGroupsWithState[(Long, Double), Enriched](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
@@ -286,19 +283,16 @@ object EventStreams {
     *
     * `oldBands`: (band Int, mh Long, old_id Long) — precompute batch-side
     * from the existing corpus with [[minhashBands]] + posexplode. */
-  def incrementalDedupStream(newDocs: DataFrame, oldBands: DataFrame)(
-      implicit e1: org.apache.spark.sql.Encoder[BandHit],
-      e2: org.apache.spark.sql.Encoder[IncDecision],
-      e3: org.apache.spark.sql.Encoder[Long],
-      e4: org.apache.spark.sql.Encoder[Boolean]): Dataset[IncDecision] = {
+  def incrementalDedupStream(newDocs: DataFrame, oldBands: DataFrame)
+      : Dataset[IncDecision] = {
     val bands = newDocs
       .select(col("doc_id"), posexplode(minhashBands(col("text")))
         .as(Seq("band", "mh")))
     val hits = bands
       .join(oldBands, Seq("band", "mh"))
       .select(col("doc_id"), col("band"), col("old_id"))
-      .as[BandHit](e1)
-    hits.groupByKey(_.doc_id)(e3)
+      .as[BandHit]
+    hits.groupByKey(_.doc_id)
       .flatMapGroupsWithState[Boolean, IncDecision](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (id: Long, it: Iterator[BandHit], state: GroupState[Boolean]) =>
@@ -319,7 +313,7 @@ object EventStreams {
                 IncDecision(id, agreeing.keys.min, maxAgree))
             }
           }
-      }(e4, e2)
+      }
   }
 
   final case class ChunkRow(doc_id: Long, chash: String, clen: Long)
@@ -337,13 +331,10 @@ object EventStreams {
     * ages it with a TTL or swaps in a Bloom filter when approximate
     * suffices). Within a micro-batch, ties resolve by doc_id so replays
     * and arrival order cannot flip which occurrence counts as first. */
-  def cdcDedupStream(docs: DataFrame)(
-      implicit e1: org.apache.spark.sql.Encoder[ChunkRow],
-      e2: org.apache.spark.sql.Encoder[ChunkDecision],
-      e3: org.apache.spark.sql.Encoder[String]): Dataset[ChunkDecision] = {
+  def cdcDedupStream(docs: DataFrame): Dataset[ChunkDecision] = {
     val chunks = graft.functions.TextOps.cdcChunkRows(docs, "doc_id", "text")
-      .as[ChunkRow](e1)
-    chunks.groupByKey(_.chash)(e3)
+      .as[ChunkRow]
+    chunks.groupByKey(_.chash)
       .flatMapGroupsWithState[Boolean, ChunkDecision](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (h: String, it: Iterator[ChunkRow], state: GroupState[Boolean]) =>
@@ -353,7 +344,7 @@ object EventStreams {
           rows.iterator.zipWithIndex.map { case (r, i) =>
             ChunkDecision(r.doc_id, r.chash, r.clen, !seen && i == 0)
           }
-      }(org.apache.spark.sql.Encoders.scalaBoolean, e2)
+      }
   }
 
   /** Streaming vocabulary heavy hitters — the stream twin of q131's
@@ -426,14 +417,11 @@ object EventStreams {
     * decision. A pure-hash design cannot distinguish a redelivered old
     * revision from a genuine new update. State is one (long, hash) per
     * live doc; content is hashed map-side BEFORE the keyed shuffle. */
-  def upsertDiffStream(docs: DataFrame)(
-      implicit e1: org.apache.spark.sql.Encoder[UpsertRow],
-      e2: org.apache.spark.sql.Encoder[UpsertDecision],
-      e3: org.apache.spark.sql.Encoder[Long]): Dataset[UpsertDecision] =
+  def upsertDiffStream(docs: DataFrame): Dataset[UpsertDecision] =
     docs.select(col("doc_id"), col("ver").cast("long").as("ver"),
         md5(col("text")).as("h"))
-      .as[UpsertRow](e1)
-      .groupByKey(_.doc_id)(e3)
+      .as[UpsertRow]
+      .groupByKey(_.doc_id)
       .flatMapGroupsWithState[(Long, String), UpsertDecision](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (id: Long, it: Iterator[UpsertRow],
@@ -455,9 +443,7 @@ object EventStreams {
             }
           }
           out.result().iterator
-      }(org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.STRING), e2)
+      }
 
   /** One arrival into a running top-k (the stream twin of `Scale.topK`):
     * below k `cand` is admitted; at k it displaces the worst kept entry
@@ -492,11 +478,8 @@ object EventStreams {
     * StreamingSpec gates that equivalence against the q164 window.
     * Within-batch arrival order is canonicalized (n_chars desc, doc_id)
     * so replays cannot flip decisions. */
-  def domainCapStream(docs: Dataset[DomDoc], k: Int = 3)(
-      implicit e1: org.apache.spark.sql.Encoder[List[(Long, Long)]],
-      e2: org.apache.spark.sql.Encoder[CapDecision],
-      e3: org.apache.spark.sql.Encoder[String]): Dataset[CapDecision] =
-    docs.groupByKey(_.domain)(e3)
+  def domainCapStream(docs: Dataset[DomDoc], k: Int = 3): Dataset[CapDecision] =
+    docs.groupByKey(_.domain)
       .flatMapGroupsWithState[List[(Long, Long)], CapDecision](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (domain: String, it: Iterator[DomDoc],
@@ -516,7 +499,7 @@ object EventStreams {
           }
           state.update(top)
           out.result().iterator
-      }(e1, e2)
+      }
 
   final case class CapEv(event_id: Long, user_id: Long, ts_us: Long,
       event_type: String)
@@ -532,11 +515,9 @@ object EventStreams {
     * Emits an admit row per kept event and an evict row per
     * displacement, so a downstream consumer can maintain the capped set
     * incrementally; redelivery is a no-op ([[topKStep]]). */
-  def contributionCapStream(evs: Dataset[CapEv], k: Int = 8)(
-      implicit e1: org.apache.spark.sql.Encoder[List[(Long, Long, String)]],
-      e2: org.apache.spark.sql.Encoder[CapEvDecision],
-      e3: org.apache.spark.sql.Encoder[Long]): Dataset[CapEvDecision] =
-    evs.groupByKey(_.user_id)(e3)
+  def contributionCapStream(evs: Dataset[CapEv], k: Int = 8)
+      : Dataset[CapEvDecision] =
+    evs.groupByKey(_.user_id)
       .flatMapGroupsWithState[List[(Long, Long, String)], CapEvDecision](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (uid: Long, it: Iterator[CapEv],
@@ -558,7 +539,7 @@ object EventStreams {
           }
           state.update(top)
           out.result().iterator
-      }(e1, e2)
+      }
 
   final case class DpEv(event_id: Long, user_id: Long, ts_us: Long,
       event_type: String)
@@ -574,13 +555,9 @@ object EventStreams {
     * admitted COUNT per cell equals the batch Σ least(count, c)
     * exactly. The release tail (hash noise + clamp, dpReleaseCore's
     * map stages) runs on the admitted sink at window close. */
-  def dpCapStream(evs: Dataset[DpEv], c: Int = 4)(
-      implicit e1: org.apache.spark.sql.Encoder[List[Long]],
-      e2: org.apache.spark.sql.Encoder[DpAdmit],
-      e3: org.apache.spark.sql.Encoder[(Long, String, Long)])
-      : Dataset[DpAdmit] =
+  def dpCapStream(evs: Dataset[DpEv], c: Int = 4): Dataset[DpAdmit] =
     evs.groupByKey(e =>
-        (e.user_id, e.event_type, e.ts_us / 86400000000L % 7))(e3)
+        (e.user_id, e.event_type, e.ts_us / 86400000000L % 7))
       .flatMapGroupsWithState[List[Long], DpAdmit](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (key: (Long, String, Long), it: Iterator[DpEv],
@@ -599,7 +576,7 @@ object EventStreams {
           }
           state.update(ids)
           out.result().iterator
-      }(e1, e2)
+      }
 
   final case class Turn(user_id: Long, event_id: Long, ts_us: Long,
       toks: Long)
@@ -649,18 +626,15 @@ object EventStreams {
     * the LAST emission per user equals the batch query's kept columns
     * (StreamingSpec gates this under shuffled batch boundaries, full
     * replay, and the trim-then-late-old-turn adversary). */
-  def contextPackStream(events: DataFrame, budget: Long = 256L)(
-      implicit e1: org.apache.spark.sql.Encoder[Turn],
-      e2: org.apache.spark.sql.Encoder[PackState],
-      e3: org.apache.spark.sql.Encoder[Long],
-      es: org.apache.spark.sql.Encoder[PackWindow]): Dataset[PackState] =
+  def contextPackStream(events: DataFrame, budget: Long = 256L)
+      : Dataset[PackState] =
     events.select(col("user_id"), col("event_id"),
         unix_micros(col("ts")).as("ts_us"),
         (expr("CAST(length(concat(event_type, ' ', props)) AS BIGINT) div 4")
           + lit(1L)).as("toks"))
       .filter(col("toks").isNotNull)
-      .as[Turn](e1)
-      .groupByKey(_.user_id)(e3)
+      .as[Turn]
+      .groupByKey(_.user_id)
       .flatMapGroupsWithState[PackWindow, PackState](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (uid: Long, it: Iterator[Turn], state: GroupState[PackWindow]) =>
@@ -688,7 +662,7 @@ object EventStreams {
           else Iterator.single(PackState(uid,
             kept.size.toLong, kept.map(_.toks).sum,
             kept.map(_.event_id).min, kept.head.ts_us))
-      }(es, e2)
+      }
 
   final case class DayEv(event_type: String, ts_us: Long)
   final case class CusumRow(event_type: String, n_days: Long, total: Long,
@@ -703,12 +677,8 @@ object EventStreams {
     * final emitted row per type equals the batch q243 output on the same
     * prefix exactly (integer arithmetic identical; StreamingSpec pins the
     * equivalence under split delivery). */
-  def cusumStream(evs: Dataset[DayEv])(
-      implicit e1: org.apache.spark.sql.Encoder[Map[Long, Long]],
-      e2: org.apache.spark.sql.Encoder[CusumRow],
-      e3: org.apache.spark.sql.Encoder[String])
-      : Dataset[CusumRow] =
-    evs.groupByKey(_.event_type)(e3)
+  def cusumStream(evs: Dataset[DayEv]): Dataset[CusumRow] =
+    evs.groupByKey(_.event_type)
       .mapGroupsWithState[Map[Long, Long], CusumRow](
         GroupStateTimeout.NoTimeout()) {
         (typ: String, it: Iterator[DayEv],
@@ -739,7 +709,7 @@ object EventStreams {
           }
           CusumRow(typ, dd, tt, bestT,
             if (bestSd >= 0) 1L else -1L, bestAbs * 1000000L / (dd * tt))
-      }(e1, e2)
+      }
 
   final case class QuantRow(wk: Long, n: Long, q25: Long, q50: Long,
       q75: Long)
@@ -767,16 +737,11 @@ object EventStreams {
     * and `state.remove()` weeks older than the watermark minus the
     * drift lag — the emission algebra is unchanged because closed
     * weeks never receive data. */
-  def quantileDriftStream(evs: DataFrame)(
-      implicit e0: org.apache.spark.sql.Encoder[Map[Long, Long]],
-      e1: org.apache.spark.sql.Encoder[(Long, Long)],
-      e2: org.apache.spark.sql.Encoder[Long],
-      e3: org.apache.spark.sql.Encoder[QuantRow])
-      : Dataset[QuantRow] =
+  def quantileDriftStream(evs: DataFrame): Dataset[QuantRow] =
     evs.select(expr("unix_micros(ts) div 604800000000").as("wk"),
         expr("cast(floor(value * 100) as bigint)").as("v"))
-      .as[(Long, Long)](e1)
-      .groupByKey(_._1)(e2)
+      .as[(Long, Long)]
+      .groupByKey(_._1)
       .mapGroupsWithState[Map[Long, Long], QuantRow](
         GroupStateTimeout.NoTimeout()) {
         (wk: Long, it: Iterator[(Long, Long)],
@@ -799,7 +764,7 @@ object EventStreams {
             sorted.last._1
           }
           QuantRow(wk, n, q(25), q(50), q(75))
-      }(e0, e3)
+      }
 
   final case class LedgerRow(event_type: String, user_id: Long,
       n: Long, cents: Long, forget: Boolean)
@@ -817,20 +782,15 @@ object EventStreams {
     * keyed shuffle. Emission is an upsert (latest row per key wins);
     * StreamingSpec folds the final state through q250's ledger algebra
     * and pins byte-equality with the batch output under split delivery. */
-  def deletionLedgerStream(evs: DataFrame)(
-      implicit e1: org.apache.spark.sql.Encoder[
-        (String, Long, Long, Boolean)],
-      e2: org.apache.spark.sql.Encoder[(String, Long)],
-      e3: org.apache.spark.sql.Encoder[LedgerRow])
-      : Dataset[LedgerRow] =
+  def deletionLedgerStream(evs: DataFrame): Dataset[LedgerRow] =
     evs.select(col("event_type"),
         col("user_id").cast("long").as("user_id"),
         expr("cast(floor(value * 100) as bigint)").as("cents"),
         (pmod(call_function("md5_prefix64",
           concat(lit("del|"), col("user_id").cast("string"))),
           lit(16)) === 0).as("forget"))
-      .as[(String, Long, Long, Boolean)](e1)
-      .groupByKey(e => (e._1, e._2))(e2)
+      .as[(String, Long, Long, Boolean)]
+      .groupByKey(e => (e._1, e._2))
       .mapGroupsWithState[(Long, Long), LedgerRow](
         GroupStateTimeout.NoTimeout()) {
         (key: (String, Long), it: Iterator[(String, Long, Long, Boolean)],
@@ -840,7 +800,5 @@ object EventStreams {
           it.foreach { e => n += 1; c += e._3; forget = e._4 }
           state.update((n, c))
           LedgerRow(key._1, key._2, n, c, forget)
-      }(org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaLong), e3)
+      }
 }

@@ -287,8 +287,7 @@ class ArrayOpsSpec extends SparkSpec {
     assert(regularSize(typed.schema, "xs").contains(3L))
     // the invariant must survive persistence: Spark stores StructField
     // metadata in the parquet footer and restores it on read
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-regular").toString
+    val dir = freshDir("graft-regular")
     typed.write.mode("overwrite").parquet(dir)
     val back = spark.read.parquet(dir)
     assert(regularSize(back.schema, "xs").contains(3L))

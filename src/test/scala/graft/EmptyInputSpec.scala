@@ -10,8 +10,7 @@ package graft
 class EmptyInputSpec extends SparkSpec {
 
   private lazy val emptyDir: String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-empty").toString
+    val dir = freshDir("graft-empty")
     Seq("documents", "embeddings", "events", "lineitem", "orders",
       "customer").foreach {
       t =>

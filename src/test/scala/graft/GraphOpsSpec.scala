@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.GraphOps
+import graft.queries.DedupQueries
 
 /** Connected components (min-label propagation) — known-answer graphs,
   * including a path graph that needs several propagation rounds. */
@@ -169,5 +170,68 @@ class GraphOpsSpec extends SparkSpec {
         iters = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(a == b)
+  }
+
+  // ---------------------------------------------------------------- q241
+
+  test("law: q241 a 3-clique closes its only wedge — closure_ppm 1e6") {
+    val e = Seq((1L, 2L), (1L, 3L), (2L, 3L)).toDF("id_a", "id_b")
+    val lab = Seq((1L, 0), (2L, 0), (3L, 0)).toDF("vec_id", "label")
+    val got = DedupQueries.triangleCensusCore(e, lab, "shuffle_hash")
+      .collect()
+    assert(got.length == 1)
+    val r = got.head
+    assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)) ==
+      ((0L, 1L, 1L, 1000000L)), s"got $r")
+  }
+
+  test("law: q241 a path closes nothing — closure_ppm 0; labels group " +
+    "by the wedge ROOT's label") {
+    val e = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
+    val lab = Seq((1L, 7), (2L, 8), (3L, 9)).toDF("vec_id", "label")
+    val got = DedupQueries.triangleCensusCore(e, lab, "shuffle_hash")
+      .collect()
+    assert(got.length == 1)
+    val r = got.head
+    assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)) ==
+      ((7L, 1L, 0L, 0L)), s"got $r")
+  }
+
+  test("law: q241 join strategy is output-invariant — the corpus-scale " +
+    "merge path (engaged above 2^18 vectors, e.g. the 1000x replica) " +
+    "produces byte-identical rows to the gate SFs' shuffled-hash path") {
+    val sfDir = "/root/testdata/sf0.001"
+    val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L),
+      (5L, 6L)).toDF("id_a", "id_b")
+    val lab = (1L to 6L).map(i => (i, (i % 2).toInt))
+      .toDF("vec_id", "label")
+    val shj = DedupQueries.triangleCensusCore(edges, lab, "shuffle_hash")
+      .collect().toSeq
+    val smj = DedupQueries.triangleCensusCore(edges, lab, "merge")
+      .collect().toSeq
+    assert(shj == smj, s"shj=$shj smj=$smj")
+    assert(e.count() > 0) // fixture sanity
+  }
+
+  // ---------------------------------------------------------------- q253
+
+  test("law: q253 a 4-node path from its canonical has depths 0,1,2,3; " +
+    "isolated nodes land at depth 0") {
+    val e = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("id_a", "id_b")
+    val uni = Seq(1L, 2L, 3L, 4L, 5L).toDF("vec_id")
+    val got = DedupQueries.chainDepthCore(spark, e, uni).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == Map(0L -> 2L, 1L -> 1L, 2L -> 1L, 3L -> 1L), s"$got")
+  }
+
+  test("law: q253 depth caps at 8 — a 12-node chain buckets its three " +
+    "deepest nodes at 9 (mirroring the oracle's recursion guard)") {
+    val e = (1L until 12L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val uni = (1L to 12L).toDF("vec_id")
+    val got = DedupQueries.chainDepthCore(spark, e, uni).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val expect = (0L to 8L).map(d => d -> 1L).toMap + (9L -> 3L)
+    assert(got == expect, s"$got")
   }
 }

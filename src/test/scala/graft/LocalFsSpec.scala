@@ -2,7 +2,7 @@ package graft
 
 import java.io.FileNotFoundException
 import java.net.URI
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -23,7 +23,7 @@ import graft.streaming.EventStreams
 class LocalFsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def fresh(): java.nio.file.Path = Files.createTempDirectory("graft-localfs")
+  private def fresh(): java.nio.file.Path = Paths.get(freshDir("graft-localfs"))
 
   private def pair(umask: String = "022"): (FileSystem, FileSystem) = {
     val conf = new Configuration(false)

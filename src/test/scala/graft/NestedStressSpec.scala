@@ -48,7 +48,7 @@ class NestedStressSpec extends SparkSpec {
   }
 
   test("nested pipeline == exploded relational computation on 50k jagged rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-stress").toString + "/pts"
+    val dir = freshDir("graft-stress") + "/pts"
     // deterministic jagged generator, built as expressions (no driver loop)
     spark.range(0, 50000).toDF("row_id")
       .withColumn("n", pmod(col("row_id") * 2654435761L, lit(10)).cast("int"))

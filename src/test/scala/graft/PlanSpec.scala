@@ -91,7 +91,7 @@ class PlanSpec extends SparkSpec {
 
   test("nested schema pruning: one struct field from array<struct> prunes the scan") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-nested").toString + "/pts"
+    val dir = freshDir("graft-nested") + "/pts"
     pointsDF.write.mode("overwrite").parquet(dir)
     // Spark's SchemaPruning does NOT see through HOF lambdas by itself;
     // direct extraction (`points.x` = GetArrayStructFields) prunes. Since

@@ -10,7 +10,8 @@ import graft.queries.{DedupQueries, EventQueries, PipelineQueries,
   * gate's synthetic corpus cannot pin down (exact burst shapes, planted
   * steps, cliques vs paths, identical vs disjoint sketch sources).
   * The vector-search laws (q247, q257 and the packed-key audits) live
-  * in VectorSearchSpec.
+  * in VectorSearchSpec, the q244/q245 text laws in TextOpsSpec and the
+  * q241/q253 graph laws in GraphOpsSpec.
   */
 class Round11LawsSpec extends SparkSpec {
   import spark.implicits._
@@ -82,60 +83,6 @@ class Round11LawsSpec extends SparkSpec {
     assert(got.head.getLong(1) == 5L, s"got ${got.head}")
   }
 
-  // ---------------------------------------------------------------- q244
-
-  test("law: q244 all-consonant doc grades 0 with spw_ppm 0; cpw_ppm " +
-    "is exact chars·1e6/words") {
-    val got = TextQueries.lexicalComplexityCore(
-      Seq(("s0", "bcd fgh")).toDF("source", "text")).collect()
-    assert(got.length == 1)
-    val r = got.head
-    // 7 chars, 2 words: cpw = 3.5e6
-    assert((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
-      r.getLong(5), r.getLong(6)) ==
-      ((0L, 1L, 2L, 0L, 0L, 3500000L)), s"got $r")
-  }
-
-  test("law: q244 vowel-group runs, not vowels — 'aaa bee' has y=2 " +
-    "over w=2: spw_ppm exactly 1e6, grade 4") {
-    val got = TextQueries.lexicalComplexityCore(
-      Seq(("s0", "aaa bee")).toDF("source", "text")).collect()
-    assert(got.length == 1)
-    val r = got.head
-    assert((r.getLong(1), r.getLong(4), r.getLong(5)) ==
-      ((4L, 2L, 1000000L)), s"got $r")
-  }
-
-  // ---------------------------------------------------------------- q245
-
-  test("law: q245 an all-same-char doc is maximally repetitive — " +
-    "'aaaa': ssq=9 over n²=9 ⇒ rep_ppm exactly 1e6 (bucket 125)") {
-    val got = TextQueries.charDiversityCore(
-      Seq(("s0", "aaaa")).toDF("source", "text")).collect()
-    assert(got.length == 1)
-    val r = got.head
-    assert((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)) ==
-      ((125L, 1L, 3L, 1000000L)), s"got $r")
-  }
-
-  test("law: q245 all-distinct bigrams — 'abcd': rep_ppm = ⌊3e6/9⌋ = " +
-    "333333; a sub-2-char doc is excluded entirely") {
-    val got = TextQueries.charDiversityCore(
-      Seq(("s0", "abcd"), ("s0", "x")).toDF("source", "text")).collect()
-    assert(got.length == 1)
-    val r = got.head
-    assert((r.getLong(1), r.getLong(2), r.getLong(4)) ==
-      ((41L, 1L, 333333L)), s"got $r")
-  }
-
-  test("law: q245 kernel == explicit bigram count on a supplementary-" +
-    "plane string (code points, not UTF-16 units)") {
-    // "😀a😀a" code-point bigrams: (😀a), (a😀), (😀a) → Σf² = 4+1 = 5
-    val df = Seq(Tuple1("😀a😀a")).toDF("t")
-    val got = df.selectExpr("bigram_sq_sum(t)").head().getLong(0)
-    assert(got == 5L, s"got $got")
-  }
-
   // ---------------------------------------------------------------- q240
 
   test("law: q240 textually identical sources — exact AND estimated " +
@@ -159,48 +106,6 @@ class Round11LawsSpec extends SparkSpec {
     val r = got.head
     assert((r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7)) ==
       ((0L, 0L, 0L, 0L)), s"got $r")
-  }
-
-  // ---------------------------------------------------------------- q241
-
-  test("law: q241 a 3-clique closes its only wedge — closure_ppm 1e6") {
-    val e = Seq((1L, 2L), (1L, 3L), (2L, 3L)).toDF("id_a", "id_b")
-    val lab = Seq((1L, 0), (2L, 0), (3L, 0)).toDF("vec_id", "label")
-    val got = DedupQueries.triangleCensusCore(e, lab, "shuffle_hash")
-      .collect()
-    assert(got.length == 1)
-    val r = got.head
-    assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)) ==
-      ((0L, 1L, 1L, 1000000L)), s"got $r")
-  }
-
-  test("law: q241 a path closes nothing — closure_ppm 0; labels group " +
-    "by the wedge ROOT's label") {
-    val e = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
-    val lab = Seq((1L, 7), (2L, 8), (3L, 9)).toDF("vec_id", "label")
-    val got = DedupQueries.triangleCensusCore(e, lab, "shuffle_hash")
-      .collect()
-    assert(got.length == 1)
-    val r = got.head
-    assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)) ==
-      ((7L, 1L, 0L, 0L)), s"got $r")
-  }
-
-  test("law: q241 join strategy is output-invariant — the corpus-scale " +
-    "merge path (engaged above 2^18 vectors, e.g. the 1000x replica) " +
-    "produces byte-identical rows to the gate SFs' shuffled-hash path") {
-    val sfDir = "/root/testdata/sf0.001"
-    val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L),
-      (5L, 6L)).toDF("id_a", "id_b")
-    val lab = (1L to 6L).map(i => (i, (i % 2).toInt))
-      .toDF("vec_id", "label")
-    val shj = DedupQueries.triangleCensusCore(edges, lab, "shuffle_hash")
-      .collect().toSeq
-    val smj = DedupQueries.triangleCensusCore(edges, lab, "merge")
-      .collect().toSeq
-    assert(shj == smj, s"shj=$shj smj=$smj")
-    assert(e.count() > 0) // fixture sanity
   }
 
   // ---------------------------------------------------------------- q246
@@ -368,27 +273,6 @@ class Round11LawsSpec extends SparkSpec {
     assert(m(0L) == ((2L, 2L, 0L, 4L)), s"got ${m(0L)}")
     assert(m(1L) == ((2L, 2L, 4L * 1000000L * 1000000L, 4L)),
       s"got ${m(1L)}")
-  }
-
-  // ---------------------------------------------------------------- q253
-
-  test("law: q253 a 4-node path from its canonical has depths 0,1,2,3; " +
-    "isolated nodes land at depth 0") {
-    val e = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("id_a", "id_b")
-    val uni = Seq(1L, 2L, 3L, 4L, 5L).toDF("vec_id")
-    val got = DedupQueries.chainDepthCore(spark, e, uni).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(0L -> 2L, 1L -> 1L, 2L -> 1L, 3L -> 1L), s"$got")
-  }
-
-  test("law: q253 depth caps at 8 — a 12-node chain buckets its three " +
-    "deepest nodes at 9 (mirroring the oracle's recursion guard)") {
-    val e = (1L until 12L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val uni = (1L to 12L).toDF("vec_id")
-    val got = DedupQueries.chainDepthCore(spark, e, uni).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val expect = (0L to 8L).map(d => d -> 1L).toMap + (9L -> 3L)
-    assert(got == expect, s"$got")
   }
 
   // ---------------------------------------------------------------- q254

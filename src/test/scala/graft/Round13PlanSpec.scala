@@ -36,8 +36,7 @@ class Round13PlanSpec extends SparkSpec {
   test("TransformFieldExtraction: a single-leaf lambda prunes the scan " +
     "to that leaf — transform(points, p -> p.x * 2) reads struct<x> " +
     "only, matching the manual extract-first idiom") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-xtract").toString + "/pts"
+    val dir = freshDir("graft-xtract") + "/pts"
     pointsDF.write.mode("overwrite").parquet(dir)
     val df = spark.read.parquet(dir)
       .select(col("row_id"),
@@ -58,8 +57,7 @@ class Round13PlanSpec extends SparkSpec {
     "zip_with over the extracted arrays and prunes untouched payload " +
     "fields from the scan") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-xtract2").toString + "/wide"
+    val dir = freshDir("graft-xtract2") + "/wide"
     Seq((0L, Seq((1L, 9L, "payload-a"), (2L, 8L, "payload-b"))),
         (1L, Seq[(Long, Long, String)]()),
         (2L, Seq((4L, 6L, "payload-c"))))
@@ -82,8 +80,7 @@ class Round13PlanSpec extends SparkSpec {
 
   test("TransformFieldExtraction: exists/forall/aggregate lambdas " +
     "prune the scan through the same single-leaf rewrite") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-xtract4").toString + "/pts"
+    val dir = freshDir("graft-xtract4") + "/pts"
     pointsDF.write.mode("overwrite").parquet(dir)
     val ex = spark.read.parquet(dir)
       .select(col("row_id"),
@@ -114,8 +111,7 @@ class Round13PlanSpec extends SparkSpec {
 
   test("TransformFieldExtraction guard: a lambda that uses the WHOLE " +
     "element (not just leaves) must not rewrite") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-xtract3").toString + "/pts"
+    val dir = freshDir("graft-xtract3") + "/pts"
     pointsDF.write.mode("overwrite").parquet(dir)
     val df = spark.read.parquet(dir)
       .select(col("row_id"),
@@ -131,8 +127,7 @@ class Round13PlanSpec extends SparkSpec {
   test("TransformFieldExtraction edge laws: an outer-column capture " +
     "inside the lambda survives the rewrite; nested HOFs rewrite only " +
     "the inner (leaf-only) transform") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-xtract5").toString + "/pts"
+    val dir = freshDir("graft-xtract5") + "/pts"
     pointsDF.write.mode("overwrite").parquet(dir)
     // lambda body references BOTH the element leaf and the outer row_id
     val cap = spark.read.parquet(dir)

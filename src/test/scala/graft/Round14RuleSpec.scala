@@ -24,8 +24,7 @@ class Round14RuleSpec extends SparkSpec {
     * pruning is observable. */
   private lazy val wideDir: String = {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-r14").toString + "/wide"
+    val dir = freshDir("graft-r14") + "/wide"
     Seq(
       (0L, Seq((1L, 10L, 100L, "p-a"), (2L, 20L, 200L, "p-b"))),
       (1L, Seq[(Long, Long, Long, String)]()),
@@ -99,8 +98,7 @@ class Round14RuleSpec extends SparkSpec {
   test("(c) computed two-leaf array rewrites under With: zip_with fires, " +
     "the filter is evaluated ONCE (RewriteWithExpression hoisted it), " +
     "and no Unevaluable With/CommonExpressionRef survives to execution") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-r14c").toString + "/pts"
+    val dir = freshDir("graft-r14c") + "/pts"
     pointsDF.write.mode("overwrite").parquet(dir)
     val df = spark.read.parquet(dir)
       .select(col("row_id"),

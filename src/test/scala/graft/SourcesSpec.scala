@@ -11,7 +11,7 @@ class SourcesSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(name: String): String =
-    Files.createTempDirectory(s"graft-$name").toString + "/out"
+    freshDir(s"graft-$name") + "/out"
 
   test("parquet round-trip with column pushdown") {
     val dir = tmp("parquet")

@@ -87,6 +87,10 @@ trait SparkSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** A new temp directory named `prefix` + a random suffix, deleted when
+    * the test JVM exits. */
+  def freshDir(prefix: String): String = graft.io.TempDirs.fresh(prefix)
+
   /** Collect a single expression column as a list of values, ordered by
     * row_id. */
   def eval1(df: DataFrame, c: org.apache.spark.sql.Column): Seq[Any] =

@@ -44,7 +44,7 @@ class StreamingSpec extends SparkSpec {
       .orderBy("hour_start", "event_type")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
 
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream").toString
+    val dir = freshDir("graft-stream")
     batchEvents.select("ts", "event_type", "value").write
       .mode("overwrite").parquet(dir)
     val stream = spark.readStream
@@ -501,8 +501,7 @@ class StreamingSpec extends SparkSpec {
     // from the same checkpoint — chunks first seen before the restart
     // must be flagged duplicates after it.
     import spark.implicits._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-cdc-restart").toString
+    val base = freshDir("graft-cdc-restart")
     val srcDir = s"$base/src"
     val ckpt = s"$base/ckpt"
     val docsAll = Tables.documents(spark, "/root/testdata/sf0.001")
@@ -568,7 +567,7 @@ class StreamingSpec extends SparkSpec {
 
   test("dedupNearStream: stopped after file 1 and restarted from its checkpoint, " +
     "decides as one uninterrupted drain") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-dedup-restart").toString
+    val dir = freshDir("graft-dedup-restart")
     appendDocs(s"$dir/src", 0 until 100)
     val before = drainDedup(s"$dir/src", s"$dir/ckpt")
     appendDocs(s"$dir/src", 100 until 200)
@@ -584,7 +583,7 @@ class StreamingSpec extends SparkSpec {
 
   test("dedupNearStream: a flipped byte in a committed state delta fails the " +
     "restart with a checksum error") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-dedup-corrupt").toString
+    val dir = freshDir("graft-dedup-corrupt")
     appendDocs(s"$dir/src", 0 until 100)
     assert(drainDedup(s"$dir/src", s"$dir/ckpt").size == 100)
     import scala.jdk.CollectionConverters._
@@ -881,8 +880,7 @@ class StreamingSpec extends SparkSpec {
     // is emitted exactly once and equals the q168 batch diff.
     import spark.implicits._
     val sf = "/root/testdata/sf0.001"
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-upsert-restart").toString
+    val dir = freshDir("graft-upsert-restart")
     val srcDir = s"$dir/src"
     val ckpt = s"$dir/ckpt"
     val base = Tables.documents(spark, sf).select("doc_id", "text")

@@ -17,7 +17,7 @@ class TablesSpec extends SparkSpec {
   /** A fresh directory holding a copy of the named fixture tables, so
     * no other spec has warmed the memo for its paths. */
   private def freshCopy(tables: String*): String = {
-    val dir = Files.createTempDirectory("graft-tables-spec")
+    val dir = Paths.get(freshDir("graft-tables-spec"))
     tables.foreach { t =>
       Files.copy(Paths.get(s"$sfDir/$t.parquet"), dir.resolve(s"$t.parquet"))
     }
@@ -59,7 +59,7 @@ class TablesSpec extends SparkSpec {
 
   test("a table rewritten in place with another column set is read with " +
     "the new schema") {
-    val dir = Files.createTempDirectory("graft-tables-spec").toString
+    val dir = freshDir("graft-tables-spec")
     val path = s"$dir/t.parquet"
     spark.range(3).select(col("id"), (col("id") * 2).as("a"))
       .write.mode("overwrite").parquet(path)
@@ -114,7 +114,7 @@ class TablesSpec extends SparkSpec {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.schema.MessageTypeParser
-    val dir = Files.createTempDirectory("graft-tables-spec").toString
+    val dir = freshDir("graft-tables-spec")
     val schema = MessageTypeParser.parseMessageType(
       "message events { required int64 event_id; " +
         "required int64 ts (TIMESTAMP(NANOS,false)); }")

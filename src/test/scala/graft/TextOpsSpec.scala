@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.TextOps
+import graft.queries.TextQueries
 import java.security.MessageDigest
 
 /** Differential tests for the pipeline text ops: goldens computed with an
@@ -221,6 +222,8 @@ class TextOpsSpec extends SparkSpec {
 
   test("each registered native function rejects a wrong-typed argument " +
       "at analysis, naming itself") {
+    import org.apache.spark.sql.GraftColumnBridge
+    import graft.plans.{BpeCount, SqQuantize}
     graft.plans.GraftExtensions.install(spark)
     val calls = Map(
       "md5_prefix64" -> "md5_prefix64(1)",
@@ -236,14 +239,136 @@ class TextOpsSpec extends SparkSpec {
     // every registered function has its wrong-typed call
     assert(calls.keySet == graft.plans.GraftExtensions.functionDescriptors
       .map(_._1.funcName).toSet)
-    // a type-check failure (not, say, an unresolved function) naming fn
-    val wrong = calls.toSeq.sorted.flatMap { case (fn, call) =>
-      val e = intercept[org.apache.spark.sql.AnalysisException](
-        spark.sql(s"SELECT $call AS r"))
+    // the param'd kernels are built through the column bridge
+    val a = GraftColumnBridge.expression(lit("a"))
+    val bridged = Map(
+      "sq_quantize" -> SqQuantize(a, Nil, Nil, 3L),
+      "bpe_count" -> BpeCount(a, Nil, Nil))
+    def rejection(fn: String)(build: => Any): Option[String] = {
+      val e = intercept[org.apache.spark.sql.AnalysisException](build)
       if (e.getCondition.startsWith("DATATYPE_MISMATCH") &&
           e.getMessage.contains(fn)) None
       else Some(s"$fn: ${e.getMessage}")
     }
+    // a type-check failure (not, say, an unresolved function) naming fn
+    val wrong = calls.toSeq.sorted.flatMap { case (fn, call) =>
+      rejection(fn)(spark.sql(s"SELECT $call AS r"))
+    } ++ bridged.toSeq.sortBy(_._1).flatMap { case (fn, k) =>
+      rejection(fn)(spark.range(1).select(GraftColumnBridge.column(k)))
+    }
     assert(wrong.isEmpty, wrong.mkString("\n"))
+  }
+
+  test("every native kernel survives a Java serialization round trip, " +
+      "and its interpreted eval equals its generated projection") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types._
+    import graft.plans._
+    val schema = StructType(Seq(
+      StructField("s", StringType), StructField("ws", ArrayType(StringType)),
+      StructField("fs", ArrayType(FloatType)),
+      StructField("ds", ArrayType(DoubleType)),
+      StructField("ls", ArrayType(LongType)),
+      StructField("is", ArrayType(IntegerType)),
+      StructField("n", IntegerType)))
+    def ref(c: String): Expression = {
+      val i = schema.fieldIndex(c)
+      BoundReference(i, schema(i).dataType, nullable = true)
+    }
+    val kernels: Seq[Expression] = Seq(
+      Md5Prefix64(ref("s")), Md5Prefix60(ref("s")),
+      PrefixOffsets(ref("ls")), PrefixOffsets(ref("is")),
+      DeflateRatio(ref("s")), DotProduct(ref("fs"), ref("ds")),
+      QuantizeStats(ref("fs")), QuantizeStats(ref("ds")),
+      MinMd5Hex(ref("ws")), MinShingleMd5Hex(ref("ws"), ref("n")),
+      CdcCuts(ref("s")), BigramSqSum(ref("s")),
+      SqQuantize(ref("fs"), Seq(0.0, -1.0, 2.0), Seq(1.0, 2.0, 2.0), 255L),
+      BpeCount(ref("ws"), Seq("a", "b"), Seq("b", "c")))
+    assert(kernels.map(_.prettyName).toSet.size == 12)
+    val long = (0 until 400).map(i => ('a' + (i * 7) % 26).toChar).mkString
+    val toRow = CatalystTypeConverters.createToCatalystConverter(schema)
+    val rows = Seq(
+      Row("hello world hello", Seq("a", "b", "c", "ab"),
+        Seq(0.5f, 1.25f, -2f), Seq(1.0, 2.5, -3.0), Seq(1L, 2L, 3L),
+        Seq(4, 5), 2),
+      // empty inputs: the null-returning kernels' null results
+      Row("", Seq(), Seq(), Seq(), Seq(), Seq(), 3),
+      Row(null, null, null, null, null, null, null),
+      // a null word nulls bpe_count; constant vectors; cdc cuts
+      Row(s"é$long", Seq("x", null), Seq(1f, 1f, 1f),
+        Seq(-0.5, 0.5), Seq(0L), Seq(0), 1))
+      .map(r => toRow(r).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow])
+    val ser = new org.apache.spark.serializer.JavaSerializer(
+      spark.sparkContext.getConf).newInstance()
+    kernels.foreach { k =>
+      val back = ser.deserialize[Expression](ser.serialize(k))
+      assert(back == k && back.prettyName == k.prettyName &&
+        back.checkInputDataTypes().isSuccess, s"${k.prettyName} round trip")
+      val proj = GenerateUnsafeProjection.generate(Seq(back))
+      rows.foreach { row =>
+        def scala(v: Any) = CatalystTypeConverters.convertToScala(v, k.dataType)
+        val interpreted = scala(k.eval(row))
+        val generated = scala(proj(row).get(0, k.dataType))
+        assert(interpreted == generated,
+          s"${k.prettyName} on $row: eval $interpreted, codegen $generated")
+      }
+    }
+  }
+
+  // ---------------------------------------------------------------- q244
+
+  test("law: q244 all-consonant doc grades 0 with spw_ppm 0; cpw_ppm " +
+    "is exact chars·1e6/words") {
+    val got = TextQueries.lexicalComplexityCore(
+      Seq(("s0", "bcd fgh")).toDF("source", "text")).collect()
+    assert(got.length == 1)
+    val r = got.head
+    // 7 chars, 2 words: cpw = 3.5e6
+    assert((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
+      r.getLong(5), r.getLong(6)) ==
+      ((0L, 1L, 2L, 0L, 0L, 3500000L)), s"got $r")
+  }
+
+  test("law: q244 vowel-group runs, not vowels — 'aaa bee' has y=2 " +
+    "over w=2: spw_ppm exactly 1e6, grade 4") {
+    val got = TextQueries.lexicalComplexityCore(
+      Seq(("s0", "aaa bee")).toDF("source", "text")).collect()
+    assert(got.length == 1)
+    val r = got.head
+    assert((r.getLong(1), r.getLong(4), r.getLong(5)) ==
+      ((4L, 2L, 1000000L)), s"got $r")
+  }
+
+  // ---------------------------------------------------------------- q245
+
+  test("law: q245 an all-same-char doc is maximally repetitive — " +
+    "'aaaa': ssq=9 over n²=9 ⇒ rep_ppm exactly 1e6 (bucket 125)") {
+    val got = TextQueries.charDiversityCore(
+      Seq(("s0", "aaaa")).toDF("source", "text")).collect()
+    assert(got.length == 1)
+    val r = got.head
+    assert((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)) ==
+      ((125L, 1L, 3L, 1000000L)), s"got $r")
+  }
+
+  test("law: q245 all-distinct bigrams — 'abcd': rep_ppm = ⌊3e6/9⌋ = " +
+    "333333; a sub-2-char doc is excluded entirely") {
+    val got = TextQueries.charDiversityCore(
+      Seq(("s0", "abcd"), ("s0", "x")).toDF("source", "text")).collect()
+    assert(got.length == 1)
+    val r = got.head
+    assert((r.getLong(1), r.getLong(2), r.getLong(4)) ==
+      ((41L, 1L, 333333L)), s"got $r")
+  }
+
+  test("law: q245 kernel == explicit bigram count on a supplementary-" +
+    "plane string (code points, not UTF-16 units)") {
+    // "😀a😀a" code-point bigrams: (😀a), (a😀), (😀a) → Σf² = 4+1 = 5
+    val df = Seq(Tuple1("😀a😀a")).toDF("t")
+    val got = df.selectExpr("bigram_sq_sum(t)").head().getLong(0)
+    assert(got == 5L, s"got $got")
   }
 }
